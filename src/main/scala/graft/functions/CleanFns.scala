@@ -34,10 +34,6 @@ object CleanFns {
   def skCrc32(cols: Column*): Column =
     crc32(concat_ws(":", cols.map(_.cast("string")): _*)).cast("long")
 
-  /** 64-bit stable hash surrogate key — preferred at 100 TB scale
-    * (crc32's 32 bits collide at ~80k keys; xxhash64 is also faster). */
-  def skHash64(cols: Column*): Column = xxhash64(cols: _*)
-
   /** Null-guarded percentage change (reference: fact_stock_daily.py
     * pct_change = (current-previous)/previous when previous != 0). */
   def pctChange(current: Column, previous: Column): Column =

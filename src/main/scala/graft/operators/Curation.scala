@@ -1,11 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BinaryType
 
 import graft.functions.{CleanFns, TextFns}
 
@@ -598,24 +597,6 @@ object Curation {
       .drop("__thr")
   }
 
-  /** Exact anti-join of a new batch against a historical key set, with
-    * a broadcast Bloom prefilter. The result EXACTLY equals
-    * `newDf LEFT ANTI JOIN history` — Bloom negatives are definitely
-    * absent and bypass the join entirely; possible positives (true
-    * dups + ~fpp of the batch) are re-checked by the exact join, so
-    * false positives cannot drop rows.
-    *
-    * This is the daily-load dedup at 100 TB: the filter over billions
-    * of historical fingerprints fits in memory (~1.2 GB at 1e9 keys /
-    * 1% fpp), the batch streams through it map-side twice (two
-    * columnar scans beat one full-batch shuffle), and the confirm
-    * join's stream side is the sliver that might match. The history
-    * side of the confirm join should be bucketed by the key in a real
-    * deployment so it never reshuffles either.
-    *
-    * The filter is built by Spark's own BloomFilterAggregate (the
-    * runtime-filter machinery's aggregate) — distributed build, one
-    * driver-small binary blob back. */
   /** URL canonicalization — the step a web-scale corpus runs BEFORE
     * URL dedup, because the same page hides behind casing, default
     * ports, fragments, tracking params, and query-order noise. Rules
@@ -653,23 +634,40 @@ object Curation {
       when(qstr =!= "", concat(lit("?"), qstr)).otherwise(lit("")))
   }
 
+  /** Exact anti-join of a new batch against a historical key set, with
+    * a Bloom prefilter. The result EXACTLY equals
+    * `newDf LEFT ANTI JOIN history` — Bloom negatives are definitely
+    * absent and bypass the join entirely; possible positives (true
+    * dups + ~fpp of the batch) are re-checked by the exact join, so
+    * false positives cannot drop rows.
+    *
+    * This is the daily-load dedup at 100 TB: the filter over billions
+    * of historical fingerprints fits in memory (~1.2 GB at 1e9 keys /
+    * 1% fpp), the batch streams through it map-side twice (two
+    * columnar scans beat one full-batch shuffle), and the confirm
+    * join's stream side is the sliver that might match. The history
+    * side of the confirm join should be bucketed by the key in a real
+    * deployment so it never reshuffles either.
+    *
+    * The filter is built by Spark's own BloomFilterAggregate and
+    * probed through a scalar subquery — the shape Spark's runtime
+    * filter (InjectRuntimeFilter) injects. The build runs once per
+    * execution of the result (subquery reuse shares it between both
+    * branches) and the plan carries only the subquery, never the
+    * filter's bytes: a 1e6-item filter is ~1 MB, and as a binary
+    * literal every plan rendering (cache names, SQL execution events,
+    * AQE updates) would hex-format it again. An empty history yields
+    * a NULL filter, which `coalesce` turns into "definitely new". */
   def bloomAntiJoin(newDf: DataFrame, history: DataFrame, keyCol: String,
                     expectedItems: Long = 1000000L): DataFrame = {
-    val hashed = (c: Column) => xxhash64(c)
-    val agg = new BloomFilterAggregate(
-      GraftColumnBridge.expression(hashed(col(keyCol))), expectedItems)
-    val bfRow = history
-      .select(GraftColumnBridge.column(agg.toAggregateExpression()).as("bf"))
-      .head()
-    if (bfRow.isNullAt(0)) newDf // empty history: the whole batch is new
-    else {
-      val might = GraftColumnBridge.column(BloomFilterMightContain(
-        Literal.create(bfRow.getAs[Array[Byte]](0), BinaryType),
-        GraftColumnBridge.expression(hashed(col(keyCol)))))
-      val hk = history.select(col(keyCol)).distinct()
-      newDf.where(!might)
-        .unionByName(
-          newDf.where(might).join(hk, Seq(keyCol), "left_anti"))
-    }
+    val hashed = GraftColumnBridge.expression(xxhash64(col(keyCol)))
+    val bf = history.select(GraftColumnBridge.column(
+      new BloomFilterAggregate(hashed, expectedItems).toAggregateExpression()))
+      .scalar()
+    val might = coalesce(GraftColumnBridge.column(BloomFilterMightContain(
+      GraftColumnBridge.expression(bf), hashed)), lit(false))
+    val hk = history.select(col(keyCol)).distinct()
+    newDf.where(!might)
+      .unionByName(newDf.where(might).join(hk, Seq(keyCol), "left_anti"))
   }
 }

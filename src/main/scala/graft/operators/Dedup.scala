@@ -68,8 +68,9 @@ object Dedup {
     import org.apache.spark.sql.catalyst.plans.logical._
     import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
     // the attribute idCol names at the ROOT of the plan
+    val resolver = df.sparkSession.sessionState.conf.resolver
     val target = df.queryExecution.analyzed.output
-      .collectFirst { case a if a.name == idCol => a.exprId }
+      .collectFirst { case a if resolver(a.name, idCol) => a.exprId }
     if (target.isEmpty) return false
     @annotation.tailrec
     def walk(p: LogicalPlan, id: org.apache.spark.sql.catalyst.expressions.ExprId): Boolean =
@@ -746,32 +747,5 @@ object Dedup {
         col("__inter") / greatest(col("__nb"), lit(1)), 4))
       .where(greatest(col("cont_a"), col("cont_b")) >= threshold)
       .select("doc_a", "doc_b", "cont_a", "cont_b")
-  }
-
-  /** All-pairs n-gram Jaccard within a blocking key (e.g. same source)
-    * — bounded quadratic, for modest block sizes. The pair list is
-    * formed over bare ids first (cheap), explicitly repartitioned, and
-    * only then joined back to the shingle sets. */
-  def ngramJaccardBlocked(df: DataFrame, textCol: String, idCol: String,
-                          blockCol: String, shingleN: Int = 3,
-                          threshold: Double = 0.1): DataFrame = {
-    val ids = df.select(col(blockCol).as("block"), col(idCol))
-    val pairs = ids.select(col("block"), col(idCol).as("doc_a"))
-      .join(ids.select(col("block"), col(idCol).as("doc_b")), Seq("block"))
-      .where(col("doc_a") < col("doc_b"))
-      .repartition(NumPartitions, col("doc_a"))
-    val sets = spread(df.select(col(idCol),
-        TextFns.normalizeText(col(textCol)).as("__norm")), idCol)
-      .select(col(idCol),
-        TextFns.wordNgramSetFromNorm(col("__norm"), shingleN).as("shset"))
-    pairs
-      .join(setsSized(sets, "doc_a", "set_a", "__na"), "doc_a")
-      .join(setsSized(sets, "doc_b", "set_b", "__nb"), "doc_b")
-      .withColumn("jaccard", CleanFns.roundRepro(
-        interSize(col("set_a"), col("set_b")).cast("double") /
-          greatest(col("__na") + col("__nb") -
-            interSize(col("set_a"), col("set_b")), lit(1)), 4))
-      .where(col("jaccard") >= threshold)
-      .select("block", "doc_a", "doc_b", "jaccard")
   }
 }

@@ -58,14 +58,4 @@ object Dims {
   def lookupEnrich(df: DataFrame, lookup: DataFrame, key: Seq[String],
                    joinType: String = "left"): DataFrame =
     df.join(broadcast(lookup), key, joinType)
-
-  /** crc32-keyed variant — byte-for-byte the reference's key scheme. */
-  def distinctDimCrc32(df: DataFrame, naturalKey: Seq[String],
-                       skName: String): DataFrame = {
-    val keyCols = naturalKey.map(col)
-    df.select(keyCols: _*)
-      .where(keyCols.map(_.isNotNull).reduce(_ && _))
-      .distinct()
-      .withColumn(skName, CleanFns.skCrc32(keyCols: _*))
-  }
 }

@@ -117,6 +117,38 @@ class CurationSpec extends AnyFunSuite {
     assert(Curation.bloomAntiJoin(fp, empty, "fingerprint").count() == 10)
   }
 
+  test("bloomAntiJoin keeps the filter out of the plan at the default size") {
+    val fp = Tables.load(spark, TestSpark.sfDir, "documents")
+      .select($"doc_id", TextFns.fingerprint($"text").as("fingerprint"))
+    val hist = fp.where($"doc_id" % 3 === 0).select("fingerprint")
+    // expectedItems = 1e6: a ~1 MB filter, megabytes of hex as a literal
+    val qe = Curation.bloomAntiJoin(fp, hist, "fingerprint").queryExecution
+    assert(qe.optimizedPlan.toString.length < 64 * 1024)
+    assert(qe.executedPlan.toString.length < 64 * 1024)
+  }
+
+  test("bloomAntiJoin equals the plain anti-join with null keys, " +
+    "duplicate batch keys and an empty history") {
+    val batch = Seq((1L, Some("a")), (2L, Some("a")), (3L, Some("b")),
+      (4L, None), (5L, None), (6L, Some("c")), (7L, Some("c")))
+      .toDF("id", "k")
+    val hist = Seq(Some("a"), None, Some("x"), Some("a")).toDF("k")
+    def same(history: org.apache.spark.sql.DataFrame): Unit = {
+      val got = Curation.bloomAntiJoin(batch, history, "k")
+        .select("id", "k").collect().toSet
+      val want = batch.join(history, Seq("k"), "left_anti")
+        .select("id", "k").collect().toSet
+      assert(got == want)
+    }
+    same(hist)
+    // NULL keys never match, on either side
+    assert(Curation.bloomAntiJoin(batch, hist, "k")
+      .where($"k".isNull).count() == 2)
+    // an empty history builds a NULL filter: every row is new
+    same(hist.limit(0))
+    assert(Curation.bloomAntiJoin(batch, hist.limit(0), "k").count() == 7)
+  }
+
   test("semDedup drops exact-duplicate vectors within a cluster, keeps min id") {
     // 2 tight groups of identical vectors + one distinct singleton
     val mk = (base: Double) => (0 until 8).map(i => (base + i).toFloat)

@@ -36,6 +36,22 @@ class DedupSpreadSpec extends AnyFunSuite {
     assert(!Dedup.alreadyKeyed(forged, "doc_id"))
   }
 
+  test("the key name resolves with the session's case sensitivity") {
+    val key = "spark.sql.caseSensitive"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val df = base.withColumnRenamed("doc_id", "DOC_ID")
+        .repartition(4, col("DOC_ID"))
+      assert(Dedup.alreadyKeyed(df, "doc_id"))
+      spark.conf.set(key, "true")
+      assert(!Dedup.alreadyKeyed(df, "doc_id"))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("a join above an idCol repartition destroys the partitioning") {
     val keyed = base.repartition(4, col("doc_id"))
     val other = Seq((1L, 10), (2L, 20)).toDF("doc_id", "w")
