@@ -17,13 +17,19 @@ import graft.functions.{CleanFns, TextFns}
   *  - candidate generation NEVER compares all pairs: docs are bucketed
   *    by (band, band hash) and only same-bucket docs are joined, with
   *    `maxBucket` capping pathological buckets (boilerplate text);
-  *  - pair-verification stages are explicitly repartitioned: their
-  *    INPUT is small (id pairs), so AQE would coalesce them onto a
-  *    couple of cores right before the work explodes quadratically.
+  *  - pair-verification stages are explicitly repartitioned to the
+  *    session's task slots (`defaultParallelism`): their INPUT is small
+  *    (id pairs), so AQE would coalesce them onto a couple of cores
+  *    right before the work explodes quadratically. The count follows
+  *    the session, so a 4-core host runs 4-task stages and a 32-core
+  *    host 32, with no host-fitted constant.
   */
 object Dedup {
 
-  private val NumPartitions = 32
+  /** Partition count of every explicit Dedup exchange (spread and the
+    * pair-verification repartitions): one task per session slot. */
+  private def slots(df: DataFrame): Int =
+    df.sparkSession.sparkContext.defaultParallelism
 
   /** Small inputs (one parquet file) plan as a single partition —
     * which serializes every per-document expression onto one core.
@@ -38,12 +44,13 @@ object Dedup {
     * preserves it and the downstream per-doc groupBy reuses this one
     * exchange. Non-file sources (test frames) report zero files and
     * get spread too. */
-  private[operators] def spread(df: DataFrame, idCol: String): DataFrame = {
+  private[graft] def spread(df: DataFrame, idCol: String): DataFrame = {
+    val n = slots(df)
     val fewFiles =
-      try df.inputFiles.length < NumPartitions
+      try df.inputFiles.length < n
       catch { case _: Throwable => true }
     if (fewFiles && !alreadyKeyed(df, idCol))
-      df.repartition(NumPartitions, col(idCol))
+      df.repartition(n, col(idCol))
     else df
   }
 
@@ -258,20 +265,6 @@ object Dedup {
             perms)).as("sig"))
   }
 
-  /** LSH candidate pairs: split the signature into `bands` bands,
-    * bucket by (band index, band hash), pair up within buckets, then
-    * estimate Jaccard as the fraction of matching signature positions.
-    * Only pairs with estimate >= `threshold` survive. */
-  /** @param materialize true (default): the signature table —
-    *        referenced three times (banding + both sides of the
-    *        estimate join) — is persisted for a single corpus scan,
-    *        the (small) pair result is computed EAGERLY, and the
-    *        persist is released before returning; callers never
-    *        inherit a cache to manage, at the cost of running the job
-    *        at construction time. false: fully lazy plan (explain/
-    *        audit-friendly, composable) that recomputes the signature
-    *        scan per reference — at production scale prefer writing
-    *        the signature table to the lake instead. */
   // ---- shared LSH machinery (full AND delta paths use EXACTLY these:
   // any change applies to both, preserving the delta == restricted-
   // full guarantee) --------------------------------------------------
@@ -389,7 +382,7 @@ object Dedup {
         // distinct needs NO exchange of its own and the estimate join
         // consumes the same partitioning — one pair-table exchange
         // instead of two (r18, guide §2.4)
-        .repartition(NumPartitions, col("doc_a"))
+        .repartition(slots(capped), col("doc_a"))
         .distinct()
     } else {
       val g = capped.withColumn("__g",
@@ -404,7 +397,7 @@ object Dedup {
         .select(least(col("a"), col("b")).as("doc_a"),
           greatest(col("a"), col("b")).as("doc_b"))
         // same single-exchange discipline as the salts == 1 branch
-        .repartition(NumPartitions, col("doc_a"))
+        .repartition(slots(capped), col("doc_a"))
         .distinct()
     }
 
@@ -425,6 +418,21 @@ object Dedup {
     estimatePairs(cand, sigs, idCol, perms, threshold)
   }
 
+  /** LSH candidate pairs: split the signature into `bands` bands,
+    * bucket by (band index, band hash), pair up within buckets, then
+    * estimate Jaccard as the fraction of matching signature positions.
+    * Only pairs with estimate >= `threshold` survive.
+    *
+    * @param materialize true (default): the signature table —
+    *        referenced three times (banding + both sides of the
+    *        estimate join) — is persisted for a single corpus scan,
+    *        the (small) pair result is computed EAGERLY, and the
+    *        persist is released before returning; callers never
+    *        inherit a cache to manage, at the cost of running the job
+    *        at construction time. false: fully lazy plan (explain/
+    *        audit-friendly, composable) that recomputes the signature
+    *        scan per reference — at production scale prefer writing
+    *        the signature table to the lake instead. */
   def minhashPairs(df: DataFrame, textCol: String, idCol: String,
                    shingleN: Int = 5, perms: Int = 64, bands: Int = 16,
                    threshold: Double = 0.5,
@@ -518,11 +526,19 @@ object Dedup {
   }
 
   /** Delta LSH pairs from a PRECOMPUTED delta signature table — the
-    * [[minhashPairsFromSigs]] twin of [[minhashPairsDelta]]. Lazy;
-    * the caller owns `newSigs`' lifecycle (it is referenced several
-    * times — persist it, or the signature scan reruns per reference).
-    * Semantics identical to minhashPairsDelta: pairs touching at
-    * least one new doc, equal to the full run restricted to those. */
+    * [[minhashPairsFromSigs]] twin of [[minhashPairsDelta]]. Runs ONE
+    * job at construction: the combined signature table (`existingSigs`
+    * minus re-ingested ids, plus `newSigs`) is local-checkpointed
+    * eagerly, so the corpus signature files are scanned once and the
+    * six references below (bucket caps, both sides of the banded join,
+    * both sides of the estimate join) plan over one small leaf instead
+    * of six copies of the corpus-scan subtree. The returned pair plan
+    * is otherwise lazy. `newSigs` is read by that job and once more
+    * for the new-id filter, so a caller holding it in a persist may
+    * release it once the pairs are materialized. The checkpoint's
+    * blocks are reclaimed by the ContextCleaner with the returned
+    * frame. Semantics identical to minhashPairsDelta: pairs touching
+    * at least one new doc, equal to the full run restricted to those. */
   def minhashPairsDeltaFromSigs(newSigs: DataFrame, existingSigs: DataFrame,
                                 idCol: String, perms: Int = 64,
                                 bands: Int = 16, threshold: Double = 0.5,
@@ -533,6 +549,11 @@ object Dedup {
     val allSigs = existingSigs.select(col(idCol), col("sig"))
       .join(broadcast(newSigs.select(col(idCol))), Seq(idCol), "left_anti")
       .union(newSigs.select(col(idCol), col("sig")))
+      // materialized once: every reference below reads this leaf, not
+      // a fresh scan of the corpus signature table (a persist would
+      // keep the whole lineage in every plan and add estimatePairs'
+      // count job)
+      .localCheckpoint(eager = true)
     // caps are computed over the COMBINED banded table (cheap: sig
     // rows, not text) so a bucket hot across old+new stays capped
     // exactly as the full run would cap it
@@ -549,7 +570,7 @@ object Dedup {
         greatest(col("doc_x"), col("doc_y")).as("doc_b"))
       // keyed for the distinct AND the estimate join (the
       // estimatePairs precondition — one exchange instead of two)
-      .repartition(NumPartitions, col("doc_a"))
+      .repartition(slots(allSigs), col("doc_a"))
       .distinct()
     estimatePairs(cand, allSigs, idCol, perms, threshold)
   }
@@ -685,7 +706,7 @@ object Dedup {
       .select(col(idCol),
         TextFns.wordNgramSetFromNorm(col("__norm"), shingleN).as("shset"))
     cand
-      .repartition(NumPartitions, col("doc_a"))
+      .repartition(slots(cand), col("doc_a"))
       .join(setsSized(sets, "doc_a", "set_a", "__na"), "doc_a")
       .join(setsSized(sets, "doc_b", "set_b", "__nb"), "doc_b")
       // roundRepro, not round(): the result is oracle-compared, and
@@ -736,7 +757,7 @@ object Dedup {
       .select(col(idCol),
         TextFns.wordNgramSetFromNorm(col("__norm"), shingleN).as("shset"))
     cand
-      .repartition(NumPartitions, col("doc_a"))
+      .repartition(slots(cand), col("doc_a"))
       .join(setsSized(sets, "doc_a", "set_a", "__na"), "doc_a")
       .join(setsSized(sets, "doc_b", "set_b", "__nb"), "doc_b")
       .withColumn("__inter",

@@ -397,17 +397,6 @@ object LakeWriter {
     else None
   }
 
-  /** Commit `df` as the next snapshot of `table`. `mode` "overwrite"
-    * makes the new snapshot exactly `df`; "append" makes it the
-    * previous snapshot's files plus `df`'s (no data rewrite — append
-    * commits are metadata-only on the old files). Returns the new
-    * version.
-    *
-    * Data lands in a UNIQUELY-NAMED directory per attempt, so a
-    * crashed or conflicted commit leaves an orphan that a later
-    * vacuum can collect but can never block or corrupt future
-    * commits. The commit point is a no-overwrite manifest rename
-    * (atomic on HDFS; on S3-like stores swap for a conditional PUT). */
   /** Every snapshot data file is written with
     * `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS`, scoped
     * to the write and restored after: Spark's legacy INT96 default
@@ -424,6 +413,25 @@ object LakeWriter {
     }
   }
 
+  /** Commit `df` as the next snapshot of `table`. `mode` "overwrite"
+    * makes the new snapshot exactly `df`; "append" makes it the
+    * previous snapshot's files plus `df`'s (no data rewrite — append
+    * commits are metadata-only on the old files). Returns the new
+    * version.
+    *
+    * Data lands in a UNIQUELY-NAMED directory per attempt, so a
+    * crashed or conflicted commit leaves an orphan that a later
+    * vacuum can collect but can never block or corrupt future
+    * commits. The commit point is a no-overwrite manifest rename
+    * (atomic on HDFS; on S3-like stores swap for a conditional PUT).
+    *
+    * Filesystem caveat: manifest and metadata I/O resolves its
+    * FileSystem through `fsOf`, whose hadoop conf is memoized once per
+    * SparkSession. `fs.*` settings (credentials, endpoints, impl
+    * classes) changed with `spark.conf.set` after the session's first
+    * lake call are NOT seen by the commit protocol — set them before
+    * the first commit, or commit from a new session. The data write
+    * itself builds a fresh conf and does see them. */
   def commitSnapshot(df: DataFrame, table: String,
                      mode: String = "overwrite",
                      txn: Option[(String, Long)] = None): Long = {

@@ -27,33 +27,53 @@ object Speed extends Serializable {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Physical schema of a staged events file — the generator's `ts`
-    * encoding has varied (INT64 nanos / TIMESTAMP_NTZ / TIMESTAMP), so
-    * the streaming source discovers it from the file instead of
-    * assuming one. The nanos legacy conf makes the INT64-nanos variant
-    * readable as long. */
   /** Footer-schema memo (the Tables.load discipline, r18): every
     * stream construction re-ran parquet inference on the same staged
     * file (~80 ms + one Spark action each). VALIDATED per hit against
     * the file's current (mtime, length) — a RE-STAGED file under the
     * same path (the TsEncodingSpec encoding-flip case) must
-    * re-infer, never be served the old physical schema. */
+    * re-infer, never be served the old physical schema. Keeps the
+    * `StagedSchemaMemoMax` most recently used files: staging paths
+    * derive from caller-chosen source directories, so an unbounded
+    * memo would grow with every directory a process streams. */
+  private val StagedSchemaMemoMax = 64
   private val stagedSchemaMemo =
-    new scala.collection.concurrent.TrieMap[String, (Long, Long, StructType)]
+    new java.util.LinkedHashMap[String, (Long, Long, StructType)](
+        16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, (Long, Long, StructType)]) =
+        size() > StagedSchemaMemoMax
+    }
 
-  private def stagedSchema(spark: SparkSession, file: String): StructType = {
+  private[graft] def stagedSchemaMemoSize: Int =
+    stagedSchemaMemo.synchronized(stagedSchemaMemo.size())
+
+  /** Physical schema of a staged events file — the generator's `ts`
+    * encoding has varied (INT64 nanos / TIMESTAMP_NTZ / TIMESTAMP), so
+    * the streaming source discovers it from the file instead of
+    * assuming one. The nanos legacy conf makes the INT64-nanos variant
+    * readable as long. A missing file raises the AnalysisException
+    * (PATH_NOT_FOUND) of a plain `spark.read.parquet`, not the status
+    * probe's FileNotFoundException. */
+  private[graft] def stagedSchema(spark: SparkSession, file: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val p = new org.apache.hadoop.fs.Path(file)
-    val st = p.getFileSystem(spark.sessionState.newHadoopConf())
-      .getFileStatus(p)
-    val phys = stagedSchemaMemo.get(file) match {
-      case Some((m, l, s))
-          if m == st.getModificationTime && l == st.getLen => s
-      case _ =>
-        val s = spark.read.parquet(file).schema
-        stagedSchemaMemo.put(file,
-          (st.getModificationTime, st.getLen, s))
-        s
+    val st =
+      try Some(p.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    val phys = st match {
+      case None => spark.read.parquet(file).schema
+      case Some(f) =>
+        stagedSchemaMemo.synchronized(Option(stagedSchemaMemo.get(file))) match {
+          case Some((m, l, s))
+              if m == f.getModificationTime && l == f.getLen => s
+          case _ =>
+            val s = spark.read.parquet(file).schema
+            stagedSchemaMemo.synchronized(stagedSchemaMemo.put(file,
+              (f.getModificationTime, f.getLen, s)))
+            s
+        }
     }
     // NTZ ts is requested as TimestampType at the scan itself (values
     // are UTC wall-times = UTC instants; same rationale as

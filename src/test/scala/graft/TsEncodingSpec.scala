@@ -135,4 +135,27 @@ class TsEncodingSpec extends AnyFunSuite {
       "sentinels from the old encoding poisoned the restaged stream")
     assert(second.except(first).isEmpty && first.except(second).isEmpty)
   }
+
+  test("a missing staged file raises AnalysisException, as a plain read does") {
+    val missing = JFiles.createTempDirectory("graft_tsenc_missing")
+      .resolve("events.parquet").toString
+    val plain = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.read.parquet(missing)
+    }
+    val staged = intercept[org.apache.spark.sql.AnalysisException] {
+      Speed.stagedSchema(spark, missing)
+    }
+    assert(staged.getCondition == plain.getCondition)
+  }
+
+  test("the staged-schema memo is bounded") {
+    val src = JFiles.createTempDirectory("graft_tsenc_memo")
+    writeSingle(canon.limit(1), src.resolve("events.parquet"))
+    for (i <- 0 until 70) {
+      val f = src.resolve(s"copy$i.parquet")
+      JFiles.copy(src.resolve("events.parquet"), f)
+      Speed.stagedSchema(spark, f.toString)
+    }
+    assert(Speed.stagedSchemaMemoSize <= 64)
+  }
 }
