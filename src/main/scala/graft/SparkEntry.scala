@@ -1078,14 +1078,17 @@ object SparkEntry {
       // bit-identical (HLL registers are max-merged — partitioning
       // and order independent; countDistinct is exact integers) and
       // the oracle sorts rows, so the join's output order is free.
+      // The recombining join is NULL-SAFE: the NULL event_type group
+      // is a group like any other, and a plain equi-join drops it.
       val ev = T(s, d, "events")
-      val approxAgg = ev.groupBy(col("event_type"))
+      val approxAgg = ev.groupBy(col("event_type").as("approx_event_type"))
         .agg(approx_count_distinct(col("user_id"), rsd).as("au"),
           approx_count_distinct(col("props"), rsd).as("ap"))
       val exactAgg = ev.groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("exact_users"),
           countDistinct(col("props")).as("exact_props"))
-      exactAgg.join(approxAgg, Seq("event_type"))
+      exactAgg.join(approxAgg,
+          col("event_type") <=> col("approx_event_type"))
         .select(col("event_type"), col("exact_users"),
           ok(col("au"), col("exact_users")).as("users_ok"),
           ok(col("ap"), col("exact_props")).as("props_ok"))
@@ -2021,8 +2024,8 @@ object SparkEntry {
         col("n_chars") < 130, maxDeleteFraction = 0.9)
       val v3 = LakeWriter.deleteFromSnapshotMor(s, table,
         col("lang") === "zh", maxDeleteFraction = 0.9)
-      require(LakeWriter.parseManifestDvs(s, table, v2).nonEmpty &&
-        LakeWriter.parseManifestDvs(s, table, v3).nonEmpty,
+      require(LakeWriter.manifest(s, table, v2).dvs.nonEmpty &&
+        LakeWriter.manifest(s, table, v3).dvs.nonEmpty,
         "q_snapshot_export_delta_mor: the MOR path did not commit DVs")
       require(LakeWriter.snapshotFiles(s, table, v3).toSet ==
         LakeWriter.snapshotFiles(s, table, 1L).toSet,
@@ -2060,7 +2063,7 @@ object SparkEntry {
         .withColumn("source", concat(lit("u_"), col("source")))
       val v2 = LakeWriter.mergeSnapshotMor(updates, table,
         Seq("doc_id"), maxDeleteFraction = 0.9)
-      require(LakeWriter.parseManifestDvs(s, table, v2).nonEmpty,
+      require(LakeWriter.manifest(s, table, v2).dvs.nonEmpty,
         "q_snapshot_export_delta_mor_merge: the MOR path committed " +
           "no DVs (silent COW fallback)")
       require(LakeWriter.snapshotFiles(s, table, 1L).toSet.subsetOf(
@@ -2106,7 +2109,7 @@ object SparkEntry {
         Map("lang" -> lit("xx"),
           "n_chars" -> (col("n_chars") + lit(1000))),
         maxDeleteFraction = 0.9)
-      require(LakeWriter.parseManifestDvs(s, table, v2).nonEmpty,
+      require(LakeWriter.manifest(s, table, v2).dvs.nonEmpty,
         "q_snapshot_update_mor: the MOR path committed no DVs " +
           "(silent COW fallback)")
       require(LakeWriter.snapshotFiles(s, table, 1L).toSet.subsetOf(
@@ -2676,8 +2679,8 @@ object SparkEntry {
         col("n_chars") < 140, maxDeleteFraction = 0.9)
       val v3 = LakeWriter.deleteFromSnapshotMor(s, table,
         col("lang") === "es", maxDeleteFraction = 0.9)
-      require(LakeWriter.parseManifestDvs(s, table, v2).nonEmpty &&
-        LakeWriter.parseManifestDvs(s, table, v3).nonEmpty,
+      require(LakeWriter.manifest(s, table, v2).dvs.nonEmpty &&
+        LakeWriter.manifest(s, table, v3).dvs.nonEmpty,
         "q_snapshot_export_iceberg_mor: the MOR path did not commit DVs")
       require(LakeWriter.snapshotFiles(s, table, v3).toSet ==
         LakeWriter.snapshotFiles(s, table, 1L).toSet,

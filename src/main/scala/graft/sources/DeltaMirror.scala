@@ -890,9 +890,8 @@ object DeltaMirror {
     var prevGv: Option[Long] = lastMirrored
     todo.zipWithIndex.foreach { case (gv, i) =>
       val dv = nextDv + i
-      val files = LakeWriter.snapshotFiles(spark, table, gv)
-      val partCols = LakeWriter.snapshotPartitionCols(spark, table, gv)
-      val colmapV = LakeWriter.parseManifestColmap(spark, table, gv)
+      val gm = LakeWriter.manifest(spark, table, gv)
+      val (files, partCols, colmapV) = (gm.files, gm.partCols, gm.colmap)
       val logical = LakeWriter.readSnapshot(spark, table, Some(gv)).schema
       // once any version carries a non-identity colmap, the mirror is
       // a column-mapped Delta table from that commit on (mode=name:
@@ -927,7 +926,7 @@ object DeltaMirror {
       // and REMOVES the exact old one ((path, dvUniqueId)
       // reconciliation — bytes in the log, no data rewrite, the whole
       // point of the MOR delete at 100 TB)
-      val dvsV = LakeWriter.parseManifestDvs(spark, table, gv)
+      val dvsV = gm.dvs
       def descOf(rel: String): Option[DeletionVectors.DvDescriptor] =
         dvsV.get(percentDecode(rel).split('/').last).map(d =>
           DeletionVectors.DvDescriptor("i", d.z85, None,
@@ -961,7 +960,7 @@ object DeltaMirror {
             "migratePartitionSpec, then mirror from the migrated " +
             "version (mirror(…, fromVersion = Some(v)))")
       }
-      val stats = LakeWriter.parseManifestStatsFull(spark, table, gv)
+      val stats = gm.stats
       // physical-name -> type map for the stats JSON (manifest stats
       // are keyed by physical column name, exactly like Delta's
       // stats on a column-mapped table)
@@ -1025,7 +1024,7 @@ object DeltaMirror {
       // continuing an incremental write sees the graft writer's
       // exactly-once state. Only entries that CHANGED at this version
       // emit (the map carries forward verbatim otherwise).
-      val txnsV = LakeWriter.parseManifestTxns(spark, table, gv)
+      val txnsV = gm.txns
       txnsV.toSeq.sortBy(_._1).foreach { case (a, tv) =>
         if (!prevTxns.get(a).contains(tv))
           actions += JObject(List("txn" -> JObject(List(

@@ -8,6 +8,7 @@ import org.apache.avro.file.{DataFileReader, DataFileWriter, SeekableByteArrayIn
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, lit, raise_error, when}
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -740,18 +741,6 @@ object IcebergMirror {
   // mirror (export direction)
   // ------------------------------------------------------------------
 
-  /** Invert hive path escaping (%XX) in a partition value segment. */
-  private def hiveUnescape(s: String): String = {
-    val sb = new StringBuilder; var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '%' && i + 2 < s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(s.charAt(i)); i += 1 }
-    }
-    sb.toString
-  }
-
   /** Typed partition value for the avro partition struct from the
     * hive-path string form. */
   private def partitionJvm(dt: DataType, raw: String): Any =
@@ -1139,7 +1128,8 @@ object IcebergMirror {
       // publishes NOTHING rather than hand a foreign engine a tree it
       // cannot read. An already-v3 tree carries on without the flag —
       // the one-way choice was already made.
-      val dvsByBase = LakeWriter.parseManifestDvs(spark, table, gv)
+      val gm = LakeWriter.manifest(spark, table, gv)
+      val dvsByBase = gm.dvs
       if (dvsByBase.nonEmpty && st.formatVersion < 3) {
         require(allowV3,
           s"iceberg mirror of $table: graft version $gv carries " +
@@ -1153,10 +1143,8 @@ object IcebergMirror {
             "the mirror v2. Nothing was published.")
         st.formatVersion = 3
       }
-      val files = LakeWriter.snapshotFiles(spark, table, gv)
-        .map(f => fs.makeQualified(new Path(f)).toString)
-      val partCols = LakeWriter.snapshotPartitionCols(spark, table, gv)
-      val colmapV = LakeWriter.parseManifestColmap(spark, table, gv)
+      val files = gm.files.map(f => fs.makeQualified(new Path(f)).toString)
+      val (partCols, colmapV) = (gm.partCols, gm.colmap)
       val logical = LakeWriter.readSnapshot(spark, table, Some(gv)).schema
       partCols.foreach { c =>
         require(colmapV.phys(c) == c,
@@ -1239,7 +1227,7 @@ object IcebergMirror {
       // a spec change over CARRIED files would leave old-layout files
       // in old-spec manifests forever; graft's migratePartitionSpec
       // rewrites them, after which they arrive here as adds
-      val stats = LakeWriter.parseManifestStatsFull(spark, table, gv)
+      val stats = gm.stats
       val meta: Map[String, (Long, Long)] =
         if (addPaths.isEmpty) Map.empty
         else {
@@ -1273,7 +1261,8 @@ object IcebergMirror {
                 s"${partCols.mkString(",")} partition spec — run " +
                 "migratePartitionSpec before mirroring")
             raws.flatten.toVector.zip(spec).map { case (v, sf) =>
-              partitionJvm(sf.dt, hiveUnescape(v)) }
+              partitionJvm(sf.dt, ExternalCatalogUtils.unescapePathName(v))
+            }
           }
         val fst = stats.get(f.split('/').last)
         val rows = fst.flatMap(_.rows).getOrElse(footerRowCount(hconf, f))
@@ -1502,7 +1491,7 @@ object IcebergMirror {
       // and Iceberg's reference scan) use to SKIP the snapshot
       // instead of reporting the whole table deleted+reinserted
       val rowNeutral = Set("compact", "optimize", "migrate")
-        .contains(LakeWriter.parseManifestMode(spark, table, gv))
+        .contains(gm.mode)
       val op =
         if (rowNeutral && (removedSet.nonEmpty || dvChanged)) "replace"
         else if (removedSet.isEmpty && newFiles.isEmpty && dvChanged)
@@ -2791,7 +2780,8 @@ object IcebergMirror {
           s"iceberg table at $dir: changelog DV unit for $p cannot " +
             s"resolve identity partition column $nm from the path — " +
             "serving nulls would be silently wrong; refusing"))
-        src -> partitionJvm(idToType(src), hiveUnescape(raw))
+        src -> partitionJvm(idToType(src),
+          ExternalCatalogUtils.unescapePathName(raw))
       }.toMap
     emitting.zipWithIndex.foreach { case (sid, i) =>
       val mlPath = str(snap(sid) \ "manifest-list").getOrElse(sys.error(

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{coalesce, col, expr, greatest,
   input_file_name, least, lit, max, min, regexp_extract, shiftleft,
   shiftright, when}
@@ -205,13 +206,6 @@ object LakeWriter {
       .sorted
   }
 
-  /** URL-encoding keeps arbitrary paths (commas, quotes, unicode)
-    * safe inside the positionally-parsed manifest. */
-  private def enc(s: String): String =
-    java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String =
-    java.net.URLDecoder.decode(s, "UTF-8")
-
   /** Parquet files under `p`, recursively (hive layouts nest them). */
   private[graft] def walk(fs: org.apache.hadoop.fs.FileSystem,
                    p: org.apache.hadoop.fs.Path): Seq[String] =
@@ -221,18 +215,6 @@ object LakeWriter {
         Seq(st.getPath.toString)
       else Seq.empty
     }
-
-  /** Invert hive path escaping (%XX) in a partition value segment. */
-  private def unescapePath(s: String): String = {
-    val sb = new StringBuilder; var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '%' && i + 2 < s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(s.charAt(i)); i += 1 }
-    }
-    sb.toString
-  }
 
   /** The hive partition key of a data file, one value per partition
     * column, derived from the PATH — so two files compare equal iff
@@ -265,7 +247,7 @@ object LakeWriter {
   private[sources] def partitionOfOpt(partitionCols: Seq[String],
                                       file: String): Option[String] = {
     val vals = partitionCols.flatMap { c =>
-      hiveSegmentOf(c, file).map(unescapePath)
+      hiveSegmentOf(c, file).map(ExternalCatalogUtils.unescapePathName)
       // U+0001 cannot appear unescaped in a hive path value, so the
       // join is unambiguous: mkString("") would collide (a=1,b=11)/(a=11,b=1)
     }
@@ -443,33 +425,31 @@ object LakeWriter {
       s"bad mode $mode")
     val spark = df.sparkSession
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    val prev = snapshotVersions(spark, table)
-    val version = prev.lastOption.getOrElse(0L) + 1
+    val prevV = snapshotVersions(spark, table).lastOption
+    val prev = prevV.map(manifest(spark, table, _))
+    val version = prevV.getOrElse(0L) + 1
+    val appendTo = prev.filter(_ => mode == "append")
     // COLUMN MAPPING: overwrite starts fresh (identity — no carried
     // files can leak old physical data); append inherits the table's
     // mapping and assigns a FRESH physical name to any genuinely-new
     // column whose name collides with a used or TOMBSTONED physical
     // (re-adding a dropped column must not resurrect old file data)
-    val colmap =
-      if (mode == "append" && prev.nonEmpty) {
-        val cm = parseManifestColmap(spark, table, prev.last)
-        val (_, psj, _) = parseManifest(spark, table, prev.last)
-        val prevSchema = org.apache.spark.sql.types.DataType.fromJson(psj)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        val prevNames = prevSchema.fieldNames.toSet
-        var used = cm.used(prevSchema)
-        val add = df.schema.fieldNames.filterNot(prevNames.contains)
-          .flatMap { n =>
-            if (!used.contains(n)) { used += n; None }
-            else {
-              var cand = s"${n}_p$version"; var i = 0
-              while (used.contains(cand)) { i += 1
-                cand = s"${n}_p${version}_$i" }
-              used += cand; Some(n -> cand)
-            }
+    val colmap = appendTo.fold(ColMapping.empty) { pm =>
+      val cm = pm.colmap
+      val prevNames = pm.schema.fieldNames.toSet
+      var used = cm.used(pm.schema)
+      val add = df.schema.fieldNames.filterNot(prevNames.contains)
+        .flatMap { n =>
+          if (!used.contains(n)) { used += n; None }
+          else {
+            var cand = s"${n}_p$version"; var i = 0
+            while (used.contains(cand)) { i += 1
+              cand = s"${n}_p${version}_$i" }
+            used += cand; Some(n -> cand)
           }
-        ColMapping(cm.map ++ add, cm.dropped)
-      } else ColMapping.empty
+        }
+      ColMapping(cm.map ++ add, cm.dropped)
+    }
     // PARTITION SPEC carries through appends (Delta parity: appending
     // to a partitioned table partitions the write by the table's
     // spec). Without this, a plain append onto a spec-carrying table
@@ -477,10 +457,7 @@ object LakeWriter {
     // spec from the manifest — reads survived (path recovery) but
     // partition-pruned MERGE/overwrite lost their contract. Overwrite
     // still resets the spec, like the column mapping.
-    val partCols =
-      if (mode == "append" && prev.nonEmpty)
-        parseManifest(spark, table, prev.last)._3
-      else Seq.empty[String]
+    val partCols = appendTo.fold(Seq.empty[String])(_.partCols)
     require(partCols.forall(df.columns.contains),
       s"append to $table must carry its partition column(s) " +
         s"${partCols.filterNot(df.columns.contains).mkString(",")}")
@@ -496,8 +473,8 @@ object LakeWriter {
         fs.listStatus(dataDir).toSeq
           .map(_.getPath.toString).filter(_.endsWith(".parquet")).sorted
       else walkFreshData(fs, dataDir).sorted
-    val (carried, schema) =
-      if (mode == "append" && prev.nonEmpty) {
+    val (carried, schema) = appendTo match {
+      case Some(pm) =>
         // checked schema EVOLUTION: an append may add columns (old
         // files read them back as null), omit columns (the new files
         // read back null there), or WIDEN a shared column along a
@@ -509,10 +486,7 @@ object LakeWriter {
         // loudly. The committed schema is the ORDERED union: table
         // columns first (possibly widened), genuinely new ones
         // appended.
-        val (files, prevSchemaJson, _) = parseManifest(spark, table, prev.last)
-        val prevSchema = org.apache.spark.sql.types.DataType
-          .fromJson(prevSchemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
+        val prevSchema = pm.schema
         val dfType = df.schema.fields.map(f => f.name -> f.dataType).toMap
         val drift = prevSchema.fields.flatMap(f => dfType.get(f.name)
           .filter(t => widerOf(f.dataType, t).isEmpty)
@@ -529,14 +503,13 @@ object LakeWriter {
         val prevNames = prevSchema.fieldNames.toSet
         val newFields = df.schema.fields
           .filterNot(f => prevNames.contains(f.name))
-        (files,
+        (pm.files,
           org.apache.spark.sql.types.StructType(widened ++ newFields))
-      } else (Seq.empty[String], df.schema)
-    enforceChecks(spark,
-      prev.lastOption.map(v => parseManifestChecks(spark, table, v))
-        .getOrElse(Map.empty),
+      case None => (Seq.empty[String], df.schema)
+    }
+    enforceChecks(spark, prev.fold(Map.empty[String, String])(_.checks),
       newFiles, schema, fs, Seq(dataDir), colmap)
-    writeManifest(spark, fs, table, version, mode, schema,
+    writeManifest(spark, fs, table, prev, version, mode, schema,
       carried ++ newFiles, partCols, colmapOverride = Some(colmap),
       txnOverride = txn)
     version
@@ -572,10 +545,9 @@ object LakeWriter {
     val spark = updates.sparkSession
     val prev = snapshotVersions(spark, table)
     if (prev.isEmpty) return commitSnapshot(updates, table, "overwrite", txn)
-    val (files, schemaJson, partCols) = parseManifest(spark, table, prev.last)
+    val pm = manifest(spark, table, prev.last)
+    val (files, schema, partCols) = (pm.files, pm.schema, pm.partCols)
     if (files.isEmpty) return commitSnapshot(updates, table, "overwrite", txn)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
     val cols = schema.fieldNames.toSeq
     // silent column drops would make a MERGE lose data; demand the
     // exact table schema (order-free) like MERGE INTO does
@@ -596,8 +568,7 @@ object LakeWriter {
     require(keyCols.forall(cols.contains),
       s"key columns ${keyCols.filterNot(cols.contains)} not in table")
     if (partCols.nonEmpty)
-      return mergePartitioned(updates, table, keyCols, prev.last, files,
-        schema, partCols, txn)
+      return mergePartitioned(updates, table, keyCols, pm, txn)
     // a partitioned snapshot committed by a pre-`partcols` manifest
     // keeps partition values in PATHS the flat probe below cannot see —
     // refuse loudly rather than lose those columns. Columns absent
@@ -612,8 +583,7 @@ object LakeWriter {
         s"$inPaths live in paths) but its manifest " +
         "predates partition metadata; re-commit via commitSnapshotDynamic")
     val keyExprs = keyCols.map(col)
-    val colmap = parseManifestColmap(spark, table, prev.last)
-    val dvs = parseManifestDvs(spark, table, prev.last)
+    val (colmap, dvs) = (pm.colmap, pm.dvs)
     // readFiles applies the COMMITTED schema so mixed-schema file sets
     // (evolved tables) read uniformly — missing columns come back null
     // the updates key sliver joins UN-deduplicated (r18): the probe's
@@ -648,10 +618,11 @@ object LakeWriter {
         .parquet(dataDir.toString) }
     val newFiles = fs.listStatus(dataDir).toSeq
       .map(_.getPath.toString).filter(_.endsWith(".parquet")).sorted
-    enforceChecks(spark, parseManifestChecks(spark, table, prev.last),
+    enforceChecks(spark, pm.checks,
       newFiles, newData.schema, fs, Seq(dataDir), colmap)
-    writeManifest(spark, fs, table, version, "merge", newData.schema,
-      carry ++ newFiles, txnOverride = txn, mergeKeys = keyCols)
+    writeManifest(spark, fs, table, Some(pm), version, "merge",
+      newData.schema, carry ++ newFiles, txnOverride = txn,
+      mergeKeys = keyCols)
     version
   }
 
@@ -691,11 +662,10 @@ object LakeWriter {
     if (prev.isEmpty)
       return commitSnapshot(updates, table, "overwrite", txn)
     val v0 = prev.last
-    val (files, schemaJson, partCols) = parseManifest(spark, table, v0)
+    val pm = manifest(spark, table, v0)
+    val (files, schema, partCols) = (pm.files, pm.schema, pm.partCols)
     if (files.isEmpty)
       return commitSnapshot(updates, table, "overwrite", txn)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
     val cols = schema.fieldNames.toSeq
     require(updates.columns.toSet == cols.toSet,
       s"mergeSnapshotMor schema mismatch: table has ${cols.sorted}, " +
@@ -710,8 +680,7 @@ object LakeWriter {
           f.dataType.catalogString).mkString(", "))
     require(keyCols.forall(cols.contains),
       s"key columns ${keyCols.filterNot(cols.contains)} not in table")
-    val colmap = parseManifestColmap(spark, table, v0)
-    val oldDvs = parseManifestDvs(spark, table, v0)
+    val (colmap, oldDvs) = (pm.colmap, pm.dvs)
     val keyExprs = keyCols.map(col)
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
     val version = v0 + 1
@@ -761,9 +730,9 @@ object LakeWriter {
     def commitMor(fullyDeleted: Set[String],
                   newEntries: Map[String, InlineDv]): Long = {
       val kept = files.filterNot(f => fullyDeleted(baseName(f)))
-      enforceChecks(spark, parseManifestChecks(spark, table, v0),
+      enforceChecks(spark, pm.checks,
         newFiles, schema, fs, Seq(dataDir), colmap)
-      writeManifest(spark, fs, table, version, "merge", schema,
+      writeManifest(spark, fs, table, Some(pm), version, "merge", schema,
         kept ++ newFiles, partCols, txnOverride = txn,
         mergeKeys = keyCols,
         dvsOverride = Some(oldDvs ++ newEntries))
@@ -799,7 +768,7 @@ object LakeWriter {
     * rename pass — and the comparison is immune to scheme/percent-
     * encoding differences between input_file_name() and manifest
     * path strings. */
-  private def baseName(p: String): String =
+  private[sources] def baseName(p: String): String =
     p.substring(p.lastIndexOf('/') + 1)
 
   /** Enumerate a JUST-WRITTEN data directory, re-establishing the
@@ -894,14 +863,11 @@ object LakeWriter {
         => DataFrame): Long = {
     val prev = snapshotVersions(spark, table)
     require(prev.nonEmpty, s"no snapshots at $table")
-    val (files, schemaJson, partCols) = parseManifest(spark, table, prev.last)
+    val pm = manifest(spark, table, prev.last)
+    val (files, schema, partCols) = (pm.files, pm.schema, pm.partCols)
     if (files.isEmpty) return prev.last
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val colmap = parseManifestColmap(spark, table, prev.last)
-    val dvs = parseManifestDvs(spark, table, prev.last)
-    val candidates = pruneFilesByPredicate(spark, table, prev.last,
-      predicate, files, schema, partCols, colmap)
+    val (colmap, dvs) = (pm.colmap, pm.dvs)
+    val candidates = pruneFilesByPredicate(pm, predicate)
     if (candidates.isEmpty) return prev.last
     val matched = readFiles(spark, candidates, schema, colmap, dvs)
       .where(predicate)
@@ -922,9 +888,9 @@ object LakeWriter {
         .parquet(dataDir.toString) }
     val newFiles = walkFreshData(fs, dataDir).sorted
     if (checkNewFiles)
-      enforceChecks(spark, parseManifestChecks(spark, table, prev.last),
-        newFiles, schema, fs, Seq(dataDir), colmap)
-    writeManifest(spark, fs, table, version, op, schema,
+      enforceChecks(spark, pm.checks, newFiles, schema, fs, Seq(dataDir),
+        colmap)
+    writeManifest(spark, fs, table, Some(pm), version, op, schema,
       carry ++ newFiles, partCols)
     version
   }
@@ -950,9 +916,7 @@ object LakeWriter {
     // predicate matches nothing (one extra metadata-only parse)
     val prev = snapshotVersions(spark, table)
     require(prev.nonEmpty, s"no snapshots at $table")
-    val fieldNames = org.apache.spark.sql.types.DataType
-      .fromJson(parseManifest(spark, table, prev.last)._2)
-      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
+    val fieldNames = manifest(spark, table, prev.last).schema.fieldNames
     require(set.keys.forall(fieldNames.contains),
       s"SET columns ${set.keys.filterNot(fieldNames.contains)} " +
         "not in table")
@@ -1005,17 +969,14 @@ object LakeWriter {
     val prev = snapshotVersions(spark, table)
     require(prev.nonEmpty, s"no snapshots at $table")
     val v0 = prev.last
-    val (files, schemaJson, partCols) = parseManifest(spark, table, v0)
+    val pm = manifest(spark, table, v0)
+    val (files, schema, partCols) = (pm.files, pm.schema, pm.partCols)
     if (files.isEmpty) return v0
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
     require(set.keys.forall(schema.fieldNames.contains),
       s"SET columns ${set.keys.filterNot(schema.fieldNames.contains)} " +
         "not in table")
-    val colmap = parseManifestColmap(spark, table, v0)
-    val oldDvs = parseManifestDvs(spark, table, v0)
-    val candidates = pruneFilesByPredicate(spark, table, v0,
-      predicate, files, schema, partCols, colmap)
+    val (colmap, oldDvs) = (pm.colmap, pm.dvs)
+    val candidates = pruneFilesByPredicate(pm, predicate)
     if (candidates.isEmpty) return v0
     // the COW twin's matched-file probe (predicate-pushed): narrows
     // BOTH the image read and the DV passes from stat-pruned
@@ -1073,7 +1034,7 @@ object LakeWriter {
         // must equal the image rows WRITTEN, footer-counted — a
         // metadata-only check that fails loudly instead of committing
         // a torn update.
-        val stats = parseManifestStatsFull(spark, table, v0)
+        val stats = pm.stats
         def oldCard(bn: String): Long =
           oldDvs.get(bn).map(_.cardinality).getOrElse(0L)
         def liveRows(bn: String): Long = {
@@ -1092,9 +1053,9 @@ object LakeWriter {
         morRequireDeterministic(spark, table, newFiles, schema,
           colmap, newlyRetired, "UPDATE")
         val kept = files.filterNot(f => fullyDeleted(baseName(f)))
-        enforceChecks(spark, parseManifestChecks(spark, table, v0),
+        enforceChecks(spark, pm.checks,
           newFiles, schema, fs, Seq(dataDir), colmap)
-        writeManifest(spark, fs, table, version, "update", schema,
+        writeManifest(spark, fs, table, Some(pm), version, "update", schema,
           kept ++ newFiles, partCols,
           dvsOverride = Some(oldDvs ++ newEntries))
         version
@@ -1164,14 +1125,11 @@ object LakeWriter {
     val prev = snapshotVersions(spark, table)
     require(prev.nonEmpty, s"no snapshots at $table")
     val v0 = prev.last
-    val (files, schemaJson, partCols) = parseManifest(spark, table, v0)
+    val pm = manifest(spark, table, v0)
+    val (files, schema, partCols) = (pm.files, pm.schema, pm.partCols)
     if (files.isEmpty) return v0
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val colmap = parseManifestColmap(spark, table, v0)
-    val oldDvs = parseManifestDvs(spark, table, v0)
-    val candidates = pruneFilesByPredicate(spark, table, v0,
-      predicate, files, schema, partCols, colmap)
+    val (colmap, oldDvs) = (pm.colmap, pm.dvs)
+    val candidates = pruneFilesByPredicate(pm, predicate)
     if (candidates.isEmpty) return v0
     val (joined, oldDel, fileOfKey) =
       morFlaggedBase(spark, table, candidates, schema, colmap, oldDvs)
@@ -1186,7 +1144,7 @@ object LakeWriter {
         val keptFiles = files.filterNot(f => fullyDeleted(baseName(f)))
         val version = v0 + 1
         val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-        writeManifest(spark, fs, table, version, "delete", schema,
+        writeManifest(spark, fs, table, Some(pm), version, "delete", schema,
           keptFiles, partCols,
           dvsOverride = Some(oldDvs ++ newEntries))
         version
@@ -1414,12 +1372,9 @@ object LakeWriter {
                      collapse: Boolean = true): DataFrame = {
     require(fromVersion <= toVersion,
       s"changesBetween: from $fromVersion > to $toVersion")
-    val (fromFiles, fromSchemaJson, _) =
-      parseManifest(spark, table, fromVersion)
-    val (toFiles, toSchemaJson, _) = parseManifest(spark, table, toVersion)
-    def schemaOf(json: String) =
-      org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val from = manifest(spark, table, fromVersion)
+    val to = manifest(spark, table, toVersion)
+    val (fromFiles, toFiles) = (from.files, to.files)
     val fromSet = fromFiles.toSet
     val toSet = toFiles.toSet
     // the feed's unit is (file, deletion vector): a MERGE-ON-READ
@@ -1428,8 +1383,7 @@ object LakeWriter {
     // the old DV as deletes, under the new DV as inserts; collapse
     // cancels the survivors, leaving exactly the newly-deleted rows.
     // Cost stays bounded by CHANGED (files ∪ DVs), never table size.
-    val fromDvs = parseManifestDvs(spark, table, fromVersion)
-    val toDvs = parseManifestDvs(spark, table, toVersion)
+    val (fromDvs, toDvs) = (from.dvs, to.dvs)
     val dvChanged = fromFiles.filter(f => toSet.contains(f) &&
       fromDvs.get(baseName(f)) != toDvs.get(baseName(f)))
     val added = toFiles.filterNot(fromSet) ++ dvChanged
@@ -1444,13 +1398,11 @@ object LakeWriter {
     // drop-old-name + insert-new-name, like a column-level CDC)
     val inserts =
       if (added.isEmpty) None
-      else Some(readFiles(spark, added, schemaOf(toSchemaJson),
-          parseManifestColmap(spark, table, toVersion), toDvs)
+      else Some(readFiles(spark, added, to.schema, to.colmap, toDvs)
         .withColumn("_change_type", tag("insert")))
     val deletes =
       if (removed.isEmpty) None
-      else Some(readFiles(spark, removed, schemaOf(fromSchemaJson),
-          parseManifestColmap(spark, table, fromVersion), fromDvs)
+      else Some(readFiles(spark, removed, from.schema, from.colmap, fromDvs)
         .withColumn("_change_type", tag("delete")))
     val raw = (inserts, deletes) match {
       case (Some(i), Some(d)) =>
@@ -1497,7 +1449,7 @@ object LakeWriter {
     * table-sized. */
   def changeFeedBetween(spark: SparkSession, table: String,
                         fromVersion: Long, toVersion: Long): DataFrame = {
-    val keys = parseManifestMergeKeys(spark, table, toVersion)
+    val keys = manifest(spark, table, toVersion).mergeKeys
     // the update encoding is only meaningful for the MERGE's own
     // step: across a wider range, toVersion's keys would pair
     // unrelated net rows from other commits into bogus update images
@@ -1551,15 +1503,14 @@ object LakeWriter {
     * instead diverges on timestamps/empty strings and would silently
     * mis-prune). */
   private def mergePartitioned(updates: DataFrame, table: String,
-      keyCols: Seq[String], prevVersion: Long, files: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      partCols: Seq[String],
-      txn: Option[(String, Long)] = None): Long = {
+      keyCols: Seq[String], prev: Manifest,
+      txn: Option[(String, Long)]): Long = {
     val spark = updates.sparkSession
+    val (files, schema, partCols) = (prev.files, prev.schema, prev.partCols)
     val cols = schema.fieldNames.toSeq
-    val colmap = parseManifestColmap(spark, table, prevVersion)
+    val colmap = prev.colmap
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    val version = prevVersion + 1
+    val version = prev.version + 1
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val updDir =
       new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt-u")
@@ -1581,7 +1532,7 @@ object LakeWriter {
           partitionOfOpt(partCols, f).forall(touchedParts))
       else (files, Seq.empty[String])
     val keyExprs = keyCols.map(col)
-    val dvs = parseManifestDvs(spark, table, prevVersion)
+    val dvs = prev.dvs
     val probed =
       if (candidates.isEmpty) Set.empty[String]
       // un-deduplicated key sliver — same argument as mergeSnapshot's
@@ -1610,30 +1561,16 @@ object LakeWriter {
     // frame's), so partition-column typing is stable across versions
     // (CHECK enforcement: the update rows are the only genuinely new
     // ones — survivors re-land from already-validated data)
-    enforceChecks(spark, parseManifestChecks(spark, table, prevVersion),
-      updFiles, schema, fs,
+    enforceChecks(spark, prev.checks, updFiles, schema, fs,
       Seq(updDir) ++ survFiles.headOption.map(_ =>
         new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt-s")),
       colmap)
-    writeManifest(spark, fs, table, version, "merge", schema,
+    writeManifest(spark, fs, table, Some(prev), version, "merge", schema,
       untouched ++ carryRest ++ survFiles ++ updFiles, partCols,
       txnOverride = txn, mergeKeys = keyCols)
     version
   }
 
-  /** Write + atomically activate a manifest. The commit point is a
-    * FileContext rename WITHOUT overwrite — fails if a concurrent
-    * writer already committed this version (atomic on HDFS; local FS
-    * is check-then-rename best effort). The loser's data directory is
-    * an inert orphan, never a clobbered manifest. Schema rides in the
-    * manifest so an empty snapshot still reads back typed.
-    *
-    * Partitioned commits also record `partcols` — later merges and
-    * dynamic commits then know the table's partition layout from the
-    * MANIFEST alone; per-file partition keys derive deterministically
-    * from the hive paths (`partitionOf`). Every string is URL-encoded,
-    * so the positional parser below stays unambiguous (brackets/
-    * quotes/commas cannot occur inside entries). */
   /** Spark types data skipping stats/compares: integral, floating,
     * string, date, timestamp. (Decimals/binary: conservative scan.)
     * Timestamps canonicalize to epoch MICROS (matching Spark's
@@ -1802,101 +1739,6 @@ object LakeWriter {
       case _ => BigDecimal(a) < BigDecimal(b)
     }
 
-  /** The per-file stats recorded in a version's manifest (empty for
-    * pre-stats manifests), keyed by file BASENAME. Wire shapes, all
-    * inside one url-encoded JSON blob:
-    *   `col: [lo, hi]`          — min/max only (legacy + unknown nulls)
-    *   `col: [lo|null, hi|null, n]` — min/max (absent = null) + null count
-    *   `"": n`                  — the file's row count (the empty
-    *                              string cannot name a real column) */
-  private[graft] def parseManifestStatsFull(spark: SparkSession,
-      table: String, version: Long): Map[String, FileStats] = {
-    val p = new org.apache.hadoop.fs.Path(manifestDir(table), s"v$version.json")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val body = new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    in.close()
-    body.split("\"stats\":\"") match {
-      case Array(_, rest) =>
-        val json = dec(rest.split("\"")(0))
-        import org.json4s._
-        def str(j: JValue): Option[String] = j match {
-          case JString(s) => Some(s)
-          case _ => None
-        }
-        org.json4s.jackson.JsonMethods.parse(json) match {
-          case JObject(byFile) => byFile.map { case (f, colsJson) =>
-            f -> (colsJson match {
-              case JObject(cs) =>
-                val rows = cs.collectFirst {
-                  case ("", JString(n)) => n.toLong }
-                val cols = cs.collect {
-                  case (c, JArray(List(JString(lo), JString(hi))))
-                      if c.nonEmpty =>
-                    c -> ColStat(Some(lo), Some(hi), None)
-                  case (c, JArray(List(lo, hi, JString(n))))
-                      if c.nonEmpty =>
-                    c -> ColStat(str(lo), str(hi), Some(n.toLong))
-                }.toMap
-                FileStats(rows, cols)
-              case _ => FileStats(None, Map.empty)
-            })
-          }.toMap
-          case _ => Map.empty
-        }
-      case _ => Map.empty
-    }
-  }
-
-  /** Bloom-index config of a manifest: LOGICAL column → expected
-    * items per file (empty when the table carries no bloom index). */
-  private[graft] def parseManifestBloomCfg(spark: SparkSession,
-      table: String, version: Long): Map[String, Long] =
-    bloomBlob(spark, table, version) match {
-      case Some(org.json4s.JObject(fields)) =>
-        fields.collectFirst { case ("cfg", org.json4s.JObject(cs)) =>
-          cs.collect { case (c, org.json4s.JInt(n)) => c -> n.toLong }
-            .toMap
-        }.getOrElse(Map.empty)
-      case _ => Map.empty
-    }
-
-  /** Per-file blooms of a manifest: file basename → physical column
-    * → base64 sketch bytes. */
-  private[graft] def parseManifestBlooms(spark: SparkSession,
-      table: String, version: Long): Map[String, Map[String, String]] =
-    bloomBlob(spark, table, version) match {
-      case Some(org.json4s.JObject(fields)) =>
-        fields.collectFirst { case ("files", org.json4s.JObject(fsJ)) =>
-          fsJ.map { case (bn, colsJ) =>
-            bn -> (colsJ match {
-              case org.json4s.JObject(cs) => cs.collect {
-                case (pc, org.json4s.JString(b64)) => pc -> b64 }.toMap
-              case _ => Map.empty[String, String]
-            })
-          }.toMap
-        }.getOrElse(Map.empty)
-      case _ => Map.empty
-    }
-
-  private def bloomBlob(spark: SparkSession, table: String,
-      version: Long): Option[org.json4s.JValue] = {
-    val p = new org.apache.hadoop.fs.Path(manifestDir(table), s"v$version.json")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val body = new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    in.close()
-    body.split("\"blooms\":\"") match {
-      case Array(_, rest) =>
-        Some(org.json4s.jackson.JsonMethods.parse(dec(rest.split("\"")(0))))
-      case _ => None
-    }
-  }
-
   /** Declare (or reconfigure) the table's BLOOM FILE INDEX: from this
     * commit on, every data file carries a per-file bloom filter over
     * `xxhash64(col)` for each listed LOGICAL column (expected items →
@@ -1913,32 +1755,14 @@ object LakeWriter {
     require(colItems.nonEmpty, "setBloomIndex: no columns given")
     require(colItems.values.forall(_ > 0),
       s"setBloomIndex: expected items must be positive: $colItems")
-    val prev = snapshotVersions(spark, table)
-    require(prev.nonEmpty, s"no snapshots at $table")
-    val (files, schemaJson, partCols) = parseManifest(spark, table, prev.last)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val known = schema.fieldNames.toSet
+    val pm = latestManifest(spark, table)
+    val known = pm.schema.fieldNames.toSet
     val missing = colItems.keySet.diff(known)
     require(missing.isEmpty,
       s"setBloomIndex: unknown columns $missing (schema: $known)")
-    val version = prev.last + 1
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    writeManifest(spark, fs, table, version, "bloomindex", schema, files,
-      partCols, bloomCfgOverride = Some(colItems))
-    version
+    metaCommit(spark, table, pm, "bloomindex")(
+      bloomCfgOverride = Some(colItems))
   }
-
-  /** The legacy (min, max)-only view of `parseManifestStatsFull` —
-    * what the pre-null-count call sites and specs consume. */
-  private[graft] def parseManifestStats(spark: SparkSession,
-      table: String, version: Long)
-      : Map[String, Map[String, (String, String)]] =
-    parseManifestStatsFull(spark, table, version).map { case (f, fst) =>
-      f -> fst.cols.collect {
-        case (c, ColStat(Some(lo), Some(hi), _)) => c -> (lo, hi)
-      }
-    }
 
   /** COLUMN MAPPING (Delta name-mode parity): the manifest's logical
     * schema can diverge from the PHYSICAL column names stored in the
@@ -1962,37 +1786,6 @@ object LakeWriter {
     val empty: ColMapping = ColMapping(Map.empty, Seq.empty)
   }
 
-  /** The column mapping in force at a version (identity when the
-    * field is absent — every pre-colmap manifest). Stored like
-    * checks: one url-encoded JSON blob `{"m":{logical:physical},
-    * "d":[physical,...]}`. */
-  private[graft] def parseManifestColmap(spark: SparkSession,
-      table: String, version: Long): ColMapping = {
-    val p = new org.apache.hadoop.fs.Path(manifestDir(table), s"v$version.json")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return ColMapping.empty
-    val in = fs.open(p)
-    val body = new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    in.close()
-    body.split("\"colmap\":\"") match {
-      case Array(_, rest) =>
-        import org.json4s._
-        org.json4s.jackson.JsonMethods.parse(dec(rest.split("\"")(0))) match {
-          case JObject(fields) =>
-            val m = fields.collectFirst { case ("m", JObject(es)) =>
-              es.collect { case (l, JString(p)) => l -> p }.toMap }
-              .getOrElse(Map.empty[String, String])
-            val d = fields.collectFirst { case ("d", JArray(es)) =>
-              es.collect { case JString(s) => s } }
-              .getOrElse(Seq.empty[String])
-            ColMapping(m, d)
-          case _ => ColMapping.empty
-        }
-      case _ => ColMapping.empty
-    }
-  }
-
   /** Rename a DataFrame's (logical) columns to their physical names
     * right before a data-file write — identity mappings cost
     * nothing. */
@@ -2008,74 +1801,6 @@ object LakeWriter {
     else org.apache.spark.sql.types.StructType(
       schema.fields.map(f => f.copy(name = colmap.phys(f.name))))
 
-  /** The CHECK constraints in force at a version (empty when none).
-    * Stored like stats: one url-encoded JSON blob `{name: sqlExpr}`. */
-  private[graft] def parseManifestChecks(spark: SparkSession,
-      table: String, version: Long): Map[String, String] = {
-    val p = new org.apache.hadoop.fs.Path(manifestDir(table), s"v$version.json")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val body = new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    in.close()
-    body.split("\"checks\":\"") match {
-      case Array(_, rest) =>
-        import org.json4s._
-        org.json4s.jackson.JsonMethods.parse(dec(rest.split("\"")(0))) match {
-          case JObject(cs) => cs.collect {
-            case (n, JString(e)) => n -> e }.toMap
-          case _ => Map.empty
-        }
-      case _ => Map.empty
-    }
-  }
-
-  /** The application-transaction map `{appId -> version}` in force at
-    * a manifest version (Delta SetTransaction parity; empty when no
-    * writer ever stamped one). Stored like checks: one url-encoded
-    * JSON blob. */
-  private[graft] def parseManifestTxns(spark: SparkSession,
-      table: String, version: Long): Map[String, Long] = {
-    val p = new org.apache.hadoop.fs.Path(manifestDir(table), s"v$version.json")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return Map.empty
-    // bounded-prefix read: the txns field is written at the manifest
-    // HEAD (writeManifest), so one 256 KB read decides — found, or
-    // provably absent (the "schema" marker that always follows the
-    // head appeared without it). Only a head larger than the window
-    // (never produced by this writer) falls back to a full read.
-    val in = fs.open(p)
-    val win = new Array[Byte](256 * 1024)
-    var got = 0
-    var r = 0
-    while (got < win.length && r >= 0) {
-      r = in.read(win, got, win.length - got)
-      if (r > 0) got += r
-    }
-    val head = new String(win, 0, got, "UTF-8")
-    val body =
-      if (head.contains("\"txns\":\"") || head.contains("\"schema\":\"") ||
-          got < win.length) { in.close(); head }
-      else {
-        // byte-level concat (not head + string-of-rest): safe even if
-        // a multi-byte char ever straddled the window boundary
-        val rest = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-        in.close()
-        new String(win.take(got) ++ rest, "UTF-8")
-      }
-    body.split("\"txns\":\"") match {
-      case Array(_, rest) =>
-        import org.json4s._
-        org.json4s.jackson.JsonMethods.parse(dec(rest.split("\"")(0))) match {
-          case JObject(ts) => ts.collect {
-            case (a, JInt(v)) => a -> v.toLong }.toMap
-          case _ => Map.empty
-        }
-      case _ => Map.empty
-    }
-  }
-
   /** The highest `txnVersion` writer `appId` has committed to `table`
     * (None before its first stamped commit). THE idempotent-replay
     * gate: an incremental consumer that stamps each merge with
@@ -2089,7 +1814,7 @@ object LakeWriter {
   def lastTxnVersion(spark: SparkSession, table: String,
                      appId: String): Option[Long] =
     snapshotVersions(spark, table).lastOption
-      .flatMap(v => parseManifestTxns(spark, table, v).get(appId))
+      .flatMap(v => manifest(spark, table, v).txns.get(appId))
 
   /** Enforce CHECK constraints over `files` (the rows a commit is
     * about to publish) in ONE aggregate scan — SQL CHECK semantics:
@@ -2132,33 +1857,20 @@ object LakeWriter {
     * reference). */
   def addCheck(spark: SparkSession, table: String, name: String,
                exprSql: String): Long = {
-    val vs = snapshotVersions(spark, table)
-    require(vs.nonEmpty, s"no snapshots at $table")
-    val prevChecks = parseManifestChecks(spark, table, vs.last)
-    require(!prevChecks.contains(name), s"check '$name' already exists")
-    val (files, schemaJson, partCols) = parseManifest(spark, table, vs.last)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    enforceChecks(spark, Map(name -> exprSql), files, schema, fs, Nil)
-    writeManifest(spark, fs, table, vs.last + 1, "meta", schema, files,
-      partCols, checksOverride = Some(prevChecks + (name -> exprSql)))
-    vs.last + 1
+    val pm = latestManifest(spark, table)
+    require(!pm.checks.contains(name), s"check '$name' already exists")
+    enforceChecks(spark, Map(name -> exprSql), pm.files, pm.schema,
+      fsOf(spark, new org.apache.hadoop.fs.Path(table)), Nil)
+    metaCommit(spark, table, pm, "meta")(
+      checksOverride = Some(pm.checks + (name -> exprSql)))
   }
 
   /** DROP CONSTRAINT — metadata-only commit without the named check. */
   def dropCheck(spark: SparkSession, table: String, name: String): Long = {
-    val vs = snapshotVersions(spark, table)
-    require(vs.nonEmpty, s"no snapshots at $table")
-    val prevChecks = parseManifestChecks(spark, table, vs.last)
-    require(prevChecks.contains(name), s"no check '$name' on $table")
-    val (files, schemaJson, partCols) = parseManifest(spark, table, vs.last)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    writeManifest(spark, fs, table, vs.last + 1, "meta", schema, files,
-      partCols, checksOverride = Some(prevChecks - name))
-    vs.last + 1
+    val pm = latestManifest(spark, table)
+    require(pm.checks.contains(name), s"no check '$name' on $table")
+    metaCommit(spark, table, pm, "meta")(
+      checksOverride = Some(pm.checks - name))
   }
 
   /** Every CHECK must still ANALYZE under a changed schema — the
@@ -2189,30 +1901,24 @@ object LakeWriter {
   def renameColumn(spark: SparkSession, table: String,
                    oldName: String, newName: String): Long = {
     require(oldName != newName, "rename to the same name")
-    val vs = snapshotVersions(spark, table)
-    require(vs.nonEmpty, s"no snapshots at $table")
-    val (files, schemaJson, partCols) = parseManifest(spark, table, vs.last)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val pm = latestManifest(spark, table)
+    val (schema, partCols, cm) = (pm.schema, pm.partCols, pm.colmap)
     require(schema.fieldNames.contains(oldName),
       s"no column '$oldName' on $table")
     require(!schema.fieldNames.contains(newName),
       s"column '$newName' already exists on $table")
     require(!partCols.contains(oldName),
       s"cannot rename partition column '$oldName' (values live in paths)")
-    val cm = parseManifestColmap(spark, table, vs.last)
     val newSchema = org.apache.spark.sql.types.StructType(schema.fields.map(
       f => if (f.name == oldName) f.copy(name = newName) else f))
-    requireChecksAnalyze(spark, parseManifestChecks(spark, table, vs.last),
-      newSchema, s"rename $oldName -> $newName")
+    requireChecksAnalyze(spark, pm.checks, newSchema,
+      s"rename $oldName -> $newName")
     // identity entries prune themselves (a rename BACK to the
     // physical name needs no mapping)
     val newMap = ((cm.map - oldName) + (newName -> cm.phys(oldName)))
       .filter { case (l, p) => l != p }
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    writeManifest(spark, fs, table, vs.last + 1, "rename", newSchema, files,
-      partCols, colmapOverride = Some(ColMapping(newMap, cm.dropped)))
-    vs.last + 1
+    metaCommit(spark, table, pm, "rename")(newSchema,
+      colmapOverride = Some(ColMapping(newMap, cm.dropped)))
   }
 
   /** DROP COLUMN as a METADATA-ONLY commit: files keep the physical
@@ -2222,38 +1928,56 @@ object LakeWriter {
     * logical name gets a fresh physical name instead of resurrecting
     * the old bytes. */
   def dropColumn(spark: SparkSession, table: String, name: String): Long = {
-    val vs = snapshotVersions(spark, table)
-    require(vs.nonEmpty, s"no snapshots at $table")
-    val (files, schemaJson, partCols) = parseManifest(spark, table, vs.last)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val pm = latestManifest(spark, table)
+    val (schema, partCols, cm) = (pm.schema, pm.partCols, pm.colmap)
     require(schema.fieldNames.contains(name), s"no column '$name' on $table")
     require(!partCols.contains(name),
       s"cannot drop partition column '$name' (values live in paths)")
     require(schema.fields.length > 1, "cannot drop the last column")
-    val cm = parseManifestColmap(spark, table, vs.last)
     val newSchema = org.apache.spark.sql.types.StructType(
       schema.fields.filterNot(_.name == name))
-    requireChecksAnalyze(spark, parseManifestChecks(spark, table, vs.last),
-      newSchema, s"drop $name")
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    writeManifest(spark, fs, table, vs.last + 1, "drop", newSchema, files,
-      partCols, colmapOverride =
-        Some(ColMapping(cm.map - name, cm.dropped :+ cm.phys(name))))
-    vs.last + 1
+    requireChecksAnalyze(spark, pm.checks, newSchema, s"drop $name")
+    metaCommit(spark, table, pm, "drop")(newSchema, colmapOverride =
+      Some(ColMapping(cm.map - name, cm.dropped :+ cm.phys(name))))
   }
 
   /** The CHECK constraints currently in force. */
   def snapshotChecks(spark: SparkSession, table: String)
       : Map[String, String] = {
-    val vs = snapshotVersions(spark, table)
-    if (vs.isEmpty) Map.empty
-    else parseManifestChecks(spark, table, vs.last)
+    snapshotVersions(spark, table).lastOption
+      .fold(Map.empty[String, String])(manifest(spark, table, _).checks)
   }
 
+  /** A METADATA-ONLY commit on top of `prev`: its files and partition
+    * spec carry by reference; `schema` and the given overrides change.
+    * Returns the committed version. */
+  private def metaCommit(spark: SparkSession, table: String,
+      prev: Manifest, mode: String)(
+      schema: org.apache.spark.sql.types.StructType = prev.schema,
+      checksOverride: Option[Map[String, String]] = None,
+      colmapOverride: Option[ColMapping] = None,
+      bloomCfgOverride: Option[Map[String, Long]] = None): Long = {
+    val version = prev.version + 1
+    writeManifest(spark, fsOf(spark, new org.apache.hadoop.fs.Path(table)),
+      table, Some(prev), version, mode, schema, prev.files, prev.partCols,
+      checksOverride, colmapOverride, bloomCfgOverride)
+    version
+  }
+
+  /** Write + atomically activate the manifest of `version`, carrying
+    * every table-level field (column mapping, DVs, CHECKs, stats, bloom
+    * index, txns) from `prev` — the manifest the caller already read —
+    * unless this commit overrides it. Per-file metadata is computed
+    * only for files NEW to this version (footer stats, blooms), so
+    * commit cost stays O(delta). Partitioned commits also record
+    * `partcols`: later merges and dynamic commits then know the
+    * table's partition layout from the MANIFEST alone; per-file
+    * partition keys derive deterministically from the hive paths
+    * (`partitionOf`). */
   private def writeManifest(spark: SparkSession,
                             fs: org.apache.hadoop.fs.FileSystem,
-                            table: String, version: Long, mode: String,
+                            table: String, prev: Option[Manifest],
+                            version: Long, mode: String,
                             schema: org.apache.spark.sql.types.StructType,
                             files: Seq[String],
                             partCols: Seq[String] = Nil,
@@ -2284,154 +2008,50 @@ object LakeWriter {
         "predate the unique-basename invariant — those tables' " +
         "per-file metadata was already unreliable; rebuild with a " +
         "full overwrite (commitSnapshot of readSnapshot output)")
-    // ONE manifest-directory listing feeds every carry-forward field
-    // below (colmap, checks, stats, blooms, txns) — previously each
-    // paid its own listing, five per commit on every table
-    val prevV: Option[Long] =
-      snapshotVersions(spark, table).filter(_ < version).lastOption
-    val partFields =
-      if (partCols.isEmpty) ""
-      else s""""partcols":"${partCols.map(enc).mkString(",")}","""
-    // the MERGE KEYS a keyed upsert used — what lets a change-feed
-    // derivation pair this commit's delete+insert rows into
-    // update_preimage/update_postimage (Delta CDF's update encoding)
-    val mergeKeysField =
-      if (mergeKeys.isEmpty) ""
-      else s""""mergekeys":"${mergeKeys.map(enc).mkString(",")}","""
     // column mapping carries forward verbatim unless this commit
     // changes it (rename/drop/overwrite)
     val colmap = colmapOverride.getOrElse(
-      prevV
-        .map(v => parseManifestColmap(spark, table, v))
-        .getOrElse(ColMapping.empty))
-    val colmapField =
-      if (colmap.map.isEmpty && colmap.dropped.isEmpty) ""
-      else {
-        import org.json4s._
-        val json = org.json4s.jackson.JsonMethods.compact(
-          org.json4s.jackson.JsonMethods.render(JObject(List(
-            "m" -> (JObject(colmap.map.toSeq.sortBy(_._1).map {
-              case (l, p) => l -> (JString(p): JValue) }.toList): JValue),
-            "d" -> (JArray(colmap.dropped.sorted.map(
-              JString(_): JValue).toList): JValue)))))
-        s""""colmap":"${enc(json)}","""
-      }
+      prev.fold(ColMapping.empty)(_.colmap))
     // MERGE-ON-READ deletion vectors: carried files keep their DVs
     // verbatim unless this commit changes them (deleteFromSnapshotMor
     // passes the merged map); a file REWRITTEN or dropped by this
     // commit leaves the map via the membership filter, so COW
     // rewrites / compaction / full-table overwrites clear DVs with no
     // special casing
-    val dvsField = {
-      val eff0 = dvsOverride.getOrElse(
-        prevV
-          .map(v => parseManifestDvs(spark, table, v))
-          .getOrElse(Map.empty[String, InlineDv]))
-      val present = files.map(baseName).toSet
-      val eff = eff0.filter { case (bn, _) => present(bn) }
-      if (eff.isEmpty) ""
-      else {
-        import org.json4s._
-        val json = org.json4s.jackson.JsonMethods.compact(
-          org.json4s.jackson.JsonMethods.render(
-            JObject(eff.toSeq.sortBy(_._1).map { case (bn, d) =>
-              bn -> (JObject(List(
-                "z" -> (JString(d.z85): JValue),
-                "c" -> (JInt(BigInt(d.cardinality)): JValue),
-                "s" -> (JInt(BigInt(d.sizeInBytes)): JValue))): JValue)
-            }.toList)))
-        s""""dvs":"${enc(json)}","""
-      }
-    }
-    // CHECK constraints carry forward verbatim unless this commit
-    // changes them (addCheck/dropCheck)
-    val checksField = {
-      val eff = checksOverride.getOrElse(
-        prevV
-          .map(v => parseManifestChecks(spark, table, v))
-          .getOrElse(Map.empty[String, String]))
-      if (eff.isEmpty) ""
-      else {
-        val json = org.json4s.jackson.JsonMethods.compact(
-          org.json4s.jackson.JsonMethods.render(
-            org.json4s.JObject(eff.toSeq.sortBy(_._1).map { case (n, e) =>
-              n -> (org.json4s.JString(e): org.json4s.JValue) }.toList)))
-        s""""checks":"${enc(json)}","""
-      }
-    }
+    val present = files.map(baseName).toSet
+    val dvs = dvsOverride.getOrElse(prev.fold(Map.empty[String, InlineDv])(
+      _.dvs)).filter { case (bn, _) => present(bn) }
     // DATA SKIPPING stats: carried files inherit their (min, max)
     // from the previous manifest; only files NEW to this version pay
     // a footer read (metadata IO, never data) — commit cost stays
-    // O(delta). Serialized as one URL-encoded JSON blob like the
-    // schema, so the positional manifest parse is undisturbed.
-    val statsField = {
-      val prevStats = prevV
-        .map(v => parseManifestStatsFull(spark, table, v))
-        .getOrElse(Map.empty[String, FileStats])
-      val conf = spark.sessionState.newHadoopConf()
-      // footer reads are independent metadata fetches — run them on a
-      // bounded pool (a large commit would otherwise pay one serial
-      // round-trip per new file on the driver; on object stores each
-      // is a network call)
-      val newFiles = files.filterNot(f => prevStats.contains(baseName(f)))
-      val fresh: Map[String, FileStats] =
-        if (newFiles.isEmpty) Map.empty
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(16, newFiles.size))
-          try newFiles.map { f =>
-            f -> pool.submit(new java.util.concurrent.Callable[FileStats] {
-              def call(): FileStats =
-                // files store PHYSICAL names; stats stay keyed by
-                // them (stable across renames) and translate to
-                // logical at read time
-                try footerStats(conf, f, physSchema(schema, colmap))
-                catch { case scala.util.control.NonFatal(_) =>
-                  FileStats(None, Map.empty) }
-            })
-          }.map { case (f, fut) => baseName(f) -> fut.get() }.toMap
-          finally pool.shutdown()
-        }
-      val all = files.map { f =>
-        val bn = baseName(f)
-        bn -> prevStats.getOrElse(bn, fresh.getOrElse(bn,
-          FileStats(None, Map.empty)))
-      }.filter { case (_, fst) => fst.rows.nonEmpty || fst.cols.nonEmpty }
-      if (all.isEmpty) ""
+    // O(delta)
+    val prevStats = prev.fold(Map.empty[String, FileStats])(_.stats)
+    val conf = spark.sessionState.newHadoopConf()
+    // footer reads are independent metadata fetches — run them on a
+    // bounded pool (a large commit would otherwise pay one serial
+    // round-trip per new file on the driver; on object stores each
+    // is a network call)
+    val newFiles = files.filterNot(f => prevStats.contains(baseName(f)))
+    val fresh: Map[String, FileStats] =
+      if (newFiles.isEmpty) Map.empty
       else {
-        import org.json4s._
-        val json = org.json4s.jackson.JsonMethods.compact(
-          org.json4s.jackson.JsonMethods.render(
-            JObject(all.map { case (f, fst) =>
-              // "" (not a legal column name) carries the row count;
-              // a column serializes [lo,hi] when nulls are unknown,
-              // [lo|null,hi|null,n] when known — both shapes parse
-              val rowsEntry = fst.rows.toList.map(r =>
-                "" -> (JString(r.toString): JValue))
-              val colEntries = fst.cols.toSeq
-                .filter { case (_, cs) =>
-                  cs.nulls.isDefined ||
-                    (cs.lo.isDefined && cs.hi.isDefined) }
-                .sortBy(_._1).map { case (c, cs) =>
-                  val arr = cs.nulls match {
-                    case Some(n) => JArray(List(
-                      cs.lo.map(JString(_): JValue).getOrElse(JNull),
-                      cs.hi.map(JString(_): JValue).getOrElse(JNull),
-                      JString(n.toString)))
-                    case None => JArray(List(JString(cs.lo.get),
-                      JString(cs.hi.get)))
-                  }
-                  c -> (arr: JValue)
-                }.toList
-              f -> JObject(rowsEntry ++ colEntries)
-            }.toList)))
-        s""""stats":"${enc(json)}","""
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.min(16, newFiles.size))
+        try newFiles.map { f =>
+          f -> pool.submit(new java.util.concurrent.Callable[FileStats] {
+            def call(): FileStats =
+              // files store PHYSICAL names; stats stay keyed by
+              // them (stable across renames) and translate to
+              // logical at read time
+              try footerStats(conf, f, physSchema(schema, colmap))
+              catch { case scala.util.control.NonFatal(_) =>
+                FileStats(None, Map.empty) }
+          })
+        }.map { case (f, fut) => baseName(f) -> fut.get() }.toMap
+        finally pool.shutdown()
       }
-    }
-    // the commit wall-clock (driver clock, epoch millis) — what
-    // TIMESTAMP AS OF resolves against. Like Delta, monotonicity
-    // across writers is the deployment's clock discipline, not the
-    // format's; readers resolve with "latest version at or before t"
+    val stats = files.map(baseName).flatMap(bn =>
+      prevStats.get(bn).orElse(fresh.get(bn)).map(bn -> _)).toMap
     // BLOOM FILE INDEX (Delta bloom-filter-index parity): per-file
     // bloom filters over xxhash64(col) for the configured columns —
     // the point-lookup complement to min/max stats (equality on a
@@ -2441,31 +2061,28 @@ object LakeWriter {
     // this version pay ONE distributed pass over exactly those files
     // — commit cost stays O(delta). A bloom proves absence, never
     // presence, so a false positive costs a scan, never correctness.
-    val bloomField = {
-      val cfg = bloomCfgOverride.getOrElse(
-        prevV
-          .map(v => parseManifestBloomCfg(spark, table, v))
-          .getOrElse(Map.empty[String, Long]))
-      if (cfg.isEmpty) ""
+    val bloomCfg = bloomCfgOverride.getOrElse(
+      prev.fold(Map.empty[String, Long])(_.bloomCfg))
+    val blooms: Map[String, Map[String, String]] =
+      if (bloomCfg.isEmpty) Map.empty
       else {
-        val prevBlooms = prevV
-          .map(v => parseManifestBlooms(spark, table, v))
-          .getOrElse(Map.empty[String, Map[String, String]])
-        val physCfg = cfg.map { case (lc, n) => colmap.phys(lc) -> n }
+        val prevBlooms =
+          prev.fold(Map.empty[String, Map[String, String]])(_.blooms)
+        val physCfg = bloomCfg.map { case (lc, n) => colmap.phys(lc) -> n }
         val pSchema = physSchema(schema, colmap)
         // hive partition columns live in paths, not file data — their
         // equality pruning is the stats path's exact-partition-value
         // job, never a bloom's
-        val present = physCfg.keySet.intersect(pSchema.fieldNames.toSet)
+        val indexed = physCfg.keySet.intersect(pSchema.fieldNames.toSet)
           .diff(partCols.map(colmap.phys).toSet).toSeq.sorted
         val newFiles = files.filterNot(f => prevBlooms.contains(baseName(f)))
         val fresh: Map[String, Map[String, String]] =
-          if (newFiles.isEmpty || present.isEmpty) Map.empty
+          if (newFiles.isEmpty || indexed.isEmpty) Map.empty
           else {
             import org.apache.spark.sql.functions.{col, input_file_name,
               xxhash64, regexp_extract}
             val df = spark.read.schema(pSchema).parquet(newFiles: _*)
-            val aggs = present.map { pc =>
+            val aggs = indexed.map { pc =>
               org.apache.spark.sql.GraftColumnBridge.column(
                 new org.apache.spark.sql.catalyst.expressions.aggregate
                   .BloomFilterAggregate(
@@ -2477,7 +2094,7 @@ object LakeWriter {
                 .as("__f"))
               .agg(aggs.head, aggs.tail: _*)
               .collect().map { r =>
-                r.getString(0) -> present.zipWithIndex.flatMap {
+                r.getString(0) -> indexed.zipWithIndex.flatMap {
                   case (pc, i) =>
                     if (r.isNullAt(i + 1)) None
                     else Some(pc -> java.util.Base64.getEncoder
@@ -2485,24 +2102,10 @@ object LakeWriter {
                 }.toMap
               }.toMap
           }
-        val fileEntries = files.flatMap { f =>
-          val bn = baseName(f)
+        files.map(baseName).flatMap(bn =>
           prevBlooms.get(bn).orElse(fresh.get(bn)).filter(_.nonEmpty)
-            .map(bn -> _)
-        }
-        import org.json4s._
-        val json = org.json4s.jackson.JsonMethods.compact(
-          org.json4s.jackson.JsonMethods.render(JObject(List(
-            "cfg" -> (JObject(cfg.toSeq.sortBy(_._1).map { case (c, n) =>
-              c -> (JInt(n): JValue) }.toList): JValue),
-            "files" -> (JObject(fileEntries.sortBy(_._1).map {
-              case (bn, cols) => bn -> (JObject(cols.toSeq.sortBy(_._1)
-                .map { case (pc, b64) =>
-                  pc -> (JString(b64): JValue) }.toList): JValue)
-            }.toList): JValue)))))
-        s""""blooms":"${enc(json)}","""
+            .map(bn -> _)).toMap
       }
-    }
     // APPLICATION TRANSACTIONS (Delta's SetTransaction rebuilt):
     // {appId -> version} rides the manifest, carried forward verbatim
     // and merged with this commit's txn, so the highest applied
@@ -2510,29 +2113,16 @@ object LakeWriter {
     // exactly-once cursor a replaying incremental consumer (MV
     // refresh, streaming upsert) checks before re-merging a delta.
     // Map size is O(#writers), never data-scaled.
-    val txnsField = {
-      val eff = prevV
-        .map(v => parseManifestTxns(spark, table, v))
-        .getOrElse(Map.empty[String, Long]) ++ txnOverride.toMap
-      if (eff.isEmpty) ""
-      else {
-        import org.json4s._
-        val json = org.json4s.jackson.JsonMethods.compact(
-          org.json4s.jackson.JsonMethods.render(
-            JObject(eff.toSeq.sortBy(_._1).map { case (a, v) =>
-              a -> (JInt(BigInt(v)): JValue) }.toList)))
-        s""""txns":"${enc(json)}","""
-      }
-    }
-    // txns rides at the HEAD of the body (before the schema and the
-    // O(files) stats/blooms/file-list tails): parseManifestTxns runs
-    // on every commit of every table to carry the map forward, and a
-    // head placement lets it read a bounded prefix instead of the
-    // whole multi-MB manifest of a large table
-    val body = files.map(f => "\"" + enc(f) + "\"").mkString(
-      s"""{"version":$version,"mode":"$mode","ts":${System.currentTimeMillis()},$txnsField"schema":"${enc(schema.json)}",$partFields$mergeKeysField$dvsField$checksField$colmapField$statsField$bloomField"files":[""",
-      ",", "]}")
-    commitManifestBody(spark, fs, table, version, body)
+    val txns = prev.fold(Map.empty[String, Long])(_.txns) ++ txnOverride
+    // the commit wall-clock (driver clock, epoch millis) — what
+    // TIMESTAMP AS OF resolves against. Like Delta, monotonicity
+    // across writers is the deployment's clock discipline, not the
+    // format's; readers resolve with "latest version at or before t"
+    val m = Manifest(version, mode, Some(System.currentTimeMillis()), txns,
+      schema, partCols, mergeKeys, dvs,
+      checksOverride.getOrElse(prev.fold(Map.empty[String, String])(_.checks)),
+      colmap, stats, bloomCfg, blooms, files)
+    commitManifestBody(spark, fs, table, version, m.render)
   }
 
   /** Tmp-write + locked no-overwrite rename of a fully-assembled
@@ -2582,29 +2172,33 @@ object LakeWriter {
   /** The data files of one snapshot version. */
   def snapshotFiles(spark: SparkSession, table: String,
                     version: Long): Seq[String] =
-    parseManifest(spark, table, version)._1
+    manifest(spark, table, version).files
 
   /** The partition columns a snapshot was committed with (empty for
     * unpartitioned snapshots). */
   def snapshotPartitionCols(spark: SparkSession, table: String,
                             version: Long): Seq[String] =
-    parseManifest(spark, table, version)._3
+    manifest(spark, table, version).partCols
 
-  /** Manifest-body memo (r18): one commit parses the SAME previous
-    * manifest ~7–12 times (colmap, DVs, checks, stats, bloom cfg,
-    * blooms, txns each re-read it), and read paths re-parse the
-    * current one per call — each read paying an exists + open + full
-    * read. The memo is VALIDATED, never trusted blind: entries are
-    * keyed by qualified path and checked against the file's current
-    * (mtime, length) on every hit, so a table directory that is
-    * wiped and re-created between queries (the bench fixtures do
-    * exactly this) can never be served a stale body. Bounded;
-    * cleared wholesale when oversized (manifests are KB-scale). */
+  /** Parsed-manifest memo (r18): one commit reads the SAME previous
+    * manifest for its schema, colmap, DVs, checks, stats, blooms and
+    * txns, and read paths re-read the current one per call — each
+    * read paying an open + full read + parse. The memo is VALIDATED,
+    * never trusted blind: entries are keyed by qualified path and
+    * checked against the file's current (mtime, length) on every hit,
+    * so a table directory that is wiped and re-created between
+    * queries (the bench fixtures do exactly this) can never be served
+    * a stale manifest. Bounded; cleared wholesale when oversized
+    * (manifests are KB-scale). */
   private val manifestMemo =
-    new scala.collection.concurrent.TrieMap[String, (Long, Long, String)]
+    new scala.collection.concurrent.TrieMap[String, (Long, Long, Manifest)]
 
-  private def manifestBody(spark: SparkSession, table: String,
-                           version: Long): String = {
+  /** The manifest of `version` — EVERY manifest read goes through
+    * here. A version missing from the manifest directory (never
+    * committed, or vacuumed since it was listed) raises
+    * `no snapshot v{N} at {table}`. */
+  private[graft] def manifest(spark: SparkSession, table: String,
+                              version: Long): Manifest = {
     val p = new org.apache.hadoop.fs.Path(manifestDir(table), s"v$version.json")
     val fs = fsOf(spark, p)
     val st =
@@ -2614,18 +2208,28 @@ object LakeWriter {
         sys.error(s"no snapshot v$version at $table")
       }
     manifestMemo.get(p.toString) match {
-      case Some((m, l, body))
-          if m == st.getModificationTime && l == st.getLen => body
+      case Some((m, l, parsed))
+          if m == st.getModificationTime && l == st.getLen => parsed
       case _ =>
         val in = fs.open(p)
-        val body = new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        in.close()
+        val body =
+          try new String(
+            org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+          finally in.close()
+        val parsed = Manifest.parse(body)
         if (manifestMemo.size > 512) manifestMemo.clear()
         manifestMemo.put(p.toString,
-          (st.getModificationTime, st.getLen, body))
-        body
+          (st.getModificationTime, st.getLen, parsed))
+        parsed
     }
+  }
+
+  /** The latest version's manifest; refuses a table with no history. */
+  private def latestManifest(spark: SparkSession,
+                             table: String): Manifest = {
+    val vs = snapshotVersions(spark, table)
+    require(vs.nonEmpty, s"no snapshots at $table")
+    manifest(spark, table, vs.last)
   }
 
   /** SHALLOW CLONE (Delta parity): materialize `target` as a new
@@ -2634,7 +2238,10 @@ object LakeWriter {
     * a metadata-only commit that copies zero data bytes and reads
     * zero footers (schema, partition columns, column mapping, CHECK
     * constraints, and per-file skipping stats all carry verbatim
-    * from the source manifest). From then on the two tables evolve
+    * from the source manifest). Application transactions do NOT
+    * carry: a writer's exactly-once cursor belongs to the table it
+    * wrote into.
+    * From then on the two tables evolve
     * independently: appends/MERGE/DELETE/OPTIMIZE on the clone write
     * new files under the clone's own directory (manifests store
     * absolute paths, so mixed-directory file sets read natively),
@@ -2653,33 +2260,13 @@ object LakeWriter {
     require(versions.contains(v), s"no snapshot v$v at $source")
     require(snapshotVersions(spark, target).isEmpty,
       s"clone target $target already has snapshot history")
-    val body = manifestBody(spark, source, v)
-    // the manifest is machine-written with the exact head
-    // {"version":N,"mode":"...","ts":T, — rewrite only that head and
-    // carry every other field (schema/partcols/checks/colmap/stats/
-    // files) byte-verbatim
-    val schemaAt = body.indexOf("\"schema\":\"")
-    require(schemaAt >= 0, s"malformed manifest v$v at $source")
     val cloneV = 1L
-    val newBody =
-      s"""{"version":$cloneV,"mode":"clone","ts":${System.currentTimeMillis()},""" +
-        body.substring(schemaAt)
+    val cloned = manifest(spark, source, v).copy(version = cloneV,
+      mode = "clone", ts = Some(System.currentTimeMillis()),
+      txns = Map.empty)
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(target))
-    commitManifestBody(spark, fs, target, cloneV, newBody)
+    commitManifestBody(spark, fs, target, cloneV, cloned.render)
     cloneV
-  }
-
-  /** Merge keys recorded by a keyed upsert at `version` (empty for
-    * every other commit kind). */
-  private[graft] def parseManifestMergeKeys(spark: SparkSession,
-      table: String, version: Long): Seq[String] = {
-    val body = manifestBody(spark, table, version)
-    body.split("\"mergekeys\":\"") match {
-      case Array(_, rest) =>
-        val raw = rest.split("\"")(0)
-        if (raw.isEmpty) Seq.empty else raw.split(",").toSeq.map(dec)
-      case _ => Seq.empty
-    }
   }
 
   /** One file's MERGE-ON-READ deletion vector, stored INLINE in the
@@ -2703,73 +2290,6 @@ object LakeWriter {
       md.update(z85.getBytes("UTF-8"))
       md.digest().map("%02x".format(_)).mkString
     }
-  }
-
-  /** The per-file deletion vectors of a version (baseName-keyed, like
-    * stats/blooms — parquet part names carry UUIDs, so base names are
-    * table-unique). Empty for tables that never MOR-deleted. */
-  private[graft] def parseManifestDvs(spark: SparkSession,
-      table: String, version: Long): Map[String, InlineDv] = {
-    val body = manifestBody(spark, table, version)
-    body.split("\"dvs\":\"") match {
-      case Array(_, rest) =>
-        import org.json4s._
-        org.json4s.jackson.JsonMethods.parse(
-          dec(rest.split("\"")(0))) match {
-          case JObject(fields) => fields.map { case (bn, j) =>
-            val z = j \ "z" match { case JString(s) => s
-              case _ => sys.error(s"manifest v$version at $table: " +
-                s"dv of $bn has no bitmap") }
-            val c = j \ "c" match { case JInt(n) => n.toLong
-              case JLong(n) => n; case _ => 0L }
-            val s0 = j \ "s" match { case JInt(n) => n.toInt
-              case JLong(n) => n.toInt; case _ => 0 }
-            bn -> InlineDv(z, c, s0)
-          }.toMap
-          case _ => Map.empty
-        }
-      case _ => Map.empty
-    }
-  }
-
-  /** The `mode` a version's manifest was committed with ("overwrite",
-    * "append", "merge", "delete", "compact", "optimize", ...) — the
-    * format mirrors read it to tell ROW-NEUTRAL rewrites (compaction,
-    * z-order, spec migration: files changed, rows did not) from real
-    * data changes, so a changelog consumer can skip them. */
-  private[graft] def parseManifestMode(spark: SparkSession,
-      table: String, version: Long): String = {
-    val body = manifestBody(spark, table, version)
-    body.split("\"mode\":\"") match {
-      case Array(_, rest) => rest.split("\"")(0)
-      case _ => "overwrite"
-    }
-  }
-
-  private def parseManifest(spark: SparkSession, table: String,
-      version: Long): (Seq[String], String, Seq[String]) = {
-    val body = manifestBody(spark, table, version)
-    // manifest JSON is machine-written with the exact shape above and
-    // every string URL-encoded — positional parsing is unambiguous
-    val schema = dec(body.split("\"schema\":\"")(1).split("\"")(0))
-    val partCols = body.split("\"partcols\":\"") match {
-      case Array(_, rest) =>
-        val raw = rest.split("\"")(0)
-        if (raw.isEmpty) Seq.empty[String]
-        else raw.split(",").toSeq.map(dec)
-      case _ => Seq.empty[String]
-    }
-    // anchor on the literal "files" key: the array bracket is not the
-    // first '[' in the body once other fields carry arrays
-    val fKey = "\"files\":["
-    val fAt = body.indexOf(fKey)
-    require(fAt >= 0, s"malformed manifest v$version at $table")
-    val arr = body.substring(fAt + fKey.length, body.indexOf("]", fAt))
-    val files =
-      if (arr.trim.isEmpty) Seq.empty[String]
-      else arr.split(",").toSeq
-        .map(s => dec(s.trim.stripPrefix("\"").stripSuffix("\"")))
-    (files, schema, partCols)
   }
 
   /** Durable consumer cursor over a table's version history: run
@@ -2866,11 +2386,10 @@ object LakeWriter {
     require(missing.isEmpty, s"partition columns not in frame: $missing")
     val spark = df.sparkSession
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    val prev = snapshotVersions(spark, table)
-    val version = prev.lastOption.getOrElse(0L) + 1
-    val colmap = prev.lastOption
-      .map(v => parseManifestColmap(spark, table, v))
-      .getOrElse(ColMapping.empty)
+    val prevV = snapshotVersions(spark, table).lastOption
+    val prev = prevV.map(manifest(spark, table, _))
+    val version = prevV.getOrElse(0L) + 1
+    val colmap = prev.fold(ColMapping.empty)(_.colmap)
     // a dynamic commit REPLACES the schema with df's; re-introducing
     // a DROPPED column would resurrect its old data from carried
     // partitions — refuse loudly (a full overwrite resets the table)
@@ -2894,48 +2413,44 @@ object LakeWriter {
     // __HIVE_DEFAULT_PARTITION__), silently carrying stale files
     // alongside their replacements.
     val touched = newFiles.map(partitionOf(partitionCols, _)).toSet
-    val carried =
-      if (prev.isEmpty) Seq.empty
-      else {
-        val prevFiles = snapshotFiles(spark, table, prev.last)
-        // PARTITION SPEC EVOLUTION: a dynamic commit may declare a
-        // new spec over a table whose earlier files were laid out
-        // differently (or not at all). Pre-spec files have no path
-        // values under the new spec, so no new partition can replace
-        // them — on the EVOLUTION commit itself (previous manifest's
-        // spec differs) that is correct append-under-new-spec
-        // semantics and they all carry. But a LATER same-spec dynamic
-        // commit would silently keep pre-spec rows of partitions it
-        // claims to replace (duplicate/stale data) — refuse loudly
-        // until migratePartitionSpec has unified the layout.
-        val (_, _, prevPartCols) = parseManifest(spark, table, prev.last)
-        val preSpec =
-          prevFiles.filter(f => partitionOfOpt(partitionCols, f).isEmpty)
-        require(preSpec.isEmpty || prevPartCols != partitionCols,
-          s"dynamic commit on $table: ${preSpec.size} file(s) predate " +
-            s"the ${partitionCols.mkString(",")} partition spec and " +
-            "cannot be replaced partition-wise — run " +
-            "migratePartitionSpec first (or overwrite the table)")
-        // on the evolution commit itself the carry is the designed
-        // append-under-new-spec semantics, but it is easy to miss
-        // that touched partitions do NOT replace pre-spec rows — say
-        // so loudly once (the scaladoc documents the contract)
-        if (preSpec.nonEmpty && prevPartCols != partitionCols)
-          System.err.println(
-            s"[lake] $table: partition spec evolved " +
-              s"${prevPartCols.mkString(",")} -> " +
-              s"${partitionCols.mkString(",")}; ${preSpec.size} " +
-              "pre-spec file(s) carry by reference and are NOT " +
-              "replaced by this batch's partitions — run " +
-              "migratePartitionSpec to unify the layout")
-        prevFiles.filterNot(f =>
-          partitionOfOpt(partitionCols, f).exists(touched.contains))
-      }
-    enforceChecks(spark,
-      prev.lastOption.map(v => parseManifestChecks(spark, table, v))
-        .getOrElse(Map.empty),
+    val carried = prev.fold(Seq.empty[String]) { pm =>
+      val prevFiles = pm.files
+      // PARTITION SPEC EVOLUTION: a dynamic commit may declare a
+      // new spec over a table whose earlier files were laid out
+      // differently (or not at all). Pre-spec files have no path
+      // values under the new spec, so no new partition can replace
+      // them — on the EVOLUTION commit itself (previous manifest's
+      // spec differs) that is correct append-under-new-spec
+      // semantics and they all carry. But a LATER same-spec dynamic
+      // commit would silently keep pre-spec rows of partitions it
+      // claims to replace (duplicate/stale data) — refuse loudly
+      // until migratePartitionSpec has unified the layout.
+      val prevPartCols = pm.partCols
+      val preSpec =
+        prevFiles.filter(f => partitionOfOpt(partitionCols, f).isEmpty)
+      require(preSpec.isEmpty || prevPartCols != partitionCols,
+        s"dynamic commit on $table: ${preSpec.size} file(s) predate " +
+          s"the ${partitionCols.mkString(",")} partition spec and " +
+          "cannot be replaced partition-wise — run " +
+          "migratePartitionSpec first (or overwrite the table)")
+      // on the evolution commit itself the carry is the designed
+      // append-under-new-spec semantics, but it is easy to miss
+      // that touched partitions do NOT replace pre-spec rows — say
+      // so loudly once (the scaladoc documents the contract)
+      if (preSpec.nonEmpty && prevPartCols != partitionCols)
+        System.err.println(
+          s"[lake] $table: partition spec evolved " +
+            s"${prevPartCols.mkString(",")} -> " +
+            s"${partitionCols.mkString(",")}; ${preSpec.size} " +
+            "pre-spec file(s) carry by reference and are NOT " +
+            "replaced by this batch's partitions — run " +
+            "migratePartitionSpec to unify the layout")
+      prevFiles.filterNot(f =>
+        partitionOfOpt(partitionCols, f).exists(touched.contains))
+    }
+    enforceChecks(spark, prev.fold(Map.empty[String, String])(_.checks),
       newFiles, df.schema, fs, Seq(dataDir), colmap)
-    writeManifest(spark, fs, table, version, "dynamic", df.schema,
+    writeManifest(spark, fs, table, prev, version, "dynamic", df.schema,
       carried ++ newFiles, partitionCols)
     version
   }
@@ -3059,30 +2574,26 @@ object LakeWriter {
     * Returns the committed version (the current one when the layout
     * is already uniform). */
   def migratePartitionSpec(spark: SparkSession, table: String): Long = {
-    val prev = snapshotVersions(spark, table)
-    require(prev.nonEmpty, s"no snapshots at $table")
-    val (files, schemaJson, partCols) = parseManifest(spark, table, prev.last)
+    val pm = latestManifest(spark, table)
+    val (files, schema, partCols, colmap) =
+      (pm.files, pm.schema, pm.partCols, pm.colmap)
     require(partCols.nonEmpty,
       s"$table has no partition spec to migrate to")
     val (pre, conformant) =
       files.partition(f => partitionOfOpt(partCols, f).isEmpty)
-    if (pre.isEmpty) return prev.last
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val colmap = parseManifestColmap(spark, table, prev.last)
+    if (pre.isEmpty) return pm.version
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    val version = prev.last + 1
+    val version = pm.version + 1
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val dataDir =
       new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
     withMicrosTimestamps(spark) {
-      toPhysical(readFiles(spark, pre, schema, colmap,
-          parseManifestDvs(spark, table, prev.last)), colmap)
+      toPhysical(readFiles(spark, pre, schema, colmap, pm.dvs), colmap)
         .write.mode("errorifexists")
         .partitionBy(partCols.map(colmap.phys): _*)
         .parquet(dataDir.toString) }
     val newFiles = walkFreshData(fs, dataDir).sorted
-    writeManifest(spark, fs, table, version, "migrate", schema,
+    writeManifest(spark, fs, table, Some(pm), version, "migrate", schema,
       conformant ++ newFiles, partCols)
     version
   }
@@ -3105,17 +2616,13 @@ object LakeWriter {
                        smallBytes: Long = 32L << 20,
                        targetBytes: Long = 128L << 20,
                        zorderBy: Seq[String] = Nil): Long = {
-    val prev = snapshotVersions(spark, table)
-    require(prev.nonEmpty, s"no snapshots at $table")
-    val (files, schemaJson, partCols) = parseManifest(spark, table, prev.last)
-    if (files.isEmpty) return prev.last
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val pm = latestManifest(spark, table)
+    val (files, schema, partCols, colmap) =
+      (pm.files, pm.schema, pm.partCols, pm.colmap)
+    if (files.isEmpty) return pm.version
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    val colmap = parseManifestColmap(spark, table, prev.last)
     if (zorderBy.nonEmpty)
-      return zorderRewrite(spark, fs, table, prev.last, files, schema,
-        partCols, zorderBy, targetBytes, colmap)
+      return zorderRewrite(spark, fs, table, pm, zorderBy, targetBytes)
     val sized = files.map(f =>
       f -> fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen)
     val rewrite = sized
@@ -3130,13 +2637,12 @@ object LakeWriter {
         // one small file alone gains nothing from a rewrite
         if (small.size >= 2) small.map(_._1) else Nil
       }.toSet
-    if (rewrite.isEmpty) return prev.last
+    if (rewrite.isEmpty) return pm.version
     val carry = files.filterNot(rewrite)
-    val df = readFiles(spark, rewrite.toSeq.sorted, schema, colmap,
-      parseManifestDvs(spark, table, prev.last))
+    val df = readFiles(spark, rewrite.toSeq.sorted, schema, colmap, pm.dvs)
     val totalBytes = sized.collect { case (f, n) if rewrite(f) => n }.sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val version = prev.last + 1
+    val version = pm.version + 1
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val dataDir =
       new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
@@ -3153,7 +2659,7 @@ object LakeWriter {
             .parquet(dataDir.toString) }
         walkFreshData(fs, dataDir).sorted
       }
-    writeManifest(spark, fs, table, version, "optimize", schema,
+    writeManifest(spark, fs, table, Some(pm), version, "optimize", schema,
       carry ++ newFiles, partCols)
     version
   }
@@ -3172,11 +2678,11 @@ object LakeWriter {
     * compute is one agg (driver-tiny bounds row) + one range shuffle
     * of codegen'd bit arithmetic — no UDFs, no collect of data. */
   private def zorderRewrite(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, table: String, prevV: Long,
-      files: Seq[String], schema: org.apache.spark.sql.types.StructType,
-      partCols: Seq[String], zorderBy: Seq[String],
-      targetBytes: Long, colmap: ColMapping = ColMapping.empty): Long = {
+      fs: org.apache.hadoop.fs.FileSystem, table: String, prev: Manifest,
+      zorderBy: Seq[String], targetBytes: Long): Long = {
     import org.apache.spark.sql.types._
+    val (files, schema, partCols, colmap) =
+      (prev.files, prev.schema, prev.partCols, prev.colmap)
     require(partCols.isEmpty,
       "ZORDER v1 rewrites unpartitioned snapshots (partitioned tables: " +
         "z-order before commitSnapshotDynamic, or drop partitioning)")
@@ -3188,8 +2694,7 @@ object LakeWriter {
         dt == TimestampType || dt == TimestampNTZType,
         s"zorder column $c: need numeric/date/timestamp, got $dt")
     }
-    val df = readFiles(spark, files, schema, colmap,
-      parseManifestDvs(spark, table, prevV))
+    val df = readFiles(spark, files, schema, colmap, prev.dvs)
     val aggs = zorderBy.zipWithIndex.flatMap { case (c, i) =>
       val cd = col(c).cast("double")
       Seq(min(cd).as(s"lo$i"), max(cd).as(s"hi$i")) }
@@ -3218,7 +2723,7 @@ object LakeWriter {
     val totalBytes = files.map(f =>
       fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val version = prevV + 1
+    val version = prev.version + 1
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val dataDir =
       new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
@@ -3230,7 +2735,7 @@ object LakeWriter {
         .write.mode("errorifexists").parquet(dataDir.toString) }
     val newFiles = fs.listStatus(dataDir).toSeq.map(_.getPath.toString)
       .filter(_.endsWith(".parquet")).sorted
-    writeManifest(spark, fs, table, version, "optimize", schema,
+    writeManifest(spark, fs, table, Some(prev), version, "optimize", schema,
       newFiles, partCols)
     version
   }
@@ -3248,20 +2753,19 @@ object LakeWriter {
     require(vs.contains(toVersion),
       s"version $toVersion not in snapshot history $vs")
     if (toVersion == vs.last) return vs.last
-    val (files, schemaJson, partCols) = parseManifest(spark, table, toVersion)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val target = manifest(spark, table, toVersion)
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    // the restored schema needs ITS version's column mapping (the
-    // latest mapping describes the latest logical schema, not this one)
-    writeManifest(spark, fs, table, vs.last + 1, "restore", schema,
-      files, partCols,
-      colmapOverride = Some(parseManifestColmap(spark, table, toVersion)),
+    // checks, stats, bloom config and txns carry from the tip; the
+    // restored schema needs ITS version's column mapping (the latest
+    // mapping describes the latest logical schema, not this one)
+    writeManifest(spark, fs, table, Some(manifest(spark, table, vs.last)),
+      vs.last + 1, "restore", target.schema, target.files, target.partCols,
+      colmapOverride = Some(target.colmap),
       // the restored files need THEIR version's deletion vectors too —
       // the tip's map could pair the same file with a later (wider)
       // bitmap and silently keep rows deleted that the restore target
       // still served
-      dvsOverride = Some(parseManifestDvs(spark, table, toVersion)))
+      dvsOverride = Some(target.dvs))
     vs.last + 1
   }
 
@@ -3333,15 +2837,11 @@ object LakeWriter {
       require(vs.nonEmpty, s"no snapshots at $table")
       vs.last
     }
-    val (files, schemaJson, _) = parseManifest(spark, table, v)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    if (files.isEmpty)
+    val m = manifest(spark, table, v)
+    if (m.files.isEmpty)
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else readFiles(spark, files, schema,
-      parseManifestColmap(spark, table, v),
-      parseManifestDvs(spark, table, v))
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+    else readFiles(spark, m.files, m.schema, m.colmap, m.dvs)
   }
 
   /** Read a snapshot FILE-PRUNED by manifest column stats — data
@@ -3362,22 +2862,13 @@ object LakeWriter {
       require(vs.nonEmpty, s"no snapshots at $table")
       vs.last
     }
-    val (files, schemaJson, partCols) = parseManifest(spark, table, v)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .where(predicate)
-    val colmap = parseManifestColmap(spark, table, v)
-    val keptB = pruneFilesByPredicate(spark, table, v, predicate, files,
-      schema, partCols, colmap)
+    val m = manifest(spark, table, v)
+    val keptB = pruneFilesByPredicate(m, predicate)
     if (keptB.isEmpty)
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
         .where(predicate)
-    else readFiles(spark, keptB, schema, colmap,
-      parseManifestDvs(spark, table, v)).where(predicate)
+    else readFiles(spark, keptB, m.schema, m.colmap, m.dvs).where(predicate)
   }
 
   /** The stat/partition/bloom FILE-PRUNING pipeline shared by
@@ -3386,11 +2877,10 @@ object LakeWriter {
     * `predicate`. Pure metadata — no data IO; callers still apply
     * the predicate to surviving rows, so results stay exact whatever
     * the stats coverage. */
-  private def pruneFilesByPredicate(spark: SparkSession, table: String,
-      v: Long, predicate: org.apache.spark.sql.Column,
-      files: Seq[String], schema: org.apache.spark.sql.types.StructType,
-      partCols: Seq[String], colmap: ColMapping): Seq[String] = {
-    val statsFull = parseManifestStatsFull(spark, table, v)
+  private def pruneFilesByPredicate(m: Manifest,
+      predicate: org.apache.spark.sql.Column): Seq[String] = {
+    val (files, schema, partCols, colmap, statsFull) =
+      (m.files, m.schema, m.partCols, m.colmap, m.stats)
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     val kept = files.filter { f =>
       val fstPhys = statsFull.getOrElse(baseName(f), FileStats(None, Map.empty))
@@ -3432,7 +2922,7 @@ object LakeWriter {
     // (AND semantics). A bloom only ever proves absence — a false
     // positive costs a scan, never a wrong skip; any literal that
     // doesn't coerce to the column type yields no proof.
-    val bloomCfg = parseManifestBloomCfg(spark, table, v)
+    val bloomCfg = m.bloomCfg
     val keptB =
       if (bloomCfg.isEmpty) kept
       else {
@@ -3450,7 +2940,7 @@ object LakeWriter {
           }
         if (eqs.isEmpty) kept
         else {
-          val blooms = parseManifestBlooms(spark, table, v)
+          val blooms = m.blooms
           kept.filter { f =>
             val fb = blooms.getOrElse(baseName(f), Map.empty)
             !eqs.exists { case (pc, hashes) =>
@@ -3480,13 +2970,12 @@ object LakeWriter {
       require(vs.nonEmpty, s"no snapshots at $table")
       vs.last
     }
-    val (files, schemaJson, _) = parseManifest(spark, table, v)
+    val m = manifest(spark, table, v)
+    val (files, full, dvs) = (m.files, m.stats, m.dvs)
     if (files.isEmpty) return 0L
-    val full = parseManifestStatsFull(spark, table, v)
     // a merge-on-read DV shrinks a file's LIVE rows below its footer
     // count — the descriptor's cardinality is exact, so the metadata
     // shortcut stays exact: live = footer rows - deleted
-    val dvs = parseManifestDvs(spark, table, v)
     val (known, unknown) = files.partition(f =>
       full.get(baseName(f)).exists(_.rows.isDefined))
     val metaSum = known.map { f =>
@@ -3494,12 +2983,7 @@ object LakeWriter {
         dvs.get(baseName(f)).map(_.cardinality).getOrElse(0L)
     }.sum
     if (unknown.isEmpty) metaSum
-    else {
-      val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      metaSum + readFiles(spark, unknown, schema,
-        parseManifestColmap(spark, table, v), dvs).count()
-    }
+    else metaSum + readFiles(spark, unknown, m.schema, m.colmap, dvs).count()
   }
 
   /** (version, commit epoch-millis) pairs of a table's history,
@@ -3509,18 +2993,11 @@ object LakeWriter {
   def snapshotTimestamps(spark: SparkSession, table: String)
       : Seq[(Long, Long)] = {
     val dir = manifestDir(table)
-    val fs = fsOf(spark, dir)
     snapshotVersions(spark, table).map { v =>
-      val p = new org.apache.hadoop.fs.Path(dir, s"v$v.json")
-      val in = fs.open(p)
-      val body = new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      in.close()
-      val ts = body.split("\"ts\":") match {
-        case Array(_, rest) => rest.takeWhile(_.isDigit).toLong
-        case _ => fs.getFileStatus(p).getModificationTime
+      v -> manifest(spark, table, v).ts.getOrElse {
+        val p = new org.apache.hadoop.fs.Path(dir, s"v$v.json")
+        fsOf(spark, p).getFileStatus(p).getModificationTime
       }
-      v -> ts
     }
   }
 
@@ -3725,7 +3202,7 @@ object LakeWriter {
     val schema = spark.read.option("basePath", qualified)
       .parquet(files: _*).schema
     writeManifest(spark, fsOf(spark, new org.apache.hadoop.fs.Path(table)),
-      table, 1L, "convert", schema, files, partCols)
+      table, None, 1L, "convert", schema, files, partCols)
     1L
   }
 }

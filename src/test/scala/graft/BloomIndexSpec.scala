@@ -90,7 +90,7 @@ class BloomIndexSpec extends AnyFunSuite {
     interleaved(t)
     LakeWriter.setBloomIndex(spark, t, Map("s" -> 1000L))
     val v1 = LakeWriter.snapshotVersions(spark, t).last
-    val blooms1 = LakeWriter.parseManifestBlooms(spark, t, v1)
+    val blooms1 = LakeWriter.manifest(spark, t, v1).blooms
     // a post-index append gets blooms for its file; old blooms carry
     // byte-identically (no recompute)
     LakeWriter.commitSnapshot(
@@ -98,7 +98,7 @@ class BloomIndexSpec extends AnyFunSuite {
         .withColumn("s", concat(lit("key_"), md5($"k".cast("string"))))
         .coalesce(1), t, "append")
     val v2 = LakeWriter.snapshotVersions(spark, t).last
-    val blooms2 = LakeWriter.parseManifestBlooms(spark, t, v2)
+    val blooms2 = LakeWriter.manifest(spark, t, v2).blooms
     assert(blooms2.size == blooms1.size + 1)
     blooms1.foreach { case (bn, cols) =>
       assert(blooms2(bn) == cols, s"carried bloom changed for $bn") }

@@ -84,12 +84,12 @@ class MorDeleteSpec extends AnyFunSuite {
       rows(docs(90).where($"v" >= 100 && $"lang" =!= "en")))
     // compaction rewrites survivors -> DVs clear
     LakeWriter.compactSnapshot(spark, t, 1)                   // v4
-    assert(LakeWriter.parseManifestDvs(spark, t, 4L).isEmpty)
+    assert(LakeWriter.manifest(spark, t, 4L).dvs.isEmpty)
     assert(rows(LakeWriter.readSnapshot(spark, t)) ==
       rows(docs(90).where($"v" >= 100 && $"lang" =!= "en")))
     // restore to the MOR version re-pins ITS DV map
     LakeWriter.restoreSnapshot(spark, t, 2L)                  // v5
-    assert(LakeWriter.parseManifestDvs(spark, t, 5L).nonEmpty)
+    assert(LakeWriter.manifest(spark, t, 5L).dvs.nonEmpty)
     assert(rows(LakeWriter.readSnapshot(spark, t)) ==
       rows(docs(90).where($"v" >= 100)))
   }
@@ -119,7 +119,7 @@ class MorDeleteSpec extends AnyFunSuite {
     // the driver-side artifact is the DV map: every blob obeys the
     // byte cap, cardinalities are exact, total is KB-scale where the
     // raw indexes would have been tens of MB
-    val dvs = LakeWriter.parseManifestDvs(spark, t, v2)
+    val dvs = LakeWriter.manifest(spark, t, v2).dvs
     assert(dvs.nonEmpty)
     val expectedDeleted = n * 9 / 20
     assert(dvs.values.map(_.cardinality).sum == expectedDeleted)
@@ -144,7 +144,7 @@ class MorDeleteSpec extends AnyFunSuite {
     assert(v3 == 3L)
     assert(LakeWriter.snapshotFiles(spark, t, v3).toSet != v1Files,
       "expected COW fallback to rewrite files")
-    assert(LakeWriter.parseManifestDvs(spark, t, v3).isEmpty)
+    assert(LakeWriter.manifest(spark, t, v3).dvs.isEmpty)
     assert(LakeWriter.readSnapshot(spark, t).count() == n * 9 / 20)
   }
 
@@ -164,7 +164,7 @@ class MorDeleteSpec extends AnyFunSuite {
     assert(v1Files.subsetOf(v2Files),
       "MOR merge rewrote or dropped standing files")
     assert((v2Files -- v1Files).nonEmpty, "no append files landed")
-    assert(LakeWriter.parseManifestDvs(spark, t, v2).nonEmpty)
+    assert(LakeWriter.manifest(spark, t, v2).dvs.nonEmpty)
     val expect1 = docs(100).where($"v" >= 300 && $"id" < 100)
       .unionByName(u1)
     assert(rows(LakeWriter.readSnapshot(spark, t)) == rows(expect1))
@@ -184,7 +184,7 @@ class MorDeleteSpec extends AnyFunSuite {
     val v3 = LakeWriter.mergeSnapshotMor(u2, t, Seq("id"))
     assert(LakeWriter.snapshotFiles(spark, t, v3).toSet
       .intersect(v2Files) == v2Files)
-    val dvs3 = LakeWriter.parseManifestDvs(spark, t, v3)
+    val dvs3 = LakeWriter.manifest(spark, t, v3).dvs
     val v1Base = v1Files.map(f => f.split('/').last)
     assert(dvs3.keys.exists(bn => !v1Base.contains(bn)),
       "no DV landed on a first-merge append file")
@@ -209,7 +209,7 @@ class MorDeleteSpec extends AnyFunSuite {
     val u = docs(100).where($"v" < 600).withColumn("lang", lit("x"))
     val v2 = LakeWriter.mergeSnapshotMor(u, t, Seq("id"))
     assert(v2 == 2L)
-    assert(LakeWriter.parseManifestDvs(spark, t, v2).isEmpty)
+    assert(LakeWriter.manifest(spark, t, v2).dvs.isEmpty)
     assert(LakeWriter.snapshotFiles(spark, t, v2).toSet
       .intersect(v1Files).isEmpty, "COW fallback carried a matched file")
     assert(rows(LakeWriter.readSnapshot(spark, t)) ==
@@ -227,7 +227,7 @@ class MorDeleteSpec extends AnyFunSuite {
     // pure insert: unseen keys only — appends, no DVs, files carried
     val ins = docs(140).where($"id" >= 120)
     val v3 = LakeWriter.mergeSnapshotMor(ins, t, Seq("id"))
-    assert(LakeWriter.parseManifestDvs(spark, t, v3).isEmpty)
+    assert(LakeWriter.manifest(spark, t, v3).dvs.isEmpty)
     assert(LakeWriter.snapshotFiles(spark, t, v2).toSet.subsetOf(
       LakeWriter.snapshotFiles(spark, t, v3).toSet))
     assert(rows(LakeWriter.readSnapshot(spark, t)) ==
@@ -246,7 +246,7 @@ class MorDeleteSpec extends AnyFunSuite {
       .withColumn("n2", $"v" * 2).drop("n2") // touch only lang=en keys
     val pv2 = LakeWriter.mergeSnapshotMor(
       up.withColumn("v", $"v" + 7), tp, Seq("id", "lang"))
-    assert(LakeWriter.parseManifestDvs(spark, tp, pv2).nonEmpty)
+    assert(LakeWriter.manifest(spark, tp, pv2).dvs.nonEmpty)
     assert(p1Files.subsetOf(
       LakeWriter.snapshotFiles(spark, tp, pv2).toSet))
     assert(rows(LakeWriter.readSnapshot(spark, tp)) ==
@@ -263,7 +263,7 @@ class MorDeleteSpec extends AnyFunSuite {
     val v2 = LakeWriter.updateSnapshotMor(spark, t, $"v" < 300,
       Map("lang" -> concat(lit("u_"), $"lang"), "v" -> ($"v" + $"id")))
     assert(v2 == 2L)
-    assert(LakeWriter.parseManifestDvs(spark, t, v2).nonEmpty)
+    assert(LakeWriter.manifest(spark, t, v2).dvs.nonEmpty)
     val v2Files = LakeWriter.snapshotFiles(spark, t, v2).toSet
     assert(v1Files.subsetOf(v2Files), "MOR update rewrote files")
     assert((v2Files -- v1Files).nonEmpty, "no transformed images landed")
@@ -290,7 +290,7 @@ class MorDeleteSpec extends AnyFunSuite {
     val w1Files = LakeWriter.snapshotFiles(spark, t2, 1L).toSet
     val w2 = LakeWriter.updateSnapshotMor(spark, t2, $"v" < 600,
       Map("lang" -> lit("x")))
-    assert(LakeWriter.parseManifestDvs(spark, t2, w2).isEmpty)
+    assert(LakeWriter.manifest(spark, t2, w2).dvs.isEmpty)
     assert(LakeWriter.snapshotFiles(spark, t2, w2).toSet
       .intersect(w1Files).isEmpty,
       "COW fallback carried a matched file")
@@ -347,7 +347,7 @@ class MorDeleteSpec extends AnyFunSuite {
     // 75% of rows deleted > default 0.5 threshold -> COW path
     val v2 = LakeWriter.deleteFromSnapshotMor(spark, t, $"v" < 300)
     assert(v2 == 2L)
-    assert(LakeWriter.parseManifestDvs(spark, t, v2).isEmpty,
+    assert(LakeWriter.manifest(spark, t, v2).dvs.isEmpty,
       "a delete above the fraction threshold must take the COW path")
     assert(LakeWriter.snapshotFiles(spark, t, v2).toSet !=
       LakeWriter.snapshotFiles(spark, t, 1L).toSet)

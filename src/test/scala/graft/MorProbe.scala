@@ -54,7 +54,7 @@ object MorProbe {
       val (b2, f2) = dataBytes()
       val manifest = fs.getFileStatus(new org.apache.hadoop.fs.Path(
         s"$table/_manifests/v$v.json")).getLen
-      val dvs = LakeWriter.parseManifestDvs(spark, table, v)
+      val dvs = LakeWriter.manifest(spark, table, v).dvs
       println(f"[morprobe] mode=$mode wall=$wall%.1fs " +
         f"added=${(b2 - b1) / 1e6}%.1f MB (${f2 - f1} files) " +
         f"manifest=${manifest / 1e6}%.2f MB dvFiles=${dvs.size} " +

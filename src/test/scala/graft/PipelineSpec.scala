@@ -12,6 +12,17 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** The (min, max) per column per file that a version's manifest
+    * stats record (columns without both bounds are left out). */
+  private def minMaxStats(t: String, v: Long)
+      : Map[String, Map[String, (String, String)]] =
+    graft.sources.LakeWriter.manifest(spark, t, v).stats.map {
+      case (f, fst) => f -> fst.cols.collect {
+        case (c, graft.sources.LakeWriter.ColStat(Some(lo), Some(hi), _)) =>
+          c -> (lo, hi)
+      }
+    }
+
   test("LakehousePipeline builds all zones and is idempotent") {
     val out = java.nio.file.Files.createTempDirectory("graft_lake").toString
     val r1 = LakehousePipeline.run(spark, TestSpark.sfDir, out)
@@ -563,7 +574,7 @@ class PipelineSpec extends AnyFunSuite {
       .repartitionByRange(4, $"k")
     LakeWriter.commitSnapshot(df, t)
     // footer stats landed in the manifest for both columns
-    val stats = LakeWriter.parseManifestStats(spark, t, 1L)
+    val stats = minMaxStats(t, 1L)
     assert(stats.nonEmpty && stats.values.forall(_.contains("k")))
     // locate the one file holding k=5, corrupt EVERY other file —
     // a stat-pruned point read must succeed without opening them
@@ -601,7 +612,7 @@ class PipelineSpec extends AnyFunSuite {
       .withColumn("d", expr("date_add(date'2024-01-01', cast(k as int))"))
       .repartitionByRange(4, $"k")
     LakeWriter.commitSnapshot(df, t)
-    val stats = LakeWriter.parseManifestStats(spark, t, 1L)
+    val stats = minMaxStats(t, 1L)
     assert(stats.nonEmpty, "manifest carries stats")
     assert(stats.values.forall(m => m.contains("ts") && m.contains("d")),
       s"temporal columns have stats: $stats")
@@ -658,7 +669,7 @@ class PipelineSpec extends AnyFunSuite {
         .withColumn("v", concat(lit("s"), $"k")), t, "append")
     val v1Files = LakeWriter.snapshotFiles(spark, t, 1L)
       .map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
-    val s2 = LakeWriter.parseManifestStats(spark, t, 2L)
+    val s2 = minMaxStats(t, 2L)
     assert(v1Files.subsetOf(s2.keySet))
     assert(LakeWriter.readSnapshotWhere(spark, t, $"k" >= 55)
       .count() == 5)
@@ -667,7 +678,7 @@ class PipelineSpec extends AnyFunSuite {
       Seq((55L, "z")).toDF("k", "v"), t, Seq("k"))
     assert(LakeWriter.readSnapshotWhere(spark, t, $"v" === "z")
       .count() == 1)
-    val s3 = LakeWriter.parseManifestStats(spark, t, 3L)
+    val s3 = minMaxStats(t, 3L)
     assert(LakeWriter.snapshotFiles(spark, t, 3L).forall(f =>
       s3.contains(f.substring(f.lastIndexOf('/') + 1))))
   }
@@ -718,7 +729,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(LakeWriter.readSnapshotWhere(spark, t, $"v" >= 20L && $"k" >= 10L)
       .collect().map(_.getLong(0)).sorted.toSeq == (10L to 18L by 2))
     // the manifest actually carries the three profiles
-    val full = LakeWriter.parseManifestStatsFull(spark, t, 3L)
+    val full = LakeWriter.manifest(spark, t, 3L).stats
     assert(full(clean).cols("v").nulls.contains(0L))
     assert(full(mixed).cols("v").nulls.contains(5L))
     assert(full(allNull).cols("v") ==
@@ -842,7 +853,7 @@ class PipelineSpec extends AnyFunSuite {
     LakeWriter.commitSnapshot(df, t)
     def filesIntersecting(v: Long, c1: String, b1: (Long, Long),
                           c2: String, b2: (Long, Long)): Int =
-      LakeWriter.parseManifestStats(spark, t, v).values.count { m =>
+      minMaxStats(t, v).values.count { m =>
         (m.get(c1), m.get(c2)) match {
           case (Some((lo1, hi1)), Some((lo2, hi2))) =>
             BigDecimal(lo1) <= b1._2 && BigDecimal(hi1) >= b1._1 &&
@@ -873,7 +884,7 @@ class PipelineSpec extends AnyFunSuite {
     // and a 2D box serves correctly through the pruned path: corrupt
     // every file whose stats exclude the box, then read through it
     val box = $"x" >= 0 && $"x" <= 7 && $"y" >= 0 && $"y" <= 7
-    val stats = LakeWriter.parseManifestStats(spark, t, v2)
+    val stats = minMaxStats(t, v2)
     LakeWriter.snapshotFiles(spark, t, v2).filter { f =>
       val bn = f.substring(f.lastIndexOf('/') + 1)
       stats.get(bn).exists { m =>

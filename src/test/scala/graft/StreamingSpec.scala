@@ -302,7 +302,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(LakeWriter.snapshotFiles(spark, table, 1L).toSet.subsetOf(
       LakeWriter.snapshotFiles(spark, table, 2L).toSet),
       "streaming MOR upsert rewrote a standing file")
-    assert(LakeWriter.parseManifestDvs(spark, table, 2L).nonEmpty,
+    assert(LakeWriter.manifest(spark, table, 2L).dvs.nonEmpty,
       "streaming MOR upsert committed no deletion vector")
     // time travel intact under the DV commit
     assert(LakeWriter.readSnapshot(spark, table, Some(1L))

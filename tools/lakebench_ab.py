@@ -15,6 +15,14 @@ BENCHMARK.json; lower is better when a metric is not listed there).
 IQR and that the change won, or lost, in at least nine tenths of the
 pairs.
 
+The last column applies the no-regression rule to every end-to-end
+metric, with the `bound` and `better` the change checkout's
+BENCHMARK.json gives it: `REGRESSED` when the change median is worse
+than the parent median by more than the bound (as a fraction of the
+parent median), `unresolved` when the parent's IQR/median exceeds the
+bound and not every change run beats every parent run. The script
+exits non-zero when any metric is REGRESSED.
+
 Lake metadata records absolute file paths, so stored bytes depend on
 the checkout path; checkouts whose absolute paths differ in length are
 refused. Every run's correctness is printed; a run that fails or
@@ -42,14 +50,33 @@ def run(checkout, workload, seed, seconds, trace):
     return {k: v["value"] for k, v in result["metrics"].items()}
 
 
-def directions(checkout):
+def benchmark_spec(checkout):
+    """(better direction per metric, bound per end-to-end metric)."""
     try:
         with open(os.path.join(checkout, "BENCHMARK.json")) as f:
             spec = json.load(f)
     except (OSError, ValueError):
-        return {}
-    return {m["name"]: m.get("better", "lower")
-            for m in spec.get("end_to_end", []) + spec.get("per_layer", [])}
+        return {}, {}
+    better = {m["name"]: m.get("better", "lower")
+              for m in spec.get("end_to_end", []) + spec.get("per_layer", [])}
+    bounds = {m["name"]: m["bound"] for m in spec.get("end_to_end", [])
+              if "bound" in m}
+    return better, bounds
+
+
+def verdict(p, c, lower, bound):
+    """REGRESSED / unresolved / ok for one end-to-end metric."""
+    pm, cm = statistics.median(p), statistics.median(c)
+    if not pm:
+        return "ok"
+    worse = (cm - pm) / pm if lower else (pm - cm) / pm
+    if worse > bound:
+        return "REGRESSED"
+    q1, q3 = quartiles(p)
+    beats_all = max(c) < min(p) if lower else min(c) > max(p)
+    if (q3 - q1) / pm > bound and not beats_all:
+        return "unresolved"
+    return "ok"
 
 
 def quartiles(xs):
@@ -75,7 +102,7 @@ def main():
         sys.exit(f"lakebench_ab: checkout paths differ in length ({len(parent)} vs "
                  f"{len(change)} characters); lake metadata stores absolute paths, "
                  "so stored_mb_per_input_mb would differ for that reason alone")
-    better = directions(change)
+    better, bounds = benchmark_spec(change)
 
     runs = {"parent": [], "change": []}
     for i, seed in enumerate(args.seeds):
@@ -96,7 +123,8 @@ def main():
     names = [k for k in runs["change"][0] if all(k in r for r in runs["parent"] + runs["change"])]
     print(f"{args.workload}: {n} pairs, seeds {args.seeds[0]}..{args.seeds[-1]}")
     print(f"{'metric':<48} {'parent q1/med/q3':>30} {'change q1/med/q3':>30} "
-          f"{'ratio':>7} {'p_iqr/med':>9} {'wins':>6}  clear")
+          f"{'ratio':>7} {'p_iqr/med':>9} {'wins':>6}  {'clear':<5}  rule")
+    regressed = []
     for k in names:
         p = [r[k] for r in runs["parent"]]
         c = [r[k] for r in runs["change"]]
@@ -111,8 +139,13 @@ def main():
         clear = abs(cm - pm) > (q3 - q1) and max(wins, losses) >= 0.9 * n
         ps = f"{q1:.5g}/{pm:.5g}/{q3:.5g}"
         cs = f"{c1:.5g}/{cm:.5g}/{c3:.5g}"
+        rule = verdict(p, c, lower, bounds[k]) if k in bounds else ""
+        if rule == "REGRESSED":
+            regressed.append(k)
         print(f"{k:<48} {ps:>30} {cs:>30} {ratio:>7.3f} {spread:>9.3f} "
-              f"{wins:>3}/{n:<2}  {'yes' if clear else ''}")
+              f"{wins:>3}/{n:<2}  {'yes' if clear else '':<5}  {rule}")
+    if regressed:
+        sys.exit(f"lakebench_ab: REGRESSED beyond bound: {', '.join(regressed)}")
 
 
 if __name__ == "__main__":
