@@ -1204,11 +1204,13 @@ object SparkEntry {
         Speed.eventStream(s, d).groupBy(col("event_type"))
           .agg(hll_sketch_agg(col("user_id")).as("hll")),
         name = "stream_hll", mode = OutputMode.Complete())
-        .select(col("event_type"),
+        .select(col("event_type").as("est_event_type"),
           hll_sketch_estimate(col("hll")).as("__est"))
       val truth = T(s, d, "events").groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("exact_users"))
-      est.join(truth, Seq("event_type"))
+      // NULL-SAFE, as in q_approx_distinct: the NULL event_type group
+      // is a group like any other, and a plain equi-join drops it
+      est.join(truth, col("est_event_type") <=> col("event_type"))
         .select(col("event_type"), col("exact_users"),
           (abs(col("__est") - col("exact_users")) <=
             greatest(col("exact_users") * 0.08, lit(5.0)))

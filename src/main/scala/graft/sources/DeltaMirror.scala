@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, lit, raise_error, when}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -1699,7 +1699,7 @@ object DeltaMirror {
       if (isAbsolutePath(d)) d else s"$root/$d"
     }
     import org.apache.spark.sql.types.{StructType, StructField,
-      StringType, LongType, BooleanType, Metadata}
+      StringType, LongType, Metadata}
     val outFields = schema.fields.toSeq :+
       StructField("_change_type", StringType, true) :+
       StructField("_commit_version", LongType, true) :+
@@ -1708,13 +1708,7 @@ object DeltaMirror {
     if (slices.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         StructType(outFields))
-    val hconf = spark.sessionState.newHadoopConf()
-    def fileKey(p: String): String = {
-      val abs = new org.apache.hadoop.fs.Path(absOf(p))
-      val q = abs.getFileSystem(hconf).makeQualified(abs).toUri
-      new java.net.URI(q.getScheme, q.getAuthority,
-        q.getPath, null, null).toString
-    }
+    val key = FileScan.keyOf(spark)
     // one scan per file KIND (cdc files carry `_change_type`, data
     // files do not); each scan joins a broadcast (file -> version,
     // type, partition values) table, and a file changed in several
@@ -1730,24 +1724,22 @@ object DeltaMirror {
           Seq(StructField("_change_type", StringType, true)) else Nil))
       val files = part.map(t => absOf(t._3)).distinct
       val anyDv = part.exists(t => t._5.nonEmpty || t._6.nonEmpty)
-      val metaRows: Seq[Row] = part.map {
+      val metaRows = part.map {
         case (v, ct, p, pv, inDv, exDv) =>
           val vals = st.partCols.map { c =>
             val pn = physOf.getOrElse(c, c)
             pv.collectFirst {
               case (k, ov) if k == pn || k == c => ov }.flatten.orNull
           }
-          Row.fromSeq((fileKey(p) +: vals) ++
+          key(absOf(p)) -> (vals ++
             Seq(ct.orNull, java.lang.Long.valueOf(v),
               java.lang.Long.valueOf(tsByVersion(v)),
               inDv.map(_._1).orNull, inDv.map(_._2).orNull,
-              exDv.map(_._1).orNull, exDv.map(_._2).orNull,
-              java.lang.Boolean.TRUE))
+              exDv.map(_._1).orNull, exDv.map(_._2).orNull))
       }
-      val metaSchema = StructType(
-        (StructField("__graft_file", StringType, false) +:
-          st.partCols.map(c =>
-            StructField(s"__graft_pv_$c", StringType, true))) ++ Seq(
+      val metaFields =
+        st.partCols.map(c =>
+          StructField(s"__graft_pv_$c", StringType, true)) ++ Seq(
           StructField("__graft_ct", StringType, true),
           StructField("__graft_ver", LongType, false),
           StructField("__graft_ts", LongType, false),
@@ -1756,34 +1748,19 @@ object DeltaMirror {
           StructField("__graft_inkey", StringType, true),
           StructField("__graft_exdv",
             org.apache.spark.sql.types.BinaryType, true),
-          StructField("__graft_exkey", StringType, true),
-          StructField("__graft_matched", BooleanType, true)))
-      import scala.jdk.CollectionConverters._
-      val metaDf = spark.createDataFrame(metaRows.asJava, metaSchema)
-      def dvTest(dvCol: String, keyCol: String) =
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.plans.DvContains(
-            org.apache.spark.sql.GraftColumnBridge.expression(col(keyCol)),
-            org.apache.spark.sql.GraftColumnBridge.expression(col(dvCol)),
-            org.apache.spark.sql.GraftColumnBridge.expression(
-              col("__graft_ridx"))))
+          StructField("__graft_exkey", StringType, true))
+      // a row is in this change when the entering DV (if any) holds
+      // it and the exiting DV (if any) does not
       val dvKeep =
         if (!anyDv) lit(true)
         else (col("__graft_indv").isNull ||
-            dvTest("__graft_indv", "__graft_inkey")) &&
+            FileScan.dvContains("__graft_inkey", "__graft_indv")) &&
           (col("__graft_exdv").isNull ||
-            !dvTest("__graft_exdv", "__graft_exkey"))
-      val base0 = spark.read.schema(readSchema).parquet(files: _*)
-        .withColumn("__graft_file", col("_metadata.file_path"))
-      (if (anyDv)
-        base0.withColumn("__graft_ridx", col("_metadata.row_index"))
-       else base0)
-        .join(broadcast(metaDf), Seq("__graft_file"), "left")
-        .where(when(col("__graft_matched").isNotNull, dvKeep)
-          .otherwise(raise_error(concat(
-            lit(s"readChangeFeed at $dir: file "), col("__graft_file"),
-            lit(" failed to match its commit entry (path-encoding " +
-              "regression)"))).cast("boolean")))
+            !FileScan.dvContains("__graft_exkey", "__graft_exdv"))
+      FileScan.joinGuarded(
+          FileScan.tag(spark.read.schema(readSchema).parquet(files: _*),
+            rowIndex = anyDv),
+          metaRows, metaFields, dvKeep, s"readChangeFeed at $dir")
         .select(outFields.map { f =>
           if (f.name == "_commit_version") col("__graft_ver").as(f.name)
           else if (f.name == "_commit_timestamp")
@@ -2276,81 +2253,34 @@ object DeltaMirror {
       base.select(schema.fields.map(f =>
         col(physOf(f.name)).as(f.name)).toIndexedSeq: _*)
     else {
-      // one row per live file: (url-encoded URI key, partition
-      // values). The key must be BIT-IDENTICAL to Spark's
-      // `_metadata.file_path`, which carries the url-ENCODED
-      // single-slash URI form ("file:/dir/a%20b.parquet" for a file
-      // named "a b.parquet") — NOT Path.toString (raw space) and NOT
-      // Path.toUri.toString (triple-slash). Rebuilding it through
-      // java.net.URI's quoting from the raw qualified path matches
-      // byte-for-byte (probe-pinned: space -> %20, '+' stays '+').
-      // A raw-string key silently dropped every row of a
-      // space-carrying file via the inner join; the join is now LEFT
-      // with a per-row raise on unmatched files, so an encoding
-      // regression is loud, never a partial table. Under
-      // columnMapping the log keys partitionValues by PHYSICAL name;
-      // plain tables by the column name — both resolve.
-      val hconf = spark.sessionState.newHadoopConf()
-      val pvRows: Seq[Row] = liveSeq.map { case (p, uid, info) =>
-        val abs = new org.apache.hadoop.fs.Path(absOf(p))
-        val q = abs.getFileSystem(hconf).makeQualified(abs).toUri
-        val key = new java.net.URI(q.getScheme, q.getAuthority,
-          q.getPath, null, null).toString
+      // one row per live file: (FileScan key, partition values, DV).
+      // Under columnMapping the log keys partitionValues by PHYSICAL
+      // name; plain tables by the column name — both resolve.
+      val key = FileScan.keyOf(spark)
+      val pvRows = liveSeq.map { case (p, uid, info) =>
+        val fk = key(absOf(p))
         val vals = st.partCols.map { c =>
           val pn = physOf.getOrElse(c, c)
           info.partitionValues.collectFirst {
             case (k, ov) if k == pn || k == c => ov }.flatten.orNull
         }
         // the DvContains cache key carries the DV GENERATION (the
-        // spec's uniqueId), not just the file: an executor thread's
-        // interpreted-mode cache outlives a query, and the same file
-        // read at another version carries another bitmap — a
-        // file-only key would silently serve the first parse
-        val dvKey = info.dv.map(_ => key + "\u0000" + uid).orNull
-        Row.fromSeq((key +: vals) ++
-          Seq(dvBytes.get(p).orNull, dvKey, java.lang.Boolean.TRUE))
+        // spec's uniqueId), not just the file
+        fk -> (vals ++ Seq(dvBytes.get(p).orNull,
+          info.dv.map(_ => fk + "\u0000" + uid).orNull))
       }
-      import scala.jdk.CollectionConverters._
-      val pvSchema = org.apache.spark.sql.types.StructType(
-        (org.apache.spark.sql.types.StructField("__graft_file",
-          org.apache.spark.sql.types.StringType, false) +:
-          st.partCols.map(c => org.apache.spark.sql.types.StructField(
-            s"__graft_pv_$c", org.apache.spark.sql.types.StringType,
-            true))) ++ Seq(
-          org.apache.spark.sql.types.StructField("__graft_dv",
-            org.apache.spark.sql.types.BinaryType, true),
-          org.apache.spark.sql.types.StructField("__graft_dvkey",
-            org.apache.spark.sql.types.StringType, true),
-          org.apache.spark.sql.types.StructField("__graft_matched",
-            org.apache.spark.sql.types.BooleanType, true)))
-      val pvDf = spark.createDataFrame(pvRows.asJava, pvSchema)
-      val guard = col("__graft_matched").isNotNull
-      // keep-predicate runs as a FILTER below the projection: an
-      // unmatched file raises (an encoding regression must be loud —
-      // with DVs it would otherwise silently serve deleted rows);
-      // a matched file keeps the row unless its DV marks the row index
+      import org.apache.spark.sql.types.{StructField, StringType,
+        BinaryType}
+      val pvFields = st.partCols.map(c =>
+          StructField(s"__graft_pv_$c", StringType, true)) ++ Seq(
+        StructField("__graft_dv", BinaryType, true),
+        StructField("__graft_dvkey", StringType, true))
       val keep =
         if (!anyDv) lit(true)
         else col("__graft_dv").isNull ||
-          !org.apache.spark.sql.GraftColumnBridge.column(
-            graft.plans.DvContains(
-              org.apache.spark.sql.GraftColumnBridge.expression(
-                col("__graft_dvkey")),
-              org.apache.spark.sql.GraftColumnBridge.expression(
-                col("__graft_dv")),
-              org.apache.spark.sql.GraftColumnBridge.expression(
-                col("__graft_ridx"))))
-      val keyed = base.withColumn("__graft_file", col("_metadata.file_path"))
-      val withIdx =
-        if (anyDv) keyed.withColumn("__graft_ridx",
-          col("_metadata.row_index"))
-        else keyed
-      withIdx
-        .join(broadcast(pvDf), Seq("__graft_file"), "left")
-        .where(when(guard, keep).otherwise(raise_error(concat(
-          lit(s"readDelta at $dir: data file "), col("__graft_file"),
-          lit(" failed to match its log entry (path-encoding " +
-            "regression)"))).cast("boolean")))
+          !FileScan.dvContains("__graft_dvkey", "__graft_dv")
+      FileScan.joinGuarded(FileScan.tag(base, rowIndex = anyDv),
+          pvRows, pvFields, keep, s"readDelta at $dir")
         .select(schema.fields.map { f =>
           if (partSet(f.name))
             col(s"__graft_pv_${f.name}").cast(f.dataType).as(f.name)

@@ -9,7 +9,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat, lit, raise_error, when}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -1863,16 +1863,6 @@ object IcebergMirror {
     }
   }
 
-  /** A path as Spark's `_metadata.file_path` renders it (url-encoded
-    * single-slash URI form) — the broadcast join key. */
-  private def fileKeyOf(p: String,
-      hconf: org.apache.hadoop.conf.Configuration): String = {
-    val abs = new Path(p)
-    val q = abs.getFileSystem(hconf).makeQualified(abs).toUri
-    new java.net.URI(q.getScheme, q.getAuthority,
-      q.getPath, null, null).toString
-  }
-
   /** (field id, name, type json) of a schema's top-level fields. */
   private def schemaFieldsOf(s: JValue): List[(Int, String, JValue)] =
     (s \ "fields") match {
@@ -2436,61 +2426,39 @@ object IcebergMirror {
       return base.select(schema.fields.map(f =>
         col(physByName(f.name)).as(f.name)).toIndexedSeq: _*)
 
-    // broadcast (file -> typed partition values); key built exactly as
-    // Spark's `_metadata.file_path` renders it (url-encoded URI form),
-    // LEFT join + per-row raise so an encoding regression is loud
+    // broadcast (file -> typed partition values, stored path, data
+    // sequence, spec, DV) through the FileScan guarded join
     def jvmToExternal(dt: DataType, v: Any): Any =
       avroPvToExternal(dt, v, dir)
-    val hconf = spark.sessionState.newHadoopConf()
-    def canonicalKey(p: String): String = fileKeyOf(p, hconf)
-    val pvRows: Seq[Row] = live.values.toSeq.map { lv =>
+    val key = FileScan.keyOf(spark)
+    val pvRows = live.values.toSeq.map { lv =>
       val dv = dvByStored.get(lv.stored)
-      Row.fromSeq((canonicalKey(lv.path) +: identitySources.map(src =>
-        jvmToExternal(idToType(src), lv.pvById.get(src).orNull))) ++
+      val k = key(lv.path)
+      k -> (identitySources.map(src =>
+        jvmToExternal(idToType(src), lv.pvById.get(src).orNull)) ++
         Seq(lv.stored, java.lang.Long.valueOf(lv.dataSeq),
           Integer.valueOf(lv.specId),
           dv.map(_._1).orNull,
-          // the DvContains cache key must carry the DV GENERATION
-          // (puffin path + blob offset), not just the file — the
-          // kernel's thread-local cache outlives a query
-          dv.map(t => canonicalKey(lv.path) + "\u0000" + t._2).orNull,
-          java.lang.Boolean.TRUE))
+          // the DvContains cache key carries the DV GENERATION
+          // (puffin path + blob offset), not just the file
+          dv.map(t => k + "\u0000" + t._2).orNull))
     }
-    val pvSchema = StructType(
-      (StructField("__graft_file", StringType, false) +:
+    val pvFields =
       identitySources.map(src => StructField(
-        s"__graft_pv_${idToName(src)}", idToType(src), true))) ++
+        s"__graft_pv_${idToName(src)}", idToType(src), true)) ++
       Seq(StructField("__graft_stored", StringType, true),
         StructField("__graft_seq", LongType, true),
         StructField("__graft_specid", IntegerType, true),
         StructField("__graft_dv", BinaryType, true),
-        StructField("__graft_dvkey", StringType, true),
-        StructField("__graft_matched", BooleanType, true)))
-    val pvDf = spark.createDataFrame(pvRows.asJava, pvSchema)
+        StructField("__graft_dvkey", StringType, true))
     val identityNames = identitySources.map(idToName).toSet
-    val keyed = base.withColumn("__graft_file", col("_metadata.file_path"))
-    val withIdx =
-      if (posDels.nonEmpty || dvByStored.nonEmpty)
-        keyed.withColumn("__graft_ridx", col("_metadata.row_index"))
-      else keyed
     val dvKeep =
       if (dvByStored.isEmpty) lit(true)
       else col("__graft_dv").isNull ||
-        !org.apache.spark.sql.GraftColumnBridge.column(
-          graft.plans.DvContains(
-            org.apache.spark.sql.GraftColumnBridge.expression(
-              col("__graft_dvkey")),
-            org.apache.spark.sql.GraftColumnBridge.expression(
-              col("__graft_dv")),
-            org.apache.spark.sql.GraftColumnBridge.expression(
-              col("__graft_ridx"))))
-    val joined = withIdx
-      .join(broadcast(pvDf), Seq("__graft_file"), "left")
-      .where(when(col("__graft_matched").isNotNull, dvKeep)
-        .otherwise(raise_error(concat(
-          lit(s"readIceberg at $dir: data file "), col("__graft_file"),
-          lit(" failed to match its manifest entry (path-encoding " +
-            "regression)"))).cast("boolean")))
+        !FileScan.dvContains("__graft_dvkey", "__graft_dv")
+    val joined = FileScan.joinGuarded(
+      FileScan.tag(base, rowIndex = posDels.nonEmpty || dvByStored.nonEmpty),
+      pvRows, pvFields, dvKeep, s"readIceberg at $dir")
     // POSITION DELETES (merge-on-read): delete rows are DATA-scale —
     // they scan distributedly and anti-join the base on
     // (data file, row index), never through the driver. A delete
@@ -2503,7 +2471,7 @@ object IcebergMirror {
       if (posDels.isEmpty) joined
       else {
         val delMeta = posDels.toSeq.map(pd =>
-          Row(canonicalKey(pd.path), java.lang.Long.valueOf(pd.seq)))
+          Row(key(pd.path), java.lang.Long.valueOf(pd.seq)))
         val delMetaDf = spark.createDataFrame(delMeta.asJava,
           StructType(Seq(
             StructField("__graft_dfile", StringType, false),
@@ -2517,7 +2485,7 @@ object IcebergMirror {
             col("pos").as("__del_pos"), col("__del_seq"))
         joined.join(dels,
           col("__graft_stored") === col("__del_stored") &&
-            col("__graft_ridx") === col("__del_pos") &&
+            col(FileScan.RowIndex) === col("__del_pos") &&
             col("__del_seq") >= col("__graft_seq"),
           "left_anti")
       }
@@ -2537,7 +2505,7 @@ object IcebergMirror {
           physByName(idToName(id)), idToType(id), nullable = true)))
         val pvCols = identitySources.map(idToName)
         val delMeta = group.map { ed =>
-          Row.fromSeq((canonicalKey(ed.path) +:
+          Row.fromSeq((key(ed.path) +:
             java.lang.Long.valueOf(ed.seq) +:
             java.lang.Boolean.valueOf(ed.scoped) +:
             Integer.valueOf(ed.specId) +:
@@ -2971,67 +2939,50 @@ object IcebergMirror {
     if (changed.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         StructType(outFields))
-    val hconf = spark.sessionState.newHadoopConf()
     // one scan over the distinct changed files; the broadcast meta
     // join fans each file into every (snapshot, side, DV-window) it
     // changed in — a unit's bitmaps ride as binary columns and filter
     // by `_metadata.row_index` through the cached-parse DvContains
     // kernel (cache keys carry the blob GENERATION)
     val anyDv = changed.exists(c => c.inDv.nonEmpty || c.exDv.nonEmpty)
-    val metaRows: Seq[Row] = changed.toSeq.map { c =>
-      Row.fromSeq((fileKeyOf(c.path, hconf) +:
+    val key = FileScan.keyOf(spark)
+    val metaRows = changed.toSeq.map { c =>
+      key(c.path) -> (
         identitySources.map(src =>
           avroPvToExternal(idToType(src), c.pvById.get(src).orNull,
-            dir))) ++
+            dir)) ++
         Seq(if (c.insert) "insert" else "delete",
           Integer.valueOf(c.ordinal),
           java.lang.Long.valueOf(c.snapId),
           c.inDv.map(_._1).orNull,
           c.inDv.map(_._2).orNull,
           c.exDv.map(_._1).orNull,
-          c.exDv.map(_._2).orNull,
-          java.lang.Boolean.TRUE))
+          c.exDv.map(_._2).orNull))
     }
-    val metaSchema = StructType(
-      (StructField("__graft_file", StringType, false) +:
-        identitySources.map(src => StructField(
-          s"__graft_pv_${idToName(src)}", idToType(src), true))) ++ Seq(
+    val metaFields =
+      identitySources.map(src => StructField(
+        s"__graft_pv_${idToName(src)}", idToType(src), true)) ++ Seq(
         StructField("__graft_ct", StringType, false),
         StructField("__graft_ord", IntegerType, false),
         StructField("__graft_sid", LongType, false),
         StructField("__graft_indv", BinaryType, true),
         StructField("__graft_inkey", StringType, true),
         StructField("__graft_exdv", BinaryType, true),
-        StructField("__graft_exkey", StringType, true),
-        StructField("__graft_matched", BooleanType, true)))
-    val metaDf = spark.createDataFrame(metaRows.asJava, metaSchema)
+        StructField("__graft_exkey", StringType, true))
     val readSchema = StructType(schema.fields.map(f =>
       StructField(physByName(f.name), f.dataType, nullable = true)))
-    def dvTest(dvCol: String, keyCol: String) =
-      org.apache.spark.sql.GraftColumnBridge.column(
-        graft.plans.DvContains(
-          org.apache.spark.sql.GraftColumnBridge.expression(col(keyCol)),
-          org.apache.spark.sql.GraftColumnBridge.expression(col(dvCol)),
-          org.apache.spark.sql.GraftColumnBridge.expression(
-            col("__graft_ridx"))))
+    // in the entering DV (if any) and not in the exiting DV (if any)
     val dvKeep =
       if (!anyDv) lit(true)
       else (col("__graft_indv").isNull ||
-          dvTest("__graft_indv", "__graft_inkey")) &&
+          FileScan.dvContains("__graft_inkey", "__graft_indv")) &&
         (col("__graft_exdv").isNull ||
-          !dvTest("__graft_exdv", "__graft_exkey"))
-    val base0 = spark.read.schema(readSchema)
-      .parquet(changed.map(_.path).distinct.toSeq: _*)
-      .withColumn("__graft_file", col("_metadata.file_path"))
-    (if (anyDv)
-      base0.withColumn("__graft_ridx", col("_metadata.row_index"))
-     else base0)
-      .join(broadcast(metaDf), Seq("__graft_file"), "left")
-      .where(when(col("__graft_matched").isNotNull, dvKeep)
-        .otherwise(raise_error(concat(
-          lit(s"readIcebergChanges at $dir: file "), col("__graft_file"),
-          lit(" failed to match its manifest entry (path-encoding " +
-            "regression)"))).cast("boolean")))
+          !FileScan.dvContains("__graft_exkey", "__graft_exdv"))
+    FileScan.joinGuarded(
+        FileScan.tag(spark.read.schema(readSchema)
+          .parquet(changed.map(_.path).distinct.toSeq: _*),
+          rowIndex = anyDv),
+        metaRows, metaFields, dvKeep, s"readIcebergChanges at $dir")
       .select(outFields.map { f =>
         if (f.name == "_change_type") col("__graft_ct").as(f.name)
         else if (f.name == "_change_ordinal")

@@ -255,28 +255,18 @@ object LakeWriter {
     else None
   }
 
-  /** Read a set of snapshot data files applying the committed schema,
-    * grouped by version directory so hive partition columns (col=value/
-    * dirs under each version dir) are recovered via basePath; a
-    * snapshot spans few version dirs. The COMMITTED schema is applied
-    * to every group: without it, partition-column type INFERENCE can
-    * drift per group (day=1 → int, day=x → string) and break the
-    * union — the manifest, not inference, owns the types. */
-  private def readFiles(spark: SparkSession, files: Seq[String],
-                        schema: org.apache.spark.sql.types.StructType,
-                        colmap: ColMapping = ColMapping.empty,
-                        dvs: Map[String, InlineDv] = Map.empty)
-      : DataFrame = {
+  /** One parquet scan per version directory, unioned, each passed
+    * through `each` (file-metadata columns resolve only directly on a
+    * scan). Grouping by version dir lets hive partition columns
+    * (col=value/ dirs under it) be recovered via basePath; a snapshot
+    * spans few version dirs. A file outside any version dir was
+    * ADOPTED IN PLACE by convertToSnapshot: its basePath is the prefix
+    * up to the first k=v DIRECTORY segment, or the parent dir when
+    * unpartitioned. */
+  private def scanByBase(spark: SparkSession, files: Seq[String],
+      pSchema: org.apache.spark.sql.types.StructType)(
+      each: DataFrame => DataFrame): DataFrame = {
     val root = "(.*/data/v\\d+-[^/]+)/".r
-    // files store PHYSICAL column names (stable across renames) —
-    // scan under the physical schema, then alias back to the logical
-    // names callers see. Partition columns are identity-mapped
-    // (rename/drop refuse on them), so path-derived values align.
-    val pSchema = physSchema(schema, colmap)
-    // a file outside any version dir was ADOPTED IN PLACE by
-    // convertToSnapshot: its basePath (what makes hive partition
-    // recovery work) is the prefix up to the first k=v DIRECTORY
-    // segment, or the parent dir when unpartitioned
     def baseOf(f: String): String =
       root.findFirstMatchIn(f).map(_.group(1)).getOrElse {
         val segs = f.split('/')
@@ -284,76 +274,57 @@ object LakeWriter {
         if (i >= 0 && i < segs.length - 1) segs.take(i).mkString("/")
         else f.substring(0, f.lastIndexOf('/'))
       }
+    files.groupBy(baseOf).toSeq.sortBy(_._1).map { case (base, fs) =>
+      each(spark.read.option("basePath", base).schema(pSchema)
+        .parquet(fs: _*))
+    }.reduce(_.unionByName(_))
+  }
+
+  /** The per-file deletion-vector columns a native read joins in:
+    * bitmap bytes and the DvContains cache key. */
+  private val dvFields = {
+    import org.apache.spark.sql.types.{BinaryType, StringType, StructField}
+    Seq(StructField("__graft_dv", BinaryType, true),
+      StructField("__graft_dvkey", StringType, true))
+  }
+
+  /** Read a set of snapshot data files applying the committed schema
+    * to every version-dir group of [[scanByBase]]: without it,
+    * partition-column type INFERENCE can drift per group (day=1 →
+    * int, day=x → string) and break the union — the manifest, not
+    * inference, owns the types. */
+  private def readFiles(spark: SparkSession, files: Seq[String],
+                        schema: org.apache.spark.sql.types.StructType,
+                        colmap: ColMapping = ColMapping.empty,
+                        dvs: Map[String, InlineDv] = Map.empty)
+      : DataFrame = {
     // MERGE-ON-READ deletion vectors: only relevant when one of THESE
     // files carries one (dvs may describe the whole version while the
     // caller reads a pruned subset)
     val anyDv = dvs.nonEmpty && files.exists(f => dvs.contains(baseName(f)))
-    import org.apache.spark.sql.functions.col
-    val scans = files.groupBy(baseOf)
-      .toSeq.sortBy(_._1)
-      .map { case (base, fs) =>
-        val df = spark.read.option("basePath", base)
-          .schema(pSchema).parquet(fs: _*)
-        // the file-metadata columns resolve only directly on the scan
-        if (!anyDv) df
-        else df.withColumn("__graft_file", col("_metadata.file_path"))
-          .withColumn("__graft_ridx", col("_metadata.row_index"))
-      }
-      .reduce(_.unionByName(_))
+    // files store PHYSICAL column names (stable across renames) —
+    // scan under the physical schema, then alias back to the logical
+    // names callers see. Partition columns are identity-mapped
+    // (rename/drop refuse on them), so path-derived values align.
+    val scans = scanByBase(spark, files, physSchema(schema, colmap))(df =>
+      if (anyDv) FileScan.tag(df, rowIndex = true) else df)
     val served =
       if (!anyDv) scans
       else {
-        // (url-encoded qualified URI key -> bitmap bytes + cache key):
-        // the key must be bit-identical to `_metadata.file_path` (the
-        // readDelta discipline — URI-quoted single-slash form); the
-        // DvContains cache key carries the bitmap DIGEST, because an
-        // executor's interpreted-mode cache outlives a query and the
-        // same file under a later (unioned) DV must never serve the
-        // first parse
-        val hconf = spark.sessionState.newHadoopConf()
-        val dvRows: Seq[org.apache.spark.sql.Row] = files.map { f =>
-          val abs = new org.apache.hadoop.fs.Path(f)
-          val q = abs.getFileSystem(hconf).makeQualified(abs).toUri
-          val key = new java.net.URI(q.getScheme, q.getAuthority,
-            q.getPath, null, null).toString
+        // the DvContains cache key carries the bitmap DIGEST: the same
+        // file under a later (unioned) DV must never serve the first
+        // parse
+        val key = FileScan.keyOf(spark)
+        val dvRows = files.map { f =>
+          val k = key(f)
           val d = dvs.get(baseName(f))
-          org.apache.spark.sql.Row(key,
-            d.map(_.bytes).orNull,
-            d.map(x => key + "\u0000" + x.digest).orNull,
-            java.lang.Boolean.TRUE)
+          k -> Seq(d.map(_.bytes).orNull,
+            d.map(x => k + "\u0000" + x.digest).orNull)
         }
-        import scala.jdk.CollectionConverters._
-        import org.apache.spark.sql.types.{StructType, StructField,
-          StringType, BinaryType, BooleanType}
-        val dvDf = spark.createDataFrame(dvRows.asJava, StructType(Seq(
-          StructField("__graft_file", StringType, false),
-          StructField("__graft_dv", BinaryType, true),
-          StructField("__graft_dvkey", StringType, true),
-          StructField("__graft_matched", BooleanType, true))))
-        val keep = col("__graft_dv").isNull ||
-          !org.apache.spark.sql.GraftColumnBridge.column(
-            graft.plans.DvContains(
-              org.apache.spark.sql.GraftColumnBridge.expression(
-                col("__graft_dvkey")),
-              org.apache.spark.sql.GraftColumnBridge.expression(
-                col("__graft_dv")),
-              org.apache.spark.sql.GraftColumnBridge.expression(
-                col("__graft_ridx"))))
-        scans
-          .join(org.apache.spark.sql.functions.broadcast(dvDf),
-            Seq("__graft_file"), "left")
-          .where(org.apache.spark.sql.functions
-            .when(col("__graft_matched").isNotNull, keep)
-            .otherwise(org.apache.spark.sql.functions.raise_error(
-              org.apache.spark.sql.functions.concat(
-                org.apache.spark.sql.functions.lit(
-                  "readFiles: data file "),
-                col("__graft_file"),
-                org.apache.spark.sql.functions.lit(
-                  " failed to match its manifest entry " +
-                    "(path-encoding regression) — with deletion " +
-                    "vectors this would silently serve deleted rows")))
-              .cast("boolean")))
+        FileScan.joinGuarded(scans, dvRows, dvFields,
+          col("__graft_dv").isNull ||
+            !FileScan.dvContains("__graft_dvkey", "__graft_dv"),
+          "readFiles")
       }
     served
       // the scan APPENDS path-derived partition columns regardless of
@@ -1172,66 +1143,33 @@ object LakeWriter {
       colmap: ColMapping,
       oldDvs: Map[String, InlineDv])
       : (DataFrame, org.apache.spark.sql.Column, Map[String, String]) = {
-    val root = "(.*/data/v\\d+-[^/]+)/".r
-    def baseOf(f: String): String =
-      root.findFirstMatchIn(f).map(_.group(1)).getOrElse {
-        val segs = f.split('/')
-        val i = segs.indexWhere(_.contains("="))
-        if (i >= 0 && i < segs.length - 1) segs.take(i).mkString("/")
-        else f.substring(0, f.lastIndexOf('/'))
-      }
-    val pSchema = physSchema(schema, colmap)
-    val scan = candidates.groupBy(baseOf).toSeq.sortBy(_._1)
-      .map { case (base, fls) =>
-        spark.read.option("basePath", base).schema(pSchema)
-          .parquet(fls: _*)
-          .withColumn("__graft_file", col("_metadata.file_path"))
-          .withColumn("__graft_ridx", col("_metadata.row_index"))
-      }.reduce(_.unionByName(_))
-    val hconf = spark.sessionState.newHadoopConf()
-    def keyOf(f: String): String = {
-      val abs = new org.apache.hadoop.fs.Path(f)
-      val q = abs.getFileSystem(hconf).makeQualified(abs).toUri
-      new java.net.URI(q.getScheme, q.getAuthority,
-        q.getPath, null, null).toString
-    }
+    val scan = scanByBase(spark, candidates, physSchema(schema, colmap))(
+      FileScan.tag(_, rowIndex = true))
+    val key = FileScan.keyOf(spark)
     val fileOfKey: Map[String, String] =
-      candidates.map(f => keyOf(f) -> f).toMap
+      candidates.map(f => key(f) -> f).toMap
     val anyOldDv = candidates.exists(f => oldDvs.contains(baseName(f)))
     val logical = scan.select(
       (schema.fieldNames.map(n => col(colmap.phys(n)).as(n)) ++
-        Seq(col("__graft_file"), col("__graft_ridx"))).toIndexedSeq: _*)
+        Seq(col(FileScan.File), col(FileScan.RowIndex))).toIndexedSeq: _*)
     val oldDel: org.apache.spark.sql.Column =
       if (!anyOldDv) lit(false)
       else col("__graft_dv").isNotNull &&
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.plans.DvContains(
-            org.apache.spark.sql.GraftColumnBridge.expression(
-              col("__graft_dvkey")),
-            org.apache.spark.sql.GraftColumnBridge.expression(
-              col("__graft_dv")),
-            org.apache.spark.sql.GraftColumnBridge.expression(
-              col("__graft_ridx"))))
+        FileScan.dvContains("__graft_dvkey", "__graft_dv")
+    // no unmatched-file guard here: only DV-bearing files have a row,
+    // and morBuildDvs checks every scanned key against fileOfKey
     val joined =
       if (!anyOldDv) logical
       else {
         val dvRows = candidates.flatMap { f =>
           oldDvs.get(baseName(f)).map { d =>
-            val k = keyOf(f)
-            org.apache.spark.sql.Row(k, d.bytes,
-              k + "\u0000" + d.digest)
+            val k = key(f)
+            k -> Seq(d.bytes, k + "\u0000" + d.digest)
           }
         }
-        import scala.jdk.CollectionConverters._
-        import org.apache.spark.sql.types.{StructType, StructField,
-          StringType, BinaryType}
-        val dvDf = spark.createDataFrame(dvRows.asJava, StructType(Seq(
-          StructField("__graft_file", StringType, false),
-          StructField("__graft_dv", BinaryType, true),
-          StructField("__graft_dvkey", StringType, true))))
-        logical.join(
-          org.apache.spark.sql.functions.broadcast(dvDf),
-          Seq("__graft_file"), "left")
+        logical.join(org.apache.spark.sql.functions.broadcast(
+            FileScan.metaFrame(spark, dvRows, dvFields)),
+          Seq(FileScan.File), "left")
       }
     (joined, oldDel, fileOfKey)
   }
@@ -1257,7 +1195,7 @@ object LakeWriter {
     // PASS 1 -- counts only. The COW-fallback decision (and the
     // fully-deleted and bitmap-unchanged cases) are all decidable
     // from counts, so a COW-bound write never ships a row index.
-    val counts = flagged.groupBy(col("__graft_file"))
+    val counts = flagged.groupBy(col(FileScan.File))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("__total"),
         org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.when(
@@ -1294,15 +1232,15 @@ object LakeWriter {
     val newEntries = scala.collection.mutable.Map[String, InlineDv]()
     if (needsBitmap.nonEmpty) {
       import spark.implicits._
-      val keysDf = needsBitmap.keys.toSeq.sorted.toDF("__graft_file")
+      val keysDf = needsBitmap.keys.toSeq.sorted.toDF(FileScan.File)
       val maxDv = maxDvBytes
       val blobs = flagged.filter(col("__graft_del"))
         .join(org.apache.spark.sql.functions.broadcast(keysDf),
-          Seq("__graft_file"), "left_semi")
-        .select(col("__graft_file"), col("__graft_ridx"))
+          Seq(FileScan.File), "left_semi")
+        .select(col(FileScan.File), col(FileScan.RowIndex))
         .as[(String, Long)]
-        .repartition(col("__graft_file"))
-        .sortWithinPartitions("__graft_file", "__graft_ridx")
+        .repartition(col(FileScan.File))
+        .sortWithinPartitions(FileScan.File, FileScan.RowIndex)
         .mapPartitions { it =>
           // (file, cardinality, bytes); empty bytes = exceeded maxDv
           // (a real bitmap is never empty here since cardinality > 0)
@@ -2342,19 +2280,26 @@ object LakeWriter {
             "re-bootstrap the consumer (fresh cursor + rebuilt state)")
       }
       fn(feed, v)
-      val tmp = new org.apache.hadoop.fs.Path(
-        cursor.getParent, s".${cursor.getName}.tmp")
-      val out = fs.create(tmp, true)
-      out.write(v.toString.getBytes("UTF-8")); out.close()
-      // single atomic overwrite-rename: a delete-then-rename pair has a
-      // crash window with NO cursor file at all, and the next run would
-      // take the bootstrap full-feed path and double-count everything
-      org.apache.hadoop.fs.FileContext.getFileContext(cursor.toUri,
-          spark.sessionState.newHadoopConf())
-        .rename(tmp, cursor,
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      writeCursor(spark, cursorPath, v)
     }
     todo
+  }
+
+  /** Point the cursor file at `cursorPath` to `version`: write a
+    * dot-hidden tmp, then ONE atomic overwrite-rename. A
+    * delete-then-rename pair has a crash window with NO cursor file at
+    * all, and the next run would take the bootstrap full-feed path and
+    * double-count everything. */
+  private[graft] def writeCursor(spark: SparkSession, cursorPath: String,
+                                 version: Long): Unit = {
+    val cursor = new org.apache.hadoop.fs.Path(cursorPath)
+    val tmp = new org.apache.hadoop.fs.Path(
+      cursor.getParent, s".${cursor.getName}.tmp")
+    val out = fsOf(spark, cursor).create(tmp, true)
+    out.write(version.toString.getBytes("UTF-8")); out.close()
+    org.apache.hadoop.fs.FileContext.getFileContext(cursor.toUri,
+        spark.sessionState.newHadoopConf())
+      .rename(tmp, cursor, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Partition-aware snapshot commit — dynamic partition overwrite

@@ -20,24 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Materialized {
 
-  /** Refresh (or bootstrap) the COUNT/SUM materialized view of
-    * `srcTable` grouped by `groupCols`, consuming every version
-    * committed since the cursor last advanced. The MV is itself a
-    * snapshot table with schema `groupCols ++ (n_rows, sum_<c>...)`
-    * and one row per group; groups whose row count returns to zero
-    * are deleted (file-pruned) rather than kept as tombstones.
-    *
-    * Replays are EXACTLY-ONCE: every merge stamps its source version
-    * as an application transaction on the MV manifest (atomic with
-    * the merged values — [[applyDelta]]), so a crash after the MV
-    * merge but before the cursor advance replays the version and the
-    * stamp skips it; the external cursor is a scheduling optimization
-    * (don't re-plan absorbed versions), not the correctness
-    * mechanism. Group columns must be non-null (the usual MV key
-    * contract; enforce upstream or bucket nulls explicitly).
-    *
-    * @param sumCols numeric source columns to maintain sums for
-    * @return versions of `srcTable` processed this call */
   /** Periodic FULL refresh — the companion for aggregates that are
     * NOT self-maintainable under deletes (min/max): one scan of the
     * source's current snapshot rebuilds the whole MV as the next
@@ -73,17 +55,7 @@ object Materialized {
     // contains (the same exactly-once argument as applyDelta)
     val v = LakeWriter.commitSnapshot(mv, mvTable,
       txn = alignCursor.map(_ => MvTxnApp -> versions.last))
-    alignCursor.foreach { cp =>
-      val p = new org.apache.hadoop.fs.Path(cp)
-      val tmp = new org.apache.hadoop.fs.Path(
-        p.getParent, s".${p.getName}.tmp")
-      val fs = LakeWriter.fsOf(spark, p)
-      val out = fs.create(tmp, true)
-      out.write(versions.last.toString.getBytes("UTF-8")); out.close()
-      org.apache.hadoop.fs.FileContext.getFileContext(p.toUri,
-          spark.sessionState.newHadoopConf())
-        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
+    alignCursor.foreach(LakeWriter.writeCursor(spark, _, versions.last))
     v
   }
 
@@ -99,19 +71,29 @@ object Materialized {
                                   cursorPath: String,
                                   appId: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(cursorPath)
-    val fs = LakeWriter.fsOf(spark, p)
-    if (fs.exists(p)) return
-    LakeWriter.lastTxnVersion(spark, mvTable, appId).foreach { s =>
-      val tmp = new org.apache.hadoop.fs.Path(
-        p.getParent, s".${p.getName}.tmp")
-      val out = fs.create(tmp, true)
-      out.write(s.toString.getBytes("UTF-8")); out.close()
-      org.apache.hadoop.fs.FileContext.getFileContext(p.toUri,
-          spark.sessionState.newHadoopConf())
-        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
+    if (LakeWriter.fsOf(spark, p).exists(p)) return
+    LakeWriter.lastTxnVersion(spark, mvTable, appId)
+      .foreach(LakeWriter.writeCursor(spark, cursorPath, _))
   }
 
+  /** Refresh (or bootstrap) the COUNT/SUM materialized view of
+    * `srcTable` grouped by `groupCols`, consuming every version
+    * committed since the cursor last advanced. The MV is itself a
+    * snapshot table with schema `groupCols ++ (n_rows, sum_<c>...)`
+    * and one row per group; groups whose row count returns to zero
+    * are deleted (file-pruned) rather than kept as tombstones.
+    *
+    * Replays are EXACTLY-ONCE: every merge stamps its source version
+    * as an application transaction on the MV manifest (atomic with
+    * the merged values — [[applyDelta]]), so a crash after the MV
+    * merge but before the cursor advance replays the version and the
+    * stamp skips it; the external cursor is a scheduling optimization
+    * (don't re-plan absorbed versions), not the correctness
+    * mechanism. Group columns must be non-null (the usual MV key
+    * contract; enforce upstream or bucket nulls explicitly).
+    *
+    * @param sumCols numeric source columns to maintain sums for
+    * @return versions of `srcTable` processed this call */
   def refreshAgg(spark: SparkSession, srcTable: String, mvTable: String,
                  cursorPath: String, groupCols: Seq[String],
                  sumCols: Seq[String]): Seq[Long] = {

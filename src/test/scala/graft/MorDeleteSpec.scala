@@ -459,4 +459,49 @@ class MorDeleteSpec extends AnyFunSuite {
     assert(ids(4, "delete") == (30L until 150L).toSet)
     assert(ids(4, "insert").isEmpty)
   }
+
+  test("a partition value that needs URL escaping: MOR delete and " +
+      "MOR merge land DVs, and readSnapshot, changesBetween, readDelta " +
+      "and readIceberg all key its files and serve exact rows") {
+    val t = freshDir("graft_mor_escaped") + "/t"
+    // space stays raw in the hive dir and '%' escapes to %25, so
+    // `_metadata.file_path` carries "part=a%20b%2525c": every reader's
+    // file key must re-render both layers
+    val odd = "a b%c"
+    def tbl(df: org.apache.spark.sql.DataFrame) = df.withColumn("part",
+      when(pmod($"id", lit(2)) === 0, lit(odd)).otherwise(lit("plain")))
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      rows(df.select("id", "lang", "v", "part"))
+    val base = tbl(docs(200))
+    LakeWriter.commitSnapshotDynamic(base.repartition(2), t,
+      Seq("part"))                                             // v1
+    assert(LakeWriter.snapshotFiles(spark, t, 1L)
+      .exists(_.contains("part=a b%25c/")))
+    val v2 = LakeWriter.deleteFromSnapshotMor(spark, t, $"id" < 20)
+    assert(LakeWriter.manifest(spark, t, v2).dvs.nonEmpty)
+    val expect2 = base.where($"id" >= 20)
+    assert(rowsOf(LakeWriter.readSnapshot(spark, t)) == rowsOf(expect2))
+    assert(rowsOf(LakeWriter.changesBetween(spark, t, 1L, v2)
+      .where($"_change_type" === "delete")) ==
+      rowsOf(base.where($"id" < 20)))
+    // upsert into the escaped partition: three live keys and a new one
+    val u = tbl(docs(301).where($"id".isin(50, 60, 70, 300)))
+      .withColumn("v", $"v" + 1)
+    val v3 = LakeWriter.mergeSnapshotMor(u, t, Seq("part", "id"))
+    // merge-on-read, not a copy-on-write fallback: files stay, DVs move
+    assert(LakeWriter.snapshotFiles(spark, t, v2).toSet
+      .subsetOf(LakeWriter.snapshotFiles(spark, t, v3).toSet))
+    assert(LakeWriter.manifest(spark, t, v3).dvs !=
+      LakeWriter.manifest(spark, t, v2).dvs)
+    val expect3 = expect2.where(!$"id".isin(50, 60, 70)).unionByName(u)
+    assert(rowsOf(LakeWriter.readSnapshot(spark, t)) == rowsOf(expect3))
+    val feed = LakeWriter.changesBetween(spark, t, v2, v3)
+    assert(rowsOf(feed.where($"_change_type" === "delete")) ==
+      rowsOf(base.where($"id".isin(50, 60, 70))))
+    assert(rowsOf(feed.where($"_change_type" === "insert")) == rowsOf(u))
+    assert(DeltaMirror.mirror(spark, t) == 3L)
+    assert(rowsOf(DeltaMirror.readDelta(spark, t)) == rowsOf(expect3))
+    assert(IcebergMirror.mirror(spark, t, allowV3 = true) == 3L)
+    assert(rowsOf(IcebergMirror.readIceberg(spark, t)) == rowsOf(expect3))
+  }
 }
