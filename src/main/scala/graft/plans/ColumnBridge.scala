@@ -12,6 +12,9 @@ object GraftColumnBridge {
   /** The raw ColumnNode tree of a Column (Spark 4's pre-analysis
     * representation) — what graft's data-skipping evaluator walks. */
   def node(c: Column): internal.ColumnNode = c.node
+  /** `s` with every field nullable, nested fields included
+    * (`StructType.asNullable` is private[spark]). */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
 }
 
 /** Bridge to build a DataFrame from a custom LogicalPlan node

@@ -98,9 +98,17 @@ object DeltaMirror {
     val dir = logDir(table)
     val fs = LakeWriter.fsOf(spark, dir)
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.matches("\\d{20}\\.json"))
-      .map(_.dropRight(5).toLong).sorted
+    else fs.listStatus(dir).toSeq
+      .flatMap(s => commitVersionOf(s.getPath.getName)).sorted
+  }
+
+  private val CommitName = """(\d{20})\.json""".r
+
+  /** The version a `_delta_log` file NAME commits
+    * (`{20 digits}.json`), None for any other name. */
+  private def commitVersionOf(name: String): Option[Long] = name match {
+    case CommitName(n) => Some(n.toLong)
+    case _ => None
   }
 
   private def readCommit(fs: org.apache.hadoop.fs.FileSystem,
@@ -892,7 +900,7 @@ object DeltaMirror {
       val dv = nextDv + i
       val gm = LakeWriter.manifest(spark, table, gv)
       val (files, partCols, colmapV) = (gm.files, gm.partCols, gm.colmap)
-      val logical = LakeWriter.readSnapshot(spark, table, Some(gv)).schema
+      val logical = LakeWriter.readSchema(gm)
       // once any version carries a non-identity colmap, the mirror is
       // a column-mapped Delta table from that commit on (mode=name:
       // the reader resolves file columns by physicalName, which for
@@ -968,21 +976,10 @@ object DeltaMirror {
         colmapV.phys(f.name) -> f.dataType).toMap
       // sizes/mtimes: bounded-parallel metadata fetches, new files only
       val meta: Map[String, (Long, Long)] =
-        if (addEmit.isEmpty) Map.empty
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(16, addEmit.size))
-          try addEmit.map { r =>
-            r -> pool.submit(
-              new java.util.concurrent.Callable[(Long, Long)] {
-                def call(): (Long, Long) = {
-                  val st = fs.getFileStatus(absOf(r))
-                  (st.getLen, st.getModificationTime)
-                }
-              })
-          }.map { case (r, fut) => r -> fut.get() }.toMap
-          finally pool.shutdown()
-        }
+        addEmit.zip(LakeWriter.parMap(spark, addEmit) { r =>
+          val st = fs.getFileStatus(absOf(r))
+          (st.getLen, st.getModificationTime)
+        }).toMap
       def partValuesJson(rel: String): JObject = {
         // rel is the ENCODED add.path; extract values from the
         // decoded ON-DISK name (the form hive escaping lives in)
@@ -1788,92 +1785,41 @@ object DeltaMirror {
   // streaming change-feed consumption
   // ------------------------------------------------------------------
 
+  private val CdfStreamTxnApp = "graft.cdf.stream"
+
   /** STREAMING consumption of the change feed — the production
     * incremental-consumer shape (the reference's speed layer:
     * airflow/dags/spark_code streams a CDF-enabled table): the
     * table's `_delta_log` IS the stream. Every committed delta
     * version is one durably-named JSON file that appears atomically
-    * via the publish rename (in-flight tmps are dot-hidden, so the
-    * Structured-Streaming file source only ever lists whole commits);
-    * each micro-batch drains its pending versions OLDEST-FIRST, and
-    * `apply(feed, v)` receives version `v`'s row-level changes
-    * through [[readChangeFeed]]'s protocol resolution (cdc actions
-    * authoritative, add/remove synthesis elsewhere). The stream
-    * checkpoint is the cursor; replay safety is the CONSUMER's
-    * contract — `apply` must be idempotent per version (stamp the
-    * version like [[streamChangeFeedInto]], the
-    * Materialized.applyDelta discipline).
+    * via the publish rename (in-flight tmps are dot-hidden), so
+    * [[LogTail]] drains pending versions OLDEST-FIRST and each
+    * version's row-level changes resolve through [[readChangeFeed]]'s
+    * protocol resolution (cdc actions authoritative, add/remove
+    * synthesis elsewhere). [[LogTail.intoSnapshot]] appends them
+    * (table columns + `_change_type`, `_commit_version`) to graft
+    * snapshot table `out`, stamping the source delta version as an
+    * application transaction ATOMICALLY with the append — a crash or
+    * a fresh stream checkpoint replays versions, and every
+    * already-absorbed version SKIPS on its stamp without replaying
+    * the log for its feed. Rows land without `_commit_timestamp`
+    * (wall-clock, not replayable).
     *
-    * Runs with `Trigger.AvailableNow` and blocks until every version
-    * committed so far is absorbed; re-invoke on a live checkpoint to
-    * drain later commits. Cost per drain is bounded by the CHANGED
-    * files of the pending versions plus one metadata replay of the
-    * log head — never table size. */
-  def streamChangeFeed(spark: SparkSession, dir: String,
-                       checkpoint: String)
-                      (apply: (DataFrame, Long) => Unit): Unit = {
-    val log = logDir(dir)
-    // heavy work runs on the OUTER session (the stream's cloned
-    // session disables AQE); only the version-number collect below
-    // touches the clone — the refreshAggStream discipline
-    val commits = spark.readStream
-      .option("pathGlobFilter", "*.json")
-      // FileStreamSource silently ignores files older than
-      // maxFileAge (default 7d) relative to the newest seen — a
-      // pending commit older than that would be skipped FOREVER (the
-      // txn stamp then masks the hole); age-based eviction is wrong
-      // for a commit log, so effectively disable it
-      .option("maxFileAge", "36500d")
-      .text(log.toString)
-      // the file-metadata column resolves only on the streaming scan
-      // itself — inside foreachBatch the batch is already materialized
-      .select(col("_metadata.file_path").as("p"))
-    val vRe = """(\d{20})\.json$""".r
-    val q = commits.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val versions = batch.distinct()
-          .collect().map(_.getString(0))
-          .flatMap(p => vRe.findFirstMatchIn(p).map(_.group(1).toLong))
-          .sorted
-        versions.foreach { v =>
-          apply(readChangeFeed(spark, dir, v, Some(v)), v)
-        }
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  private val CdfStreamTxnApp = "graft.cdf.stream"
-
-  /** [[streamChangeFeed]] with the exactly-once consumer built in:
-    * append each version's feed rows (table columns +
-    * `_change_type`, `_commit_version`) to graft snapshot table
-    * `out`, stamping the source delta version as an application
-    * transaction ATOMICALLY with the append — a crash or a fresh
-    * stream checkpoint replays versions, and every already-absorbed
-    * version SKIPS on its stamp instead of double-appending. Rows
-    * land without `_commit_timestamp` (wall-clock, not replayable).
-    * Returns the highest absorbed delta version (-1 = nothing yet). */
+    * Blocks until every version committed so far is absorbed;
+    * re-invoke on a live checkpoint to drain later commits. Cost per
+    * drain is bounded by the CHANGED files of the pending versions
+    * plus one metadata replay of the log head each — never table
+    * size. Returns the highest absorbed delta version (-1 = nothing
+    * yet). */
   def streamChangeFeedInto(spark: SparkSession, dir: String,
-                           out: String, checkpoint: String): Long = {
-    streamChangeFeed(spark, dir, checkpoint) { (feed, v) =>
-      val absorbed = LakeWriter.lastTxnVersion(spark, out,
-        CdfStreamTxnApp).getOrElse(-1L)
-      if (v > absorbed) {
-        val rows = feed.drop("_commit_timestamp")
-        // an all-rewrite version (compaction) feeds zero rows; the
-        // stamp still advances so a replay never re-reads its files
-        LakeWriter.commitSnapshot(rows, out,
-          mode = if (LakeWriter.snapshotVersions(spark, out).isEmpty)
-            "overwrite" else "append",
-          txn = Some(CdfStreamTxnApp -> v)): Unit
-      }
+                           out: String, checkpoint: String): Long =
+    LogTail.intoSnapshot(spark, out, CdfStreamTxnApp) { sink =>
+      LogTail(spark, logDir(dir).toString, "*.json", commitVersionOf,
+          checkpoint)(_.foreach { v =>
+        sink(v, () => readChangeFeed(spark, dir, v, Some(v))
+          .drop("_commit_timestamp"))
+      })
     }
-    LakeWriter.lastTxnVersion(spark, out, CdfStreamTxnApp)
-      .getOrElse(-1L)
-  }
 
   // ------------------------------------------------------------------
   // log retention

@@ -502,11 +502,17 @@ object IcebergMirror {
     hinted.orElse {
       if (!fs.exists(md)) None
       else fs.listStatus(md).toSeq.map(_.getPath.getName)
-        .flatMap { n =>
-          val m = """v(\d+)\.metadata\.json""".r
-          n match { case m(v) => Some(v.toInt); case _ => None }
-        }.maxOption
+        .flatMap(metadataVersionOf).maxOption
     }
+  }
+
+  private val MetadataName = """v(\d+)\.metadata\.json""".r
+
+  /** The version a metadata-dir file NAME publishes
+    * (`v{N}.metadata.json`), None for any other name. */
+  private def metadataVersionOf(name: String): Option[Int] = name match {
+    case MetadataName(n) => Some(n.toInt)
+    case _ => None
   }
 
   private def loadState(spark: SparkSession, table: String): Option[IceState] = {
@@ -1145,7 +1151,7 @@ object IcebergMirror {
       }
       val files = gm.files.map(f => fs.makeQualified(new Path(f)).toString)
       val (partCols, colmapV) = (gm.partCols, gm.colmap)
-      val logical = LakeWriter.readSnapshot(spark, table, Some(gv)).schema
+      val logical = LakeWriter.readSchema(gm)
       partCols.foreach { c =>
         require(colmapV.phys(c) == c,
           s"iceberg mirror of $table: partition column $c is renamed " +
@@ -1229,21 +1235,10 @@ object IcebergMirror {
       // rewrites them, after which they arrive here as adds
       val stats = gm.stats
       val meta: Map[String, (Long, Long)] =
-        if (addPaths.isEmpty) Map.empty
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(16, math.max(1, addPaths.size)))
-          try addPaths.map { f =>
-            f -> pool.submit(
-              new java.util.concurrent.Callable[(Long, Long)] {
-                def call(): (Long, Long) = {
-                  val s0 = fs.getFileStatus(new Path(f))
-                  (s0.getLen, s0.getModificationTime)
-                }
-              })
-          }.map { case (f, fut) => f -> fut.get() }.toMap
-          finally pool.shutdown()
-        }
+        addPaths.zip(LakeWriter.parMap(spark, addPaths) { f =>
+          val s0 = fs.getFileStatus(new Path(f))
+          (s0.getLen, s0.getModificationTime)
+        }).toMap
 
       val physToType: Map[String, DataType] =
         logical.fields.map(f => colmapV.phys(f.name) -> f.dataType).toMap
@@ -1570,7 +1565,7 @@ object IcebergMirror {
 
     // publish: every planned file via tmp + rename — each lands
     // ATOMICALLY under its durable name (a metadata JSON is never
-    // listable half-written, which is what lets streamIcebergChanges
+    // listable half-written, which is what lets LogTail
     // treat the metadata dir as a file stream) — then the hint LAST
     // (overwrite-rename): a reader sees the old complete tree or the
     // new one
@@ -1712,14 +1707,14 @@ object IcebergMirror {
       case ("metadata-log", JArray(es)) => "metadata-log" -> JArray(
         es.filter { e =>
           str(e \ "metadata-file").exists { f =>
-            "v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(f)
-              .exists(_.group(1).toInt >= keepMetaFloor)
+            metadataVersionOf(f.split('/').last)
+              .exists(_ >= keepMetaFloor)
           }
         })
       case other => other
     })
     // tmp + rename: the new metadata JSON lands atomically under its
-    // durable name (the streamIcebergChanges file-source contract)
+    // durable name (the LogTail file-source contract)
     val mjPath = metadataJsonPath(md, n + 1)
     val mjTmp = new Path(md, s".${mjPath.getName}.tmp")
     writeFileBytes(fs, mjTmp,
@@ -2163,8 +2158,7 @@ object IcebergMirror {
     // would hold the whole tree's decoded entries on the driver and
     // OOM before the guard could fire). The fold stays serial in
     // manifest-list order, so the resolved state is deterministic.
-    val manifestPool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(16, mlRows.size)))
+    val manifestPool = LakeWriter.ioPool(spark, mlRows.size)
     def foldManifests(
         handle: (GenericRecord, Seq[GenericRecord]) => Unit): Unit =
       try {
@@ -2183,7 +2177,7 @@ object IcebergMirror {
         while (it.hasNext && pending.size < 32) submit(it.next())
         while (pending.nonEmpty) {
           val (mrec, fut) = pending.dequeue()
-          handle(mrec, fut.get())
+          handle(mrec, LakeWriter.awaitIo(fut))
           if (it.hasNext) submit(it.next())
         }
       } finally manifestPool.shutdown()
@@ -2379,47 +2373,38 @@ object IcebergMirror {
     // blob fetches are independent remote reads — the bounded-pool
     // discipline manifests already use (thousands of DVs would
     // otherwise serialize one round trip each); parse + verify stays
-    // on the calling thread per future result
-    val dvBlobPool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(16, applicableDvs.size)))
+    // on the calling thread
     val dvByStored: Map[String, (Array[Byte], String)] =
-      try applicableDvs.map { d =>
-        d -> dvBlobPool.submit(
-          new java.util.concurrent.Callable[Array[Byte]] {
-            def call(): Array[Byte] = {
-              val in = fs.open(new Path(d.path))
-              try {
-                in.seek(d.offset)
-                val b = new Array[Byte](d.size.toInt)
-                in.readFully(b); b
-              } finally in.close()
-            }
-          })
-      }.map { case (d, fut) =>
-            val blob = fut.get()
-            require(blob.length >= 8, s"iceberg table at $dir: DV " +
-              s"blob for ${d.referenced} is ${blob.length} bytes — " +
-              "too short for the v3 framing; refusing")
-            val len = java.nio.ByteBuffer.wrap(blob, 0, 4).getInt
-            require(len == d.size - 8,
-              s"iceberg table at $dir: DV blob for ${d.referenced} " +
-                s"declares $len magic+vector bytes but the manifest " +
-                s"sized it ${d.size} — corrupt metadata, refusing")
-            val data = java.util.Arrays.copyOfRange(blob, 4, 4 + len)
-            val crc = java.nio.ByteBuffer.wrap(blob, 4 + len, 4).getInt
-            val c = new java.util.zip.CRC32(); c.update(data)
-            require(crc == c.getValue.toInt,
-              s"iceberg table at $dir: DV checksum mismatch for " +
-                s"${d.referenced} — a corrupt deletion vector would " +
-                "silently resurrect deleted rows; refusing")
-            val parsed = DeletionVectors.RoaringArray.deserialize(data)
-            d.cardinality.foreach(n => require(parsed.cardinality == n,
-              s"iceberg table at $dir: DV for ${d.referenced} holds " +
-                s"${parsed.cardinality} rows but its manifest entry " +
-                s"declares $n — corrupt metadata, refusing"))
-            d.referenced -> (data, s"${d.path}@${d.offset}")
+      applicableDvs.zip(LakeWriter.parMap(spark, applicableDvs) { d =>
+        val in = fs.open(new Path(d.path))
+        try {
+          in.seek(d.offset)
+          val b = new Array[Byte](d.size.toInt)
+          in.readFully(b); b
+        } finally in.close()
+      }).map { case (d, blob) =>
+        require(blob.length >= 8, s"iceberg table at $dir: DV " +
+          s"blob for ${d.referenced} is ${blob.length} bytes — " +
+          "too short for the v3 framing; refusing")
+        val len = java.nio.ByteBuffer.wrap(blob, 0, 4).getInt
+        require(len == d.size - 8,
+          s"iceberg table at $dir: DV blob for ${d.referenced} " +
+            s"declares $len magic+vector bytes but the manifest " +
+            s"sized it ${d.size} — corrupt metadata, refusing")
+        val data = java.util.Arrays.copyOfRange(blob, 4, 4 + len)
+        val crc = java.nio.ByteBuffer.wrap(blob, 4 + len, 4).getInt
+        val c = new java.util.zip.CRC32(); c.update(data)
+        require(crc == c.getValue.toInt,
+          s"iceberg table at $dir: DV checksum mismatch for " +
+            s"${d.referenced} — a corrupt deletion vector would " +
+            "silently resurrect deleted rows; refusing")
+        val parsed = DeletionVectors.RoaringArray.deserialize(data)
+        d.cardinality.foreach(n => require(parsed.cardinality == n,
+          s"iceberg table at $dir: DV for ${d.referenced} holds " +
+            s"${parsed.cardinality} rows but its manifest entry " +
+            s"declares $n — corrupt metadata, refusing"))
+        d.referenced -> (data, s"${d.path}@${d.offset}")
       }.toMap
-      finally dvBlobPool.shutdown()
 
     if (identitySources.isEmpty && posDels.isEmpty && eqDels.isEmpty &&
         dvByStored.isEmpty)
@@ -3000,163 +2985,99 @@ object IcebergMirror {
   // streaming changelog consumption
   // ------------------------------------------------------------------
 
-  /** STREAMING consumption of the incremental changelog — the Iceberg
-    * twin of [[DeltaMirror.streamChangeFeed]]: the table's metadata
-    * dir IS the stream. Every committed snapshot publishes one
-    * durably-named `vN.metadata.json` (the mirror lands it atomically
-    * via tmp + rename; in-flight tmps are dot-hidden, so the
-    * Structured-Streaming file source only ever lists whole files —
-    * HadoopCatalog writers follow the same discipline). Each
-    * micro-batch drains pending metadata versions OLDEST-FIRST; for
-    * each, `apply(mkFeed, sequenceNumber, snapshotId)` is offered
-    * EVERY snapshot on the version's tip-ancestor chain, ascending by
-    * sequence number — not just the tip. That closes the hole-masking
-    * window: if a version is offered out of order (the file source
-    * may split a drain across micro-batches, and listing order is not
-    * version order) or its metadata file was expired before first
-    * observation, the next offered version still CARRIES the missed
-    * snapshot and absorbs it in sequence — a high-water stamp can
-    * then never strand a live snapshot behind it. Each offer's feed
-    * is [[readIcebergChanges]] from its parent (a parentless first
-    * snapshot feeds the full state as inserts), LAZILY so an
-    * already-absorbed snapshot skips without resolving anything (the
-    * common case: every re-offer from a later version's chain, a
-    * maintenance re-listing, a replay whose parent has since
-    * expired). The stream checkpoint is only the cursor; replay
-    * safety is the CONSUMER's contract — skip on a stamp of the
-    * SEQUENCE NUMBER (strictly monotone where snapshot ids are
-    * hashes), the [[streamIcebergChangesInto]] discipline.
-    *
-    * Runs with `Trigger.AvailableNow` and blocks until every metadata
-    * version on disk is offered; re-invoke on a live checkpoint to
-    * drain later commits. Cost per drain is bounded by the CHANGED
-    * files of pending snapshots plus one metadata parse per version —
-    * never table size. A fresh consumer over a table whose early
-    * history has EXPIRED refuses loudly inside `mkFeed` (a silently
-    * partial feed never serves); seed such a consumer from a full
-    * read first. */
-  def streamIcebergChanges(spark: SparkSession, dir: String,
-                           checkpoint: String)
-                          (apply: (() => DataFrame, Long, Long) => Unit)
-      : Unit = {
-    val md = metaDir(dir)
-    // heavy work runs on the OUTER session (the stream's cloned
-    // session disables AQE); only the name collect below touches the
-    // clone — the streamChangeFeed discipline
-    val metas = spark.readStream
-      .option("pathGlobFilter", "*.metadata.json")
-      // FileStreamSource silently ignores files older than
-      // maxFileAge (default 7d) relative to the newest seen — a
-      // pending version older than that would be skipped FOREVER
-      // (the stamp then masks the hole); age-based eviction is wrong
-      // for a commit log, so effectively disable it
-      .option("maxFileAge", "36500d")
-      .text(md.toString)
-      .select(col("_metadata.file_path").as("p"))
-    val vRe = """v(\d+)\.metadata\.json$""".r
-    val q = metas.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val fs = LakeWriter.fsOf(spark, md)
-        val versions = batch.distinct()
-          .collect().map(_.getString(0))
-          .flatMap(p => vRe.findFirstMatchIn(p).map(_.group(1).toInt))
-          .sorted
-        versions.foreach { n =>
-          val j = JsonMethods.parse(new String(
-            readFileBytes(fs, metadataJsonPath(md, n)), "UTF-8"))
-          lng(j \ "current-snapshot-id").filter(_ >= 0).foreach { tip =>
-            val snapsJ = (j \ "snapshots") match {
-              case JArray(ss) => ss
-              case _ => Nil
-            }
-            val byId = snapsJ.flatMap(s =>
-              lng(s \ "snapshot-id").map(_ -> s)).toMap
-            require(byId.contains(tip),
-              s"streamIcebergChanges at $dir: v$n.metadata.json names " +
-                s"current snapshot $tip it does not carry — torn tree")
-            // the tip's ANCESTOR CHAIN, oldest first (a retained
-            // branch/tag snapshot off the chain is not part of main's
-            // changelog); every chain member is offered so an
-            // out-of-order or never-observed earlier version cannot
-            // leave a live snapshot stranded behind the stamp
-            val chain = scala.collection.mutable.ListBuffer[JValue]()
-            var cur: Option[Long] = Some(tip)
-            while (cur.nonEmpty) {
-              require(chain.size <= byId.size,
-                s"streamIcebergChanges at $dir: v$n.metadata.json " +
-                  "has a cyclic parent chain — corrupt tree")
-              val s = cur.flatMap(byId.get)
-              s.foreach(chain.prepend(_))
-              cur = s.flatMap(x => lng(x \ "parent-snapshot-id"))
-            }
-            chain.foreach { sj =>
-              val sid = lng(sj \ "snapshot-id").get
-              val seqNo = lng(sj \ "sequence-number").getOrElse(
-                sys.error(s"streamIcebergChanges at $dir: snapshot " +
-                  s"$sid carries no sequence-number — v1 trees have " +
-                  "no monotone stamp; refusing"))
-              def mkFeed(): DataFrame =
-                lng(sj \ "parent-snapshot-id") match {
-                  case Some(par) =>
-                    readIcebergChanges(spark, dir, par, sid)
-                  case None =>
-                    // parentless first snapshot: full state IS the feed
-                    readIceberg(spark, dir, Some(sid))
-                      .withColumn("_change_type", lit("insert"))
-                      .withColumn("_change_ordinal", lit(1))
-                      .withColumn("_commit_snapshot_id", lit(sid))
-                }
-              apply(mkFeed _, seqNo, sid)
-            }
-          }
-        }
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   private val IceChangesStreamTxnApp = "graft.iceberg.changes.stream"
 
-  /** [[streamIcebergChanges]] with the exactly-once consumer built
-    * in: append each snapshot's changelog rows (table columns +
-    * `_change_type`, `_commit_snapshot_id`, plus `_commit_sequence` —
-    * the replayable order stamp) to graft snapshot table `out`,
-    * stamping the sequence number as an application transaction
-    * ATOMICALLY with the append. A crash or a fresh stream checkpoint
-    * replays metadata versions and every already-absorbed sequence
-    * SKIPS on its stamp — without resolving its feed, so a
+  /** STREAMING consumption of the incremental changelog — the Iceberg
+    * twin of [[DeltaMirror.streamChangeFeedInto]]: the table's
+    * metadata dir IS the stream. Every committed snapshot publishes
+    * one durably-named `vN.metadata.json` (the mirror lands it
+    * atomically via tmp + rename; in-flight tmps are dot-hidden —
+    * HadoopCatalog writers follow the same discipline), and
+    * [[LogTail]] drains pending metadata versions OLDEST-FIRST. Each
+    * version offers EVERY snapshot on its tip-ancestor chain,
+    * ascending by sequence number — not just the tip. That closes the
+    * hole-masking window: if a version is offered out of order (the
+    * file source may split a drain across micro-batches, and listing
+    * order is not version order) or its metadata file was expired
+    * before first observation, the next offered version still
+    * CARRIES the missed snapshot and absorbs it in sequence — a
+    * high-water stamp can then never strand a live snapshot behind
+    * it.
+    *
+    * [[LogTail.intoSnapshot]] appends each snapshot's changelog rows
+    * (table columns + `_change_type`, `_commit_snapshot_id`, plus
+    * `_commit_sequence` — the replayable order stamp) to graft
+    * snapshot table `out`, stamping the SEQUENCE NUMBER (strictly
+    * monotone where snapshot ids are hashes) as an application
+    * transaction ATOMICALLY with the append. A crash or a fresh
+    * stream checkpoint replays metadata versions and every
+    * already-absorbed sequence SKIPS on its stamp — without resolving
+    * its feed ([[readIcebergChanges]] from its parent; a parentless
+    * first snapshot feeds the full state as inserts), so a
     * maintenance re-list or an expired-parent replay costs a JSON
     * parse, not a refusal. `_change_ordinal` (range-local, not
-    * replayable across drains) is dropped. Returns the highest
-    * absorbed sequence number (-1 = nothing yet). */
+    * replayable across drains) is dropped.
+    *
+    * Blocks until every metadata version on disk is offered;
+    * re-invoke on a live checkpoint to drain later commits. Cost per
+    * drain is bounded by the CHANGED files of pending snapshots plus
+    * one metadata parse per version — never table size. A fresh
+    * consumer over a table whose early history has EXPIRED refuses
+    * loudly when resolving the first unabsorbed feed (a silently
+    * partial feed never serves); seed such a consumer from a full
+    * read first. Returns the highest absorbed sequence number (-1 =
+    * nothing yet). */
   def streamIcebergChangesInto(spark: SparkSession, dir: String,
                                out: String, checkpoint: String): Long = {
-    // the stamp read once per drain, then tracked locally: this
-    // consumer is the only writer to `out` inside the drain, and the
-    // chain re-offers (most of them already absorbed) would otherwise
-    // re-read the out manifest per offer
-    var absorbedCache = Long.MinValue
-    streamIcebergChanges(spark, dir, checkpoint) { (mkFeed, seqNo, _) =>
-      if (absorbedCache == Long.MinValue)
-        absorbedCache = LakeWriter.lastTxnVersion(spark, out,
-          IceChangesStreamTxnApp).getOrElse(-1L)
-      val absorbed = absorbedCache
-      if (seqNo > absorbed) {
-        val rows = mkFeed().drop("_change_ordinal")
-          .withColumn("_commit_sequence", lit(seqNo))
-        // a replace-only (compaction) snapshot feeds zero rows; the
-        // stamp still advances so a replay never re-resolves it
-        LakeWriter.commitSnapshot(rows, out,
-          mode = if (LakeWriter.snapshotVersions(spark, out).isEmpty)
-            "overwrite" else "append",
-          txn = Some(IceChangesStreamTxnApp -> seqNo)): Unit
-        absorbedCache = seqNo
-      }
+    val md = metaDir(dir)
+    val fs = LakeWriter.fsOf(spark, md)
+    LogTail.intoSnapshot(spark, out, IceChangesStreamTxnApp) { sink =>
+      LogTail(spark, md.toString, "*.metadata.json",
+          metadataVersionOf(_).map(_.toLong), checkpoint)(_.foreach { n =>
+        val j = JsonMethods.parse(new String(
+          readFileBytes(fs, metadataJsonPath(md, n.toInt)), "UTF-8"))
+        lng(j \ "current-snapshot-id").filter(_ >= 0).foreach { tip =>
+          val snapsJ = (j \ "snapshots") match {
+            case JArray(ss) => ss
+            case _ => Nil
+          }
+          val byId = snapsJ.flatMap(s =>
+            lng(s \ "snapshot-id").map(_ -> s)).toMap
+          require(byId.contains(tip),
+            s"streamIcebergChangesInto at $dir: v$n.metadata.json names " +
+              s"current snapshot $tip it does not carry — torn tree")
+          // the tip's ANCESTOR CHAIN, oldest first (a retained
+          // branch/tag snapshot off the chain is not part of main's
+          // changelog)
+          val chain = scala.collection.mutable.ListBuffer[JValue]()
+          var cur: Option[Long] = Some(tip)
+          while (cur.nonEmpty) {
+            require(chain.size <= byId.size,
+              s"streamIcebergChangesInto at $dir: v$n.metadata.json " +
+                "has a cyclic parent chain — corrupt tree")
+            val s = cur.flatMap(byId.get)
+            s.foreach(chain.prepend(_))
+            cur = s.flatMap(x => lng(x \ "parent-snapshot-id"))
+          }
+          chain.foreach { sj =>
+            val sid = lng(sj \ "snapshot-id").get
+            val seqNo = lng(sj \ "sequence-number").getOrElse(
+              sys.error(s"streamIcebergChangesInto at $dir: snapshot " +
+                s"$sid carries no sequence-number — v1 trees have " +
+                "no monotone stamp; refusing"))
+            sink(seqNo, () => (lng(sj \ "parent-snapshot-id") match {
+              case Some(par) => readIcebergChanges(spark, dir, par, sid)
+              case None =>
+                // parentless first snapshot: full state IS the feed
+                readIceberg(spark, dir, Some(sid))
+                  .withColumn("_change_type", lit("insert"))
+                  .withColumn("_commit_snapshot_id", lit(sid))
+            }).drop("_change_ordinal")
+              .withColumn("_commit_sequence", lit(seqNo)))
+          }
+        }
+      })
     }
-    LakeWriter.lastTxnVersion(spark, out, IceChangesStreamTxnApp)
-      .getOrElse(-1L)
   }
 
   /** Read an Iceberg table at a named REF (branch or tag — the

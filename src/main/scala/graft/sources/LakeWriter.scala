@@ -193,17 +193,57 @@ object LakeWriter {
     p.getFileSystem(conf)
   }
 
-  private def manifestDir(table: String) =
+  /** A pool for `n` independent driver-side metadata fetches (footers,
+    * file statuses, avro manifests, DV blobs — on object stores each
+    * is a network round trip), sized from the session like the dedup
+    * shuffles: `defaultParallelism`, capped by the item count. The
+    * caller shuts it down. */
+  private[graft] def ioPool(spark: SparkSession,
+                            n: Int): java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(spark.sparkContext.defaultParallelism, n)))
+
+  /** `f` over `items` on an [[ioPool]], results in item order. */
+  private[graft] def parMap[A, B](spark: SparkSession, items: Seq[A])
+                                 (f: A => B): Seq[B] =
+    if (items.isEmpty) Seq.empty
+    else {
+      val pool = ioPool(spark, items.size)
+      try items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
+        def call(): B = f(a) })).map(awaitIo)
+      finally pool.shutdown()
+    }
+
+  /** The result of a task on an [[ioPool]]; a failure surfaces as the
+    * exception the task threw (its type and message), not wrapped in
+    * an ExecutionException. */
+  private[graft] def awaitIo[B](fut: java.util.concurrent.Future[B]): B =
+    try fut.get()
+    catch { case e: java.util.concurrent.ExecutionException
+        if e.getCause != null => throw e.getCause }
+
+  private[graft] def manifestDir(table: String) =
     new org.apache.hadoop.fs.Path(table, "_manifests")
+
+  private val ManifestName = """v(\d+)\.json""".r
+
+  /** The version a `_manifests` file NAME commits (`v{N}.json`), None
+    * for any other name — the one rule by which version listings and
+    * log tails know a table's versions (only [[Manifest]] reads a
+    * body). */
+  private[graft] def manifestVersionOf(name: String): Option[Long] =
+    name match {
+      case ManifestName(n) => Some(n.toLong)
+      case _ => None
+    }
 
   /** Snapshot versions present for a table, ascending. */
   def snapshotVersions(spark: SparkSession, table: String): Seq[Long] = {
     val dir = manifestDir(table)
     val fs = fsOf(spark, dir)
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.matches("v\\d+\\.json")).map(_.drop(1).dropRight(5).toLong)
-      .sorted
+    else fs.listStatus(dir).toSeq
+      .flatMap(s => manifestVersionOf(s.getPath.getName)).sorted
   }
 
   /** Parquet files under `p`, recursively (hive layouts nest them). */
@@ -1971,23 +2011,14 @@ object LakeWriter {
     // is a network call)
     val newFiles = files.filterNot(f => prevStats.contains(baseName(f)))
     val fresh: Map[String, FileStats] =
-      if (newFiles.isEmpty) Map.empty
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, newFiles.size))
-        try newFiles.map { f =>
-          f -> pool.submit(new java.util.concurrent.Callable[FileStats] {
-            def call(): FileStats =
-              // files store PHYSICAL names; stats stay keyed by
-              // them (stable across renames) and translate to
-              // logical at read time
-              try footerStats(conf, f, physSchema(schema, colmap))
-              catch { case scala.util.control.NonFatal(_) =>
-                FileStats(None, Map.empty) }
-          })
-        }.map { case (f, fut) => baseName(f) -> fut.get() }.toMap
-        finally pool.shutdown()
-      }
+      newFiles.map(baseName).zip(parMap(spark, newFiles) { f =>
+        // files store PHYSICAL names; stats stay keyed by them
+        // (stable across renames) and translate to logical at read
+        // time
+        try footerStats(conf, f, physSchema(schema, colmap))
+        catch { case scala.util.control.NonFatal(_) =>
+          FileStats(None, Map.empty) }
+      }).toMap
     val stats = files.map(baseName).flatMap(bn =>
       prevStats.get(bn).orElse(fresh.get(bn)).map(bn -> _)).toMap
     // BLOOM FILE INDEX (Delta bloom-filter-index parity): per-file
@@ -2232,15 +2263,14 @@ object LakeWriter {
 
   /** Durable consumer cursor over a table's version history: run
     * `fn` once per version committed since the cursor last advanced,
-    * each call receiving that version's COLLAPSED change feed
-    * (`changesBetween`), oldest first; the cursor file advances by
-    * atomic rename AFTER each call returns. Crash between `fn` and
-    * the advance ⇒ that version replays — at-least-once; a consumer
-    * that commits its output keyed on the version (or idempotently,
-    * like `Materialized.refreshAgg`'s merge) gets effective
-    * exactly-once. A version with no predecessor in the manifest dir
-    * (first commit, or history vacuumed past the cursor) feeds as a
-    * full snapshot of inserts. Returns the versions processed. */
+    * each call receiving that version's feed ([[versionFeeds]];
+    * COLLAPSED unless `collapse = false`), oldest first; the cursor
+    * file advances by atomic rename AFTER each call returns. Crash
+    * between `fn` and the advance ⇒ that version replays —
+    * at-least-once; a consumer that commits its output keyed on the
+    * version (or idempotently, like `Materialized.refreshAgg`'s
+    * merge) gets effective exactly-once. Returns the versions
+    * processed. */
   def processNewVersions(spark: SparkSession, table: String,
       cursorPath: String, collapse: Boolean = true)
       (fn: (DataFrame, Long) => Unit): Seq[Long] = {
@@ -2255,34 +2285,51 @@ object LakeWriter {
         in.close()
         Some(s.trim.toLong)
       }
+    versionFeeds(spark, table, last, collapse)(v => last.forall(v > _))
+      .map { case (v, feed) =>
+        fn(feed(), v)
+        writeCursor(spark, cursorPath, v)
+        v
+      }
+  }
+
+  /** THE native version → change-feed rule, shared by the cursor loop
+    * ([[processNewVersions]]) and the streaming MV
+    * (`Materialized.refreshAggStream`). Lists the table's versions
+    * ONCE and returns, for each listed version `pick` accepts
+    * (ascending), a lazy feed:
+    *  - its predecessor survives → [[changesBetween]] the two;
+    *  - no predecessor and the consumer has absorbed nothing at or
+    *    past it (`absorbed` is the consumer's cursor or txn stamp) →
+    *    bootstrap: the full snapshot as inserts;
+    *  - no predecessor but the consumer absorbed an earlier version →
+    *    the history between was vacuumed; a delta is impossible and a
+    *    full feed would double-count everything absorbed before, so
+    *    the feed refuses and the consumer must re-bootstrap.
+    * `collapse = false` serves the feed WITHOUT the exceptAll
+    * row-cancellation pass — for consumers whose state update is a
+    * signed linear fold (sum·sign, count·sign) copy-on-write rewrite
+    * noise cancels algebraically, so the two delta-sized shuffles per
+    * version buy nothing (`Materialized.refreshAgg`). Consumers that
+    * BRANCH on delete presence (refreshHll's rebuild trigger) keep
+    * the collapsed default. */
+  private[graft] def versionFeeds(spark: SparkSession, table: String,
+      absorbed: Option[Long], collapse: Boolean)
+      (pick: Long => Boolean): Seq[(Long, () => DataFrame)] = {
     val vs = snapshotVersions(spark, table)
-    val todo = vs.filter(v => last.forall(v > _))
-    todo.foreach { v =>
-      val feed = vs.filter(_ < v).lastOption match {
-        // collapse = false serves the feed WITHOUT the exceptAll
-        // row-cancellation pass — for consumers whose state update is
-        // a signed linear fold (sum·sign, count·sign), copy-on-write
-        // rewrite noise cancels algebraically, so the two delta-sized
-        // shuffles per version buy nothing (Materialized.refreshAgg).
-        // Consumers that BRANCH on delete presence (refreshHll's
-        // rebuild trigger) keep the collapsed default.
+    vs.zip(None +: vs.map(Some(_))).filter(x => pick(x._1)).map {
+      case (v, prior) => v -> (() => prior match {
         case Some(p) => changesBetween(spark, table, p, v, collapse)
-        case None if last.isEmpty =>
-          // bootstrap: the table's first surviving version feeds whole
+        case None if absorbed.forall(_ >= v) =>
           readSnapshot(spark, table, Some(v)).withColumn(
             "_change_type", org.apache.spark.sql.functions.lit("insert"))
         case None =>
-          // the cursor's version was vacuumed: a delta is impossible
-          // and a full feed would double-count everything processed
-          // before — refuse; the consumer must re-bootstrap
-          sys.error(s"cursor at ${last.get} but oldest surviving " +
-            s"version of $table is $v after vacuum: delta lost, " +
-            "re-bootstrap the consumer (fresh cursor + rebuilt state)")
-      }
-      fn(feed, v)
-      writeCursor(spark, cursorPath, v)
+          sys.error(s"consumer of $table absorbed v${absorbed.get} but " +
+            s"the oldest surviving version is $v after vacuum: delta " +
+            "lost, re-bootstrap the consumer (fresh cursor + rebuilt " +
+            "state)")
+      })
     }
-    todo
   }
 
   /** Point the cursor file at `cursorPath` to `version`: write a
@@ -2789,6 +2836,16 @@ object LakeWriter {
     else readFiles(spark, m.files, m.schema, m.colmap, m.dvs)
   }
 
+  /** The schema [[readSnapshot]] serves for manifest `m`, without
+    * planning a read: a version with files scans through the parquet
+    * source, which serves every column nullable (nested fields and
+    * partition columns too); an empty version serves the committed
+    * schema as is. */
+  private[graft] def readSchema(m: Manifest)
+      : org.apache.spark.sql.types.StructType =
+    if (m.files.isEmpty) m.schema
+    else org.apache.spark.sql.GraftColumnBridge.asNullable(m.schema)
+
   /** Read a snapshot FILE-PRUNED by manifest column stats — data
     * skipping, the scan-side payoff of the footer stats every commit
     * records: files whose (min, max) prove the predicate empty are
@@ -3026,25 +3083,12 @@ object LakeWriter {
     // same status call instead of a second per-file round-trip
     val exportFiles = walkFreshData(fs, p).sorted
     val pooled: Seq[(String, Long, FileStats)] =
-      if (exportFiles.isEmpty) Seq.empty
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, exportFiles.size))
-        try exportFiles.map { f =>
-          f -> pool.submit(
-            new java.util.concurrent.Callable[(Long, FileStats)] {
-              def call(): (Long, FileStats) = {
-                val len = fs.getFileStatus(
-                  new org.apache.hadoop.fs.Path(f)).getLen
-                val st = try footerStats(conf, f, schema)
-                         catch { case scala.util.control.NonFatal(_) =>
-                           FileStats(None, Map.empty) }
-                (len, st)
-              }
-            })
-        }.map { case (f, fut) =>
-          val (len, st) = fut.get(); (f, len, st) }
-        finally pool.shutdown()
+      parMap(spark, exportFiles) { f =>
+        val len = fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen
+        val st = try footerStats(conf, f, schema)
+                 catch { case scala.util.control.NonFatal(_) =>
+                   FileStats(None, Map.empty) }
+        (f, len, st)
       }
     val rows = pooled.map { case (f, len, st) =>
       val rel = f.stripPrefix(

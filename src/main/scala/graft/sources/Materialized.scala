@@ -17,6 +17,13 @@ import org.apache.spark.sql.functions._
   * exactly what the matching insert added (min/max are NOT: a
   * deleted extremum needs a source re-scan to re-derive; compose
   * those on top as a periodic full refresh if needed).
+  *
+  * The batch refreshes walk versions with a durable cursor
+  * (`LakeWriter.processNewVersions`); the streaming refresh tails the
+  * source's `_manifests` dir through [[LogTail]], the one commit-log
+  * tail graft's Delta and Iceberg change streams share. Both turn a
+  * version into its feed by the one native rule,
+  * `LakeWriter.versionFeeds`.
   */
 object Materialized {
 
@@ -99,8 +106,7 @@ object Materialized {
                  sumCols: Seq[String]): Seq[Long] = {
     seedCursorFromStamp(spark, mvTable, cursorPath, MvTxnApp)
     // uncollapsed feed: rewrite noise cancels algebraically in the
-    // signed sums (see refreshAggStream) — the exceptAll pass is
-    // skipped per version
+    // signed sums — the exceptAll pass is skipped per version
     LakeWriter.processNewVersions(spark, srcTable, cursorPath,
       collapse = false) {
       (feed, v) => applyDelta(spark, mvTable, feed, groupCols, sumCols, v)
@@ -127,7 +133,7 @@ object Materialized {
     * MV). current+delta is NOT idempotent by value; the stamp is
     * what makes the replay algebra safe. */
   private def applyDelta(spark: SparkSession, mvTable: String,
-                         feed: DataFrame, groupCols: Seq[String],
+                         feed: => DataFrame, groupCols: Seq[String],
                          sumCols: Seq[String], srcVersion: Long): Unit = {
     if (LakeWriter.lastTxnVersion(spark, mvTable, MvTxnApp)
         .exists(_ >= srcVersion)) {
@@ -171,91 +177,40 @@ object Materialized {
   }
 
   /** STREAMING incremental MV maintenance — the lambda serving loop
-    * closed end to end: the source table's `_manifests` directory IS
-    * the stream (every committed version's manifest is one file; the
-    * in-flight `.vN…tmp` names are dot-hidden, so the file source
-    * only ever sees durably-committed versions appear atomically via
-    * the rename), and each micro-batch applies the same touched-group
-    * merge as [[refreshAgg]]. Versions apply oldest-first (per-batch
-    * sort; a trigger drains every pending version in one batch), each
-    * consuming only its own UNCOLLAPSED delta via `changesBetween` —
-    * rewrite noise cancels algebraically in the signed sums — so
-    * refresh stays O(delta + touched groups) per commit at any table
-    * size.
+    * closed end to end: [[LogTail]] tails the source table's
+    * `_manifests` directory (every committed version's manifest is
+    * one `v{N}.json` file, renamed into place atomically; versions
+    * come from the file names), and each micro-batch applies the same
+    * touched-group merge as [[refreshAgg]]. Versions apply
+    * oldest-first (a trigger drains every pending version in one
+    * batch), each consuming only its own UNCOLLAPSED delta through
+    * [[LakeWriter.versionFeeds]] — rewrite noise cancels
+    * algebraically in the signed sums — so refresh stays O(delta +
+    * touched groups) per commit at any table size.
     *
     * Exactly-once: each version's merge stamps the source version as
     * an application transaction on the MV manifest (atomic with the
     * merged values — [[applyDelta]]), so a crash anywhere in a
     * multi-version batch replays the batch and every
-    * already-absorbed version SKIPS on its stamp instead of
-    * double-counting — the stream checkpoint only bounds how much
-    * replays, never whether a replay is safe. Covers the bootstrap
-    * commit too. Runs with `Trigger.AvailableNow` and blocks until
-    * every version committed so far is absorbed; re-invoke on a live
-    * checkpoint to drain later commits. */
+    * already-absorbed version SKIPS on its stamp, without building
+    * its feed, instead of double-counting — the stream checkpoint
+    * only bounds how much replays, never whether a replay is safe.
+    * Covers the bootstrap commit too; a source vacuumed past the
+    * stamp refuses. Blocks until every version committed so far is
+    * absorbed; re-invoke on a live checkpoint to drain later
+    * commits. */
   def refreshAggStream(spark: SparkSession, srcTable: String,
                        mvTable: String, checkpoint: String,
                        groupCols: Seq[String],
-                       sumCols: Seq[String]): Unit = {
-    // no per-trigger rate limit: the batch body sorts and applies its
-    // versions oldest-first itself, so splitting them one-per-batch
-    // only multiplied micro-batch overhead (offset/commit-log cycles,
-    // source listings) by the version count — at steady state a
-    // trigger drains every pending version in ONE batch
-    val manifests = spark.readStream.text(s"$srcTable/_manifests")
-    val q = manifests.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the body's heavy jobs (changesBetween reads, merge probes,
-        // touched-group aggregates) are all built on the OUTER
-        // session — they plan under its conf (AQE on), untouched by
-        // the stream's cloned session where Spark disables AQE; only
-        // the trivial manifest-line collect below runs on the clone
-        val versions = batch
-          .select(regexp_extract(col("value"), "\"version\":(\\d+)", 1)
-            .cast("long").as("v"))
-          .where(col("v").isNotNull)
-          .collect().map(_.getLong(0)).sorted
-        versions.foreach { v =>
-          val prior = LakeWriter.snapshotVersions(spark, srcTable)
-            .filter(_ < v)
-          val feed =
-            if (prior.isEmpty) {
-              // bootstrap full-snapshot feed: safe to (re)apply only
-              // when the stamp covers it (applyDelta then skips). A
-              // stamp BELOW v here means the source history between
-              // stamp and v was vacuumed away under a fresh stream
-              // checkpoint — merging the full snapshot as a delta
-              // would double-count everything already absorbed.
-              LakeWriter.lastTxnVersion(spark, mvTable, MvTxnApp)
-                .filter(_ < v).foreach { s =>
-                  sys.error(s"MV at $mvTable absorbed source v$s but " +
-                    s"the oldest surviving source version is $v with " +
-                    "no delta between them (vacuumed?) — re-bootstrap " +
-                    "(wipe the MV with the checkpoint) instead of " +
-                    "double-counting a full-snapshot feed")
-                }
-              LakeWriter.readSnapshot(spark, srcTable, Some(v))
-                .withColumn("_change_type", lit("insert"))
-            }
-            // UNCOLLAPSED feed (collapse = false): a signed-sum MV
-            // does not need the exceptAll row-cancellation pass —
-            // copy-on-write rewrite noise is a delete+insert of
-            // IDENTICAL rows, which cancels ALGEBRAICALLY in every
-            // sum(x·sign) and in the signed row count, so the merged
-            // values are exactly the collapsed feed's. Skipping the
-            // two exceptAll shuffles per version is the dominant
-            // per-batch cost at any scale (delta-sized shuffles, ×2,
-            // per commit).
-            else LakeWriter.changesBetween(spark, srcTable,
-              prior.last, v, collapse = false)
-          applyDelta(spark, mvTable, feed, groupCols, sumCols, v)
-        }
+                       sumCols: Seq[String]): Unit =
+    LogTail(spark, LakeWriter.manifestDir(srcTable).toString, "v*.json",
+        LakeWriter.manifestVersionOf, checkpoint) { batch =>
+      val stamp = LakeWriter.lastTxnVersion(spark, mvTable, MvTxnApp)
+      LakeWriter.versionFeeds(spark, srcTable, stamp, collapse = false)(
+        batch.toSet).foreach { case (v, feed) =>
+        applyDelta(spark, mvTable, feed(), groupCols, sumCols, v)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Incrementally-maintained APPROX-DISTINCT materialized view —
     * one HLL sketch (Spark's native DataSketches `hll_sketch_agg`)

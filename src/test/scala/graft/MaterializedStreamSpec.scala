@@ -71,6 +71,35 @@ class MaterializedStreamSpec extends AnyFunSuite {
     assert(mvVersionsAfterSecond - mvVersionsAfterFirst <= 2)
   }
 
+  test("manifests older than the file source's default 7-day " +
+      "maxFileAge still drain (a skipped version would be masked by " +
+      "the stamp forever)") {
+    val root = freshDir("graft_mvstream_oldage")
+    val src = s"$root/src"; val mv = s"$root/mv"
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).toDF("id")
+      .withColumn("g", $"id" % 3).withColumn("x", $"id" * 10)
+    LakeWriter.commitSnapshot(rows(0, 30), src)
+    // the first drain makes the checkpoint LIVE (the first batch is
+    // exempt from maxFileAge, so eviction only bites on later drains)
+    Materialized.refreshAggStream(spark, src, mv, s"$root/ckpt",
+      Seq("g"), Seq("x"))
+    // two more commits; v2's manifest carries an mtime 30 days older
+    // than v3's — with the stock 7-day maxFileAge the live-checkpoint
+    // drain would list only v3, and the stamp would hide v2
+    val v2 = LakeWriter.commitSnapshot(rows(30, 50), src, "append")
+    LakeWriter.commitSnapshot(rows(50, 60), src, "append")
+    val old = System.currentTimeMillis() - 30L * 24 * 3600 * 1000
+    assert(new java.io.File(s"$src/_manifests/v$v2.json")
+      .setLastModified(old))
+    Materialized.refreshAggStream(spark, src, mv, s"$root/ckpt",
+      Seq("g"), Seq("x"))
+    val full = LakeWriter.readSnapshot(spark, src)
+      .groupBy($"g").agg(count(lit(1)).as("n"), sum($"x").as("sx"))
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
+      .toMap
+    assert(mvState(mv) == full)
+  }
+
   test("crash replay: a re-fed version skips on its txn stamp, never double-counts") {
     val root = freshDir("graft_mv_replay")
     val src = s"$root/src"; val mv = s"$root/mv"; val cur = s"$root/cursor"

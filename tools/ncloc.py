@@ -1,11 +1,17 @@
 #!/usr/bin/env python3
 """Count non-blank, non-comment lines of Scala source.
 
-    python3 tools/ncloc.py PATH [PATH ...]
+    python3 tools/ncloc.py [--base REV] PATH [PATH ...]
 
 Each PATH is a .scala file or a directory searched recursively for
 .scala files. Prints one "<count>  <path>" line per file, then the
-total. A line counts when any code is on it: a line holding only
+total. With `--base REV` it also counts the same paths as committed
+at git revision REV (read with `git show REV:path`, so no second
+checkout is needed) and prints "<base>  <now>  <delta>  <path>" per
+file present on either side, then the totals; a file on one side only
+counts 0 on the other.
+
+A line counts when any code is on it: a line holding only
 whitespace, a `//` comment, or text inside a `/* ... */` block
 (scaladoc `/** ... */` included; Scala block comments nest) does not
 count, while a code line with a trailing comment does. Comment markers
@@ -13,6 +19,7 @@ inside string and character literals, including multi-line `\"\"\"`
 strings, are not comments.
 """
 import os
+import subprocess
 import sys
 
 
@@ -76,17 +83,51 @@ def count_code_lines(text):
     return count
 
 
-def main(paths):
-    if not paths:
-        sys.exit(__doc__.strip())
-    total = 0
+def git(*args):
+    return subprocess.run(("git",) + args, check=True,
+                          capture_output=True, text=True).stdout
+
+
+def base_counts(rev, paths):
+    """{path as given on the command line: count} at revision `rev`."""
+    top = git("rev-parse", "--show-toplevel").strip()
+    counts = {}
     for path in paths:
+        rel = os.path.relpath(os.path.abspath(path), top)
+        for f in git("-C", top, "ls-tree", "-r", "--name-only", rev,
+                     "--", rel).splitlines():
+            if f.endswith(".scala"):
+                text = subprocess.run(("git", "-C", top, "show",
+                                       f"{rev}:{f}"), check=True,
+                                      capture_output=True).stdout
+                shown = os.path.relpath(os.path.join(top, f))
+                counts[shown] = count_code_lines(text.decode("utf-8"))
+    return counts
+
+
+def main(args):
+    rev = None
+    if args[:1] == ["--base"] and len(args) > 1:
+        rev, args = args[1], args[2:]
+    if not args:
+        sys.exit(__doc__.strip())
+    now = {}
+    for path in args:
         for f in scala_files(path):
             with open(f, encoding="utf-8") as fh:
-                c = count_code_lines(fh.read())
-            total += c
+                now[f] = count_code_lines(fh.read())
+    if rev is None:
+        for f, c in now.items():
             print(f"{c:7d}  {f}")
-    print(f"{total:7d}  total")
+        print(f"{sum(now.values()):7d}  total")
+        return
+    now = {os.path.relpath(f): c for f, c in now.items()}
+    base = base_counts(rev, args)
+    for f in sorted(set(now) | set(base)):
+        b, c = base.get(f, 0), now.get(f, 0)
+        print(f"{b:7d}  {c:7d}  {c - b:+7d}  {f}")
+    b, c = sum(base.values()), sum(now.values())
+    print(f"{b:7d}  {c:7d}  {c - b:+7d}  total (base {rev})")
 
 
 if __name__ == "__main__":
