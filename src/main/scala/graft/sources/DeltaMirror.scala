@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.functions.{coalesce, col}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -1523,21 +1523,13 @@ object DeltaMirror {
       scala.collection.mutable.ListBuffer[(Long, String)]()
     // (version, change-type override — None when the file carries its
     // own `_change_type` column, i.e. a cdc file —, path, pv, and the
-    // optional DV row windows: only rows whose `_metadata.row_index`
-    // is IN the first bitmap / NOT in the second are served (the
-    // deletion-vector synthesis — bitmap diffs, not whole files)
+    // FileScan enter / exit DV windows (the deletion-vector synthesis
+    // — bitmap diffs, not whole files)
     val slices = scala.collection.mutable.ListBuffer[
       (Long, Option[String], String, Seq[(String, Option[String])],
-        Option[(Array[Byte], String)], Option[(Array[Byte], String)])]()
-    val rootQ = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(dir)).toString
-    // bitmap bytes per descriptor uniqueId, fetched once per range
-    // (inline decode or .bin seek — CRC-verified by the kernel)
-    val dvByteCache =
-      scala.collection.mutable.Map[String, Array[Byte]]()
-    def dvWin(d: DeletionVectors.DvDescriptor): (Array[Byte], String) =
-      (dvByteCache.getOrElseUpdate(d.uniqueId,
-        DeletionVectors.readBitmapBytes(fs, rootQ, d)), d.uniqueId)
+        Option[FileScan.Dv], Option[FileScan.Dv])]()
+    // bitmaps load once per range, verified as readDelta verifies them
+    val loadDv = dvLoader(fs, dir)
     def pvOf(a: JValue): Seq[(String, Option[String])] =
       a \ "partitionValues" match {
         case JObject(fields) => fields.map { case (k, v) =>
@@ -1573,8 +1565,8 @@ object DeltaMirror {
         // group THIS commit's dataChange adds/removes by path: COW
         // never reuses a file name, so a path both removed and
         // re-added is a DELETION-VECTOR re-pairing — its net rows are
-        // the bitmap diff (delete new\old, insert old\new), exactly
-        // what a cdc file would have carried
+        // the bitmap diff FileScan.transition rules, exactly what a
+        // cdc file would have carried
         val adds = acts.flatMap { j =>
           str(j \ "add" \ "path").filter(_ => dc(j \ "add")).map(p =>
             p -> (pvOf(j \ "add"),
@@ -1585,37 +1577,22 @@ object DeltaMirror {
             p -> (pvOf(j \ "remove"),
               parseDvDescriptor(j \ "remove" \ "deletionVector")))
         }.toMap
-        adds.toSeq.sortBy(_._1).foreach { case (p, (pv, dvN)) =>
-          removes.get(p) match {
-            case Some((_, dvO)) =>
-              // the re-paired instance predates this commit: under a
-              // range-start replacement its rows would read with a
-              // state they were never written under — same hazard as
-              // a plain pre-era remove
-              if (!addedBefore.contains(p)) preEraDeletes += ((v, p))
-              (dvN, dvO) match {
-                case (Some(nw), _) =>
-                  slices += ((v, Some("delete"), p, pv,
-                    Some(dvWin(nw)), dvO.map(dvWin)))
-                  dvO.foreach { o =>
-                    slices += ((v, Some("insert"), p, pv,
-                      Some(dvWin(o)), Some(dvWin(nw))))
-                  }
-                case (None, Some(o)) =>
-                  // DV retired, file re-added bare (restore): the old
-                  // bitmap's rows come back
-                  slices += ((v, Some("insert"), p, pv,
-                    Some(dvWin(o)), None))
-                case (None, None) =>
-                  // same-path identity rewrite: whole-file delete +
-                  // insert, the same net a two-file rewrite reports
-                  slices += ((v, Some("delete"), p, pv, None, None))
-                  slices += ((v, Some("insert"), p, pv, None, None))
-              }
-            case None =>
-              // plain add; a DV on a brand-new file narrows the insert
-              slices += ((v, Some("insert"), p, pv, None, dvN.map(dvWin)))
+        def emit(p: String, pv: Seq[(String, Option[String])],
+                 before: Option[Option[DeletionVectors.DvDescriptor]],
+                 after: Option[Option[DeletionVectors.DvDescriptor]]) =
+          FileScan.transition(before.map(_.map(loadDv(p, _))),
+              after.map(_.map(loadDv(p, _)))).foreach { case (ct, in, ex) =>
+            slices += ((v, Some(ct), p, pv, in, ex))
           }
+        adds.toSeq.sortBy(_._1).foreach { case (p, (pv, dvN)) =>
+          val dvO = removes.get(p).map(_._2)
+          // the re-paired instance predates this commit: under a
+          // range-start replacement its rows would read with a state
+          // they were never written under — same hazard as a plain
+          // pre-era remove
+          if (dvO.nonEmpty && !addedBefore.contains(p))
+            preEraDeletes += ((v, p))
+          emit(p, pv, dvO, Some(dvN))
         }
         removes.toSeq.sortBy(_._1).foreach { case (p, (pv0, dvO)) =>
           if (!adds.contains(p)) {
@@ -1628,9 +1605,7 @@ object DeltaMirror {
               }.getOrElse(Seq.empty)
             }
             if (!addedBefore.contains(p)) preEraDeletes += ((v, p))
-            // a removed file's delete rows EXCLUDE its retired bitmap
-            // (those rows were reported deleted when the DV appeared)
-            slices += ((v, Some("delete"), p, pv, None, dvO.map(dvWin)))
+            emit(p, pv, Some(dvO), None)
           }
         }
       }
@@ -1678,26 +1653,10 @@ object DeltaMirror {
             "rely on its cdc files")
       }
     }
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(st.schemaJson.getOrElse(
-        sys.error(s"no metaData action in $dir's _delta_log")))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val physOf: Map[String, String] = schema.fields.map { f =>
-      f.name ->
-        (if (f.metadata.contains("delta.columnMapping.physicalName"))
-          f.metadata.getString("delta.columnMapping.physicalName")
-        else f.name)
-    }.toMap
-    val partSet = st.partCols.toSet
-    val root = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(dir)).toString
-    def absOf(p: String): String = {
-      val d = percentDecode(p)
-      if (isAbsolutePath(d)) d else s"$root/$d"
-    }
+    val lay = new Layout(st, fs, dir)
     import org.apache.spark.sql.types.{StructType, StructField,
-      StringType, LongType, Metadata}
-    val outFields = schema.fields.toSeq :+
+      StringType, LongType}
+    val outFields = lay.schema.fields.toSeq :+
       StructField("_change_type", StringType, true) :+
       StructField("_commit_version", LongType, true) :+
       StructField("_commit_timestamp",
@@ -1705,59 +1664,22 @@ object DeltaMirror {
     if (slices.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         StructType(outFields))
-    val key = FileScan.keyOf(spark)
-    // one scan per file KIND (cdc files carry `_change_type`, data
-    // files do not); each scan joins a broadcast (file -> version,
-    // type, partition values) table, and a file changed in several
-    // range commits fans out into one row per commit — the join IS
-    // the fan-out, no repeated scans
+    // one slice scan per file KIND (cdc files carry `_change_type`,
+    // data files do not); a file changed in several range commits
+    // fans out into one row set per commit — no repeated scans
     def serve(part: Seq[(Long, Option[String], String,
-        Seq[(String, Option[String])], Option[(Array[Byte], String)],
-        Option[(Array[Byte], String)])], withCt: Boolean): DataFrame = {
-      val readSchema = StructType(
-        schema.fields.filterNot(f => partSet(f.name)).map(f =>
-          f.copy(name = physOf(f.name), metadata = Metadata.empty)) ++
-        (if (withCt)
-          Seq(StructField("_change_type", StringType, true)) else Nil))
-      val files = part.map(t => absOf(t._3)).distinct
-      val anyDv = part.exists(t => t._5.nonEmpty || t._6.nonEmpty)
-      val metaRows = part.map {
-        case (v, ct, p, pv, inDv, exDv) =>
-          val vals = st.partCols.map { c =>
-            val pn = physOf.getOrElse(c, c)
-            pv.collectFirst {
-              case (k, ov) if k == pn || k == c => ov }.flatten.orNull
-          }
-          key(absOf(p)) -> (vals ++
+        Seq[(String, Option[String])], Option[FileScan.Dv],
+        Option[FileScan.Dv])], withCt: Boolean): DataFrame =
+      lay.scan(spark, part.map { case (v, ct, p, pv, in, ex) =>
+          FileScan.Slice(lay.absOf(p), lay.pvConsts(pv) ++
             Seq(ct.orNull, java.lang.Long.valueOf(v),
-              java.lang.Long.valueOf(tsByVersion(v)),
-              inDv.map(_._1).orNull, inDv.map(_._2).orNull,
-              exDv.map(_._1).orNull, exDv.map(_._2).orNull))
-      }
-      val metaFields =
-        st.partCols.map(c =>
-          StructField(s"__graft_pv_$c", StringType, true)) ++ Seq(
+              java.lang.Long.valueOf(tsByVersion(v))), in, ex)
+        }, lay.pvFields ++ Seq(
           StructField("__graft_ct", StringType, true),
           StructField("__graft_ver", LongType, false),
-          StructField("__graft_ts", LongType, false),
-          StructField("__graft_indv",
-            org.apache.spark.sql.types.BinaryType, true),
-          StructField("__graft_inkey", StringType, true),
-          StructField("__graft_exdv",
-            org.apache.spark.sql.types.BinaryType, true),
-          StructField("__graft_exkey", StringType, true))
-      // a row is in this change when the entering DV (if any) holds
-      // it and the exiting DV (if any) does not
-      val dvKeep =
-        if (!anyDv) lit(true)
-        else (col("__graft_indv").isNull ||
-            FileScan.dvContains("__graft_inkey", "__graft_indv")) &&
-          (col("__graft_exdv").isNull ||
-            !FileScan.dvContains("__graft_exkey", "__graft_exdv"))
-      FileScan.joinGuarded(
-          FileScan.tag(spark.read.schema(readSchema).parquet(files: _*),
-            rowIndex = anyDv),
-          metaRows, metaFields, dvKeep, s"readChangeFeed at $dir")
+          StructField("__graft_ts", LongType, false)),
+        s"readChangeFeed at $dir", if (!withCt) Nil
+          else Seq(StructField("_change_type", StringType, true)))
         .select(outFields.map { f =>
           if (f.name == "_commit_version") col("__graft_ver").as(f.name)
           else if (f.name == "_commit_timestamp")
@@ -1768,11 +1690,8 @@ object DeltaMirror {
           else if (f.name == "_change_type")
             (if (withCt) coalesce(col("__graft_ct"), col("_change_type"))
              else col("__graft_ct")).as(f.name)
-          else if (partSet(f.name))
-            col(s"__graft_pv_${f.name}").cast(f.dataType).as(f.name)
-          else col(physOf(f.name)).as(f.name)
+          else lay.column(f)
         }.toIndexedSeq: _*)
-    }
     val (cdcPart, synthPart) = slices.toSeq.partition(_._2.isEmpty)
     val parts =
       (if (cdcPart.nonEmpty) Seq(serve(cdcPart, withCt = true)) else Nil) ++
@@ -2024,6 +1943,82 @@ object DeltaMirror {
     } catch { case _: java.time.format.DateTimeParseException => None }
   }
 
+  /** What both Delta readers derive from a replayed state: the
+    * logical schema, the physical names of column mapping (mode=name:
+    * files store PHYSICAL names; identity when no field carries the
+    * physicalName key), absolute file paths, a file's partition-value
+    * constants (partition columns are not stored — they materialize
+    * from the log's partitionValues), and the slice scan of data files
+    * with its logical projection. */
+  private final class Layout(st: LogState,
+                             fs: org.apache.hadoop.fs.FileSystem,
+                             dir: String) {
+    import org.apache.spark.sql.types.{Metadata, StringType, StructField,
+      StructType}
+    val schema: StructType = org.apache.spark.sql.types.DataType
+      .fromJson(st.schemaJson.getOrElse(
+        sys.error(s"no metaData action in $dir's _delta_log")))
+      .asInstanceOf[StructType]
+    val physOf: Map[String, String] = schema.fields.map { f =>
+      f.name -> (if (f.metadata.contains("delta.columnMapping.physicalName"))
+        f.metadata.getString("delta.columnMapping.physicalName")
+      else f.name)
+    }.toMap
+    private val partSet = st.partCols.toSet
+    private val root =
+      fs.makeQualified(new org.apache.hadoop.fs.Path(dir)).toString
+    def absOf(p: String): String = {
+      val d = percentDecode(p)
+      if (isAbsolutePath(d)) d else s"$root/$d"
+    }
+    /** The slice constants [[pvFields]] names. Under columnMapping the
+      * log keys partitionValues by PHYSICAL name; plain tables by the
+      * column name — both resolve. */
+    def pvConsts(pv: Seq[(String, Option[String])]): Seq[Any] =
+      st.partCols.map { c =>
+        val pn = physOf.getOrElse(c, c)
+        pv.collectFirst { case (k, ov) if k == pn || k == c => ov }
+          .flatten.orNull
+      }
+    val pvFields: Seq[StructField] = st.partCols.map(c =>
+      StructField(s"__graft_pv_$c", StringType, true))
+    /** [[FileScan.scan]] of data files under their physical names plus
+      * `extra` stored columns. */
+    def scan(spark: SparkSession, slices: Seq[FileScan.Slice],
+             fields: Seq[StructField], reader: String,
+             extra: Seq[StructField] = Nil): DataFrame = {
+      val readSchema = StructType(
+        schema.fields.filterNot(f => partSet(f.name)).map(f =>
+          f.copy(name = physOf(f.name), metadata = Metadata.empty)) ++ extra)
+      FileScan.scan(spark, slices, fields, reader)(files =>
+        Seq(spark.read.schema(readSchema).parquet(files: _*)))
+    }
+    def column(f: StructField): org.apache.spark.sql.Column =
+      if (partSet(f.name))
+        col(s"__graft_pv_${f.name}").cast(f.dataType).as(f.name)
+      else col(physOf(f.name)).as(f.name)
+  }
+
+  /** The checked deletion-vector loader both Delta readers use: a
+    * descriptor's bitmap (inline decode or `.bin` seek, size and CRC
+    * verified by [[DeletionVectors.readBitmapBytes]]) whose cardinality
+    * must equal the descriptor's — a miscounted DV is corrupt metadata
+    * and refuses — loaded once per uniqueId, its generation. */
+  private def dvLoader(fs: org.apache.hadoop.fs.FileSystem, dir: String)
+      : (String, DeletionVectors.DvDescriptor) => FileScan.Dv = {
+    val root = fs.makeQualified(new org.apache.hadoop.fs.Path(dir)).toString
+    val cache = scala.collection.mutable.Map[String, FileScan.Dv]()
+    (p, d) => cache.getOrElseUpdate(d.uniqueId, {
+      val bytes = DeletionVectors.readBitmapBytes(fs, root, d)
+      val n = DeletionVectors.RoaringArray.deserialize(bytes).cardinality
+      require(n == d.cardinality,
+        s"delta table at $dir: deletion vector of $p holds $n rows but " +
+          s"its descriptor declares cardinality ${d.cardinality} — " +
+          "corrupt metadata, refusing")
+      FileScan.Dv(bytes, d.uniqueId)
+    })
+  }
+
   private def readDeltaImpl(spark: SparkSession, dir: String,
                             version: Option[Long],
                             pruneWith: Option[org.apache.spark.sql.Column])
@@ -2065,33 +2060,9 @@ object DeltaMirror {
         "one deletion-vector generation — the log never retired the " +
         "older pairing; refusing to double-serve its rows")
     }
-    val log = logDir(dir)
-    val fs = LakeWriter.fsOf(spark, log)
-    val root = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(dir)).toString
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(st.schemaJson.getOrElse(
-        sys.error(s"no metaData action in $dir's _delta_log")))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    // COLUMN MAPPING (mode=name): files store PHYSICAL names — read
-    // under them, then rename to the logical schema. Identity when no
-    // field carries the physicalName key (plain tables).
-    val physOf: Map[String, String] = schema.fields.map { f =>
-      f.name -> (if (f.metadata.contains("delta.columnMapping.physicalName"))
-        f.metadata.getString("delta.columnMapping.physicalName")
-      else f.name)
-    }.toMap
-    val partSet = st.partCols.toSet
-    // data files do NOT store partition columns — those materialize
-    // from the log's partitionValues below
-    val readSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(f => partSet(f.name)).map(f =>
-        f.copy(name = physOf(f.name),
-          metadata = org.apache.spark.sql.types.Metadata.empty)))
-    def absOf(p: String): String = {
-      val d = percentDecode(p)
-      if (isAbsolutePath(d)) d else s"$root/$d"
-    }
+    val fs = LakeWriter.fsOf(spark, logDir(dir))
+    val lay = new Layout(st, fs, dir)
+    import lay.{schema, physOf}
     // FILE PRUNING (readDeltaWhere): keep only files whose log
     // evidence cannot disprove the predicate — the shared
     // GraftDataSkipping evaluator over add.partitionValues (exact
@@ -2170,68 +2141,16 @@ object DeltaMirror {
     if (liveKeys.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], schema)
-    val liveSeq: Seq[(String, String, AddInfo)] =
-      liveKeys.map(k => (k._1, k._2, st.live(k)))
-    val files = liveSeq.map(t => absOf(t._1))
-    // DELETION VECTORS: resolve every live file's bitmap DRIVER-SIDE
-    // (metadata-plane — each is O(deleted rows) compressed, read once
-    // per resolution, CRC-verified; a corrupt or miscounted DV refuses
-    // HERE, before any scan starts). The bytes ride to executors on
-    // the same broadcast join that attaches partition values; the
-    // scan-side membership test is the cached-parse DvContains kernel
-    // over `_metadata.row_index`.
-    val anyDv = liveSeq.exists(_._3.dv.nonEmpty)
-    val dvBytes: Map[String, Array[Byte]] =
-      if (!anyDv) Map.empty
-      else liveSeq.flatMap { case (p, _, info) =>
-        info.dv.map { d =>
-          val bytes = DeletionVectors.readBitmapBytes(fs, root, d)
-          val parsed = DeletionVectors.RoaringArray.deserialize(bytes)
-          require(parsed.cardinality == d.cardinality,
-            s"delta table at $dir: deletion vector of $p holds " +
-              s"${parsed.cardinality} rows but its descriptor declares " +
-              s"cardinality ${d.cardinality} — corrupt metadata, refusing")
-          p -> bytes
-        }
-      }.toMap
-    val base = spark.read.schema(readSchema).parquet(files: _*)
-    if (st.partCols.isEmpty && !anyDv)
-      base.select(schema.fields.map(f =>
-        col(physOf(f.name)).as(f.name)).toIndexedSeq: _*)
-    else {
-      // one row per live file: (FileScan key, partition values, DV).
-      // Under columnMapping the log keys partitionValues by PHYSICAL
-      // name; plain tables by the column name — both resolve.
-      val key = FileScan.keyOf(spark)
-      val pvRows = liveSeq.map { case (p, uid, info) =>
-        val fk = key(absOf(p))
-        val vals = st.partCols.map { c =>
-          val pn = physOf.getOrElse(c, c)
-          info.partitionValues.collectFirst {
-            case (k, ov) if k == pn || k == c => ov }.flatten.orNull
-        }
-        // the DvContains cache key carries the DV GENERATION (the
-        // spec's uniqueId), not just the file
-        fk -> (vals ++ Seq(dvBytes.get(p).orNull,
-          info.dv.map(_ => fk + "\u0000" + uid).orNull))
-      }
-      import org.apache.spark.sql.types.{StructField, StringType,
-        BinaryType}
-      val pvFields = st.partCols.map(c =>
-          StructField(s"__graft_pv_$c", StringType, true)) ++ Seq(
-        StructField("__graft_dv", BinaryType, true),
-        StructField("__graft_dvkey", StringType, true))
-      val keep =
-        if (!anyDv) lit(true)
-        else col("__graft_dv").isNull ||
-          !FileScan.dvContains("__graft_dvkey", "__graft_dv")
-      FileScan.joinGuarded(FileScan.tag(base, rowIndex = anyDv),
-          pvRows, pvFields, keep, s"readDelta at $dir")
-        .select(schema.fields.map { f =>
-          if (partSet(f.name))
-            col(s"__graft_pv_${f.name}").cast(f.dataType).as(f.name)
-          else col(physOf(f.name)).as(f.name)
-        }.toIndexedSeq: _*)
-    }
+    // DELETION VECTORS resolve DRIVER-SIDE (metadata-plane — each is
+    // O(deleted rows) compressed, read once per resolution, verified:
+    // a corrupt or miscounted DV refuses HERE, before any scan starts)
+    // and ride to executors as the slices' exit windows
+    val loadDv = dvLoader(fs, dir)
+    lay.scan(spark, liveKeys.map { k =>
+        val info = st.live(k)
+        FileScan.Slice(lay.absOf(k._1), lay.pvConsts(info.partitionValues),
+          exit = info.dv.map(loadDv(k._1, _)))
+      }, lay.pvFields, s"readDelta at $dir")
+      .select(schema.fields.map(lay.column).toIndexedSeq: _*)
   }
 }

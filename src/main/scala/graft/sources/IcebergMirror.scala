@@ -1994,17 +1994,19 @@ object IcebergMirror {
 
   }
 
-  private def readIcebergImpl(spark: SparkSession, dir: String,
-                              snapshotId: Option[Long],
-                              pruneWith: Option[org.apache.spark.sql.Column])
-      : DataFrame = {
-    val md = metaDir(dir)
-    val fs = LakeWriter.fsOf(spark, md)
-    val n = currentMetadataVersion(fs, md).getOrElse(
-      sys.error(s"no iceberg metadata at $dir"))
-    val j = JsonMethods.parse(new String(
-      readFileBytes(fs, metadataJsonPath(md, n)), "UTF-8"))
-    val fv = lng(j \ "format-version").getOrElse(1L)
+  /** What both Iceberg readers derive from a table's current
+    * metadata.json: the format gate, the current logical schema with
+    * its field ids and physical names (renames), the identity
+    * partition fields per spec, path resolution against the table
+    * location, and the slice scan of data files with its logical
+    * projection. */
+  private final class Layout(spark: SparkSession, dir: String) {
+    private val md = metaDir(dir)
+    val fs: org.apache.hadoop.fs.FileSystem = LakeWriter.fsOf(spark, md)
+    val j: JValue = JsonMethods.parse(new String(readFileBytes(fs,
+      metadataJsonPath(md, currentMetadataVersion(fs, md).getOrElse(
+        sys.error(s"no iceberg metadata at $dir")))), "UTF-8"))
+    val fv: Long = lng(j \ "format-version").getOrElse(1L)
     require(fv <= 3L,
       s"iceberg table at $dir is format v$fv — this reader implements " +
         "v1/v2 and the v3 deletion-vector surface; refusing " +
@@ -2021,26 +2023,29 @@ object IcebergMirror {
         s"iceberg table at $dir enables v3 row lineage — this reader " +
           "does not maintain row ids; refusing")
     }
-    val location = str(j \ "location").getOrElse(dir)
+    private val location = str(j \ "location").getOrElse(dir)
+    def resolvePath(p: String): String = {
+      val hp = new Path(p)
+      if (hp.isAbsolute || hp.toUri.getScheme != null) p
+      else s"${location.stripSuffix("/")}/$p"
+    }
 
     // schemas: current + history (rename detection)
-    val schemasJ: List[JValue] = (j \ "schemas") match {
+    private val schemasJ: List[JValue] = (j \ "schemas") match {
       case JArray(ss) => ss
       case _ => (j \ "schema") match { // v1 single-schema form
         case o: JObject => List(o)
         case _ => sys.error(s"iceberg table at $dir carries no schema")
       }
     }
-    val currentSchemaId = lng(j \ "current-schema-id").getOrElse(
+    private val currentSchemaId = lng(j \ "current-schema-id").getOrElse(
       schemasJ.headOption.flatMap(s => lng(s \ "schema-id"))
         .getOrElse(0L))
-    val curSchemaJ = schemasJ.find(s =>
+    private val curSchemaJ = schemasJ.find(s =>
       lng(s \ "schema-id").contains(currentSchemaId))
       .orElse(schemasJ.headOption)
       .getOrElse(sys.error(s"iceberg table at $dir: no current schema"))
-    def fieldsOf(s: JValue): List[(Int, String, JValue)] =
-      schemaFieldsOf(s)
-    val curFields = fieldsOf(curSchemaJ)
+    private val curFields = schemaFieldsOf(curSchemaJ)
     // v3 default values: a field carrying initial-default changes
     // what files written BEFORE the column existed must read — this
     // reader would serve nulls there; refuse at any nesting depth
@@ -2054,10 +2059,10 @@ object IcebergMirror {
           "initial-default — this reader would serve nulls where the " +
           "default applies; refusing")
     }
-    val schema = StructType(curFields.map { case (_, nm, t) =>
+    val schema: StructType = StructType(curFields.map { case (_, nm, t) =>
       StructField(nm, sparkTypeOf(t, dir), nullable = true)
     })
-    val idToName = curFields.map(f => (f._1, f._2)).toMap
+    val idToName: Map[Int, String] = curFields.map(f => (f._1, f._2)).toMap
     val idToType: Map[Int, DataType] = curFields.map { case (id, _, t) =>
       id -> sparkTypeOf(t, dir) }.toMap
 
@@ -2085,6 +2090,96 @@ object IcebergMirror {
         })
       }
     }.toMap
+    // identity source columns of any spec, in current schema — these
+    // may be absent from data files (spec column projection) and
+    // resolve from partition metadata
+    val identitySources: Seq[Int] =
+      identityOf.values.flatten.map(_._2).toSeq.distinct
+        .filter(idToName.contains).sorted
+    val identityNames: Set[String] = identitySources.map(idToName).toSet
+    /** The slice constants [[pvFields]] names: a file's typed
+      * identity partition values. */
+    def pvConsts(pvById: Map[Int, Any]): Seq[Any] =
+      identitySources.map(src =>
+        avroPvToExternal(idToType(src), pvById.get(src).orNull, dir))
+    val pvFields: Seq[StructField] = identitySources.map(src =>
+      StructField(s"__graft_pv_${idToName(src)}", idToType(src), true))
+    /** [[FileScan.scan]] of data files under their physical names. */
+    def scan(slices: Seq[FileScan.Slice], fields: Seq[StructField],
+             reader: String, rowIndex: Boolean = false): DataFrame = {
+      val readSchema = StructType(schema.fields.map(f =>
+        StructField(physByName(f.name), f.dataType, nullable = true)))
+      FileScan.scan(spark, slices, fields, reader, rowIndex)(files =>
+        Seq(spark.read.schema(readSchema).parquet(files: _*)))
+    }
+    /** The spec's column projection: the file value when the column
+      * is materialized in the file, the identity partition value
+      * otherwise. */
+    def column(f: StructField): org.apache.spark.sql.Column =
+      if (identityNames(f.name))
+        coalesce(col(physByName(f.name)),
+          col(s"__graft_pv_${f.name}")).as(f.name)
+      else col(physByName(f.name)).as(f.name)
+  }
+
+  /** A v3 puffin deletion vector: the blob at `offset` (`size` bytes)
+    * inside `puffin`, the manifest entry's `record_count` and the data
+    * file it deletes from. */
+  private final case class DvBlob(puffin: String, offset: Long, size: Long,
+                                  cardinality: Option[Long],
+                                  referenced: String)
+
+  /** The checked deletion-vector loader both Iceberg readers use. v3
+    * adopted Delta's framing (4-byte BE length of magic+vector, the
+    * magic-led portable RoaringBitmapArray, 4-byte BE CRC-32), so the
+    * parse is shared: the length must match the manifest's size, the
+    * CRC the vector and the bitmap's cardinality the entry's
+    * record_count — a corrupt DV would silently resurrect deleted
+    * rows. Each blob loads once per generation (puffin@offset); the
+    * cache is thread-safe, so batch loads may run on the driver-IO
+    * pool. */
+  private def dvLoader(fs: org.apache.hadoop.fs.FileSystem, dir: String)
+      : DvBlob => FileScan.Dv = {
+    val cache =
+      new java.util.concurrent.ConcurrentHashMap[String, FileScan.Dv]()
+    d => cache.computeIfAbsent(s"${d.puffin}@${d.offset}", gen => {
+      val in = fs.open(new Path(d.puffin))
+      val blob = try {
+        in.seek(d.offset)
+        val b = new Array[Byte](d.size.toInt)
+        in.readFully(b); b
+      } finally in.close()
+      require(blob.length >= 8, s"iceberg table at $dir: DV " +
+        s"blob for ${d.referenced} is ${blob.length} bytes — " +
+        "too short for the v3 framing; refusing")
+      val len = java.nio.ByteBuffer.wrap(blob, 0, 4).getInt
+      require(len == d.size - 8,
+        s"iceberg table at $dir: DV blob for ${d.referenced} " +
+          s"declares $len magic+vector bytes but the manifest " +
+          s"sized it ${d.size} — corrupt metadata, refusing")
+      val data = java.util.Arrays.copyOfRange(blob, 4, 4 + len)
+      val crc = java.nio.ByteBuffer.wrap(blob, 4 + len, 4).getInt
+      val c = new java.util.zip.CRC32(); c.update(data)
+      require(crc == c.getValue.toInt,
+        s"iceberg table at $dir: DV checksum mismatch for " +
+          s"${d.referenced} — a corrupt deletion vector would " +
+          "silently resurrect deleted rows; refusing")
+      val n = DeletionVectors.RoaringArray.deserialize(data).cardinality
+      d.cardinality.foreach(m => require(n == m,
+        s"iceberg table at $dir: DV for ${d.referenced} holds $n rows " +
+          s"but its manifest entry declares record_count $m — corrupt " +
+          "metadata, refusing"))
+      FileScan.Dv(data, gen)
+    })
+  }
+
+  private def readIcebergImpl(spark: SparkSession, dir: String,
+                              snapshotId: Option[Long],
+                              pruneWith: Option[org.apache.spark.sql.Column])
+      : DataFrame = {
+    val lay = new Layout(spark, dir)
+    import lay.{fs, j, fv, resolvePath, schema, idToName, idToType,
+      physByName, specsJ, identityOf, identitySources, identityNames}
     val specFieldCount: Map[Int, Int] = specsJ.flatMap { p =>
       lng(p \ "spec-id").map(sid => sid.toInt -> ((p \ "fields") match {
         case JArray(fs0) => fs0.size
@@ -2107,12 +2202,6 @@ object IcebergMirror {
       sys.error(s"iceberg table at $dir: snapshot $wantSid carries no " +
         "manifest-list (v1 'manifests' listing form is not supported)"))
 
-    def resolvePath(p: String): String = {
-      val hp = new Path(p)
-      if (hp.isAbsolute || hp.toUri.getScheme != null) p
-      else s"${location.stripSuffix("/")}/$p"
-    }
-
     // live data files with their identity-partition metadata and data
     // sequence numbers; POSITION-DELETE files (merge-on-read v2) are
     // collected alongside — each applies to data files whose data
@@ -2124,16 +2213,12 @@ object IcebergMirror {
     final case class PosDel(path: String, seq: Long)
     final case class EqDel(path: String, seq: Long, eqIds: Seq[Int],
         pvById: Map[Int, Any], scoped: Boolean, specId: Int)
-    // v3 puffin deletion vector: one blob inside a puffin file,
-    // located by the manifest's (content_offset, content_size)
-    final case class DvDel(path: String, seq: Long, referenced: String,
-        offset: Long, size: Long, cardinality: Option[Long])
     val (_, _, mlRows) = readAvroBytes(
       readFileBytes(fs, new Path(resolvePath(mlPath))))
     val live = mutable.LinkedHashMap[String, Live]()
     val posDels = mutable.ListBuffer[PosDel]()
     val eqDels = mutable.ListBuffer[EqDel]()
-    val dvDels = mutable.ListBuffer[DvDel]()
+    val dvDels = mutable.ListBuffer[(Long, DvBlob)]()
     // DRIVER-HEAP guard (the readDelta maxLiveFiles twin): the
     // resolved live map is driver state — one entry per data file,
     // with bounds byte-arrays. A million-file foreign tree would OOM
@@ -2256,8 +2341,8 @@ object IcebergMirror {
                 "content_size_in_bytes")).getOrElse(sys.error(
                 s"iceberg table at $dir: DV entry $stored carries no " +
                   "content_size_in_bytes — refusing"))
-              dvDels += DvDel(p, seq, refd, off, sz,
-                asLong(fieldById(df, 103, "record_count")))
+              dvDels += (seq -> DvBlob(p, off, sz,
+                asLong(fieldById(df, 103, "record_count")), refd))
             case 1L => posDels += PosDel(p, seq)
             case 2L =>
               val eqIds = fieldById(df, 135, "equality_ids") match {
@@ -2340,110 +2425,44 @@ object IcebergMirror {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], schema)
 
-    // identity source columns of any live file's spec, in current
-    // schema — these may be absent from data files (spec column
-    // projection) and resolve from partition metadata
-    val identitySources: Seq[Int] =
-      identityOf.values.flatten.map(_._2).toSeq.distinct
-        .filter(idToName.contains).sorted
-    val readSchema = StructType(schema.fields.map(f =>
-      StructField(physByName(f.name), f.dataType, nullable = true)))
-    val base = spark.read.schema(readSchema)
-      .parquet(live.keys.toSeq: _*)
-
     // V3 DELETION VECTORS: at most one per data file (spec rule),
-    // applicable when the DV's data sequence is >= the file's. The
-    // blob parses DRIVER-SIDE (metadata-plane, O(deleted rows)
-    // compressed, CRC + cardinality verified HERE so corruption
-    // refuses before any scan); bytes ride the partition-values
-    // broadcast and filter by `_metadata.row_index` through the same
-    // cached-parse DvContains kernel the Delta reader uses — v3
-    // adopted Delta's framing (4-byte BE length of magic+vector, the
-    // magic-led portable RoaringBitmapArray, 4-byte BE CRC-32), so
-    // the parse is shared, not duplicated.
+    // applicable when the DV's data sequence is >= the file's. Blobs
+    // load DRIVER-SIDE through the checked loader (corruption refuses
+    // before any scan) and ride the slices as exit windows.
     val liveByStored: Map[String, Live] =
       live.values.map(lv => lv.stored -> lv).toMap
-    dvDels.groupBy(_.referenced).find(_._2.size > 1).foreach {
+    dvDels.groupBy(_._2.referenced).find(_._2.size > 1).foreach {
       case (r, _) => sys.error(
         s"iceberg table at $dir: data file $r carries more than one " +
           "deletion vector — format v3 allows at most one; refusing")
     }
-    val applicableDvs = dvDels.toSeq.filter(d =>
-      liveByStored.get(d.referenced).exists(lv => d.seq >= lv.dataSeq))
+    val applicableDvs = dvDels.toSeq.collect {
+      case (seq, b) if liveByStored.get(b.referenced)
+        .exists(lv => seq >= lv.dataSeq) => b
+    }
     // blob fetches are independent remote reads — the bounded-pool
     // discipline manifests already use (thousands of DVs would
-    // otherwise serialize one round trip each); parse + verify stays
-    // on the calling thread
-    val dvByStored: Map[String, (Array[Byte], String)] =
-      applicableDvs.zip(LakeWriter.parMap(spark, applicableDvs) { d =>
-        val in = fs.open(new Path(d.path))
-        try {
-          in.seek(d.offset)
-          val b = new Array[Byte](d.size.toInt)
-          in.readFully(b); b
-        } finally in.close()
-      }).map { case (d, blob) =>
-        require(blob.length >= 8, s"iceberg table at $dir: DV " +
-          s"blob for ${d.referenced} is ${blob.length} bytes — " +
-          "too short for the v3 framing; refusing")
-        val len = java.nio.ByteBuffer.wrap(blob, 0, 4).getInt
-        require(len == d.size - 8,
-          s"iceberg table at $dir: DV blob for ${d.referenced} " +
-            s"declares $len magic+vector bytes but the manifest " +
-            s"sized it ${d.size} — corrupt metadata, refusing")
-        val data = java.util.Arrays.copyOfRange(blob, 4, 4 + len)
-        val crc = java.nio.ByteBuffer.wrap(blob, 4 + len, 4).getInt
-        val c = new java.util.zip.CRC32(); c.update(data)
-        require(crc == c.getValue.toInt,
-          s"iceberg table at $dir: DV checksum mismatch for " +
-            s"${d.referenced} — a corrupt deletion vector would " +
-            "silently resurrect deleted rows; refusing")
-        val parsed = DeletionVectors.RoaringArray.deserialize(data)
-        d.cardinality.foreach(n => require(parsed.cardinality == n,
-          s"iceberg table at $dir: DV for ${d.referenced} holds " +
-            s"${parsed.cardinality} rows but its manifest entry " +
-            s"declares $n — corrupt metadata, refusing"))
-        d.referenced -> (data, s"${d.path}@${d.offset}")
-      }.toMap
+    // otherwise serialize one round trip each)
+    val dvByStored: Map[String, FileScan.Dv] = applicableDvs.map(_.referenced)
+      .zip(LakeWriter.parMap(spark, applicableDvs)(dvLoader(fs, dir))).toMap
 
-    if (identitySources.isEmpty && posDels.isEmpty && eqDels.isEmpty &&
-        dvByStored.isEmpty)
-      return base.select(schema.fields.map(f =>
-        col(physByName(f.name)).as(f.name)).toIndexedSeq: _*)
-
-    // broadcast (file -> typed partition values, stored path, data
-    // sequence, spec, DV) through the FileScan guarded join
-    def jvmToExternal(dt: DataType, v: Any): Any =
-      avroPvToExternal(dt, v, dir)
+    // (typed partition values, stored path, data sequence, spec) ride
+    // the slices when an identity column or a delete file needs them
     val key = FileScan.keyOf(spark)
-    val pvRows = live.values.toSeq.map { lv =>
-      val dv = dvByStored.get(lv.stored)
-      val k = key(lv.path)
-      k -> (identitySources.map(src =>
-        jvmToExternal(idToType(src), lv.pvById.get(src).orNull)) ++
-        Seq(lv.stored, java.lang.Long.valueOf(lv.dataSeq),
-          Integer.valueOf(lv.specId),
-          dv.map(_._1).orNull,
-          // the DvContains cache key carries the DV GENERATION
-          // (puffin path + blob offset), not just the file
-          dv.map(t => k + "\u0000" + t._2).orNull))
-    }
-    val pvFields =
-      identitySources.map(src => StructField(
-        s"__graft_pv_${idToName(src)}", idToType(src), true)) ++
-      Seq(StructField("__graft_stored", StringType, true),
-        StructField("__graft_seq", LongType, true),
-        StructField("__graft_specid", IntegerType, true),
-        StructField("__graft_dv", BinaryType, true),
-        StructField("__graft_dvkey", StringType, true))
-    val identityNames = identitySources.map(idToName).toSet
-    val dvKeep =
-      if (dvByStored.isEmpty) lit(true)
-      else col("__graft_dv").isNull ||
-        !FileScan.dvContains("__graft_dvkey", "__graft_dv")
-    val joined = FileScan.joinGuarded(
-      FileScan.tag(base, rowIndex = posDels.nonEmpty || dvByStored.nonEmpty),
-      pvRows, pvFields, dvKeep, s"readIceberg at $dir")
+    val withMeta = identitySources.nonEmpty || posDels.nonEmpty ||
+      eqDels.nonEmpty
+    val joined = lay.scan(live.values.toSeq.map { lv =>
+        FileScan.Slice(lv.path, if (!withMeta) Nil
+          else lay.pvConsts(lv.pvById) ++
+            Seq(lv.stored, java.lang.Long.valueOf(lv.dataSeq),
+              Integer.valueOf(lv.specId)),
+          exit = dvByStored.get(lv.stored))
+      }, if (!withMeta) Nil
+      else lay.pvFields ++
+        Seq(StructField("__graft_stored", StringType, true),
+          StructField("__graft_seq", LongType, true),
+          StructField("__graft_specid", IntegerType, true)),
+      s"readIceberg at $dir", rowIndex = posDels.nonEmpty)
     // POSITION DELETES (merge-on-read): delete rows are DATA-scale —
     // they scan distributedly and anti-join the base on
     // (data file, row index), never through the driver. A delete
@@ -2495,7 +2514,8 @@ object IcebergMirror {
             java.lang.Boolean.valueOf(ed.scoped) +:
             Integer.valueOf(ed.specId) +:
             identitySources.map(src =>
-              jvmToExternal(idToType(src), ed.pvById.get(src).orNull))))
+              avroPvToExternal(idToType(src), ed.pvById.get(src).orNull,
+                dir))))
         }
         val delMetaDf = spark.createDataFrame(delMeta.asJava,
           StructType(
@@ -2533,14 +2553,7 @@ object IcebergMirror {
           eqCond && dels("__del_seq") > acc("__graft_seq") && scopeCond,
           "left_anti")
     }
-    served.select(schema.fields.map { f =>
-      // the spec's column projection: file value when the column is
-      // materialized in the file, identity partition value otherwise
-      if (identityNames(f.name))
-        coalesce(col(physByName(f.name)),
-          col(s"__graft_pv_${f.name}")).as(f.name)
-      else col(physByName(f.name)).as(f.name)
-    }.toIndexedSeq: _*)
+    served.select(schema.fields.map(lay.column).toIndexedSeq: _*)
   }
 
   /** INCREMENTAL CHANGELOG SCAN over an Iceberg table — the
@@ -2571,81 +2584,9 @@ object IcebergMirror {
   def readIcebergChanges(spark: SparkSession, dir: String,
                          fromSnapshot: Long,
                          toSnapshot: Long): DataFrame = {
-    val md = metaDir(dir)
-    val fs = LakeWriter.fsOf(spark, md)
-    val n = currentMetadataVersion(fs, md).getOrElse(
-      sys.error(s"no iceberg metadata at $dir"))
-    val j = JsonMethods.parse(new String(
-      readFileBytes(fs, metadataJsonPath(md, n)), "UTF-8"))
-    val fv = lng(j \ "format-version").getOrElse(1L)
-    require(fv <= 3L,
-      s"iceberg table at $dir is format v$fv — refusing")
-    // the batch reader's v3 whitelist applies here identically: a
-    // changelog serving nulls where a default applies (or dropping
-    // lineage columns) would be silently wrong, not incomplete
-    if (fv >= 3L) {
-      require((j \ "row-lineage") != JBool(true) &&
-          (j \ "next-row-id") == JNothing,
-        s"iceberg table at $dir enables v3 row lineage — this reader " +
-          "does not maintain row ids; refusing")
-    }
-    val location = str(j \ "location").getOrElse(dir)
-    def resolvePath(p: String): String = {
-      val hp = new Path(p)
-      if (hp.isAbsolute || hp.toUri.getScheme != null) p
-      else s"${location.stripSuffix("/")}/$p"
-    }
-    val schemasJ: List[JValue] = (j \ "schemas") match {
-      case JArray(ss) => ss
-      case _ => (j \ "schema") match {
-        case o: JObject => List(o)
-        case _ => sys.error(s"iceberg table at $dir carries no schema")
-      }
-    }
-    val currentSchemaId = lng(j \ "current-schema-id").getOrElse(
-      schemasJ.headOption.flatMap(s => lng(s \ "schema-id"))
-        .getOrElse(0L))
-    val curSchemaJ = schemasJ.find(s =>
-      lng(s \ "schema-id").contains(currentSchemaId))
-      .orElse(schemasJ.headOption)
-      .getOrElse(sys.error(s"iceberg table at $dir: no current schema"))
-    curSchemaJ.filterField {
-      case ("initial-default", v) => v != JNull && v != JNothing
-      case _ => false
-    } match {
-      case Nil =>
-      case _ => sys.error(
-        s"iceberg table at $dir: a schema field declares a v3 " +
-          "initial-default — this reader would serve nulls where the " +
-          "default applies; refusing")
-    }
-    val curFields = schemaFieldsOf(curSchemaJ)
-    val schema = StructType(curFields.map { case (_, nm, t) =>
-      StructField(nm, sparkTypeOf(t, dir), nullable = true)
-    })
-    val idToName = curFields.map(f => (f._1, f._2)).toMap
-    val idToType: Map[Int, DataType] = curFields.map { case (id, _, t) =>
-      id -> sparkTypeOf(t, dir) }.toMap
-    val physByName =
-      resolvePhysByName(dir, j, schemasJ, curSchemaJ, curFields)
-    val specsJ: List[JValue] = (j \ "partition-specs") match {
-      case JArray(ss) => ss
-      case _ => Nil
-    }
-    val identityOf: Map[Int, Seq[(Int, Int)]] = specsJ.flatMap { p =>
-      lng(p \ "spec-id").map { sid =>
-        sid.toInt -> ((p \ "fields") match {
-          case JArray(fs0) => fs0.flatMap { f =>
-            if (!str(f \ "transform").contains("identity")) None
-            else for {
-              fid <- lng(f \ "field-id")
-              src <- lng(f \ "source-id")
-            } yield (fid.toInt, src.toInt)
-          }
-          case _ => Nil
-        })
-      }
-    }.toMap
+    val lay = new Layout(spark, dir)
+    import lay.{fs, j, resolvePath, schema, idToName, idToType,
+      identityOf, identitySources}
     // the parent chain to..from, oldest first
     val snapsJ: List[JValue] = (j \ "snapshots") match {
       case JArray(ss) => ss
@@ -2667,15 +2608,11 @@ object IcebergMirror {
     }
     snap(fromSnapshot): Unit // the base must exist too
     // per in-range snapshot: its own manifest list, entries stamped
-    // with the snapshot id decide membership. A unit may carry DV
-    // bitmaps narrowing WHICH rows of its file it emits: `inDv` =
-    // only row indexes IN this bitmap, `exDv` = minus this bitmap
-    // (both raw portable-roaring bytes riding the broadcast).
-    final case class Changed(path: String, pvById: Map[Int, Any],
-        snapId: Long, ordinal: Int, insert: Boolean,
-        inDv: Option[(Array[Byte], String)] = None,
-        exDv: Option[(Array[Byte], String)] = None)
-    val changed = scala.collection.mutable.ListBuffer[Changed]()
+    // with the snapshot id decide membership. Each change is a slice
+    // carrying (partition values, change type, ordinal, snapshot id);
+    // its enter / exit DV windows narrow WHICH rows of its file it
+    // emits.
+    val changed = scala.collection.mutable.ListBuffer[FileScan.Slice]()
     // REPLACE snapshots (compaction / z-order / rewrite_data_files:
     // files changed, rows did not) are excluded, exactly as Iceberg's
     // reference changelog scan excludes them — reporting a rewrite as
@@ -2685,43 +2622,14 @@ object IcebergMirror {
     val emitting = chain.toSeq.filterNot { sid =>
       (snap(sid) \ "summary" \ "operation") == JString("replace")
     }
-    // DV blob fetch (driver-side, metadata-plane): framing + CRC
-    // verified exactly as the batch reader does; cached per blob
-    // across the range (a carried bitmap diffed by two snapshots
-    // fetches once)
-    val identitySources: Seq[Int] =
-      identityOf.values.flatten.map(_._2).toSeq.distinct
-        .filter(idToName.contains).sorted
-    val identityNames = identitySources.map(idToName).toSet
-    val blobCache = scala.collection.mutable.Map[String, Array[Byte]]()
+    // DV blobs load through the batch reader's checked loader, once
+    // per blob across the range (a carried bitmap diffed by two
+    // snapshots fetches once)
+    val loadDv = dvLoader(fs, dir)
     // carried delete manifests decode once per range (liveness +
     // kind validation below), keyed by resolved path
     val carriedDeleteCache =
       scala.collection.mutable.Map[String, Seq[String]]()
-    def fetchBlob(puffin: String, off: Long, size: Long)
-        : (Array[Byte], String) = {
-      val key = s"$puffin@$off"
-      (blobCache.getOrElseUpdate(key, {
-        val in = fs.open(new Path(puffin))
-        val blob = try {
-          in.seek(off)
-          val b = new Array[Byte](size.toInt)
-          in.readFully(b); b
-        } finally in.close()
-        require(blob.length >= 8, s"iceberg table at $dir: DV blob " +
-          s"at $key is ${blob.length} bytes — too short; refusing")
-        val len = java.nio.ByteBuffer.wrap(blob, 0, 4).getInt
-        require(len == size - 8, s"iceberg table at $dir: DV blob at " +
-          s"$key declares $len bytes but the manifest sized it " +
-          s"$size — corrupt metadata, refusing")
-        val data = java.util.Arrays.copyOfRange(blob, 4, 4 + len)
-        val crc = java.nio.ByteBuffer.wrap(blob, 4 + len, 4).getInt
-        val c = new java.util.zip.CRC32(); c.update(data)
-        require(crc == c.getValue.toInt, s"iceberg table at $dir: DV " +
-          s"checksum mismatch at $key — refusing")
-        data
-      }), key)
-    }
     // identity partition values of a DV-referenced file: the COW path
     // reads them from its manifest entry's partition struct, but a DV
     // unit's data manifest is CARRIED (never opened) — resolve from
@@ -2746,13 +2654,13 @@ object IcebergMirror {
       // manifest file whose added_snapshot_id is the committing
       // snapshot) — carried manifests are never opened, so metadata
       // IO is bounded by the CHANGED manifests, not table size
-      final case class DvLoc(puffin: String, off: Long, size: Long)
       val dataAdds = scala.collection.mutable.LinkedHashMap[
         String, Map[Int, Any]]()
       val dataRemoves = scala.collection.mutable.LinkedHashMap[
         String, Map[Int, Any]]()
-      val dvAdded = scala.collection.mutable.LinkedHashMap[String, DvLoc]()
-      val dvRetired = scala.collection.mutable.LinkedHashMap[String, DvLoc]()
+      val dvAdded = scala.collection.mutable.LinkedHashMap[String, DvBlob]()
+      val dvRetired =
+        scala.collection.mutable.LinkedHashMap[String, DvBlob]()
       // files still covered by a CARRIED live DV this snapshot — used
       // below to refuse a non-conforming writer that removed a data
       // file without retiring its deletion vector (the removed file's
@@ -2820,13 +2728,14 @@ object IcebergMirror {
                   "referenced_data_file")).getOrElse(sys.error(
                   s"iceberg table at $dir: DV entry $stored carries " +
                     "no referenced_data_file — refusing")))
-                val loc = DvLoc(resolvePath(stored),
+                val loc = DvBlob(resolvePath(stored),
                   asLong(fieldById(df, 144, "content_offset"))
                     .getOrElse(sys.error(s"iceberg table at $dir: DV " +
                       s"entry $stored has no content_offset")),
                   asLong(fieldById(df, 145, "content_size_in_bytes"))
                     .getOrElse(sys.error(s"iceberg table at $dir: DV " +
-                      s"entry $stored has no content_size_in_bytes")))
+                      s"entry $stored has no content_size_in_bytes")),
+                  asLong(fieldById(df, 103, "record_count")), refd)
                 if (status == 1L) {
                   require(!dvAdded.contains(refd),
                     s"iceberg table at $dir: snapshot $sid adds two " +
@@ -2879,42 +2788,26 @@ object IcebergMirror {
             "it — non-conforming writer; the changelog cannot tell " +
             "which rows were already reported deleted; refusing")
       }
-      // emission per file, DV bitmaps narrowing rows:
-      //  - added file: insert its rows, minus a same-snapshot DV
-      //  - removed file: delete its rows, minus the retired DV (those
-      //    rows were reported deleted when the DV appeared)
-      //  - DV change on a live file: delete rows in (new \ old) AND
-      //    insert rows in (old \ new) — deletes normally only grow
-      //    the bitmap so the insert side is empty, but a RESTORE
-      //    re-pins a smaller one and its rows come back
-      //  - DV retired without replacement on a live file: the whole
-      //    old bitmap's rows come back — insert them
+      // emission per file through FileScan.transition: an added file
+      // (minus a same-snapshot DV), a removed file (minus its retired
+      // DV), and a DV added or retired on a live file
+      def emit(p: String, pv: Map[Int, Any], before: Option[Option[DvBlob]],
+               after: Option[Option[DvBlob]]): Unit =
+        FileScan.transition(before.map(_.map(loadDv)),
+            after.map(_.map(loadDv))).foreach { case (ct, in, ex) =>
+          changed += FileScan.Slice(p, lay.pvConsts(pv) ++ Seq(ct,
+            Integer.valueOf(i + 1), java.lang.Long.valueOf(sid)), in, ex)
+        }
       dataAdds.foreach { case (p, pv) =>
-        changed += Changed(p, pv, sid, i + 1, insert = true,
-          exDv = dvAdded.get(p).map(l => fetchBlob(l.puffin, l.off, l.size)))
+        emit(p, pv, None, Some(dvAdded.get(p)))
       }
       dataRemoves.foreach { case (p, pv) =>
-        changed += Changed(p, pv, sid, i + 1, insert = false,
-          exDv = dvRetired.get(p).map(l => fetchBlob(l.puffin, l.off, l.size)))
+        emit(p, pv, Some(dvRetired.get(p)), None)
       }
-      (dvAdded.keySet -- dataAdds.keySet -- dataRemoves.keySet)
+      ((dvAdded.keySet -- dataAdds.keySet) ++
+          (dvRetired.keySet -- dvAdded.keySet) -- dataRemoves.keySet)
         .toSeq.sorted.foreach { p =>
-          val l = dvAdded(p)
-          val nw = fetchBlob(l.puffin, l.off, l.size)
-          val old = dvRetired.get(p).map(o =>
-            fetchBlob(o.puffin, o.off, o.size))
-          changed += Changed(p, pvOfPath(p), sid, i + 1, insert = false,
-            inDv = Some(nw), exDv = old)
-          old.foreach { o =>
-            changed += Changed(p, pvOfPath(p), sid, i + 1, insert = true,
-              inDv = Some(o), exDv = Some(nw))
-          }
-        }
-      (dvRetired.keySet -- dvAdded.keySet -- dataRemoves.keySet)
-        .toSeq.sorted.foreach { p =>
-          val l = dvRetired(p)
-          changed += Changed(p, pvOfPath(p), sid, i + 1, insert = true,
-            inDv = Some(fetchBlob(l.puffin, l.off, l.size)))
+          emit(p, pvOfPath(p), Some(dvRetired.get(p)), Some(dvAdded.get(p)))
         }
     }
     val outFields = schema.fields.toSeq ++ Seq(
@@ -2924,60 +2817,20 @@ object IcebergMirror {
     if (changed.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         StructType(outFields))
-    // one scan over the distinct changed files; the broadcast meta
-    // join fans each file into every (snapshot, side, DV-window) it
-    // changed in — a unit's bitmaps ride as binary columns and filter
-    // by `_metadata.row_index` through the cached-parse DvContains
-    // kernel (cache keys carry the blob GENERATION)
-    val anyDv = changed.exists(c => c.inDv.nonEmpty || c.exDv.nonEmpty)
-    val key = FileScan.keyOf(spark)
-    val metaRows = changed.toSeq.map { c =>
-      key(c.path) -> (
-        identitySources.map(src =>
-          avroPvToExternal(idToType(src), c.pvById.get(src).orNull,
-            dir)) ++
-        Seq(if (c.insert) "insert" else "delete",
-          Integer.valueOf(c.ordinal),
-          java.lang.Long.valueOf(c.snapId),
-          c.inDv.map(_._1).orNull,
-          c.inDv.map(_._2).orNull,
-          c.exDv.map(_._1).orNull,
-          c.exDv.map(_._2).orNull))
-    }
-    val metaFields =
-      identitySources.map(src => StructField(
-        s"__graft_pv_${idToName(src)}", idToType(src), true)) ++ Seq(
+    // one slice scan over the distinct changed files; each file fans
+    // out into every (snapshot, side, DV window) it changed in
+    lay.scan(changed.toSeq, lay.pvFields ++ Seq(
         StructField("__graft_ct", StringType, false),
         StructField("__graft_ord", IntegerType, false),
-        StructField("__graft_sid", LongType, false),
-        StructField("__graft_indv", BinaryType, true),
-        StructField("__graft_inkey", StringType, true),
-        StructField("__graft_exdv", BinaryType, true),
-        StructField("__graft_exkey", StringType, true))
-    val readSchema = StructType(schema.fields.map(f =>
-      StructField(physByName(f.name), f.dataType, nullable = true)))
-    // in the entering DV (if any) and not in the exiting DV (if any)
-    val dvKeep =
-      if (!anyDv) lit(true)
-      else (col("__graft_indv").isNull ||
-          FileScan.dvContains("__graft_inkey", "__graft_indv")) &&
-        (col("__graft_exdv").isNull ||
-          !FileScan.dvContains("__graft_exkey", "__graft_exdv"))
-    FileScan.joinGuarded(
-        FileScan.tag(spark.read.schema(readSchema)
-          .parquet(changed.map(_.path).distinct.toSeq: _*),
-          rowIndex = anyDv),
-        metaRows, metaFields, dvKeep, s"readIcebergChanges at $dir")
+        StructField("__graft_sid", LongType, false)),
+      s"readIcebergChanges at $dir")
       .select(outFields.map { f =>
         if (f.name == "_change_type") col("__graft_ct").as(f.name)
         else if (f.name == "_change_ordinal")
           col("__graft_ord").as(f.name)
         else if (f.name == "_commit_snapshot_id")
           col("__graft_sid").as(f.name)
-        else if (identityNames(f.name))
-          coalesce(col(physByName(f.name)),
-            col(s"__graft_pv_${f.name}")).as(f.name)
-        else col(physByName(f.name)).as(f.name)
+        else lay.column(f)
       }.toIndexedSeq: _*)
   }
 

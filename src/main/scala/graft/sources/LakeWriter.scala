@@ -295,17 +295,14 @@ object LakeWriter {
     else None
   }
 
-  /** One parquet scan per version directory, unioned, each passed
-    * through `each` (file-metadata columns resolve only directly on a
-    * scan). Grouping by version dir lets hive partition columns
-    * (col=value/ dirs under it) be recovered via basePath; a snapshot
-    * spans few version dirs. A file outside any version dir was
-    * ADOPTED IN PLACE by convertToSnapshot: its basePath is the prefix
-    * up to the first k=v DIRECTORY segment, or the parent dir when
-    * unpartitioned. */
+  /** One parquet scan per version directory. Grouping by version dir
+    * lets hive partition columns (col=value/ dirs under it) be
+    * recovered via basePath; a snapshot spans few version dirs. A file
+    * outside any version dir was ADOPTED IN PLACE by
+    * convertToSnapshot: its basePath is the prefix up to the first k=v
+    * DIRECTORY segment, or the parent dir when unpartitioned. */
   private def scanByBase(spark: SparkSession, files: Seq[String],
-      pSchema: org.apache.spark.sql.types.StructType)(
-      each: DataFrame => DataFrame): DataFrame = {
+      pSchema: org.apache.spark.sql.types.StructType): Seq[DataFrame] = {
     val root = "(.*/data/v\\d+-[^/]+)/".r
     def baseOf(f: String): String =
       root.findFirstMatchIn(f).map(_.group(1)).getOrElse {
@@ -315,17 +312,8 @@ object LakeWriter {
         else f.substring(0, f.lastIndexOf('/'))
       }
     files.groupBy(baseOf).toSeq.sortBy(_._1).map { case (base, fs) =>
-      each(spark.read.option("basePath", base).schema(pSchema)
-        .parquet(fs: _*))
-    }.reduce(_.unionByName(_))
-  }
-
-  /** The per-file deletion-vector columns a native read joins in:
-    * bitmap bytes and the DvContains cache key. */
-  private val dvFields = {
-    import org.apache.spark.sql.types.{BinaryType, StringType, StructField}
-    Seq(StructField("__graft_dv", BinaryType, true),
-      StructField("__graft_dvkey", StringType, true))
+      spark.read.option("basePath", base).schema(pSchema).parquet(fs: _*)
+    }
   }
 
   /** Read a set of snapshot data files applying the committed schema
@@ -338,35 +326,15 @@ object LakeWriter {
                         colmap: ColMapping = ColMapping.empty,
                         dvs: Map[String, InlineDv] = Map.empty)
       : DataFrame = {
-    // MERGE-ON-READ deletion vectors: only relevant when one of THESE
-    // files carries one (dvs may describe the whole version while the
-    // caller reads a pruned subset)
-    val anyDv = dvs.nonEmpty && files.exists(f => dvs.contains(baseName(f)))
     // files store PHYSICAL column names (stable across renames) —
     // scan under the physical schema, then alias back to the logical
     // names callers see. Partition columns are identity-mapped
     // (rename/drop refuse on them), so path-derived values align.
-    val scans = scanByBase(spark, files, physSchema(schema, colmap))(df =>
-      if (anyDv) FileScan.tag(df, rowIndex = true) else df)
-    val served =
-      if (!anyDv) scans
-      else {
-        // the DvContains cache key carries the bitmap DIGEST: the same
-        // file under a later (unioned) DV must never serve the first
-        // parse
-        val key = FileScan.keyOf(spark)
-        val dvRows = files.map { f =>
-          val k = key(f)
-          val d = dvs.get(baseName(f))
-          k -> Seq(d.map(_.bytes).orNull,
-            d.map(x => k + "\u0000" + x.digest).orNull)
-        }
-        FileScan.joinGuarded(scans, dvRows, dvFields,
-          col("__graft_dv").isNull ||
-            !FileScan.dvContains("__graft_dvkey", "__graft_dv"),
-          "readFiles")
-      }
-    served
+    // MERGE-ON-READ deletion vectors exclude their rows; the DV
+    // generation is the bitmap DIGEST.
+    FileScan.scan(spark, files.map(f => FileScan.Slice(f,
+        exit = dvs.get(baseName(f)).map(d => FileScan.Dv(d.bytes, d.digest)))),
+        Nil, "readFiles")(scanByBase(spark, _, physSchema(schema, colmap)))
       // the scan APPENDS path-derived partition columns regardless of
       // the schema's order — re-select so callers see committed order
       // (and logical names)
@@ -1183,8 +1151,8 @@ object LakeWriter {
       colmap: ColMapping,
       oldDvs: Map[String, InlineDv])
       : (DataFrame, org.apache.spark.sql.Column, Map[String, String]) = {
-    val scan = scanByBase(spark, candidates, physSchema(schema, colmap))(
-      FileScan.tag(_, rowIndex = true))
+    val scan = scanByBase(spark, candidates, physSchema(schema, colmap))
+      .map(FileScan.tag(_, rowIndex = true)).reduce(_ unionByName _)
     val key = FileScan.keyOf(spark)
     val fileOfKey: Map[String, String] =
       candidates.map(f => key(f) -> f).toMap
@@ -1207,8 +1175,12 @@ object LakeWriter {
             k -> Seq(d.bytes, k + "\u0000" + d.digest)
           }
         }
+        import org.apache.spark.sql.types.{BinaryType, StringType,
+          StructField}
         logical.join(org.apache.spark.sql.functions.broadcast(
-            FileScan.metaFrame(spark, dvRows, dvFields)),
+            FileScan.metaFrame(spark, dvRows, Seq(
+              StructField("__graft_dv", BinaryType, true),
+              StructField("__graft_dvkey", StringType, true)))),
           Seq(FileScan.File), "left")
       }
     (joined, oldDel, fileOfKey)

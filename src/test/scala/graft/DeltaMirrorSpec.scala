@@ -666,6 +666,27 @@ class DeltaMirrorSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("more than one"))
   }
 
+  test("change data feed refuses a deletion vector whose bitmap " +
+      "cardinality differs from its descriptor, as readDelta does") {
+    val (d, rels) = dvDataFiles("graft_delta_cdf_dvbad", Seq(0 until 10))
+    val cdfMeta = dvMeta.replace(""""configuration":{}""",
+      """"configuration":{"delta.enableChangeDataFeed":"true"}""")
+    writeLog(d, 0, Seq(dvProtocol, cdfMeta, addJson(rels(0), None)))
+    // a DELETE re-pairs the file under an inline DV of two rows whose
+    // descriptor declares five
+    val bm = DeletionVectors.serialize(Array(0L, 1L))
+    val padded = java.util.Arrays.copyOf(bm,
+      bm.length + (4 - bm.length % 4) % 4)
+    writeLog(d, 1, Seq(
+      s"""{"remove":{"path":"${rels(0)}","dataChange":true}}""",
+      addJson(rels(0), Some(dvJson("i", DeletionVectors.z85Encode(padded),
+        None, bm.length, 5)))))
+    assert(DeltaMirror.readChangeFeed(spark, d, 0, Some(0)).count() == 10L)
+    val e = intercept[Exception](
+      DeltaMirror.readChangeFeed(spark, d, 1, Some(1)).collect())
+    assert(e.getMessage.contains("cardinality"), e.getMessage)
+  }
+
   test("DVs compose with partition columns off the same broadcast") {
     val (d, rels) = dvDataFiles("graft_delta_dvpart",
       Seq(0 until 10, 10 until 20))

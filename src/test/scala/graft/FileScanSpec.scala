@@ -1,15 +1,17 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, StringType, StructField}
+import org.apache.spark.sql.types.{StringType, StructField}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.FileScan
+import graft.sources.{DeletionVectors, FileScan}
+import graft.sources.FileScan.{Dv, Slice}
 
-/** The file-keyed scan the merge-on-read readers share: the key
-  * matches Spark's `_metadata.file_path` on a name that needs
-  * escaping, and a scanned file with no metadata entry raises instead
-  * of being served. */
+/** The slice scan the merge-on-read readers share: the key matches
+  * Spark's `_metadata.file_path` on a name that needs escaping, a
+  * scanned file with no slice raises instead of being served, a file
+  * listed in several slices yields each slice's DV window with that
+  * slice's constants, and `transition` is the change readers' rule. */
 class FileScanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -27,26 +29,73 @@ class FileScanSpec extends AnyFunSuite {
     (one("x", 0 until 10), one("y", 10 until 20))
   }
 
-  private val dvFields = Seq(
-    StructField("__graft_dv", BinaryType, true),
-    StructField("__graft_dvkey", StringType, true))
+  private val tagField = Seq(StructField("tag", StringType, true))
 
-  test("joinGuarded matches keyOf to _metadata.file_path on escaped " +
-      "names, and raises on a scanned file its metadata lacks, naming " +
-      "the reader and the file") {
+  private def dv(rows: Long*): Option[Dv] =
+    Some(Dv(DeletionVectors.serialize(rows.toArray), rows.mkString(",")))
+
+  test("scan matches keyOf to _metadata.file_path on escaped names, " +
+      "and raises on a scanned file no slice names, naming the reader " +
+      "and the file") {
     val (a, b) = twoFiles()
     val key = FileScan.keyOf(spark)
-    def guarded(entries: Seq[String]) = FileScan.joinGuarded(
-      FileScan.tag(spark.read.parquet(a, b), rowIndex = false),
-      entries.map(_ -> Seq(null, null)), dvFields, lit(true),
-      "spec reader at /t")
+    // `read` scans both files whatever the slices name: a file whose
+    // key drifted from its slice's is the failure the guard catches
+    def guarded(files: Seq[String]) = FileScan.scan(spark,
+      files.map(Slice(_, Seq("t"))), tagField, "spec reader at /t")(_ =>
+      Seq(spark.read.parquet(a, b)))
     assert(key(b).contains("a%20b%25c+d"), key(b))
-    assert(guarded(Seq(key(a), key(b))).count() == 20L)
-    val e = intercept[Exception](guarded(Seq(key(a))).collect())
+    assert(guarded(Seq(a, b)).count() == 20L)
+    val e = intercept[Exception](guarded(Seq(a)).collect())
     val msg = Iterator.iterate[Throwable](e)(_.getCause)
       .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
       .mkString("\n")
     assert(msg.contains("spec reader at /t: data file " + key(b)), msg)
     assert(!msg.contains("data file " + key(a)), msg)
+  }
+
+  test("scan fans a file listed in two slices into each slice's " +
+      "window (in enter, not in exit) with that slice's constants") {
+    val (a, b) = twoFiles()
+    val got = FileScan.scan(spark, Seq(
+        Slice(a, Seq("s1"), enter = dv(1, 2, 3, 4), exit = dv(2)),
+        Slice(a, Seq("s2"), exit = dv(0, 1, 2, 3, 4, 5)),
+        Slice(b, Seq("s3"))),
+      tagField, "spec reader")(fs => Seq(spark.read.parquet(fs: _*)))
+      .select(col("id"), col("tag")).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(got.sorted == (Seq(1L, 3L, 4L).map(_ -> "s1") ++
+      (6L to 9L).map(_ -> "s2") ++ (10L to 19L).map(_ -> "s3")).sorted)
+    // no constant and no DV: no join is planned
+    val plain = FileScan.scan(spark, Seq(Slice(a), Slice(b)), Nil, "r")(
+      fs => Seq(spark.read.parquet(fs: _*)))
+    assert(plain.columns.toSeq == Seq("id"))
+    assert(plain.count() == 20L)
+  }
+
+  test("transition: the change rule for every (before, after) pair") {
+    val (o, n) = (dv(1), dv(1, 2))
+    type Side = Option[Option[Dv]]
+    type Window = (String, Option[Dv], Option[Dv])
+    val cases: Seq[((Side, Side), Seq[Window])] = Seq(
+      // add only → insert, minus the new DV
+      (None, Some(n)) -> Seq(("insert", None, n)),
+      (None, Some(None)) -> Seq(("insert", None, None)),
+      // remove only → delete, minus the old DV
+      (Some(o), None) -> Seq(("delete", None, o)),
+      (Some(None), None) -> Seq(("delete", None, None)),
+      // re-pair with a new DV → delete in (new \ old), plus insert in
+      // (old \ new) when an old DV exists
+      (Some(o), Some(n)) -> Seq(("delete", n, o), ("insert", o, n)),
+      (Some(None), Some(n)) -> Seq(("delete", n, None)),
+      // DV retired → insert in old
+      (Some(o), Some(None)) -> Seq(("insert", o, None)),
+      // same-path re-add, no DV on either side → whole delete + insert
+      (Some(None), Some(None)) ->
+        Seq(("delete", None, None), ("insert", None, None)),
+      (None, None) -> Nil)
+    cases.foreach { case ((before, after), want) =>
+      assert(FileScan.transition(before, after) == want, (before, after))
+    }
   }
 }

@@ -1307,6 +1307,79 @@ class IcebergMirrorSpec extends AnyFunSuite {
       .count() == 0L)
   }
 
+  /** v3 manifest entry schema: the base fields + 143/144/145. */
+  private val dvEntrySchema = new Schema.Parser().parse(
+    """{"type":"record","name":"manifest_entry","fields":[
+      {"name":"status","type":"int","field-id":0},
+      {"name":"snapshot_id","type":["null","long"],"default":null,"field-id":1},
+      {"name":"sequence_number","type":["null","long"],"default":null,"field-id":3},
+      {"name":"data_file","type":{"type":"record","name":"r2","fields":[
+        {"name":"content","type":"int","field-id":134},
+        {"name":"file_path","type":"string","field-id":100},
+        {"name":"file_format","type":"string","field-id":101},
+        {"name":"partition","type":{"type":"record","name":"r102","fields":[]},"field-id":102},
+        {"name":"record_count","type":"long","field-id":103},
+        {"name":"file_size_in_bytes","type":"long","field-id":104},
+        {"name":"referenced_data_file","type":["null","string"],"default":null,"field-id":143},
+        {"name":"content_offset","type":["null","long"],"default":null,"field-id":144},
+        {"name":"content_size_in_bytes","type":["null","long"],"default":null,"field-id":145}
+      ]},"field-id":2}]}""")
+
+  /** An added (status 1) v3 manifest entry stamped `sid`: a parquet
+    * data file, or with `refd` a puffin DV blob at (`off`, `sz`)
+    * deleting from data file `refd`; `n` is its record_count. */
+  private def dvEntry(sid: Long, seq: Long, path: String, n: Long,
+      refd: String = null, off: Long = -1, sz: Long = -1): GenericRecord = {
+    val e = new GenericData.Record(dvEntrySchema)
+    e.put("status", Integer.valueOf(1))
+    e.put("snapshot_id", java.lang.Long.valueOf(sid))
+    e.put("sequence_number", java.lang.Long.valueOf(seq))
+    val dfS = dvEntrySchema.getField("data_file").schema()
+    val df = new GenericData.Record(dfS)
+    df.put("content", Integer.valueOf(if (refd != null) 1 else 0))
+    df.put("file_path", path)
+    df.put("file_format", if (refd != null) "PUFFIN" else "PARQUET")
+    df.put("partition",
+      new GenericData.Record(dfS.getField("partition").schema()))
+    df.put("record_count", java.lang.Long.valueOf(n))
+    df.put("file_size_in_bytes", java.lang.Long.valueOf(1L))
+    if (refd != null) {
+      df.put("referenced_data_file", refd)
+      df.put("content_offset", java.lang.Long.valueOf(off))
+      df.put("content_size_in_bytes", java.lang.Long.valueOf(sz))
+    }
+    e.put("data_file", df)
+    e
+  }
+
+  /** A puffin file holding one deletion-vector blob (at offset 4)
+    * deleting `rows` of data file `refd`; returns the blob's length. */
+  private def writePuffin(path: String, refd: String,
+                          rows: Array[Long]): Long = {
+    val vec = graft.sources.DeletionVectors.serialize(rows)
+    val crc = new java.util.zip.CRC32(); crc.update(vec)
+    val blob = java.nio.ByteBuffer.allocate(vec.length + 8)
+    blob.putInt(vec.length); blob.put(vec)
+    blob.putInt(crc.getValue.toInt)
+    val magic = Array[Byte]('P', 'F', 'A', '1')
+    val payload =
+      (s"""{"blobs":[{"type":"deletion-vector-v1","fields":[],""" +
+        s""""snapshot-id":101,"sequence-number":2,"offset":4,""" +
+        s""""length":${vec.length + 8},"properties":{""" +
+        s""""referenced-data-file":"$refd","cardinality":""" +
+        s""""${rows.length}"}}],"properties":{}}""").getBytes("UTF-8")
+    val footer = java.nio.ByteBuffer
+      .allocate(4 + payload.length + 12)
+    footer.put(magic).put(payload)
+    footer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(payload.length)
+    footer.putInt(0); footer.put(magic)
+    val out = new java.io.FileOutputStream(path)
+    out.write(magic); out.write(blob.array()); out.write(footer.array())
+    out.close()
+    vec.length + 8L
+  }
+
   test("v3 deletion vectors: puffin blob parse + row filter, at-most-" +
       "one and CRC refusals, row-lineage/initial-default refusals") {
     val t = freshDir("graft_ice_v3dv") + "/t"
@@ -1320,77 +1393,14 @@ class IcebergMirrorSpec extends AnyFunSuite {
     }
     val (fa, nA) = slice("fa", 0, 20)
     // puffin with one DV blob deleting rows 3, 7, 15 of fa
-    val vec = graft.sources.DeletionVectors.serialize(
-      Array(3L, 7L, 15L))
-    val crc = new java.util.zip.CRC32(); crc.update(vec)
-    val blob = java.nio.ByteBuffer.allocate(vec.length + 8)
-    blob.putInt(vec.length); blob.put(vec)
-    blob.putInt(crc.getValue.toInt)
-    val magic = Array[Byte]('P', 'F', 'A', '1')
-    val payload =
-      (s"""{"blobs":[{"type":"deletion-vector-v1","fields":[],""" +
-        s""""snapshot-id":101,"sequence-number":2,"offset":4,""" +
-        s""""length":${vec.length + 8},"properties":{""" +
-        s""""referenced-data-file":"$fa","cardinality":"3"}}],""" +
-        """"properties":{}}""").getBytes("UTF-8")
-    val footer = java.nio.ByteBuffer
-      .allocate(4 + payload.length + 12)
-    footer.put(magic).put(payload)
-    footer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      .putInt(payload.length)
-    footer.putInt(0); footer.put(magic)
     val puffin = s"$t/data/dv.puffin"
-    val out = new java.io.FileOutputStream(puffin)
-    out.write(magic); out.write(blob.array()); out.write(footer.array())
-    out.close()
-    // v3 entry schema: the base fields + 143/144/145
-    val dvEntrySchema = new Schema.Parser().parse(
-      """{"type":"record","name":"manifest_entry","fields":[
-        {"name":"status","type":"int","field-id":0},
-        {"name":"snapshot_id","type":["null","long"],"default":null,"field-id":1},
-        {"name":"sequence_number","type":["null","long"],"default":null,"field-id":3},
-        {"name":"data_file","type":{"type":"record","name":"r2","fields":[
-          {"name":"content","type":"int","field-id":134},
-          {"name":"file_path","type":"string","field-id":100},
-          {"name":"file_format","type":"string","field-id":101},
-          {"name":"partition","type":{"type":"record","name":"r102","fields":[]},"field-id":102},
-          {"name":"record_count","type":"long","field-id":103},
-          {"name":"file_size_in_bytes","type":"long","field-id":104},
-          {"name":"referenced_data_file","type":["null","string"],"default":null,"field-id":143},
-          {"name":"content_offset","type":["null","long"],"default":null,"field-id":144},
-          {"name":"content_size_in_bytes","type":["null","long"],"default":null,"field-id":145}
-        ]},"field-id":2}]}""")
-    def entry(content: Int, seq: Long, path: String, n: Long,
-        refd: String = null, off: Long = -1, sz: Long = -1)
-        : GenericRecord = {
-      val e = new GenericData.Record(dvEntrySchema)
-      e.put("status", Integer.valueOf(1))
-      e.put("snapshot_id", java.lang.Long.valueOf(101L))
-      e.put("sequence_number", java.lang.Long.valueOf(seq))
-      val dfS = dvEntrySchema.getField("data_file").schema()
-      val df = new GenericData.Record(dfS)
-      df.put("content", Integer.valueOf(content))
-      df.put("file_path", path)
-      df.put("file_format",
-        if (refd != null) "PUFFIN" else "PARQUET")
-      df.put("partition",
-        new GenericData.Record(dfS.getField("partition").schema()))
-      df.put("record_count", java.lang.Long.valueOf(n))
-      df.put("file_size_in_bytes", java.lang.Long.valueOf(1L))
-      if (refd != null) {
-        df.put("referenced_data_file", refd)
-        df.put("content_offset", java.lang.Long.valueOf(off))
-        df.put("content_size_in_bytes", java.lang.Long.valueOf(sz))
-      }
-      e.put("data_file", df)
-      e
-    }
+    val blobLen = writePuffin(puffin, fa, Array(3L, 7L, 15L))
     val m1 = s"$t/metadata/m1.avro"
     val m1len = writeAvro(m1, dvEntrySchema,
-      Seq(entry(0, 1L, fa, nA)))
+      Seq(dvEntry(101L, 1L, fa, nA)))
     val md = s"$t/metadata/md.avro"
     val mdLen = writeAvro(md, dvEntrySchema, Seq(
-      entry(1, 2L, puffin, 3L, fa, 4L, vec.length + 8L)))
+      dvEntry(101L, 2L, puffin, 3L, fa, 4L, blobLen)))
     val ml = s"$t/metadata/snap-101.avro"
     val mdRec = foreignListRec(md, mdLen, 101L, 2L, content = 1)
     writeAvro(ml, foreignListSchema,
@@ -1455,8 +1465,8 @@ class IcebergMirrorSpec extends AnyFunSuite {
     publish("")
     val md2 = s"$t/metadata/md2.avro"
     val md2Len = writeAvro(md2, dvEntrySchema, Seq(
-      entry(1, 2L, puffin, 3L, fa, 4L, vec.length + 8L),
-      entry(1, 2L, puffin, 3L, fa, 4L, vec.length + 8L)))
+      dvEntry(101L, 2L, puffin, 3L, fa, 4L, blobLen),
+      dvEntry(101L, 2L, puffin, 3L, fa, 4L, blobLen)))
     val md2Rec = foreignListRec(md2, md2Len, 101L, 2L, content = 1)
     writeAvro(ml, foreignListSchema,
       Seq(foreignListRec(m1, m1len, 101L, 1L), md2Rec))
@@ -1473,6 +1483,74 @@ class IcebergMirrorSpec extends AnyFunSuite {
     val e4 = intercept[RuntimeException](
       IcebergMirror.readIceberg(spark, t))
     assert(e4.getMessage.contains("checksum"))
+  }
+
+  test("changelog refuses a deletion vector whose cardinality differs " +
+      "from its manifest entry's record_count, as readIceberg does") {
+    val t = freshDir("graft_ice_cdf_dvbad") + "/t"
+    spark.range(0, 20).toDF("doc_id")
+      .withColumn("payload", concat(lit("p"), $"doc_id"))
+      .coalesce(1).write.parquet(s"$t/data/fa")
+    val fa = new java.io.File(s"$t/data/fa").listFiles()
+      .find(_.getName.endsWith(".parquet")).get.getAbsolutePath
+    // snapshot 100 adds fa; snapshot 101 adds a DV deleting 3 rows of
+    // it whose entry declares record_count 5
+    val puffin = s"$t/data/dv.puffin"
+    val blobLen = writePuffin(puffin, fa, Array(3L, 7L, 15L))
+    val m1 = s"$t/metadata/m1.avro"
+    val m1Len = writeAvro(m1, dvEntrySchema,
+      Seq(dvEntry(100L, 1L, fa, 20L)))
+    val md = s"$t/metadata/md.avro"
+    val mdLen = writeAvro(md, dvEntrySchema,
+      Seq(dvEntry(101L, 2L, puffin, 5L, fa, 4L, blobLen)))
+    val ml0 = s"$t/metadata/snap-100.avro"
+    writeAvro(ml0, foreignListSchema,
+      Seq(foreignListRec(m1, m1Len, 100L, 1L)))
+    val ml1 = s"$t/metadata/snap-101.avro"
+    writeAvro(ml1, foreignListSchema, Seq(
+      foreignListRec(m1, m1Len, 100L, 1L),
+      foreignListRec(md, mdLen, 101L, 2L, content = 1)))
+    val meta = s"""{
+      "format-version": 3,
+      "table-uuid": "00000000-0000-0000-0000-00000000d4d4",
+      "location": "$t",
+      "last-sequence-number": 2,
+      "last-updated-ms": 1700000002000,
+      "last-column-id": 2,
+      "current-schema-id": 0,
+      "schemas": [{"type":"struct","schema-id":0,"fields":[
+        {"id":1,"name":"doc_id","required":false,"type":"long"},
+        {"id":2,"name":"payload","required":false,"type":"string"}]}],
+      "default-spec-id": 0,
+      "partition-specs": [{"spec-id":0,"fields":[]}],
+      "last-partition-id": 999,
+      "default-sort-order-id": 0,
+      "sort-orders": [{"order-id":0,"fields":[]}],
+      "properties": {},
+      "current-snapshot-id": 101,
+      "snapshots": [
+        {"snapshot-id":100,"sequence-number":1,
+         "timestamp-ms":1700000001000,"manifest-list":"$ml0",
+         "summary":{"operation":"append"},"schema-id":0},
+        {"snapshot-id":101,"parent-snapshot-id":100,"sequence-number":2,
+         "timestamp-ms":1700000002000,"manifest-list":"$ml1",
+         "summary":{"operation":"delete"},"schema-id":0}],
+      "snapshot-log": [
+        {"timestamp-ms":1700000001000,"snapshot-id":100},
+        {"timestamp-ms":1700000002000,"snapshot-id":101}],
+      "metadata-log": []
+    }"""
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$t/metadata/v1.metadata.json"),
+      meta.getBytes("UTF-8"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$t/metadata/version-hint.text"),
+      "1".getBytes("UTF-8"))
+    val e1 = intercept[Exception](IcebergMirror.readIceberg(spark, t))
+    assert(e1.getMessage.contains("holds 3 rows"), e1.getMessage)
+    val e2 = intercept[Exception](
+      IcebergMirror.readIcebergChanges(spark, t, 100L, 101L).collect())
+    assert(e2.getMessage.contains("holds 3 rows"), e2.getMessage)
   }
 
   test("maxLiveFiles ceiling refuses loudly before the driver holds " +
