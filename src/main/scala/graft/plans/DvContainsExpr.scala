@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * vector marks are logically deleted and must not be served.
   *
   * Why native (and why the file-key argument): the serialized bitmap
-  * arrives as a per-file BINARY column off the same broadcast join
-  * that attaches partition values, so a naive expression would
+  * arrives as a per-file BINARY `_metadata` constant of the slice
+  * scan ([[graft.sources.FileScan]]), so a naive expression would
   * deserialize the bitmap PER ROW — O(bitmap) work per row. Rows of
   * one parquet file arrive consecutively within a scan partition, so
   * a one-entry cache keyed by the (short) file path makes the parse

@@ -1678,7 +1678,7 @@ object DeltaMirror {
           StructField("__graft_ct", StringType, true),
           StructField("__graft_ver", LongType, false),
           StructField("__graft_ts", LongType, false)),
-        s"readChangeFeed at $dir", if (!withCt) Nil
+        if (!withCt) Nil
           else Seq(StructField("_change_type", StringType, true)))
         .select(outFields.map { f =>
           if (f.name == "_commit_version") col("__graft_ver").as(f.name)
@@ -1869,15 +1869,15 @@ object DeltaMirror {
     * loudly instead of returning a partial table. Partition columns
     * materialize from each add action's `partitionValues` — the
     * protocol's authoritative source — so non-hive file layouts
-    * (delta-rs, compacted tables) read correctly; the values attach
-    * via one broadcast map-side join on `_metadata.file_path`, never
-    * a shuffle. Works on any classic- or multi-part-checkpoint/JSON
+    * (delta-rs, compacted tables) read correctly; the values ride as
+    * per-file `_metadata` constants of one [[FileScan.scan]], never a
+    * join. Works on any classic- or multi-part-checkpoint/JSON
     * Delta table, not just mirrored ones — the IMPORT direction of
     * the bridge (graft reads a Delta table some other engine wrote,
     * no jars). DELETION VECTORS (default-on in modern Delta writers)
     * resolve natively: each DV-carrying add's roaring bitmap is read
-    * and CRC-verified driver-side ([[DeletionVectors]]), rides the
-    * same broadcast, and logically-deleted rows filter out by
+    * and CRC-verified driver-side ([[DeletionVectors]]), rides as a
+    * constant of the same scan, and logically-deleted rows filter out by
     * `_metadata.row_index` through a cached-parse native kernel
     * ([[graft.plans.DvContains]]). V2 CHECKPOINTS (UUID-named top
     * file + `_sidecars/` action files, parquet or json top) resolve
@@ -1985,14 +1985,12 @@ object DeltaMirror {
     /** [[FileScan.scan]] of data files under their physical names plus
       * `extra` stored columns. */
     def scan(spark: SparkSession, slices: Seq[FileScan.Slice],
-             fields: Seq[StructField], reader: String,
-             extra: Seq[StructField] = Nil): DataFrame = {
-      val readSchema = StructType(
+             fields: Seq[StructField],
+             extra: Seq[StructField] = Nil): DataFrame =
+      FileScan.scan(spark, slices, StructType(
         schema.fields.filterNot(f => partSet(f.name)).map(f =>
-          f.copy(name = physOf(f.name), metadata = Metadata.empty)) ++ extra)
-      FileScan.scan(spark, slices, fields, reader)(files =>
-        Seq(spark.read.schema(readSchema).parquet(files: _*)))
-    }
+          f.copy(name = physOf(f.name), metadata = Metadata.empty)) ++ extra),
+        fields)
     def column(f: StructField): org.apache.spark.sql.Column =
       if (partSet(f.name))
         col(s"__graft_pv_${f.name}").cast(f.dataType).as(f.name)
@@ -2150,7 +2148,7 @@ object DeltaMirror {
         val info = st.live(k)
         FileScan.Slice(lay.absOf(k._1), lay.pvConsts(info.partitionValues),
           exit = info.dv.map(loadDv(k._1, _)))
-      }, lay.pvFields, s"readDelta at $dir")
+      }, lay.pvFields)
       .select(schema.fields.map(lay.column).toIndexedSeq: _*)
   }
 }

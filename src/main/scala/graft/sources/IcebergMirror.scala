@@ -9,7 +9,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -47,8 +47,8 @@ import org.json4s.jackson.JsonMethods
   * live data files — and serves it as a DataFrame. Identity-partition
   * values follow the spec's column-projection rule: a source column
   * missing from a data file resolves from the file's own partition
-  * metadata (broadcast-joined on `_metadata.file_path`, coalesced
-  * with file-stored values so foreign layouts that DO materialize the
+  * metadata (served as a per-file `_metadata` constant of the one
+  * slice scan, coalesced with file-stored values so foreign layouts that DO materialize the
   * column read identically). The reader REFUSES what it cannot serve
   * correctly — format v3+, row-level delete manifests, non-parquet
   * data files, renamed columns with no name mapping — rather than
@@ -2106,12 +2106,10 @@ object IcebergMirror {
       StructField(s"__graft_pv_${idToName(src)}", idToType(src), true))
     /** [[FileScan.scan]] of data files under their physical names. */
     def scan(slices: Seq[FileScan.Slice], fields: Seq[StructField],
-             reader: String, rowIndex: Boolean = false): DataFrame = {
-      val readSchema = StructType(schema.fields.map(f =>
-        StructField(physByName(f.name), f.dataType, nullable = true)))
-      FileScan.scan(spark, slices, fields, reader, rowIndex)(files =>
-        Seq(spark.read.schema(readSchema).parquet(files: _*)))
-    }
+             rowIndex: Boolean = false): DataFrame =
+      FileScan.scan(spark, slices, StructType(schema.fields.map(f =>
+        StructField(physByName(f.name), f.dataType, nullable = true))),
+        fields, rowIndex = rowIndex)
     /** The spec's column projection: the file value when the column
       * is materialized in the file, the identity partition value
       * otherwise. */
@@ -2448,7 +2446,6 @@ object IcebergMirror {
 
     // (typed partition values, stored path, data sequence, spec) ride
     // the slices when an identity column or a delete file needs them
-    val key = FileScan.keyOf(spark)
     val withMeta = identitySources.nonEmpty || posDels.nonEmpty ||
       eqDels.nonEmpty
     val joined = lay.scan(live.values.toSeq.map { lv =>
@@ -2462,29 +2459,23 @@ object IcebergMirror {
         Seq(StructField("__graft_stored", StringType, true),
           StructField("__graft_seq", LongType, true),
           StructField("__graft_specid", IntegerType, true)),
-      s"readIceberg at $dir", rowIndex = posDels.nonEmpty)
+      rowIndex = posDels.nonEmpty)
     // POSITION DELETES (merge-on-read): delete rows are DATA-scale —
     // they scan distributedly and anti-join the base on
     // (data file, row index), never through the driver. A delete
     // row's file_path must equal the data file's file_path as the
     // metadata records it (the spec's matching rule), so delete rows
-    // key through a broadcast stored-path -> canonical-file map; the
-    // sequence-number guard (a delete applies only to data files with
-    // data_seq <= the delete's) rides the same join condition.
+    // join the data file's stored path; the sequence-number guard (a
+    // delete applies only to data files with data_seq <= the
+    // delete's, a constant of each delete file's slice) rides the
+    // same join condition.
     val afterPos =
       if (posDels.isEmpty) joined
       else {
-        val delMeta = posDels.toSeq.map(pd =>
-          Row(key(pd.path), java.lang.Long.valueOf(pd.seq)))
-        val delMetaDf = spark.createDataFrame(delMeta.asJava,
-          StructType(Seq(
-            StructField("__graft_dfile", StringType, false),
-            StructField("__del_seq", LongType, false))))
-        val dels = spark.read
-          .schema("file_path string, pos long")
-          .parquet(posDels.map(_.path).toSeq: _*)
-          .withColumn("__graft_dfile", col("_metadata.file_path"))
-          .join(broadcast(delMetaDf), Seq("__graft_dfile"))
+        val dels = FileScan.scan(spark, posDels.toSeq.map(pd =>
+            FileScan.Slice(pd.path, Seq(java.lang.Long.valueOf(pd.seq)))),
+            StructType.fromDDL("file_path string, pos long"),
+            Seq(StructField("__del_seq", LongType, false)))
           .select(col("file_path").as("__del_stored"),
             col("pos").as("__del_pos"), col("__del_seq"))
         joined.join(dels,
@@ -2508,27 +2499,18 @@ object IcebergMirror {
         val delReadSchema = StructType(eqIds.map(id => StructField(
           physByName(idToName(id)), idToType(id), nullable = true)))
         val pvCols = identitySources.map(idToName)
-        val delMeta = group.map { ed =>
-          Row.fromSeq((key(ed.path) +:
-            java.lang.Long.valueOf(ed.seq) +:
-            java.lang.Boolean.valueOf(ed.scoped) +:
-            Integer.valueOf(ed.specId) +:
-            identitySources.map(src =>
-              avroPvToExternal(idToType(src), ed.pvById.get(src).orNull,
-                dir))))
-        }
-        val delMetaDf = spark.createDataFrame(delMeta.asJava,
-          StructType(
-            Seq(StructField("__graft_dfile", StringType, false),
-              StructField("__del_seq", LongType, false),
-              StructField("__del_scoped", BooleanType, false),
-              StructField("__del_specid", IntegerType, false)) ++
-            identitySources.map(src => StructField(
-              s"__del_pv_${idToName(src)}", idToType(src), true))))
-        val dels = spark.read.schema(delReadSchema)
-          .parquet(group.map(_.path): _*)
-          .withColumn("__graft_dfile", col("_metadata.file_path"))
-          .join(broadcast(delMetaDf), Seq("__graft_dfile"))
+        val dels = FileScan.scan(spark, group.map(ed =>
+            FileScan.Slice(ed.path, java.lang.Long.valueOf(ed.seq) +:
+              java.lang.Boolean.valueOf(ed.scoped) +:
+              Integer.valueOf(ed.specId) +:
+              identitySources.map(src => avroPvToExternal(idToType(src),
+                ed.pvById.get(src).orNull, dir)))),
+          delReadSchema,
+          Seq(StructField("__del_seq", LongType, false),
+            StructField("__del_scoped", BooleanType, false),
+            StructField("__del_specid", IntegerType, false)) ++
+          identitySources.map(src => StructField(
+            s"__del_pv_${idToName(src)}", idToType(src), true)))
         val eqCond = eqNames.map { n =>
           // compare the PROJECTED data value (identity partition
           // columns may live only in metadata) against the delete row
@@ -2822,8 +2804,7 @@ object IcebergMirror {
     lay.scan(changed.toSeq, lay.pvFields ++ Seq(
         StructField("__graft_ct", StringType, false),
         StructField("__graft_ord", IntegerType, false),
-        StructField("__graft_sid", LongType, false)),
-      s"readIcebergChanges at $dir")
+        StructField("__graft_sid", LongType, false)))
       .select(outFields.map { f =>
         if (f.name == "_change_type") col("__graft_ct").as(f.name)
         else if (f.name == "_change_ordinal")

@@ -3,8 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{coalesce, col, expr, greatest,
-  input_file_name, least, lit, max, min, regexp_extract, shiftleft,
-  shiftright, when}
+  least, lit, max, min, shiftleft, shiftright, when}
 
 /** Sink layer: lakehouse-style table maintenance over native parquet.
   *
@@ -295,52 +294,87 @@ object LakeWriter {
     else None
   }
 
-  /** One parquet scan per version directory. Grouping by version dir
-    * lets hive partition columns (col=value/ dirs under it) be
-    * recovered via basePath; a snapshot spans few version dirs. A file
-    * outside any version dir was ADOPTED IN PLACE by
-    * convertToSnapshot: its basePath is the prefix up to the first k=v
-    * DIRECTORY segment, or the parent dir when unpartitioned. */
-  private def scanByBase(spark: SparkSession, files: Seq[String],
-      pSchema: org.apache.spark.sql.types.StructType): Seq[DataFrame] = {
-    val root = "(.*/data/v\\d+-[^/]+)/".r
-    def baseOf(f: String): String =
-      root.findFirstMatchIn(f).map(_.group(1)).getOrElse {
-        val segs = f.split('/')
-        val i = segs.indexWhere(_.contains("="))
-        if (i >= 0 && i < segs.length - 1) segs.take(i).mkString("/")
-        else f.substring(0, f.lastIndexOf('/'))
+  private val VersionDir = "^.*/data/v\\d+-[^/]+/".r
+
+  /** The hive partition of a data file, read from its PATH: the
+    * `k=v` directory segments below the version directory it was
+    * written into — or, for a file ADOPTED IN PLACE by
+    * convertToSnapshot, from its first `k=v` directory on — as
+    * (unescaped column, raw value) pairs in path order. */
+  private def pathPartition(file: String): Seq[(String, String)] = {
+    val rel = VersionDir.findFirstMatchIn(file).map(m => file.substring(m.end))
+      .getOrElse {
+        val segs = file.split('/')
+        segs.drop(math.max(0, segs.indexWhere(_.contains("=")))).mkString("/")
       }
-    files.groupBy(baseOf).toSeq.sortBy(_._1).map { case (base, fs) =>
-      spark.read.option("basePath", base).schema(pSchema).parquet(fs: _*)
+    rel.split('/').toSeq.dropRight(1).filter(_.contains("=")).map { seg =>
+      val i = seg.indexOf('=')
+      ExternalCatalogUtils.unescapePathName(seg.take(i)) -> seg.drop(i + 1)
     }
   }
 
-  /** Read a set of snapshot data files applying the committed schema
-    * to every version-dir group of [[scanByBase]]: without it,
-    * partition-column type INFERENCE can drift per group (day=1 →
-    * int, day=x → string) and break the union — the manifest, not
-    * inference, owns the types. */
+  /** Read a set of snapshot data files as ONE [[FileScan.scan]] under
+    * the committed schema: the manifest, not inference, owns the
+    * types. Files store PHYSICAL column names (stable across renames):
+    * they scan under the physical schema and alias back to the logical
+    * names callers see, in committed order. Partition columns are
+    * identity-mapped (rename/drop refuse on them); their values come
+    * from each file's path, typed by the committed schema
+    * (`__HIVE_DEFAULT_PARTITION__` reads as null). A file that
+    * predates the partition spec carries those columns as data and
+    * scans in a second scan of its own. MERGE-ON-READ deletion vectors
+    * exclude their rows (generation: the bitmap DIGEST); `lengths`
+    * (by basename) spares the stat of every file it names. `fields`
+    * and `consts` add per-file constant columns, `rowIndex` the
+    * [[FileScan.RowIndex]]. */
   private def readFiles(spark: SparkSession, files: Seq[String],
                         schema: org.apache.spark.sql.types.StructType,
                         colmap: ColMapping = ColMapping.empty,
-                        dvs: Map[String, InlineDv] = Map.empty)
-      : DataFrame = {
-    // files store PHYSICAL column names (stable across renames) —
-    // scan under the physical schema, then alias back to the logical
-    // names callers see. Partition columns are identity-mapped
-    // (rename/drop refuse on them), so path-derived values align.
-    // MERGE-ON-READ deletion vectors exclude their rows; the DV
-    // generation is the bitmap DIGEST.
-    FileScan.scan(spark, files.map(f => FileScan.Slice(f,
-        exit = dvs.get(baseName(f)).map(d => FileScan.Dv(d.bytes, d.digest)))),
-        Nil, "readFiles")(scanByBase(spark, _, physSchema(schema, colmap)))
-      // the scan APPENDS path-derived partition columns regardless of
-      // the schema's order — re-select so callers see committed order
-      // (and logical names)
-      .select(schema.fieldNames.map(n =>
-        org.apache.spark.sql.functions.col(colmap.phys(n)).as(n)).toSeq: _*)
+                        dvs: Map[String, InlineDv] = Map.empty,
+                        lengths: Map[String, Long] = Map.empty,
+                        fields: Seq[org.apache.spark.sql.types.StructField] = Nil,
+                        consts: String => Seq[Any] = _ => Nil,
+                        rowIndex: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.PartitioningUtils
+    import org.apache.spark.sql.types.StructType
+    val pSchema = physSchema(schema, colmap)
+    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+    val parts = files.map(f => f -> pathPartition(f)
+      .filter(kv => pSchema.fieldNames.contains(kv._1))).toMap
+    files.groupBy(f => parts(f).map(_._1)).toSeq.sortBy(_._1.size)
+      .map { case (keys, group) =>
+        FileScan.scan(spark, group.map { f =>
+            FileScan.Slice(f, consts(f),
+              exit = dvs.get(baseName(f)).map(d => FileScan.Dv(d.bytes, d.digest)),
+              length = lengths.getOrElse(baseName(f), -1L),
+              partition = parts(f).map { case (k, raw) =>
+                PartitioningUtils.castPartValueToDesiredType(
+                  pSchema(k).dataType, raw, zone) })
+          }, StructType(pSchema.filterNot(f => keys.contains(f.name))), fields,
+          StructType(keys.map(pSchema(_))), rowIndex)
+      }.reduce(_ unionByName _)
+      .select(schema.fieldNames.toSeq.map(n => col(colmap.phys(n)).as(n)) ++
+        (fields.map(_.name) ++ Seq(FileScan.RowIndex).filter(_ => rowIndex))
+          .map(col): _*)
   }
+
+  /** [[readFiles]] of `files` of manifest `m`, under its schema,
+    * column mapping, DVs and lengths. */
+  private def readManifest(spark: SparkSession, m: Manifest,
+                           files: Seq[String]): DataFrame =
+    readFiles(spark, files, m.schema, m.colmap, m.dvs, m.lengths)
+
+  /** [[readManifest]] whose rows carry their file's basename, a
+    * per-file constant, as [[MorFile]]. */
+  private def readKeyed(spark: SparkSession, m: Manifest,
+                        files: Seq[String]): DataFrame =
+    readFiles(spark, files, m.schema, m.colmap, m.dvs, m.lengths,
+      Seq(org.apache.spark.sql.types.StructField(MorFile,
+        org.apache.spark.sql.types.StringType)), f => Seq(baseName(f)))
+
+  /** The basenames of the files [[readKeyed]] `rows` come from. */
+  private def filesOf(rows: DataFrame): Set[String] =
+    rows.select(MorFile).distinct().collect().map(_.getString(0)).toSet
 
   /** The wider of two types along the lossless promotion chains the
     * parquet reader supports natively (byte→short→int→long,
@@ -546,63 +580,22 @@ object LakeWriter {
         f.dataType.catalogString).mkString(", "))
     require(keyCols.forall(cols.contains),
       s"key columns ${keyCols.filterNot(cols.contains)} not in table")
-    if (partCols.nonEmpty)
-      return mergePartitioned(updates, table, keyCols, pm, txn)
     // a partitioned snapshot committed by a pre-`partcols` manifest
     // keeps partition values in PATHS the flat probe below cannot see —
     // refuse loudly rather than lose those columns. Columns absent
     // from a leaf file but NOT in any path are legitimate schema
     // evolution (added by a later append; null on read), so the check
     // is path-presence, not bare set equality.
-    val leafCols = footerColumns(spark, files.head)
-    val inPaths = (cols.toSet -- leafCols).filter(c =>
-      files.head.contains("/" + c + "="))
-    require(inPaths.isEmpty,
-      s"mergeSnapshot: snapshot is hive-partitioned (columns " +
-        s"$inPaths live in paths) but its manifest " +
-        "predates partition metadata; re-commit via commitSnapshotDynamic")
-    val keyExprs = keyCols.map(col)
-    val (colmap, dvs) = (pm.colmap, pm.dvs)
-    // readFiles applies the COMMITTED schema so mixed-schema file sets
-    // (evolved tables) read uniformly — missing columns come back null
-    // the updates key sliver joins UN-deduplicated (r18): the probe's
-    // result rides through the __file distinct regardless of duplicate
-    // keys, and a left-anti join is duplicate-insensitive on its right
-    // side — the defensive per-join `.distinct()` cost one exchange +
-    // double aggregate (an extra AQE stage round per action) on every
-    // merge commit. Callers own the one-row-per-key contract (rows
-    // land verbatim), exactly like MERGE INTO.
-    val touched = readFiles(spark, files, schema, colmap, dvs)
-      .select(keyExprs :+
-        regexp_extract(input_file_name(), "[^/]+$", 0).as("__file"): _*)
-      .join(updates.select(keyExprs: _*), keyCols)
-      .select(col("__file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val (rewrite, carry) = files.partition(f => touched(baseName(f)))
-    val survivors =
-      if (rewrite.isEmpty) None
-      else Some(readFiles(spark, rewrite, schema, colmap, dvs)
-        .join(updates.select(keyExprs: _*), keyCols, "left_anti"))
-    val newData = survivors
-      .map(_.select(cols.map(col): _*)
-        .unionByName(updates.select(cols.map(col): _*)))
-      .getOrElse(updates.select(cols.map(col): _*))
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    val version = prev.last + 1
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir =
-      new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
-    withMicrosTimestamps(spark) {
-      toPhysical(newData, colmap).write.mode("errorifexists")
-        .parquet(dataDir.toString) }
-    val newFiles = fs.listStatus(dataDir).toSeq
-      .map(_.getPath.toString).filter(_.endsWith(".parquet")).sorted
-    enforceChecks(spark, pm.checks,
-      newFiles, newData.schema, fs, Seq(dataDir), colmap)
-    writeManifest(spark, fs, table, Some(pm), version, "merge",
-      newData.schema, carry ++ newFiles, txnOverride = txn,
-      mergeKeys = keyCols)
-    version
+    if (partCols.isEmpty) {
+      val leafCols = footerSchema(spark, files.head).fieldNames.toSet
+      val inPaths = (cols.toSet -- leafCols).filter(c =>
+        files.head.contains("/" + c + "="))
+      require(inPaths.isEmpty,
+        s"mergeSnapshot: snapshot is hive-partitioned (columns " +
+          s"$inPaths live in paths) but its manifest " +
+          "predates partition metadata; re-commit via commitSnapshotDynamic")
+    }
+    mergeCopyOnWrite(updates, table, keyCols, pm, txn)
   }
 
   /** MERGE-ON-READ MERGE (upsert by key): the matched old rows retire
@@ -668,7 +661,7 @@ object LakeWriter {
       new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
     // the update rows land FIRST (they are needed in every non-COW
     // outcome, and on a partitioned table their paths drive the
-    // partition pruning below, exactly like mergePartitioned)
+    // partition pruning below, exactly like mergeCopyOnWrite)
     withMicrosTimestamps(spark) {
       val w = toPhysical(updates.select(cols.map(col): _*), colmap)
         .write.mode("errorifexists")
@@ -685,8 +678,8 @@ object LakeWriter {
     val keyD =
       if (newFiles.isEmpty) // zero update rows landed: empty key set
         updates.select(keyExprs: _*).limit(0)
-      else readFiles(spark, newFiles, schema, colmap,
-        Map.empty[String, InlineDv]).select(keyExprs: _*).distinct()
+      else readFiles(spark, newFiles, schema, colmap)
+        .select(keyExprs: _*).distinct()
     // candidate pruning: partition values (sound only when every
     // partition column is a merge key), then the key-sliver probe —
     // read THROUGH the old DVs so an already-deleted row cannot flag
@@ -699,12 +692,7 @@ object LakeWriter {
       } else files
     val touched =
       if (partPruned.isEmpty) Set.empty[String]
-      else readFiles(spark, partPruned, schema, colmap, oldDvs)
-        .select(keyExprs :+
-          regexp_extract(input_file_name(), "[^/]+$", 0).as("__file"): _*)
-        .join(keyD, keyCols)
-        .select(col("__file")).distinct()
-        .collect().map(_.getString(0)).toSet
+      else filesOf(readKeyed(spark, pm, partPruned).join(keyD, keyCols))
     val candidates = partPruned.filter(f => touched(baseName(f)))
     def commitMor(fullyDeleted: Set[String],
                   newEntries: Map[String, InlineDv]): Long = {
@@ -718,15 +706,13 @@ object LakeWriter {
       version
     }
     if (candidates.isEmpty) return commitMor(Set.empty, Map.empty)
-    val (joined, oldDel, fileOfKey) =
-      morFlaggedBase(spark, table, candidates, schema, colmap, oldDvs)
     // matched = key membership in the updates (AQE broadcasts the
     // typically-small distinct-key side at runtime; a genuinely huge
     // update set shuffles, which is the right plan then)
-    val flagged = joined
+    val flagged = morFlaggedBase(spark, pm, candidates)
       .join(keyD.withColumn("__graft_m", lit(1)), keyCols, "left")
-      .withColumn("__graft_del", oldDel || col("__graft_m").isNotNull)
-    morBuildDvs(spark, table, flagged, fileOfKey, oldDvs,
+      .withColumn("__graft_del", col(OldDel) || col("__graft_m").isNotNull)
+    morBuildDvs(spark, table, flagged, oldDvs,
         maxDeleteFraction, maxDvBytes) match {
       case MorFallbackCow =>
         // one policy, never a half-MOR commit: drop the pre-written
@@ -845,17 +831,14 @@ object LakeWriter {
     val pm = manifest(spark, table, prev.last)
     val (files, schema, partCols) = (pm.files, pm.schema, pm.partCols)
     if (files.isEmpty) return prev.last
-    val (colmap, dvs) = (pm.colmap, pm.dvs)
+    val colmap = pm.colmap
     val candidates = pruneFilesByPredicate(pm, predicate)
     if (candidates.isEmpty) return prev.last
-    val matched = readFiles(spark, candidates, schema, colmap, dvs)
-      .where(predicate)
-      .select(regexp_extract(input_file_name(), "[^/]+$", 0).as("__file"))
-      .distinct().collect().map(_.getString(0)).toSet
+    val matched = filesOf(readKeyed(spark, pm, candidates).where(predicate))
     if (matched.isEmpty) return prev.last
     val (rewrite, carry) = files.partition(f => matched(baseName(f)))
     val rewritten =
-      transform(readFiles(spark, rewrite, schema, colmap, dvs), schema)
+      transform(readManifest(spark, pm, rewrite), schema)
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
     val version = prev.last + 1
     val attempt = java.util.UUID.randomUUID().toString.take(8)
@@ -962,10 +945,7 @@ object LakeWriter {
     // candidates to files that actually contain a match — a sparse
     // UPDATE on an un-clustered column otherwise re-counts every row
     // of every candidate file for nothing
-    val matchedF = readFiles(spark, candidates, schema, colmap, oldDvs)
-      .where(predicate)
-      .select(regexp_extract(input_file_name(), "[^/]+$", 0).as("__file"))
-      .distinct().collect().map(_.getString(0)).toSet
+    val matchedF = filesOf(readKeyed(spark, pm, candidates).where(predicate))
     if (matchedF.isEmpty) return v0
     val matched = candidates.filter(f => matchedF(baseName(f)))
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
@@ -978,7 +958,7 @@ object LakeWriter {
     // already-deleted row neither re-lands nor re-retires
     withMicrosTimestamps(spark) {
       val w = toPhysical(
-        readFiles(spark, matched, schema, colmap, oldDvs)
+        readManifest(spark, pm, matched)
           .where(predicate)
           .select(updateProjection(schema, predicate, set): _*),
         colmap).write.mode("errorifexists")
@@ -986,11 +966,9 @@ object LakeWriter {
         .parquet(dataDir.toString)
     }
     val newFiles = walkFreshData(fs, dataDir).sorted
-    val (joined, oldDel, fileOfKey) =
-      morFlaggedBase(spark, table, matched, schema, colmap, oldDvs)
-    val flagged = joined.withColumn("__graft_del",
-      oldDel || coalesce(predicate, lit(false)))
-    morBuildDvs(spark, table, flagged, fileOfKey, oldDvs,
+    val flagged = morFlaggedBase(spark, pm, matched).withColumn(
+      "__graft_del", col(OldDel) || coalesce(predicate, lit(false)))
+    morBuildDvs(spark, table, flagged, oldDvs,
         maxDeleteFraction, maxDvBytes) match {
       case MorFallbackCow =>
         fs.delete(dataDir, true): Unit
@@ -1020,7 +998,7 @@ object LakeWriter {
           val total = stats.get(bn).flatMap(_.rows).getOrElse {
             val f = matched.find(p => baseName(p) == bn).get
             footerStats(spark.sessionState.newHadoopConf(), f,
-              physSchema(schema, colmap)).rows.getOrElse(sys.error(
+              physSchema(schema, colmap))._1.rows.getOrElse(sys.error(
               s"updateSnapshotMor at $table: no row count for $bn"))
           }
           total - oldCard(bn)
@@ -1054,7 +1032,7 @@ object LakeWriter {
       newlyRetired: Long, op: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val imageRows = newFiles.map(f =>
-      footerStats(conf, f, physSchema(schema, colmap)).rows
+      footerStats(conf, f, physSchema(schema, colmap))._1.rows
         .getOrElse(sys.error(
           s"$op at $table: unreadable footer for image file $f"))).sum
     require(imageRows == newlyRetired,
@@ -1107,14 +1085,12 @@ object LakeWriter {
     val pm = manifest(spark, table, v0)
     val (files, schema, partCols) = (pm.files, pm.schema, pm.partCols)
     if (files.isEmpty) return v0
-    val (colmap, oldDvs) = (pm.colmap, pm.dvs)
+    val oldDvs = pm.dvs
     val candidates = pruneFilesByPredicate(pm, predicate)
     if (candidates.isEmpty) return v0
-    val (joined, oldDel, fileOfKey) =
-      morFlaggedBase(spark, table, candidates, schema, colmap, oldDvs)
-    val flagged = joined.withColumn("__graft_del",
-      oldDel || coalesce(predicate, lit(false)))
-    morBuildDvs(spark, table, flagged, fileOfKey, oldDvs,
+    val flagged = morFlaggedBase(spark, pm, candidates).withColumn(
+      "__graft_del", col(OldDel) || coalesce(predicate, lit(false)))
+    morBuildDvs(spark, table, flagged, oldDvs,
         maxDeleteFraction, maxDvBytes) match {
       case MorFallbackCow =>
         deleteFromSnapshot(spark, table, predicate)
@@ -1136,60 +1112,45 @@ object LakeWriter {
   private final case class MorDvs(fullyDeleted: Set[String],
       newEntries: Map[String, InlineDv]) extends MorOutcome
 
+  /** A file's manifest basename, served as a per-file constant. */
+  private val MorFile = "__graft_file"
+  /** True on rows the file's current deletion vector deletes. */
+  private val OldDel = "__graft_olddel"
+
   /** Shared scan base for the MERGE-ON-READ writers
-    * ([[deleteFromSnapshotMor]], [[mergeSnapshotMor]]): reads the
-    * candidate files with `__graft_file`/`__graft_ridx` metadata
-    * columns under the LOGICAL schema, left-joins each file's
-    * existing deletion vector (broadcast — one row per DV-bearing
-    * file), and returns (rows, oldDel, fileKey -> manifest path).
-    * `oldDel` is true on rows the current DV already deletes —
-    * committed bitmaps are UNIONS, so every new bitmap must include
-    * them. */
-  private def morFlaggedBase(spark: SparkSession, table: String,
-      candidates: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
-      colmap: ColMapping,
-      oldDvs: Map[String, InlineDv])
-      : (DataFrame, org.apache.spark.sql.Column, Map[String, String]) = {
-    val scan = scanByBase(spark, candidates, physSchema(schema, colmap))
-      .map(FileScan.tag(_, rowIndex = true)).reduce(_ unionByName _)
-    val key = FileScan.keyOf(spark)
-    val fileOfKey: Map[String, String] =
-      candidates.map(f => key(f) -> f).toMap
-    val anyOldDv = candidates.exists(f => oldDvs.contains(baseName(f)))
-    val logical = scan.select(
-      (schema.fieldNames.map(n => col(colmap.phys(n)).as(n)) ++
-        Seq(col(FileScan.File), col(FileScan.RowIndex))).toIndexedSeq: _*)
-    val oldDel: org.apache.spark.sql.Column =
-      if (!anyOldDv) lit(false)
-      else col("__graft_dv").isNotNull &&
-        FileScan.dvContains("__graft_dvkey", "__graft_dv")
-    // no unmatched-file guard here: only DV-bearing files have a row,
-    // and morBuildDvs checks every scanned key against fileOfKey
-    val joined =
-      if (!anyOldDv) logical
-      else {
-        val dvRows = candidates.flatMap { f =>
-          oldDvs.get(baseName(f)).map { d =>
-            val k = key(f)
-            k -> Seq(d.bytes, k + "\u0000" + d.digest)
-          }
-        }
-        import org.apache.spark.sql.types.{BinaryType, StringType,
-          StructField}
-        logical.join(org.apache.spark.sql.functions.broadcast(
-            FileScan.metaFrame(spark, dvRows, Seq(
-              StructField("__graft_dv", BinaryType, true),
-              StructField("__graft_dvkey", StringType, true)))),
-          Seq(FileScan.File), "left")
-      }
-    (joined, oldDel, fileOfKey)
+    * ([[deleteFromSnapshotMor]], [[mergeSnapshotMor]],
+    * [[updateSnapshotMor]]): the candidate files' rows under the
+    * LOGICAL schema, NOT filtered by their current deletion vectors,
+    * each with its file's basename ([[MorFile]]), its
+    * [[FileScan.RowIndex]] and [[OldDel]] — committed bitmaps are
+    * UNIONS, so every new bitmap must include the rows the old one
+    * deletes. The old bitmap rides as a file constant. */
+  private def morFlaggedBase(spark: SparkSession, pm: Manifest,
+                             candidates: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.types.{BinaryType, StringType, StructField}
+    val anyOldDv = candidates.exists(f => pm.dvs.contains(baseName(f)))
+    val dvFields =
+      if (!anyOldDv) Nil
+      else Seq(StructField("__graft_olddv", BinaryType),
+        StructField("__graft_oldkey", StringType))
+    val rows = readFiles(spark, candidates, pm.schema, pm.colmap,
+      lengths = pm.lengths, fields = StructField(MorFile, StringType) +: dvFields,
+      consts = f => baseName(f) +: (if (!anyOldDv) Nil else {
+        val d = pm.dvs.get(baseName(f))
+        Seq(d.map(_.bytes).orNull, d.map(f + "\u0000" + _.digest).orNull)
+      }), rowIndex = true)
+    if (!anyOldDv) rows.withColumn(OldDel, lit(false))
+    else rows.withColumn(OldDel, col("__graft_olddv").isNotNull &&
+        FileScan.dvContains(col("__graft_oldkey"), col("__graft_olddv"),
+          col(FileScan.RowIndex)))
+      .drop(dvFields.map(_.name): _*)
   }
 
   /** The MERGE-ON-READ deletion-vector kernel, shared by
     * [[deleteFromSnapshotMor]] and [[mergeSnapshotMor]]. `flagged`
-    * carries `__graft_file`, `__graft_ridx` and boolean `__graft_del`
-    * (true = deleted AFTER this commit, old-DV rows included).
+    * carries [[MorFile]], [[FileScan.RowIndex]] and boolean
+    * `__graft_del` (true = deleted AFTER this commit, old-DV rows
+    * included).
     *
     * Two distributed passes, driver traffic manifest-scale in BOTH:
     * pass 1 is a per-file conditional count (one row per candidate
@@ -1201,13 +1162,12 @@ object LakeWriter {
     * enforcing `maxDvBytes` in-flight) and ships only the <=
     * `maxDvBytes` blobs. Raw row indexes never reach the driver. */
   private def morBuildDvs(spark: SparkSession, table: String,
-      flagged: DataFrame, fileOfKey: Map[String, String],
-      oldDvs: Map[String, InlineDv],
+      flagged: DataFrame, oldDvs: Map[String, InlineDv],
       maxDeleteFraction: Double, maxDvBytes: Int): MorOutcome = {
     // PASS 1 -- counts only. The COW-fallback decision (and the
     // fully-deleted and bitmap-unchanged cases) are all decidable
     // from counts, so a COW-bound write never ships a row index.
-    val counts = flagged.groupBy(col(FileScan.File))
+    val counts = flagged.groupBy(col(MorFile))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("__total"),
         org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.when(
@@ -1215,14 +1175,10 @@ object LakeWriter {
       .collect()
     var fallbackCow = false
     val fullyDeleted = scala.collection.mutable.Set[String]()
-    // file-key -> expected cardinality, for files that need a bitmap
+    // basename -> expected cardinality, for files that need a bitmap
     val needsBitmap = scala.collection.mutable.Map[String, Long]()
     counts.foreach { r =>
-      val key = r.getString(0)
-      val f = fileOfKey.getOrElse(key, sys.error(
-        s"merge-on-read at $table: scanned file " +
-          s"$key matches no manifest entry (path-encoding regression)"))
-      val bn = baseName(f)
+      val bn = r.getString(0)
       val total = r.getLong(1)
       val del = r.getLong(2)
       if (del > 0 && del != total) {
@@ -1231,7 +1187,7 @@ object LakeWriter {
         // DV's rows -- equal cardinality therefore means equal SET
         // (only already-deleted rows re-matched): no change
         else if (!oldDvs.get(bn).exists(_.cardinality == del))
-          needsBitmap(key) = del
+          needsBitmap(bn) = del
       } else if (del > 0) fullyDeleted += bn
     }
     if (fallbackCow) return MorFallbackCow
@@ -1244,15 +1200,15 @@ object LakeWriter {
     val newEntries = scala.collection.mutable.Map[String, InlineDv]()
     if (needsBitmap.nonEmpty) {
       import spark.implicits._
-      val keysDf = needsBitmap.keys.toSeq.sorted.toDF(FileScan.File)
+      val keysDf = needsBitmap.keys.toSeq.sorted.toDF(MorFile)
       val maxDv = maxDvBytes
       val blobs = flagged.filter(col("__graft_del"))
         .join(org.apache.spark.sql.functions.broadcast(keysDf),
-          Seq(FileScan.File), "left_semi")
-        .select(col(FileScan.File), col(FileScan.RowIndex))
+          Seq(MorFile), "left_semi")
+        .select(col(MorFile), col(FileScan.RowIndex))
         .as[(String, Long)]
-        .repartition(col(FileScan.File))
-        .sortWithinPartitions(FileScan.File, FileScan.RowIndex)
+        .repartition(col(MorFile))
+        .sortWithinPartitions(MorFile, FileScan.RowIndex)
         .mapPartitions { it =>
           // (file, cardinality, bytes); empty bytes = exceeded maxDv
           // (a real bitmap is never empty here since cardinality > 0)
@@ -1275,17 +1231,16 @@ object LakeWriter {
           acc.iterator
         }
         .collect()
-      blobs.foreach { case (key, card, bytes) =>
+      blobs.foreach { case (bn, card, bytes) =>
         if (bytes.isEmpty) fallbackCow = true
         else {
-          val expect = needsBitmap.getOrElse(key, sys.error(
+          val expect = needsBitmap.getOrElse(bn, sys.error(
             s"merge-on-read at $table: bitmap pass returned " +
-              s"unexpected file $key"))
+              s"unexpected file $bn"))
           require(card == expect,
             s"merge-on-read at $table: count pass saw $expect " +
-              s"deleted rows in $key but bitmap pass saw $card -- " +
+              s"deleted rows in $bn but bitmap pass saw $card -- " +
               "non-deterministic input or concurrent change")
-          val bn = baseName(fileOfKey(key))
           val padded =
             if (bytes.length % 4 == 0) bytes
             else java.util.Arrays.copyOf(bytes,
@@ -1348,11 +1303,11 @@ object LakeWriter {
     // drop-old-name + insert-new-name, like a column-level CDC)
     val inserts =
       if (added.isEmpty) None
-      else Some(readFiles(spark, added, to.schema, to.colmap, toDvs)
+      else Some(readManifest(spark, to, added)
         .withColumn("_change_type", tag("insert")))
     val deletes =
       if (removed.isEmpty) None
-      else Some(readFiles(spark, removed, from.schema, from.colmap, fromDvs)
+      else Some(readManifest(spark, from, removed)
         .withColumn("_change_type", tag("delete")))
     val raw = (inserts, deletes) match {
       case (Some(i), Some(d)) =>
@@ -1445,14 +1400,19 @@ object LakeWriter {
     }
   }
 
-  /** The partitioned half of `mergeSnapshot`. The updates land FIRST,
-    * hive-partitioned into their own attempt directory — their paths
-    * then yield the touched partition keys through the exact
-    * formatter that wrote the existing files (the
-    * `commitSnapshotDynamic` trick; deriving keys from Row values
-    * instead diverges on timestamps/empty strings and would silently
-    * mis-prune). */
-  private def mergePartitioned(updates: DataFrame, table: String,
+  /** The copy-on-write body of [[mergeSnapshot]]. The updates land
+    * FIRST, into their own attempt directory (hive-partitioned on a
+    * partitioned table), and everything after reads them back from
+    * there: the probe and the survivors' anti-join use the keys of the
+    * LANDED files, so the `updates` plan runs once and a
+    * non-deterministic one (rand() sampling, a concurrently-changing
+    * source) retires exactly the keys whose rows landed. On a
+    * partitioned table the landed paths also yield the touched
+    * partition keys through the exact formatter that wrote the
+    * existing files (the `commitSnapshotDynamic` trick; deriving keys
+    * from Row values instead diverges on timestamps/empty strings and
+    * would silently mis-prune). */
+  private def mergeCopyOnWrite(updates: DataFrame, table: String,
       keyCols: Seq[String], prev: Manifest,
       txn: Option[(String, Long)]): Long = {
     val spark = updates.sparkSession
@@ -1462,60 +1422,60 @@ object LakeWriter {
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
     val version = prev.version + 1
     val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val updDir =
-      new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt-u")
-    withMicrosTimestamps(spark) {
-      toPhysical(updates.select(cols.map(col): _*), colmap)
-        .write.mode("errorifexists")
-        .partitionBy(partCols: _*).parquet(updDir.toString) }
-    val updFiles = walkFreshData(fs, updDir).sorted
-    val touchedParts = updFiles.map(partitionOf(partCols, _)).toSet
+    def dirOf(kind: String) =
+      new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt-$kind")
+    def land(rows: DataFrame, dir: org.apache.hadoop.fs.Path): Seq[String] = {
+      withMicrosTimestamps(spark) {
+        val w = toPhysical(rows.select(cols.map(col): _*), colmap)
+          .write.mode("errorifexists")
+        (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
+          .parquet(dir.toString) }
+      walkFreshData(fs, dir).sorted
+    }
+    val updFiles = land(updates, dirOf("u"))
+    lazy val keys =
+      readFiles(spark, updFiles, schema, colmap).select(keyCols.map(col): _*)
     // partition pruning is SOUND only when every partition column is a
     // merge key: then a matched row's partition values equal the
     // update row's, so files elsewhere cannot contain a match. With a
-    // non-key partition column, every file is a candidate.
+    // non-key partition column, every file is a candidate. A pre-spec
+    // file (partition spec evolution: no path values) could hold any
+    // key — it stays a candidate. No update rows: no candidates.
+    val touchedParts = updFiles.map(partitionOf(partCols, _)).toSet
     val (candidates, untouched) =
-      if (partCols.forall(keyCols.contains))
-        // a pre-spec file (partition spec evolution: no path values)
-        // could hold any key — it stays a candidate
+      if (updFiles.isEmpty) (Seq.empty[String], files)
+      else if (partCols.forall(keyCols.contains))
         files.partition(f =>
           partitionOfOpt(partCols, f).forall(touchedParts))
       else (files, Seq.empty[String])
-    val keyExprs = keyCols.map(col)
-    val dvs = prev.dvs
+    // the updates key sliver joins UN-deduplicated (r18): the probe's
+    // result rides through the file distinct regardless of duplicate
+    // keys, and a left-anti join is duplicate-insensitive on its right
+    // side. Callers own the one-row-per-key contract (rows land
+    // verbatim), exactly like MERGE INTO.
     val probed =
       if (candidates.isEmpty) Set.empty[String]
-      // un-deduplicated key sliver — same argument as mergeSnapshot's
-      // flat probe (the __file distinct absorbs duplicates; r18)
-      else readFiles(spark, candidates, schema, colmap, dvs)
-        .select(keyExprs :+
-          regexp_extract(input_file_name(), "[^/]+$", 0).as("__file"): _*)
-        .join(updates.select(keyExprs: _*), keyCols)
-        .select(col("__file")).distinct()
-        .collect().map(_.getString(0)).toSet
+      else filesOf(readKeyed(spark, prev, candidates).join(keys, keyCols))
     val (rewrite, carryRest) = candidates.partition(f => probed(baseName(f)))
     val survFiles =
       if (rewrite.isEmpty) Seq.empty[String]
-      else {
-        val survDir =
-          new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt-s")
-        withMicrosTimestamps(spark) {
-          toPhysical(readFiles(spark, rewrite, schema, colmap, dvs)
-            .join(updates.select(keyExprs: _*), keyCols, "left_anti")
-            .select(cols.map(col): _*), colmap)
-            .write.mode("errorifexists").partitionBy(partCols: _*)
-            .parquet(survDir.toString) }
-        walkFreshData(fs, survDir).sorted
-      }
-    // the committed schema stays the TABLE's schema (not the updates
-    // frame's), so partition-column typing is stable across versions
-    // (CHECK enforcement: the update rows are the only genuinely new
-    // ones — survivors re-land from already-validated data)
+      else land(readManifest(spark, prev, rewrite)
+        .join(keys, keyCols, "left_anti"), dirOf("s"))
+    // CHECK enforcement: the update rows are the only genuinely new
+    // ones — survivors re-land from already-validated data
     enforceChecks(spark, prev.checks, updFiles, schema, fs,
-      Seq(updDir) ++ survFiles.headOption.map(_ =>
-        new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt-s")),
+      Seq(dirOf("u")) ++ survFiles.headOption.map(_ => dirOf("s")),
       colmap)
-    writeManifest(spark, fs, table, Some(prev), version, "merge", schema,
+    // a partitioned table commits the TABLE's schema, so
+    // partition-column typing is stable across versions; a flat one
+    // commits the landed rows' schema (every column nullable once
+    // survivors, read back through the parquet source, land with them)
+    val landed = updates.select(cols.map(col): _*).schema
+    val committed =
+      if (partCols.nonEmpty) schema
+      else if (rewrite.isEmpty) landed
+      else org.apache.spark.sql.GraftColumnBridge.asNullable(schema)
+    writeManifest(spark, fs, table, Some(prev), version, "merge", committed,
       untouched ++ carryRest ++ survFiles ++ updFiles, partCols,
       txnOverride = txn, mergeKeys = keyCols)
     version
@@ -1553,26 +1513,28 @@ object LakeWriter {
   private[graft] final case class FileStats(rows: Option[Long],
       cols: Map[String, ColStat])
 
-  /** Top-level column names of one parquet file from its FOOTER, on
-    * the driver — `spark.read.parquet(file).columns` ran a full
+  /** The Spark schema of one parquet file from its FOOTER, on the
+    * driver, converted exactly as Spark's schema inference converts a
+    * footer — `spark.read.parquet(file).schema` ran a full
     * schema-inference pass (one Spark job + Catalyst round per call;
-    * mergeSnapshot paid it per commit). Metadata-only and exactly the
-    * physical names the inference would return for graft-written
-    * files (single-file reads infer no path partitions). */
-  private def footerColumns(spark: SparkSession, file: String)
-      : Set[String] = {
-    import scala.jdk.CollectionConverters._
+    * mergeSnapshot paid it per commit). Metadata-only; no path
+    * partitions. */
+  private[graft] def footerSchema(spark: SparkSession, file: String)
+      : org.apache.spark.sql.types.StructType = {
+    val path = new org.apache.hadoop.fs.Path(file)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file),
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path,
         spark.sessionState.newHadoopConf()))
-    try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-      .map(_.getName).toSet
+    try org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      .readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(path, reader.getFooter),
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetToSparkSchemaConverter(spark.sessionState.conf))
     finally reader.close()
   }
 
-  /** Per-column stats of one parquet file from its FOOTER — zero
-    * data IO: row-group statistics are merged across blocks; a
+  /** Per-column stats and the byte length of one parquet file from
+    * its FOOTER — zero data IO: row-group statistics are merged across blocks; a
     * column's (min, max) is omitted when any block lacks stats
     * (older writers) or its type is outside the v1 stat set, its
     * null count when any block left numNulls unset. Values serialize
@@ -1580,13 +1542,13 @@ object LakeWriter {
   private def footerStats(conf: org.apache.hadoop.conf.Configuration,
                           file: String,
                           schema: org.apache.spark.sql.types.StructType)
-      : FileStats = {
+      : (FileStats, Option[Long]) = {
     import scala.jdk.CollectionConverters._
     val wanted = schema.fields.filter(f => statType(f.dataType))
       .map(_.name).take(32).toSet
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file), conf))
+    val input = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file), conf)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(input)
     try {
       val blocks = reader.getFooter.getBlocks.asScala
       val rowsTotal = blocks.map(_.getRowCount).sum
@@ -1676,7 +1638,7 @@ object LakeWriter {
       val cols = (mm.keySet ++ nn.keySet).map { n =>
         n -> ColStat(mm.get(n).map(_._1), mm.get(n).map(_._2), nn.get(n))
       }.toMap
-      FileStats(Some(rowsTotal), cols)
+      (FileStats(Some(rowsTotal), cols), Some(input.getLength))
     } finally reader.close()
   }
 
@@ -1981,18 +1943,25 @@ object LakeWriter {
     // bounded pool (a large commit would otherwise pay one serial
     // round-trip per new file on the driver; on object stores each
     // is a network call)
+    // the same pass records each new file's byte LENGTH, so readers
+    // plan the file without a stat; a file carried from a manifest
+    // that predates lengths stays unrecorded (readers stat it)
     val newFiles = files.filterNot(f => prevStats.contains(baseName(f)))
-    val fresh: Map[String, FileStats] =
+    val fresh: Map[String, (FileStats, Option[Long])] =
       newFiles.map(baseName).zip(parMap(spark, newFiles) { f =>
         // files store PHYSICAL names; stats stay keyed by them
         // (stable across renames) and translate to logical at read
         // time
         try footerStats(conf, f, physSchema(schema, colmap))
         catch { case scala.util.control.NonFatal(_) =>
-          FileStats(None, Map.empty) }
+          (FileStats(None, Map.empty), None) }
       }).toMap
     val stats = files.map(baseName).flatMap(bn =>
-      prevStats.get(bn).orElse(fresh.get(bn)).map(bn -> _)).toMap
+      prevStats.get(bn).orElse(fresh.get(bn).map(_._1)).map(bn -> _)).toMap
+    val prevLengths = prev.fold(Map.empty[String, Long])(_.lengths)
+    val lengths = files.map(baseName).flatMap(bn =>
+      prevLengths.get(bn).orElse(fresh.get(bn).flatMap(_._2))
+        .map(bn -> _)).toMap
     // BLOOM FILE INDEX (Delta bloom-filter-index parity): per-file
     // bloom filters over xxhash64(col) for the configured columns —
     // the point-lookup complement to min/max stats (equality on a
@@ -2062,7 +2031,7 @@ object LakeWriter {
     val m = Manifest(version, mode, Some(System.currentTimeMillis()), txns,
       schema, partCols, mergeKeys, dvs,
       checksOverride.getOrElse(prev.fold(Map.empty[String, String])(_.checks)),
-      colmap, stats, bloomCfg, blooms, files)
+      colmap, stats, lengths, bloomCfg, blooms, files)
     commitManifestBody(spark, fs, table, version, m.render)
   }
 
@@ -2552,7 +2521,7 @@ object LakeWriter {
     val dataDir =
       new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
     withMicrosTimestamps(spark) {
-      toPhysical(readFiles(spark, pre, schema, colmap, pm.dvs), colmap)
+      toPhysical(readManifest(spark, pm, pre), colmap)
         .write.mode("errorifexists")
         .partitionBy(partCols.map(colmap.phys): _*)
         .parquet(dataDir.toString) }
@@ -2587,8 +2556,8 @@ object LakeWriter {
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
     if (zorderBy.nonEmpty)
       return zorderRewrite(spark, fs, table, pm, zorderBy, targetBytes)
-    val sized = files.map(f =>
-      f -> fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen)
+    val sized = files.map(f => f -> pm.lengths.getOrElse(baseName(f),
+      fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen))
     val rewrite = sized
       .groupBy { case (f, _) =>
         // pre-spec files (spec evolution) compact as one group; the
@@ -2603,7 +2572,7 @@ object LakeWriter {
       }.toSet
     if (rewrite.isEmpty) return pm.version
     val carry = files.filterNot(rewrite)
-    val df = readFiles(spark, rewrite.toSeq.sorted, schema, colmap, pm.dvs)
+    val df = readManifest(spark, pm, rewrite.toSeq.sorted)
     val totalBytes = sized.collect { case (f, n) if rewrite(f) => n }.sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val version = pm.version + 1
@@ -2658,7 +2627,7 @@ object LakeWriter {
         dt == TimestampType || dt == TimestampNTZType,
         s"zorder column $c: need numeric/date/timestamp, got $dt")
     }
-    val df = readFiles(spark, files, schema, colmap, prev.dvs)
+    val df = readManifest(spark, prev, files)
     val aggs = zorderBy.zipWithIndex.flatMap { case (c, i) =>
       val cd = col(c).cast("double")
       Seq(min(cd).as(s"lo$i"), max(cd).as(s"hi$i")) }
@@ -2684,8 +2653,8 @@ object LakeWriter {
       (0 until bits).map(j =>
         shiftleft(shiftright(c, j).bitwiseAND(lit(1L)), j * d + i))
     }.reduce(_.bitwiseOR(_))
-    val totalBytes = files.map(f =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen).sum
+    val totalBytes = files.map(f => prev.lengths.getOrElse(baseName(f),
+      fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen)).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val version = prev.version + 1
     val attempt = java.util.UUID.randomUUID().toString.take(8)
@@ -2805,7 +2774,7 @@ object LakeWriter {
     if (m.files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-    else readFiles(spark, m.files, m.schema, m.colmap, m.dvs)
+    else readManifest(spark, m, m.files)
   }
 
   /** The schema [[readSnapshot]] serves for manifest `m`, without
@@ -2842,7 +2811,7 @@ object LakeWriter {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
         .where(predicate)
-    else readFiles(spark, keptB, m.schema, m.colmap, m.dvs).where(predicate)
+    else readManifest(spark, m, keptB).where(predicate)
   }
 
   /** The stat/partition/bloom FILE-PRUNING pipeline shared by
@@ -2957,7 +2926,7 @@ object LakeWriter {
         dvs.get(baseName(f)).map(_.cardinality).getOrElse(0L)
     }.sum
     if (unknown.isEmpty) metaSum
-    else metaSum + readFiles(spark, unknown, m.schema, m.colmap, dvs).count()
+    else metaSum + readManifest(spark, m, unknown).count()
   }
 
   /** (version, commit epoch-millis) pairs of a table's history,
@@ -3052,15 +3021,15 @@ object LakeWriter {
     // footer reads are independent metadata fetches — bounded pool,
     // like writeManifest's stats sweep (serial driver IO would pay
     // one object-store round-trip per file); lengths piggyback on the
-    // same status call instead of a second per-file round-trip
+    // footer read, a file whose footer fails is stat'ed instead
     val exportFiles = walkFreshData(fs, p).sorted
     val pooled: Seq[(String, Long, FileStats)] =
       parMap(spark, exportFiles) { f =>
-        val len = fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen
-        val st = try footerStats(conf, f, schema)
+        val (st, len) = try footerStats(conf, f, schema)
                  catch { case scala.util.control.NonFatal(_) =>
-                   FileStats(None, Map.empty) }
-        (f, len, st)
+                   (FileStats(None, Map.empty), None) }
+        (f, len.getOrElse(
+          fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen), st)
       }
     val rows = pooled.map { case (f, len, st) =>
       val rel = f.stripPrefix(

@@ -17,7 +17,7 @@ import LakeWriter.{ColMapping, ColStat, FileStats, InlineDv}
   * sorted. `render(parse(body)) == body` for every body this writer
   * produced.
   *
-  * Per-file maps (`dvs`, `stats`, `blooms`) are keyed by file
+  * Per-file maps (`dvs`, `stats`, `lengths`, `blooms`) are keyed by file
   * BASENAME (table-unique, see `LakeWriter.baseName`); `stats` and
   * the stats-carried column names use PHYSICAL column names, `colmap`
   * translates. */
@@ -33,6 +33,7 @@ private[graft] final case class Manifest(
     checks: Map[String, String],
     colmap: ColMapping,
     stats: Map[String, FileStats],
+    lengths: Map[String, Long],
     bloomCfg: Map[String, Long],
     blooms: Map[String, Map[String, String]],
     files: Seq[String]) {
@@ -77,6 +78,7 @@ private[graft] final case class Manifest(
         "m" -> obj(colmap.map)(JString(_)),
         "d" -> JArray(colmap.dropped.sorted.map(JString(_)).toList)))
     if (statsJ.nonEmpty) sb ++= blob("stats", JObject(statsJ.toList))
+    if (lengths.nonEmpty) sb ++= blob("lengths", obj(lengths)(JInt(_)))
     if (bloomCfg.nonEmpty) sb ++= blob("blooms", JObject(
       "cfg" -> obj(bloomCfg)(JInt(_)),
       "files" -> obj(blooms)(cs => obj(cs)(JString(_)))))
@@ -164,6 +166,8 @@ private[graft] object Manifest {
       checks = strMap(blob("checks")),
       colmap = colmap,
       stats = stats,
+      lengths = blob("lengths").flatMap { case (bn, n) =>
+        long(n).map(bn -> _) }.toMap,
       bloomCfg = bloomsJ.collectFirst { case ("cfg", JObject(cs)) =>
         cs.flatMap { case (c, n) => long(n).map(c -> _) }.toMap
       }.getOrElse(Map.empty),

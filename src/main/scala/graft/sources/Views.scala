@@ -18,35 +18,43 @@ object Views {
     * written by LakehousePipeline) under their directory names.
     * Snapshot tables (a `_manifests` dir present) are served at their
     * LATEST version; plain parquet directories read directly. */
-  def registerZone(spark: SparkSession, zoneDir: String): Unit = {
-    val d = new java.io.File(zoneDir)
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .foreach { t =>
-        val df =
-          if (new java.io.File(t, "_manifests").isDirectory)
-            LakeWriter.readSnapshot(spark, t.getPath)
-          else spark.read.parquet(t.getPath)
-        df.createOrReplaceTempView(t.getName)
-      }
-  }
+  def registerZone(spark: SparkSession, zoneDir: String): Unit =
+    zoneTables(spark, zoneDir).foreach { case (n, df) =>
+      df.createOrReplaceTempView(n) }
 
   /** `registerZone`, but as GLOBAL temp views — the registration an
     * external-serving endpoint needs: a Thrift/JDBC connection gets
     * its own Spark session (own temp-view namespace), while global
     * temp views live on the shared context and are visible to every
     * connection as `global_temp.<name>`. */
-  def registerZoneGlobal(spark: SparkSession, zoneDir: String): Unit = {
-    val d = new java.io.File(zoneDir)
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .foreach { t =>
-        val df =
+  def registerZoneGlobal(spark: SparkSession, zoneDir: String): Unit =
+    zoneTables(spark, zoneDir).foreach { case (n, df) =>
+      df.createOrReplaceGlobalTempView(n) }
+
+  /** Every table directory of `zoneDir` and its frame. */
+  private def zoneTables(spark: SparkSession, zoneDir: String)
+      : Seq[(String, DataFrame)] =
+    Option(new java.io.File(zoneDir).listFiles()).getOrElse(Array.empty)
+      .filter(_.isDirectory).toSeq.map { t =>
+        t.getName -> (
           if (new java.io.File(t, "_manifests").isDirectory)
             LakeWriter.readSnapshot(spark, t.getPath)
-          else spark.read.parquet(t.getPath)
-        df.createOrReplaceGlobalTempView(t.getName)
+          else plainParquet(spark, t))
       }
+
+  /** A plain parquet directory, read with its data schema taken from
+    * ONE footer on the driver — the file Spark's own inference would
+    * pick (the first data file by path) — instead of Spark's
+    * schema-inference job; partition columns still come from the
+    * `k=v` paths. A directory without a data file reads as Spark
+    * reads it. */
+  private def plainParquet(spark: SparkSession,
+                           dir: java.io.File): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(dir.getPath)
+    val read = spark.read
+    LakeWriter.walk(LakeWriter.fsOf(spark, p), p).sorted.headOption
+      .fold(read)(f => read.schema(LakeWriter.footerSchema(spark, f)))
+      .parquet(dir.getPath)
   }
 
   /** Serve one snapshot table AS OF a version (time-travel SQL). */

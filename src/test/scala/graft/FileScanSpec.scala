@@ -1,17 +1,18 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField}
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{DeletionVectors, FileScan}
 import graft.sources.FileScan.{Dv, Slice}
 
-/** The slice scan the merge-on-read readers share: the key matches
-  * Spark's `_metadata.file_path` on a name that needs escaping, a
-  * scanned file with no slice raises instead of being served, a file
-  * listed in several slices yields each slice's DV window with that
-  * slice's constants, and `transition` is the change readers' rule. */
+/** The slice scan the merge-on-read readers share: each file is
+  * served under its own slice's DV window on a path that needs
+  * escaping, a file listed in several slices yields each slice's DV
+  * window with that slice's constants, and `transition` is the change
+  * readers' rule. */
 class FileScanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -29,46 +30,44 @@ class FileScanSpec extends AnyFunSuite {
     (one("x", 0 until 10), one("y", 10 until 20))
   }
 
+  private val idSchema = StructType(Seq(StructField("id", LongType)))
   private val tagField = Seq(StructField("tag", StringType, true))
 
   private def dv(rows: Long*): Option[Dv] =
     Some(Dv(DeletionVectors.serialize(rows.toArray), rows.mkString(",")))
 
-  test("scan matches keyOf to _metadata.file_path on escaped names, " +
-      "and raises on a scanned file no slice names, naming the reader " +
-      "and the file") {
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+    df.select(col("id"), col("tag")).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+
+  test("scan serves each file under its own slice's DV window on escaped paths") {
     val (a, b) = twoFiles()
-    val key = FileScan.keyOf(spark)
-    // `read` scans both files whatever the slices name: a file whose
-    // key drifted from its slice's is the failure the guard catches
-    def guarded(files: Seq[String]) = FileScan.scan(spark,
-      files.map(Slice(_, Seq("t"))), tagField, "spec reader at /t")(_ =>
-      Seq(spark.read.parquet(a, b)))
-    assert(key(b).contains("a%20b%25c+d"), key(b))
-    assert(guarded(Seq(a, b)).count() == 20L)
-    val e = intercept[Exception](guarded(Seq(a)).collect())
-    val msg = Iterator.iterate[Throwable](e)(_.getCause)
-      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
-      .mkString("\n")
-    assert(msg.contains("spec reader at /t: data file " + key(b)), msg)
-    assert(!msg.contains("data file " + key(a)), msg)
+    assert(b.contains("a b%c+d"), b)
+    val got = rows(FileScan.scan(spark, Seq(
+        Slice(a, Seq("a"), exit = dv(1, 2)),
+        Slice(b, Seq("b"), exit = dv(5))), idSchema, tagField))
+    assert(got == ((0L until 10L).filterNot(Set(1L, 2L)).map(_ -> "a") ++
+      (10L until 20L).filterNot(_ == 15L).map(_ -> "b")))
+    // the same files under swapped bitmaps: each file's own bitmap
+    // decides, never the other's
+    val swapped = rows(FileScan.scan(spark, Seq(
+        Slice(a, Seq("a"), exit = dv(5)),
+        Slice(b, Seq("b"), exit = dv(1, 2))), idSchema, tagField))
+    assert(swapped == ((0L until 10L).filterNot(_ == 5L).map(_ -> "a") ++
+      (10L until 20L).filterNot(Set(11L, 12L)).map(_ -> "b")))
   }
 
   test("scan fans a file listed in two slices into each slice's " +
       "window (in enter, not in exit) with that slice's constants") {
     val (a, b) = twoFiles()
-    val got = FileScan.scan(spark, Seq(
+    val got = rows(FileScan.scan(spark, Seq(
         Slice(a, Seq("s1"), enter = dv(1, 2, 3, 4), exit = dv(2)),
         Slice(a, Seq("s2"), exit = dv(0, 1, 2, 3, 4, 5)),
-        Slice(b, Seq("s3"))),
-      tagField, "spec reader")(fs => Seq(spark.read.parquet(fs: _*)))
-      .select(col("id"), col("tag")).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(got.sorted == (Seq(1L, 3L, 4L).map(_ -> "s1") ++
+        Slice(b, Seq("s3"))), idSchema, tagField))
+    assert(got == (Seq(1L, 3L, 4L).map(_ -> "s1") ++
       (6L to 9L).map(_ -> "s2") ++ (10L to 19L).map(_ -> "s3")).sorted)
-    // no constant and no DV: no join is planned
-    val plain = FileScan.scan(spark, Seq(Slice(a), Slice(b)), Nil, "r")(
-      fs => Seq(spark.read.parquet(fs: _*)))
+    // no constant and no DV: the scan is served as read
+    val plain = FileScan.scan(spark, Seq(Slice(a), Slice(b)), idSchema)
     assert(plain.columns.toSeq == Seq("id"))
     assert(plain.count() == 20L)
   }

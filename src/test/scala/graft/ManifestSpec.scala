@@ -142,6 +142,35 @@ class ManifestSpec extends AnyFunSuite {
     assert(LakeWriter.readSnapshot(s, t).count() == 30L)
   }
 
+  test("a commit records each new file's byte length, carried files " +
+      "keep theirs, and a body without lengths reads through a stat " +
+      "fallback") {
+    val t = java.nio.file.Files.createTempDirectory("graft_manifest_len")
+      .toString + "/t"
+    def onDisk(f: String): Long =
+      new java.io.File(new java.net.URI(f).getPath).length
+    LakeWriter.commitSnapshot(spark.range(0, 20, 1, 2).toDF("k"), t)
+    LakeWriter.commitSnapshot(spark.range(20, 30, 1, 1).toDF("k"), t,
+      "append")
+    val (m1, m2) = (LakeWriter.manifest(spark, t, 1L),
+      LakeWriter.manifest(spark, t, 2L))
+    assert(m1.lengths == m1.files.map(f => baseName(f) -> onDisk(f)).toMap)
+    assert(m2.lengths == m2.files.map(f => baseName(f) -> onDisk(f)).toMap)
+    assert(m1.lengths.forall { case (bn, n) => m2.lengths(bn) == n })
+    assert(Manifest.parse(m2.render) == m2)
+    // the same version without its lengths: every file is stat'ed
+    val p = java.nio.file.Paths.get(s"$t/_manifests/v2.json")
+    java.nio.file.Files.write(p,
+      m2.copy(lengths = Map.empty).render.getBytes("UTF-8"))
+    new java.io.File(s"$t/_manifests/.v2.json.crc").delete(): Unit
+    assert(!new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      .contains("\"lengths\""))
+    assert(LakeWriter.manifest(spark, t, 2L).lengths.isEmpty)
+    assert(LakeWriter.readSnapshot(spark, t).as[Long](
+      org.apache.spark.sql.Encoders.scalaLong).collect().sorted.toSeq ==
+      (0L until 30L))
+  }
+
   test("a manifest vacuumed after listing raises, never reads as empty") {
     val t = java.nio.file.Files.createTempDirectory("graft_manifest_gone")
       .toString + "/t"

@@ -20,7 +20,9 @@ object PlanDump {
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "docs/plans")
     for (q <- args.toSeq) {
       val df = SparkEntry.queries(q)(spark, d)
-      df.count(): Unit // settle AQE so the dump shows the final plan
+      // run df's OWN execution so AQE settles and the dump shows the
+      // final plan (count() and foreach() each plan a separate one)
+      df.collect(): Unit
       val body = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       java.nio.file.Files.write(

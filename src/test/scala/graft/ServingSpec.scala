@@ -128,4 +128,21 @@ class ServingSpec extends AnyFunSuite {
       } finally conn.close()
     } finally server.stop()
   }
+
+  test("registerZone reads plain parquet tables with the schema Spark " +
+      "infers, from one footer: no Spark job") {
+    val zone = java.nio.file.Files.createTempDirectory("graft_zone")
+      .toString
+    val df = Seq((1L, "a", 1.5, 7), (2L, null, 2.5, 8), (3L, "c", 3.5, 7))
+      .toDF("k", "v", "w", "day")
+    df.write.parquet(s"$zone/flat")
+    df.write.partitionBy("day").parquet(s"$zone/parted")
+    assert(SparkJobs.during(spark)(Views.registerZone(spark, zone)) == 0)
+    Seq("flat", "parted").foreach { n =>
+      val view = spark.table(n)
+      assert(view.schema == spark.read.parquet(s"$zone/$n").schema, n)
+      assert(view.count() == 3L, n)
+    }
+    assert(spark.table("parted").where($"day" === 7).count() == 2L)
+  }
 }
