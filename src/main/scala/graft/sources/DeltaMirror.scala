@@ -1983,7 +1983,9 @@ object DeltaMirror {
     val pvFields: Seq[StructField] = st.partCols.map(c =>
       StructField(s"__graft_pv_$c", StringType, true))
     /** [[FileScan.scan]] of data files under their physical names plus
-      * `extra` stored columns. */
+      * `extra` stored columns. Slice lengths stay unknown, so the index
+      * stats each file: the log's `size` is not trusted for split
+      * planning (a short one would silently drop row groups). */
     def scan(spark: SparkSession, slices: Seq[FileScan.Slice],
              fields: Seq[StructField],
              extra: Seq[StructField] = Nil): DataFrame =

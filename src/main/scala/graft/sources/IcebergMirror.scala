@@ -2104,7 +2104,10 @@ object IcebergMirror {
         avroPvToExternal(idToType(src), pvById.get(src).orNull, dir))
     val pvFields: Seq[StructField] = identitySources.map(src =>
       StructField(s"__graft_pv_${idToName(src)}", idToType(src), true))
-    /** [[FileScan.scan]] of data files under their physical names. */
+    /** [[FileScan.scan]] of data files under their physical names.
+      * Slice lengths stay unknown, so the index stats each file:
+      * `file_size_in_bytes` is not trusted for split planning (a short
+      * one would silently drop row groups). */
     def scan(slices: Seq[FileScan.Slice], fields: Seq[StructField],
              rowIndex: Boolean = false): DataFrame =
       FileScan.scan(spark, slices, StructType(schema.fields.map(f =>
