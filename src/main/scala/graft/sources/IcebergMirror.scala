@@ -48,8 +48,8 @@ import org.json4s.jackson.JsonMethods
   * values follow the spec's column-projection rule: a source column
   * missing from a data file resolves from the file's own partition
   * metadata (served as a per-file `_metadata` constant of the one
-  * slice scan, coalesced with file-stored values so foreign layouts that DO materialize the
-  * column read identically). The reader REFUSES what it cannot serve
+  * slice scan, coalesced with file-stored values so foreign layouts
+  * that DO materialize the column read identically). The reader REFUSES what it cannot serve
   * correctly — format v3+, row-level delete manifests, non-parquet
   * data files, renamed columns with no name mapping — rather than
   * returning silently wrong rows (the readDelta conformance-gate
