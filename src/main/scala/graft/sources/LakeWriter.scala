@@ -607,9 +607,9 @@ object LakeWriter {
     * touching most files rewrites most of the table), where this
     * commits bitmap bytes + the update rows themselves.
     *
-    * Same semantics as [[mergeSnapshot]] (exact schema,
-    * partition-pruned when every partition column is a merge key, rows
-    * land verbatim — dedupe to one row per key first), and
+    * Same semantics as [[mergeSnapshot]] (exact schema, file-pruned
+    * probe, partition-pruned when every partition column is a merge
+    * key, rows land verbatim — dedupe to one row per key first), and
     * the SAME one-policy fallback as [[deleteFromSnapshotMor]]: any
     * file whose cumulative deleted fraction would exceed
     * `maxDeleteFraction`, or whose bitmap would exceed `maxDvBytes`,
@@ -681,15 +681,19 @@ object LakeWriter {
       else readFiles(spark, newFiles, schema, colmap)
         .select(keyExprs: _*).distinct()
     // candidate pruning: partition values (sound only when every
-    // partition column is a merge key); the DV build's count pass then
-    // tells the files a key matches from the rest, which it leaves as
-    // they are
-    val candidates =
+    // partition column is a merge key), then the key-sliver probe —
+    // read THROUGH the old DVs so an already-deleted row cannot flag
+    // its file as matched
+    val partPruned =
       if (partCols.nonEmpty && partCols.forall(keyCols.contains)) {
         val touchedParts = newFiles.map(partitionOf(partCols, _)).toSet
         files.filter(f =>
           partitionOfOpt(partCols, f).forall(touchedParts))
       } else files
+    val touched =
+      if (partPruned.isEmpty) Set.empty[String]
+      else filesOf(readKeyed(spark, pm, partPruned).join(keyD, keyCols))
+    val candidates = partPruned.filter(f => touched(baseName(f)))
     def commitMor(fullyDeleted: Set[String],
                   newEntries: Map[String, InlineDv]): Long = {
       val kept = files.filterNot(f => fullyDeleted(baseName(f)))
@@ -1177,14 +1181,14 @@ object LakeWriter {
       val bn = r.getString(0)
       val total = r.getLong(1)
       val del = r.getLong(2)
-      // del counts oldDel OR the new matches, a superset of the old
-      // DV's rows -- equal cardinality therefore means equal SET (no
-      // live row matched): the file stays as it is
-      if (del > oldDvs.get(bn).fold(0L)(_.cardinality)) {
-        if (del == total) fullyDeleted += bn
-        else if (del.toDouble / total > maxDeleteFraction) fallbackCow = true
-        else needsBitmap(bn) = del
-      }
+      if (del > 0 && del != total) {
+        if (del.toDouble / total > maxDeleteFraction) fallbackCow = true
+        // del counts oldDel OR the new matches, a superset of the old
+        // DV's rows -- equal cardinality therefore means equal SET
+        // (only already-deleted rows re-matched): no change
+        else if (!oldDvs.get(bn).exists(_.cardinality == del))
+          needsBitmap(bn) = del
+      } else if (del > 0) fullyDeleted += bn
     }
     if (fallbackCow) return MorFallbackCow
     if (needsBitmap.isEmpty && fullyDeleted.isEmpty) return MorNoChange
