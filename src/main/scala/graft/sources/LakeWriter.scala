@@ -264,6 +264,35 @@ object LakeWriter {
       sys.error(s"snapshot file not hive-partitioned by " +
         s"${partitionCols.mkString(",")}: $file"))
 
+  private val VersionDir = "^.*/data/v\\d+-[^/]+/".r
+
+  /** The part of a data file's path that holds its hive partition:
+    * the segments below the version directory it was written into,
+    * or, for a file ADOPTED IN PLACE by convertToSnapshot (no version
+    * dir), its path from the first `k=v` directory on. A `k=v` segment
+    * in the table's own location is never a partition. */
+  private def partitionPath(file: String): String =
+    VersionDir.findFirstMatchIn(file).map(m => file.substring(m.end))
+      .getOrElse {
+        val segs = file.split('/')
+        segs.drop(math.max(0, segs.indexWhere(_.contains("="))))
+          .mkString("/")
+      }
+
+  /** Raw (still-escaped) hive path segment value of `col` in `file`'s
+    * [[partitionPath]], anchored at a path-segment start: without the
+    * anchor, "day=" would also match inside ".../birthday=5/" and
+    * extract wrong values. The column is matched as Spark's hive path
+    * formatter writes it (escaped). The one rule behind
+    * [[partitionOfOpt]], the snapshot reader's partition values, the
+    * Iceberg mirror's partition extraction, and the DV changelog's
+    * partition resolution — one regex to keep correct. */
+  private[graft] def hiveSegmentOf(col: String,
+                                   file: String): Option[String] =
+    ("(?:^|/)" + java.util.regex.Pattern.quote(
+      ExternalCatalogUtils.escapePathName(col)) + "=([^/]*)/").r
+      .findFirstMatchIn(partitionPath(file)).map(_.group(1))
+
   /** Partition values of `file` under `partitionCols`, or None when
     * the file PREDATES the current partition spec (PARTITION SPEC
     * EVOLUTION, Iceberg-style: a later dynamic commit may declare a
@@ -272,17 +301,6 @@ object LakeWriter {
     * instead — they read correctly through the committed schema and
     * prune via their footer stats, they just have no PATH-derived
     * values). */
-  /** Raw (still-escaped) hive path segment value of `col` in `file`,
-    * anchored at a path-segment start: without the anchor, "day="
-    * would also match inside ".../birthday=5/" and extract wrong
-    * values. The single-column primitive behind [[partitionOfOpt]],
-    * the Iceberg mirror's partition extraction, and the DV
-    * changelog's partition resolution — one regex to keep correct. */
-  private[graft] def hiveSegmentOf(col: String,
-                                   file: String): Option[String] =
-    ("(?:^|/)" + java.util.regex.Pattern.quote(col) + "=([^/]*)/").r
-      .findFirstMatchIn(file).map(_.group(1))
-
   private[sources] def partitionOfOpt(partitionCols: Seq[String],
                                       file: String): Option[String] = {
     val vals = partitionCols.flatMap { c =>
@@ -292,25 +310,6 @@ object LakeWriter {
     }
     if (vals.length == partitionCols.length) Some(vals.mkString("\u0001"))
     else None
-  }
-
-  private val VersionDir = "^.*/data/v\\d+-[^/]+/".r
-
-  /** The hive partition of a data file, read from its PATH: the
-    * `k=v` directory segments below the version directory it was
-    * written into — or, for a file ADOPTED IN PLACE by
-    * convertToSnapshot, from its first `k=v` directory on — as
-    * (unescaped column, raw value) pairs in path order. */
-  private def pathPartition(file: String): Seq[(String, String)] = {
-    val rel = VersionDir.findFirstMatchIn(file).map(m => file.substring(m.end))
-      .getOrElse {
-        val segs = file.split('/')
-        segs.drop(math.max(0, segs.indexWhere(_.contains("=")))).mkString("/")
-      }
-    rel.split('/').toSeq.dropRight(1).filter(_.contains("=")).map { seg =>
-      val i = seg.indexOf('=')
-      ExternalCatalogUtils.unescapePathName(seg.take(i)) -> seg.drop(i + 1)
-    }
   }
 
   /** Read a set of snapshot data files as ONE [[FileScan.scan]] under
@@ -339,8 +338,8 @@ object LakeWriter {
     import org.apache.spark.sql.types.StructType
     val pSchema = physSchema(schema, colmap)
     val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
-    val parts = files.map(f => f -> pathPartition(f)
-      .filter(kv => pSchema.fieldNames.contains(kv._1))).toMap
+    val parts = files.map(f => f -> pSchema.fieldNames.toSeq.flatMap(c =>
+      hiveSegmentOf(c, f).map(c -> _))).toMap
     files.groupBy(f => parts(f).map(_._1)).toSeq.sortBy(_._1.size)
       .map { case (keys, group) =>
         FileScan.scan(spark, group.map { f =>

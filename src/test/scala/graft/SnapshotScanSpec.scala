@@ -127,6 +127,20 @@ class SnapshotScanSpec extends AnyFunSuite {
     assert(reads(0)._2.count() == 33L && reads(2)._2.count() == 33L)
   }
 
+  test("a k=v directory in the table's own location is no partition: " +
+      "reads and dynamic commits take the values below the version dir") {
+    val t = java.nio.file.Files.createTempDirectory("graft_loc")
+      .toString + "/p=9/t"
+    LakeWriter.commitSnapshotDynamic(spark.range(0, 6).toDF("id")
+      .withColumn("p", $"id" % 2), t, Seq("p"))
+    // replaces partition p=1 only
+    LakeWriter.commitSnapshotDynamic(Seq((10L, 1L)).toDF("id", "p"), t,
+      Seq("p"))
+    assert(LakeWriter.readSnapshot(spark, t).select("id", "p")
+      .as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((0L, 0L), (2L, 0L), (4L, 0L), (10L, 1L)))
+  }
+
   test("planning readSnapshot of a 40-file table runs no Spark job") {
     val t = tmp("scan_nolist")
     LakeWriter.commitSnapshot(spark.range(0, 400).toDF("id")
