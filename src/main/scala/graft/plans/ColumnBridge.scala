@@ -25,6 +25,15 @@ object GraftPlanBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The files under `dir` that Spark's file sources list: paths with
+    * a `.`- or `_`-prefixed segment (`_temporary`, `.spark-staging`;
+    * `k=v` dirs and parquet summary files excepted) are skipped. */
+  def listedFiles(spark: SparkSession,
+                  dir: org.apache.hadoop.fs.Path): Seq[String] =
+    org.apache.spark.util.HadoopFSUtils.listFiles(dir,
+      spark.sessionState.newHadoopConf(), _ => true)
+      .flatMap(_._2).map(_.getPath.toString)
 }
 
 /** Data-skipping predicate evaluator — lives in this package because

@@ -145,4 +145,42 @@ class ServingSpec extends AnyFunSuite {
     }
     assert(spark.table("parted").where($"day" === 7).count() == 2L)
   }
+
+  test("registerZone's one-footer schema skips the files Spark's listing " +
+      "skips, and a schema-merging session reads as Spark reads") {
+    val zone = java.nio.file.Files.createTempDirectory("graft_zone_hidden")
+      .toString
+    val df = Seq((1L, "a", 7), (2L, "b", 8)).toDF("k", "v", "day")
+    df.write.parquet(s"$zone/flat")
+    df.write.partitionBy("day").parquet(s"$zone/parted")
+    // a failed write's leftovers with another schema, under dirs that
+    // Spark's listing skips and that sort before the part files and
+    // the k=v dirs
+    val stray = Seq(("x", 1.5)).toDF("other", "w").coalesce(1)
+    Seq("flat", "parted").foreach { n =>
+      stray.write.parquet(s"$zone/$n/_temporary/0/_temporary/attempt_0")
+      stray.write.parquet(s"$zone/$n/.spark-staging-0")
+    }
+    assert(SparkJobs.during(spark)(Views.registerZone(spark, zone)) == 0)
+    Seq("flat", "parted").foreach { n =>
+      val view = spark.table(n)
+      assert(view.schema == spark.read.parquet(s"$zone/$n").schema, n)
+      assert(view.schema.fieldNames.toSet == Set("k", "v", "day"), n)
+      assert(view.count() == 2L, n)
+    }
+
+    val merged = java.nio.file.Files.createTempDirectory("graft_zone_merge")
+      .toString
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$merged/zone_merged")
+    Seq((2L, 2.5)).toDF("k", "w").write.mode("append")
+      .parquet(s"$merged/zone_merged")
+    val key = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(key, "true")
+    try {
+      Views.registerZone(spark, merged)
+      val view = spark.table("zone_merged")
+      assert(view.schema == spark.read.parquet(s"$merged/zone_merged").schema)
+      assert(view.schema.fieldNames.toSet == Set("k", "v", "w"))
+    } finally spark.conf.unset(key)
+  }
 }
