@@ -606,9 +606,9 @@ object LakeWriter {
     * touching most files rewrites most of the table), where this
     * commits bitmap bytes + the update rows themselves.
     *
-    * Same semantics as [[mergeSnapshot]] (exact schema, file-pruned
-    * probe, partition-pruned when every partition column is a merge
-    * key, rows land verbatim — dedupe to one row per key first), and
+    * Same semantics as [[mergeSnapshot]] (exact schema,
+    * partition-pruned when every partition column is a merge key, rows
+    * land verbatim — dedupe to one row per key first), and
     * the SAME one-policy fallback as [[deleteFromSnapshotMor]]: any
     * file whose cumulative deleted fraction would exceed
     * `maxDeleteFraction`, or whose bitmap would exceed `maxDvBytes`,
@@ -680,19 +680,15 @@ object LakeWriter {
       else readFiles(spark, newFiles, schema, colmap)
         .select(keyExprs: _*).distinct()
     // candidate pruning: partition values (sound only when every
-    // partition column is a merge key), then the key-sliver probe —
-    // read THROUGH the old DVs so an already-deleted row cannot flag
-    // its file as matched
-    val partPruned =
+    // partition column is a merge key); the DV build's count pass then
+    // tells the files a key matches from the rest, which it leaves as
+    // they are and its bitmap pass never scans
+    val candidates =
       if (partCols.nonEmpty && partCols.forall(keyCols.contains)) {
         val touchedParts = newFiles.map(partitionOf(partCols, _)).toSet
         files.filter(f =>
           partitionOfOpt(partCols, f).forall(touchedParts))
       } else files
-    val touched =
-      if (partPruned.isEmpty) Set.empty[String]
-      else filesOf(readKeyed(spark, pm, partPruned).join(keyD, keyCols))
-    val candidates = partPruned.filter(f => touched(baseName(f)))
     def commitMor(fullyDeleted: Set[String],
                   newEntries: Map[String, InlineDv]): Long = {
       val kept = files.filterNot(f => fullyDeleted(baseName(f)))
@@ -708,10 +704,10 @@ object LakeWriter {
     // matched = key membership in the updates (AQE broadcasts the
     // typically-small distinct-key side at runtime; a genuinely huge
     // update set shuffles, which is the right plan then)
-    val flagged = morFlaggedBase(spark, pm, candidates)
+    def flagged(fs: Seq[String]) = morFlaggedBase(spark, pm, fs)
       .join(keyD.withColumn("__graft_m", lit(1)), keyCols, "left")
       .withColumn("__graft_del", col(OldDel) || col("__graft_m").isNotNull)
-    morBuildDvs(spark, table, flagged, oldDvs,
+    morBuildDvs(spark, table, candidates, flagged, oldDvs,
         maxDeleteFraction, maxDvBytes) match {
       case MorFallbackCow =>
         // one policy, never a half-MOR commit: drop the pre-written
@@ -965,9 +961,9 @@ object LakeWriter {
         .parquet(dataDir.toString)
     }
     val newFiles = walkFreshData(fs, dataDir).sorted
-    val flagged = morFlaggedBase(spark, pm, matched).withColumn(
+    def flagged(fs: Seq[String]) = morFlaggedBase(spark, pm, fs).withColumn(
       "__graft_del", col(OldDel) || coalesce(predicate, lit(false)))
-    morBuildDvs(spark, table, flagged, oldDvs,
+    morBuildDvs(spark, table, matched, flagged, oldDvs,
         maxDeleteFraction, maxDvBytes) match {
       case MorFallbackCow =>
         fs.delete(dataDir, true): Unit
@@ -1087,9 +1083,9 @@ object LakeWriter {
     val oldDvs = pm.dvs
     val candidates = pruneFilesByPredicate(pm, predicate)
     if (candidates.isEmpty) return v0
-    val flagged = morFlaggedBase(spark, pm, candidates).withColumn(
+    def flagged(fs: Seq[String]) = morFlaggedBase(spark, pm, fs).withColumn(
       "__graft_del", col(OldDel) || coalesce(predicate, lit(false)))
-    morBuildDvs(spark, table, flagged, oldDvs,
+    morBuildDvs(spark, table, candidates, flagged, oldDvs,
         maxDeleteFraction, maxDvBytes) match {
       case MorFallbackCow =>
         deleteFromSnapshot(spark, table, predicate)
@@ -1146,27 +1142,30 @@ object LakeWriter {
   }
 
   /** The MERGE-ON-READ deletion-vector kernel, shared by
-    * [[deleteFromSnapshotMor]] and [[mergeSnapshotMor]]. `flagged`
-    * carries [[MorFile]], [[FileScan.RowIndex]] and boolean
-    * `__graft_del` (true = deleted AFTER this commit, old-DV rows
-    * included).
+    * [[deleteFromSnapshotMor]], [[updateSnapshotMor]] and
+    * [[mergeSnapshotMor]]. `flagged(files)` reads `files` with
+    * [[MorFile]], [[FileScan.RowIndex]] and boolean `__graft_del`
+    * (true = deleted AFTER this commit, old-DV rows included).
     *
     * Two distributed passes, driver traffic manifest-scale in BOTH:
-    * pass 1 is a per-file conditional count (one row per candidate
-    * file) that alone decides the COW fallback, the fully-deleted
-    * files, and the bitmap-unchanged files; pass 2 builds each
-    * remaining file's bitmap executor-side
+    * pass 1 is a per-file conditional count over every candidate (one
+    * row per file) that alone decides the COW fallback, the
+    * fully-deleted files, and the files no live row matched, which stay
+    * as they are; pass 2 scans only the files left that need a bitmap
+    * and builds each one executor-side
     * ([[DeletionVectors.StreamingSerializer]] folds the clustered,
     * sorted row-index stream straight into serialized roaring form,
     * enforcing `maxDvBytes` in-flight) and ships only the <=
-    * `maxDvBytes` blobs. Raw row indexes never reach the driver. */
+    * `maxDvBytes` blobs. Raw row indexes never reach the driver. So a
+    * candidate no key or predicate touches is scanned once. */
   private def morBuildDvs(spark: SparkSession, table: String,
-      flagged: DataFrame, oldDvs: Map[String, InlineDv],
+      candidates: Seq[String], flagged: Seq[String] => DataFrame,
+      oldDvs: Map[String, InlineDv],
       maxDeleteFraction: Double, maxDvBytes: Int): MorOutcome = {
     // PASS 1 -- counts only. The COW-fallback decision (and the
     // fully-deleted and bitmap-unchanged cases) are all decidable
     // from counts, so a COW-bound write never ships a row index.
-    val counts = flagged.groupBy(col(MorFile))
+    val counts = flagged(candidates).groupBy(col(MorFile))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("__total"),
         org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.when(
@@ -1180,14 +1179,14 @@ object LakeWriter {
       val bn = r.getString(0)
       val total = r.getLong(1)
       val del = r.getLong(2)
-      if (del > 0 && del != total) {
-        if (del.toDouble / total > maxDeleteFraction) fallbackCow = true
-        // del counts oldDel OR the new matches, a superset of the old
-        // DV's rows -- equal cardinality therefore means equal SET
-        // (only already-deleted rows re-matched): no change
-        else if (!oldDvs.get(bn).exists(_.cardinality == del))
-          needsBitmap(bn) = del
-      } else if (del > 0) fullyDeleted += bn
+      // del counts oldDel OR the new matches, a superset of the old
+      // DV's rows -- equal cardinality therefore means equal SET (no
+      // live row matched): the file stays as it is
+      if (del > oldDvs.get(bn).fold(0L)(_.cardinality)) {
+        if (del == total) fullyDeleted += bn
+        else if (del.toDouble / total > maxDeleteFraction) fallbackCow = true
+        else needsBitmap(bn) = del
+      }
     }
     if (fallbackCow) return MorFallbackCow
     if (needsBitmap.isEmpty && fullyDeleted.isEmpty) return MorNoChange
@@ -1199,11 +1198,9 @@ object LakeWriter {
     val newEntries = scala.collection.mutable.Map[String, InlineDv]()
     if (needsBitmap.nonEmpty) {
       import spark.implicits._
-      val keysDf = needsBitmap.keys.toSeq.sorted.toDF(MorFile)
       val maxDv = maxDvBytes
-      val blobs = flagged.filter(col("__graft_del"))
-        .join(org.apache.spark.sql.functions.broadcast(keysDf),
-          Seq(MorFile), "left_semi")
+      val blobs = flagged(candidates.filter(f => needsBitmap.contains(baseName(f))))
+        .filter(col("__graft_del"))
         .select(col(MorFile), col(FileScan.RowIndex))
         .as[(String, Long)]
         .repartition(col(MorFile))

@@ -198,6 +198,30 @@ class MorDeleteSpec extends AnyFunSuite {
     assert(rows(IcebergMirror.readIceberg(spark, t)) == rows(expect2))
   }
 
+  test("a sparse MOR MERGE reads each untouched candidate file once and " +
+      "the touched file at most twice more") {
+    val t = freshDir("graft_mor_sparse") + "/t"
+    // 20 files of 50 contiguous ids each
+    LakeWriter.commitSnapshot(spark.range(0, 1000, 1, 20).toDF("id")
+      .withColumn("lang", lit("en")).withColumn("v", $"id" * 10), t)
+    assert(LakeWriter.snapshotFiles(spark, t, 1L).size == 20)
+    // two keys of the first file and one new key
+    val u = Seq((3L, "u", 30L), (7L, "u", 70L), (2000L, "u", 0L))
+      .toDF("id", "lang", "v")
+    val read = SparkJobs.rowsRead(spark) {
+      LakeWriter.mergeSnapshotMor(u, t, Seq("id")): Unit
+    }
+    // one pass over the 1 000 candidate rows + the touched file's 50
+    // rows once or twice more + the 3 landed keys read back by each
+    // pass; a bitmap pass over every candidate reads 1 000 rows again
+    assert(read >= 1000L && read <= 1000L + 2 * 50 + 3 * 3, read)
+    assert(LakeWriter.manifest(spark, t, 2L).dvs.size == 1)
+    val back = LakeWriter.readSnapshot(spark, t)
+    assert(back.count() == 1001L)
+    assert(back.where($"lang" === "u").select("id").as[Long].collect()
+      .sorted.toSeq == Seq(3L, 7L, 2000L))
+  }
+
   test("MOR MERGE: COW fallback above the fraction threshold leaves " +
       "no orphan files; a pure-insert merge appends without DVs; a " +
       "partitioned table with partition merge keys stays MOR") {

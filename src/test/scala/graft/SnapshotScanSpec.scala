@@ -2,7 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
@@ -183,24 +184,38 @@ class SnapshotScanSpec extends AnyFunSuite {
   }
 }
 
-/** Counts the Spark jobs `body` runs on this thread (a job group tags
-  * them, so other suites' jobs never count). */
+/** Counts the Spark jobs `body` runs on this thread, and the input
+  * rows their tasks read (a job group tags them, so other suites' jobs
+  * never count). */
 object SparkJobs {
-  def during(spark: SparkSession)(body: => Unit): Int = {
+  def during(spark: SparkSession)(body: => Unit): Int =
+    counted(spark)(body)._1
+
+  def rowsRead(spark: SparkSession)(body: => Unit): Long =
+    counted(spark)(body)._2
+
+  private def counted(spark: SparkSession)(body: => Unit): (Int, Long) = {
     val jobs = new AtomicInteger
+    val rows = new java.util.concurrent.atomic.AtomicLong
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val group = s"graft-spec-${java.util.UUID.randomUUID()}"
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet(): Unit
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          rows.addAndGet(e.taskMetrics.inputMetrics.recordsRead): Unit
     }
     spark.sparkContext.addSparkListener(listener)
     spark.sparkContext.setJobGroup(group, "counted")
     try {
       body
       org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
-      jobs.get
+      (jobs.get, rows.get)
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
