@@ -54,7 +54,7 @@ object LakehousePipeline {
       .where(col("user_id").isNotNull && col("ts").isNotNull)
     LakeWriter.dynamicPartitionOverwrite(stg, s"$outDir/stg/stg_events",
       Seq("event_date"))
-    val stgBack = spark.read.parquet(s"$outDir/stg/stg_events")
+    val stgBack = LakeWriter.readParquetDir(spark, s"$outDir/stg/stg_events")
 
     // ---- dims ------------------------------------------------------
     val dimDate = writeDim(Dims.dateDim(stgBack, col("event_date")),
@@ -80,7 +80,7 @@ object LakehousePipeline {
 
     Result(stgBack.count(), dimDate.count(), dimEventType.count(),
       dimUserState.count(),
-      spark.read.parquet(s"$outDir/curated/fact_events").count())
+      LakeWriter.readParquetDir(spark, s"$outDir/curated/fact_events").count())
   }
 
   // ---- per-datadate incremental orchestration ----------------------
@@ -153,6 +153,16 @@ object LakehousePipeline {
       .collect().map(_.getString(0)).toSet
   }
 
+  /** Whether `date` is in the ledger: a read of its one date, which
+    * the ledger files' `datadate` stats prune to the file holding it,
+    * so the check does not grow with the ledger's history. */
+  private def processed(spark: SparkSession, outDir: String,
+                        date: String): Boolean = {
+    val t = ledgerPath(outDir)
+    LakeWriter.snapshotVersions(spark, t).nonEmpty &&
+      !LakeWriter.readSnapshotWhere(spark, t, col("datadate") === date).isEmpty
+  }
+
   /** Load ONE datadate end to end; a date in the ledger is skipped
     * unless `force` (= Airflow task clear + re-run).
     *
@@ -169,7 +179,7 @@ object LakehousePipeline {
               probe: (String, Int) => Unit = (_, _) => ()): DayResult = {
     def staged[T](stage: String)(body: => T): T =
       retryStage(stage, retries, probe)(body)
-    if (!force && processedDates(spark, outDir).contains(date))
+    if (!force && processed(spark, outDir, date))
       return DayResult(date, 0L, 0L, skipped = true)
     val day = to_date(lit(date))
 
@@ -202,7 +212,7 @@ object LakehousePipeline {
       val dimDate =
         if (!new java.io.File(dateDimPath).exists()) newDates
         else {
-          val existing = spark.read.parquet(dateDimPath)
+          val existing = LakeWriter.readParquetDir(spark, dateDimPath)
           existing.unionByName(
             newDates.join(existing.select("date"), Seq("date"), "left_anti"))
         }
@@ -218,7 +228,7 @@ object LakehousePipeline {
         if (!new java.io.File(etPath).exists())
           Dims.distinctDim(stg, Seq("event_type"), "event_type_sk")
         else {
-          val existing = spark.read.parquet(etPath)
+          val existing = LakeWriter.readParquetDir(spark, etPath)
           // once assigned, a surrogate key NEVER moves: new types take
           // keys after the current max, in natural-key order
           val maxSk = existing.agg(max(col("event_type_sk"))).head().getLong(0)
@@ -232,7 +242,7 @@ object LakehousePipeline {
       writeViaStaging(dimEventType, etPath)
     }
     // the pre-swap lineage points at deleted files — read back fresh
-    val dimEventTypeBack = spark.read.parquet(etPath)
+    val dimEventTypeBack = LakeWriter.readParquetDir(spark, etPath)
 
     val usPath = s"$outDir/curated/dim_user_state"
     val dimUserState = staged("dim_user_state") {
@@ -256,30 +266,32 @@ object LakehousePipeline {
         val built = Scd2.build(stg, Seq("user_id"), Seq("event_type"), "ts")
           .withColumnRenamed("event_type", "state")
         writeViaStaging(built, usPath)
-        spark.read.parquet(usPath)
+        LakeWriter.readParquetDir(spark, usPath)
       } else {
-        val existing = spark.read.parquet(usPath)
+        val existing = LakeWriter.readParquetDir(spark, usPath)
         val merged = Scd2.merge(
           existing.withColumnRenamed("state", "event_type"),
           stg, Seq("user_id"), Seq("event_type"), "ts")
           .withColumnRenamed("event_type", "state")
         writeViaStaging(merged, usPath)
-        spark.read.parquet(usPath)
+        LakeWriter.readParquetDir(spark, usPath)
       }
     }
 
     // ---- fact, this date's partition only --------------------------
+    // the PIT and dim joins are LEFT joins of the non-empty staged day;
+    // the write counts the rows it lands, so the joins run once
     val factRows = staged("fact") {
       val fact = PitJoin(stg, dimUserState, Seq("user_id"), "ts")
         .join(broadcast(dimEventTypeBack), Seq("event_type"), "left")
         .withColumn("date_sk", CleanFns.dateSk(col("event_date")))
         .select("date_sk", "event_id", "user_id", "event_type_sk",
           "state", "value", "ts")
-      val n = fact.count()
-      if (n > 0)
-        LakeWriter.dynamicPartitionOverwrite(fact,
-          s"$outDir/curated/fact_events", Seq("date_sk"))
-      n
+      val landed = org.apache.spark.sql.Observation()
+      LakeWriter.dynamicPartitionOverwrite(
+        fact.observe(landed, count(lit(1)).as("rows")),
+        s"$outDir/curated/fact_events", Seq("date_sk"))
+      landed.get("rows").asInstanceOf[Long]
     }
     stg.unpersist(blocking = false)
 

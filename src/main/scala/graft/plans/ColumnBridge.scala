@@ -127,19 +127,8 @@ object GraftDataSkipping {
         case _ => None
       }
     }
-    // PROVEN comparison only: None = no proof (unparseable numeric,
-    // or non-ASCII strings — Java UTF-16 order can diverge from
-    // parquet's UTF-8 byte order, so string proofs are ASCII-only)
     def cmpOpt(a: String, b: String, c: String): Option[Int] =
-      types.get(c) match {
-        case Some(org.apache.spark.sql.types.StringType) =>
-          if (a.forall(_ < 128) && b.forall(_ < 128)) Some(a.compareTo(b))
-          else None
-        case Some(_) =>
-          try Some(BigDecimal(a).compare(BigDecimal(b)))
-          catch { case _: NumberFormatException => None }
-        case None => None
-      }
+      types.get(c).flatMap(statCompare(a, b, _))
     // a file is skipped only when OUTSIDE is proven; c is the column,
     // v the literal, (lo, hi) its stats
     def provenOutside(op: String, c: String, v: String,
@@ -219,6 +208,21 @@ object GraftDataSkipping {
       case _ => true
     }
   }
+
+  /** The PROVEN order of two manifest stat values of a column of type
+    * `dt`; None = no proof (an unparseable numeric such as NaN, or a
+    * non-ASCII string — Java UTF-16 order can diverge from parquet's
+    * UTF-8 byte order, so string proofs are ASCII-only). */
+  def statCompare(a: String, b: String,
+                  dt: org.apache.spark.sql.types.DataType): Option[Int] =
+    dt match {
+      case org.apache.spark.sql.types.StringType =>
+        if (a.forall(_ < 128) && b.forall(_ < 128)) Some(a.compareTo(b))
+        else None
+      case _ =>
+        try Some(BigDecimal(a).compare(BigDecimal(b)))
+        catch { case _: NumberFormatException => None }
+    }
 
   /** The top-level AND-conjuncts of `predicate` that are pure
     * equality tests against literals — `col = lit` (either side) or

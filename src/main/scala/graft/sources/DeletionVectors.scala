@@ -150,14 +150,20 @@ object DeletionVectors {
   private val NO_OFFSET_THRESHOLD = 4
 
   /** One parsed 16-bit-keyed container of a 32-bit roaring bitmap. */
-  private sealed trait Container { def contains(low16: Int): Boolean }
+  private sealed trait Container {
+    def contains(low16: Int): Boolean
+    /** The container's low-16 values, ascending. */
+    def values: Iterator[Int]
+  }
   private final class ArrayContainer(vals: Array[Char]) extends Container {
     def contains(low16: Int): Boolean =
       java.util.Arrays.binarySearch(vals, low16.toChar) >= 0
+    def values: Iterator[Int] = vals.iterator.map(_.toInt)
   }
   private final class BitmapContainer(words: Array[Long]) extends Container {
     def contains(low16: Int): Boolean =
       (words(low16 >>> 6) & (1L << (low16 & 63))) != 0
+    def values: Iterator[Int] = Iterator.range(0, 65536).filter(contains)
   }
   private final class RunContainer(starts: Array[Char], lens: Array[Char])
       extends Container {
@@ -167,6 +173,8 @@ object DeletionVectors {
       i = -i - 2 // last run starting at or before low16
       i >= 0 && low16 <= starts(i) + lens(i)
     }
+    def values: Iterator[Int] = starts.indices.iterator.flatMap(i =>
+      Iterator.range(starts(i).toInt, starts(i) + lens(i) + 1))
   }
 
   /** One parsed 32-bit roaring bitmap: sorted 16-bit container keys +
@@ -176,6 +184,9 @@ object DeletionVectors {
       val i = java.util.Arrays.binarySearch(keys, ((v32 >>> 16) & 0xFFFF).toChar)
       i >= 0 && cs(i).contains(v32 & 0xFFFF)
     }
+    /** The unsigned 32-bit values, ascending. */
+    def values: Iterator[Long] = keys.indices.iterator.flatMap(i =>
+      cs(i).values.map(v => (keys(i).toLong << 16) | v))
   }
 
   /** A parsed 64-bit RoaringBitmapArray: membership over deleted row
@@ -188,6 +199,9 @@ object DeletionVectors {
       val i = java.util.Arrays.binarySearch(highKeys, (v >>> 32).toInt)
       i >= 0 && bitmaps(i).contains((v & 0xFFFFFFFFL).toInt)
     }
+    /** The deleted row indexes, ascending. */
+    def iterator: Iterator[Long] = highKeys.indices.iterator.flatMap(i =>
+      bitmaps(i).values.map(v => (highKeys(i).toLong << 32) | v))
   }
 
   object RoaringArray {

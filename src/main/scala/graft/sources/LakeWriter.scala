@@ -19,15 +19,16 @@ import org.apache.spark.sql.functions.{coalesce, col, expr, greatest,
 object LakeWriter {
 
   /** Write `df` to `path` partitioned by `partitionCols`; existing
-    * partitions not present in `df` are left untouched. */
+    * partitions not present in `df` are left untouched. The mode is
+    * this write's option, so later overwrites in the session keep
+    * Spark's static default. */
   def dynamicPartitionOverwrite(df: DataFrame, path: String,
                                 partitionCols: Seq[String]): Unit = {
     val missing = partitionCols.filterNot(df.columns.contains)
     require(missing.isEmpty, s"partition columns not in frame: $missing")
-    df.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     df.write
       .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path)
   }
@@ -371,9 +372,45 @@ object LakeWriter {
       Seq(org.apache.spark.sql.types.StructField(MorFile,
         org.apache.spark.sql.types.StringType)), f => Seq(baseName(f)))
 
-  /** The basenames of the files [[readKeyed]] `rows` come from. */
-  private def filesOf(rows: DataFrame): Set[String] =
-    rows.select(MorFile).distinct().collect().map(_.getString(0)).toSet
+  /** The basenames of the files [[readKeyed]] `rows` come from, in one
+    * pass with no exchange: each task yields the distinct [[MorFile]]
+    * constants it saw and the driver unions them. */
+  private def filesOf(rows: DataFrame): Set[String] = {
+    import rows.sparkSession.implicits._
+    rows.select(MorFile).as[String].mapPartitions(_.toSet.iterator)
+      .collect().toSet
+  }
+
+  /** Of `candidates`, the files whose manifest min/max can hold a key
+    * of some landed update file. A candidate drops when every landed
+    * file has a key column whose range is disjoint from the
+    * candidate's (the read path's typed order proof,
+    * `GraftDataSkipping.statCompare`). A
+    * column without a min/max on either side (no stats, an all-NULL
+    * column, a type outside [[statType]], a partition column) proves
+    * nothing; an empty landed file holds no key. */
+  private def keyCandidates(m: Manifest, candidates: Seq[String],
+      keyCols: Seq[String], landed: Iterable[FileStats]): Seq[String] = {
+    val types = m.schema.fields.map(f => f.name -> f.dataType).toMap
+    def range(st: FileStats, k: String): Option[(String, String)] =
+      st.cols.get(m.colmap.phys(k)).collect {
+        case ColStat(Some(lo), Some(hi), _) => (lo, hi) }
+    val boxes = landed.filterNot(_.rows.contains(0L))
+      .map(u => keyCols.map(k => k -> range(u, k)))
+    candidates.filter { f =>
+      val fst = m.stats.get(baseName(f))
+      boxes.exists(_.forall { case (k, ur) =>
+        val disjoint = for {
+          (ulo, uhi) <- ur
+          (flo, fhi) <- fst.flatMap(range(_, k))
+        } yield org.apache.spark.sql.GraftDataSkipping
+            .statCompare(uhi, flo, types(k)).exists(_ < 0) ||
+          org.apache.spark.sql.GraftDataSkipping
+            .statCompare(ulo, fhi, types(k)).exists(_ > 0)
+        !disjoint.contains(true)
+      })
+    }
+  }
 
   /** The wider of two types along the lossless promotion chains the
     * parquet reader supports natively (byte→short→int→long,
@@ -545,9 +582,16 @@ object LakeWriter {
     * being opened — a daily upsert against a 100 TB table probes one
     * day's files, not the table's.
     *
+    * KEY-RANGE pruning stacks on top: the landed update files' footer
+    * stats are read once, and a file whose manifest min/max for some
+    * merge key cannot hold a key of any landed file carries without
+    * being opened (a one-row upsert of a new key into a table of
+    * disjoint key ranges opens no file).
+    *
     * Matched-file detection joins only the key columns of each side
-    * (plus the input file name), so the probe shuffles key slivers,
-    * never payload. Rows in `updates` land verbatim — callers owning
+    * (plus the file's basename) and folds the touched files inside
+    * each scan task — no shuffle of the table side, never payload.
+    * Rows in `updates` land verbatim — callers owning
     * a one-row-per-key contract dedupe before merging, as they would
     * for MERGE INTO. Returns the committed version. */
   def mergeSnapshot(updates: DataFrame, table: String,
@@ -616,9 +660,16 @@ object LakeWriter {
     * half-MOR commit. The manifest stamps `mergekeys`, so the change
     * feed pairs the DV-retired rows with their replacements as
     * update_preimage/update_postimage exactly like a COW merge.
-    * Scale shape: the DV build is the shared two-pass kernel
-    * ([[morBuildDvs]]) — driver traffic is manifest-scale, raw row
-    * indexes never leave the executors. */
+    *
+    * Scale shape: the landed update files' footers are read once; a
+    * file whose manifest min/max for some merge key cannot hold a key
+    * of any landed file is never opened (a daily upsert into a table
+    * clustered by key probes the files its keys fall in). The rest go
+    * through ONE shuffle-free pass of the shared DV build
+    * ([[morBuildDvs]]): the key sliver is broadcast, each scan task
+    * folds its rows into per-file counts and bitmaps, and the driver
+    * receives counts plus bounded bitmaps — raw row indexes never
+    * leave the executors. */
   def mergeSnapshotMor(updates: DataFrame, table: String,
                        keyCols: Seq[String],
                        maxDeleteFraction: Double = 0.5,
@@ -668,27 +719,31 @@ object LakeWriter {
         .parquet(dataDir.toString)
     }
     val newFiles = walkFreshData(fs, dataDir).sorted
+    // the landed footers, read once: their key ranges prune the
+    // candidates and the commit records them as the new files' stats
+    val newStats = footersOf(spark, newFiles, schema, colmap)
     // the merge keys come from the files JUST WRITTEN, not the lazy
     // `updates` plan: a non-deterministic updates frame (rand()
     // sampling, a concurrently-changing source) would otherwise
     // probe/retire a DIFFERENT key set than the rows that landed —
     // reading the delta-sized output back makes retire-and-append
-    // agree by construction
-    val keyD =
-      if (newFiles.isEmpty) // zero update rows landed: empty key set
-        updates.select(keyExprs: _*).limit(0)
-      else readFiles(spark, newFiles, schema, colmap)
-        .select(keyExprs: _*).distinct()
+    // agree by construction. Duplicate keys fan a matched row out into
+    // adjacent copies, which the DV build counts once.
+    lazy val keyD = readFiles(spark, newFiles, schema, colmap,
+        lengths = newStats.flatMap { case (bn, (_, len)) => len.map(bn -> _) })
+      .select(keyExprs: _*)
     // candidate pruning: partition values (sound only when every
-    // partition column is a merge key); the DV build's count pass then
-    // tells the files a key matches from the rest, which it leaves as
-    // they are and its bitmap pass never scans
-    val candidates =
+    // partition column is a merge key), then the landed key ranges
+    // against each file's manifest min/max; the DV build leaves the
+    // candidates no key matches as they are
+    val partCandidates =
       if (partCols.nonEmpty && partCols.forall(keyCols.contains)) {
         val touchedParts = newFiles.map(partitionOf(partCols, _)).toSet
         files.filter(f =>
           partitionOfOpt(partCols, f).forall(touchedParts))
       } else files
+    val candidates = keyCandidates(pm, partCandidates, keyCols,
+      newStats.values.map(_._1))
     def commitMor(fullyDeleted: Set[String],
                   newEntries: Map[String, InlineDv]): Long = {
       val kept = files.filterNot(f => fullyDeleted(baseName(f)))
@@ -697,17 +752,17 @@ object LakeWriter {
       writeManifest(spark, fs, table, Some(pm), version, "merge", schema,
         kept ++ newFiles, partCols, txnOverride = txn,
         mergeKeys = keyCols,
-        dvsOverride = Some(oldDvs ++ newEntries))
+        dvsOverride = Some(oldDvs ++ newEntries), landed = newStats)
       version
     }
     if (candidates.isEmpty) return commitMor(Set.empty, Map.empty)
-    // matched = key membership in the updates (AQE broadcasts the
-    // typically-small distinct-key side at runtime; a genuinely huge
-    // update set shuffles, which is the right plan then)
+    // matched = key membership in the updates (the planner broadcasts
+    // the typically-small key side; a genuinely huge update set
+    // shuffles, which the DV build detects and clusters by file)
     def flagged(fs: Seq[String]) = morFlaggedBase(spark, pm, fs)
       .join(keyD.withColumn("__graft_m", lit(1)), keyCols, "left")
       .withColumn("__graft_del", col(OldDel) || col("__graft_m").isNotNull)
-    morBuildDvs(spark, table, candidates, flagged, oldDvs,
+    morBuildDvs(spark, candidates, flagged, oldDvs,
         maxDeleteFraction, maxDvBytes) match {
       case MorFallbackCow =>
         // one policy, never a half-MOR commit: drop the pre-written
@@ -904,8 +959,8 @@ object LakeWriter {
     }
 
   /** MERGE-ON-READ UPDATE: the matched rows retire via DELETION
-    * VECTORS (the shared [[morBuildDvs]] two-pass kernel — counts
-    * decide the COW fallback, bitmaps serialize executor-side) while
+    * VECTORS (the shared one-pass [[morBuildDvs]] kernel — per-file
+    * counts decide the COW fallback, bitmaps serialize executor-side) while
     * their TRANSFORMED images land as ordinary appends — one commit,
     * zero data-file rewrites. The write shape of a broad-but-sparse
     * UPDATE on a 100 TB table (fix a mis-parsed field across every
@@ -963,13 +1018,13 @@ object LakeWriter {
     val newFiles = walkFreshData(fs, dataDir).sorted
     def flagged(fs: Seq[String]) = morFlaggedBase(spark, pm, fs).withColumn(
       "__graft_del", col(OldDel) || coalesce(predicate, lit(false)))
-    morBuildDvs(spark, table, matched, flagged, oldDvs,
+    morBuildDvs(spark, matched, flagged, oldDvs,
         maxDeleteFraction, maxDvBytes) match {
       case MorFallbackCow =>
         fs.delete(dataDir, true): Unit
         updateSnapshot(spark, table, predicate, set)
       case MorNoChange =>
-        // the probe saw a match but the count pass flagged nothing
+        // the probe saw a match but the DV pass flagged nothing
         // new: only a predicate that changed between jobs does this
         morRequireDeterministic(spark, table, newFiles, schema,
           colmap, 0L, "UPDATE")
@@ -1057,15 +1112,13 @@ object LakeWriter {
     * half-MOR commit). Returns the new version (or the current one
     * when nothing matches).
     *
-    * Scale shape — two distributed passes, driver traffic is
-    * manifest-scale in BOTH: pass 1 is a per-file conditional count
-    * (one row per pruned candidate file) that alone decides the COW
-    * fallback, the fully-deleted files, and the bitmap-unchanged
-    * files; pass 2 builds each remaining file's bitmap executor-side
-    * ([[DeletionVectors.StreamingSerializer]] folds the clustered,
-    * sorted row-index stream straight into serialized roaring form,
-    * enforcing `maxDvBytes` in-flight) and ships only the <=
-    * `maxDvBytes` blobs. Raw row indexes never reach the driver — a
+    * Scale shape — ONE distributed pass over the stat-pruned candidates
+    * ([[morBuildDvs]]), driver traffic manifest-scale: each scan task
+    * folds its rows into per-file counts and, for the rows this commit
+    * deletes, a bitmap serialized executor-side
+    * ([[DeletionVectors.StreamingSerializer]], bounded in-flight); the
+    * driver's counts alone decide the COW fallback and the
+    * fully-deleted files. Raw row indexes never reach the driver — a
     * 49%-of-5-billion-rows delete costs the driver the same few MB a
     * point delete does. */
   def deleteFromSnapshotMor(spark: SparkSession, table: String,
@@ -1085,7 +1138,7 @@ object LakeWriter {
     if (candidates.isEmpty) return v0
     def flagged(fs: Seq[String]) = morFlaggedBase(spark, pm, fs).withColumn(
       "__graft_del", col(OldDel) || coalesce(predicate, lit(false)))
-    morBuildDvs(spark, table, candidates, flagged, oldDvs,
+    morBuildDvs(spark, candidates, flagged, oldDvs,
         maxDeleteFraction, maxDvBytes) match {
       case MorFallbackCow =>
         deleteFromSnapshot(spark, table, predicate)
@@ -1141,118 +1194,146 @@ object LakeWriter {
       .drop(dvFields.map(_.name): _*)
   }
 
+  /** One scan task's view of one contiguous run of a file's rows, as
+    * the MERGE-ON-READ DV build ships it to the driver: the rows seen,
+    * how many are deleted after this commit (old-DV rows included) and
+    * how many of those this commit deletes (`fresh`). `bitmap` is the
+    * serialized roaring bitmap of the deleted row indexes of the run,
+    * null when `fresh` is 0 (the old DV already holds them) and empty
+    * when it outgrew the bound. */
+  private[sources] final case class DvPartial(file: String, rows: Long,
+      deleted: Long, fresh: Long, bitmap: Array[Byte])
+
+  /** Roaring headers a contiguous run's bitmap can carry beyond the
+    * whole file's: a run restricted to a row range keeps every inner
+    * container and shrinks its two boundary containers, but each of
+    * its two boundary 32-bit bitmaps may switch between the run and
+    * no-run header layouts (at most 8 188 bytes each). A run over
+    * `maxDvBytes` + this therefore proves the whole bitmap over
+    * `maxDvBytes`. */
+  private val DvRunSlack = 16384
+
   /** The MERGE-ON-READ deletion-vector kernel, shared by
     * [[deleteFromSnapshotMor]], [[updateSnapshotMor]] and
     * [[mergeSnapshotMor]]. `flagged(files)` reads `files` with
-    * [[MorFile]], [[FileScan.RowIndex]] and boolean `__graft_del`
-    * (true = deleted AFTER this commit, old-DV rows included).
+    * [[MorFile]], [[FileScan.RowIndex]], [[OldDel]] and boolean
+    * `__graft_del` (true = deleted AFTER this commit, old-DV rows
+    * included).
     *
-    * Two distributed passes, driver traffic manifest-scale in BOTH:
-    * pass 1 is a per-file conditional count over every candidate (one
-    * row per file) that alone decides the COW fallback, the
-    * fully-deleted files, and the files no live row matched, which stay
-    * as they are; pass 2 scans only the files left that need a bitmap
-    * and builds each one executor-side
-    * ([[DeletionVectors.StreamingSerializer]] folds the clustered,
-    * sorted row-index stream straight into serialized roaring form,
-    * enforcing `maxDvBytes` in-flight) and ships only the <=
-    * `maxDvBytes` blobs. Raw row indexes never reach the driver. So a
-    * candidate no key or predicate touches is scanned once. */
-  private def morBuildDvs(spark: SparkSession, table: String,
+    * ONE distributed pass with no exchange: each scan task folds its
+    * rows, which arrive in row-index order per file split, into
+    * [[DvPartial]]s — per contiguous run of a file: rows, deleted rows,
+    * rows this commit deletes, and (only when it deletes some) the
+    * run's bitmap, built by a [[DeletionVectors.StreamingSerializer]]
+    * that stops at `maxDvBytes` + [[DvRunSlack]] and ships an overflow
+    * marker instead. The driver sums each file's partials: the counts
+    * decide the COW fallback (`maxDeleteFraction`), the fully-deleted
+    * files and the files no live row matched, which stay as they are;
+    * a file that needs a bitmap takes its one whole-file partial as is,
+    * or unions its runs with the old DV into one bitmap. A bitmap over
+    * `maxDvBytes` (or an overflowed run) sends the whole commit down the
+    * COW path. So the driver receives counts per file split plus at
+    * most one bounded bitmap per run that deletes rows; raw row
+    * indexes never reach it. A probe whose join shuffles (an update
+    * key set too large to broadcast) is clustered by file and sorted
+    * first, so each file still folds into one run. */
+  private def morBuildDvs(spark: SparkSession,
       candidates: Seq[String], flagged: Seq[String] => DataFrame,
       oldDvs: Map[String, InlineDv],
       maxDeleteFraction: Double, maxDvBytes: Int): MorOutcome = {
-    // PASS 1 -- counts only. The COW-fallback decision (and the
-    // fully-deleted and bitmap-unchanged cases) are all decidable
-    // from counts, so a COW-bound write never ships a row index.
-    val counts = flagged(candidates).groupBy(col(MorFile))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("__total"),
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.when(
-            col("__graft_del"), lit(1))).as("__del"))
-      .collect()
-    var fallbackCow = false
-    val fullyDeleted = scala.collection.mutable.Set[String]()
-    // basename -> expected cardinality, for files that need a bitmap
-    val needsBitmap = scala.collection.mutable.Map[String, Long]()
-    counts.foreach { r =>
-      val bn = r.getString(0)
-      val total = r.getLong(1)
-      val del = r.getLong(2)
-      // del counts oldDel OR the new matches, a superset of the old
-      // DV's rows -- equal cardinality therefore means equal SET (no
-      // live row matched): the file stays as it is
-      if (del > oldDvs.get(bn).fold(0L)(_.cardinality)) {
-        if (del == total) fullyDeleted += bn
-        else if (del.toDouble / total > maxDeleteFraction) fallbackCow = true
-        else needsBitmap(bn) = del
-      }
-    }
-    if (fallbackCow) return MorFallbackCow
-    if (needsBitmap.isEmpty && fullyDeleted.isEmpty) return MorNoChange
-    // PASS 2 -- build each surviving file's roaring bitmap EXECUTOR
-    // side: cluster the deleted indexes by file, fold each file's
-    // sorted index stream through a StreamingSerializer (memory
-    // bounded by maxDvBytes + one open container), and collect only
-    // the serialized blobs.
-    val newEntries = scala.collection.mutable.Map[String, InlineDv]()
-    if (needsBitmap.nonEmpty) {
-      import spark.implicits._
-      val maxDv = maxDvBytes
-      val blobs = flagged(candidates.filter(f => needsBitmap.contains(baseName(f))))
-        .filter(col("__graft_del"))
-        .select(col(MorFile), col(FileScan.RowIndex))
-        .as[(String, Long)]
-        .repartition(col(MorFile))
-        .sortWithinPartitions(MorFile, FileScan.RowIndex)
-        .mapPartitions { it =>
-          // (file, cardinality, bytes); empty bytes = exceeded maxDv
-          // (a real bitmap is never empty here since cardinality > 0)
-          val acc = scala.collection.mutable
-            .ArrayBuffer[(String, Long, Array[Byte])]()
-          var cur: String = null
-          var ser: DeletionVectors.StreamingSerializer = null
-          def close(): Unit = if (cur != null)
-            acc += ((cur, ser.cardinality,
-              ser.result().getOrElse(Array.emptyByteArray)))
-          it.foreach { case (f, ridx) =>
-            if (f != cur) {
-              close(); cur = f
+    import spark.implicits._
+    val rows = flagged(candidates)
+      .select(col(MorFile), col(FileScan.RowIndex), col("__graft_del"),
+        col(OldDel))
+    val cap = maxDvBytes + DvRunSlack
+    def fold(rows: DataFrame) = rows.as[(String, Long, Boolean, Boolean)]
+      .mapPartitions { it =>
+        val out = scala.collection.mutable.ArrayBuffer[DvPartial]()
+        var file: String = null
+        var last, n, del, fresh = 0L
+        var ser: DeletionVectors.StreamingSerializer = null
+        def close(): Unit = if (file != null)
+          out += DvPartial(file, n, del, fresh,
+            if (fresh == 0) null
+            else ser.result().getOrElse(Array.emptyByteArray))
+        it.foreach { case (f, ridx, d, old) =>
+          // a matched row fanned out by duplicate update keys repeats
+          // its row index at once: it counts once
+          if (f != file || ridx != last) {
+            if (f != file || ridx != last + 1) {
+              close(); file = f; n = 0; del = 0; fresh = 0
               ser = new DeletionVectors.StreamingSerializer(
-                runOptimize = true, maxBytes = maxDv)
+                runOptimize = true, maxBytes = cap)
             }
-            ser.add(ridx)
+            last = ridx; n += 1
+            if (d) { del += 1; ser.add(ridx); if (!old) fresh += 1 }
           }
-          close()
-          acc.iterator
         }
-        .collect()
-      blobs.foreach { case (bn, card, bytes) =>
-        if (bytes.isEmpty) fallbackCow = true
-        else {
-          val expect = needsBitmap.getOrElse(bn, sys.error(
-            s"merge-on-read at $table: bitmap pass returned " +
-              s"unexpected file $bn"))
-          require(card == expect,
-            s"merge-on-read at $table: count pass saw $expect " +
-              s"deleted rows in $bn but bitmap pass saw $card -- " +
-              "non-deterministic input or concurrent change")
-          val padded =
-            if (bytes.length % 4 == 0) bytes
-            else java.util.Arrays.copyOf(bytes,
-              ((bytes.length + 3) / 4) * 4)
-          newEntries(bn) = InlineDv(DeletionVectors.z85Encode(padded),
-            card, bytes.length)
-        }
+        close()
+        out.iterator
       }
-      if (fallbackCow) return MorFallbackCow
-      require(newEntries.size == needsBitmap.size,
-        s"merge-on-read at $table: count pass flagged " +
-          s"${needsBitmap.size} files but bitmap pass returned " +
-          s"${newEntries.size} -- non-deterministic input or " +
-          "concurrent change")
+    val direct = fold(rows)
+    val shuffled = direct.queryExecution.sparkPlan.exists {
+      case _: org.apache.spark.sql.execution.joins.ShuffledJoin => true
+      case _ => false
     }
-    MorDvs(fullyDeleted.toSet, newEntries.toMap)
+    val partials = (if (!shuffled) direct
+        else fold(rows.repartition(col(MorFile))
+          .sortWithinPartitions(MorFile, FileScan.RowIndex)))
+      .collect().toSeq.groupBy(_.file)
+    // (file, its partials, deleted rows) of every file this commit
+    // changes: del counts oldDel OR the new matches, a superset of the
+    // old DV's rows -- equal cardinality therefore means equal SET (no
+    // live row matched): the file stays as it is
+    val changed = partials.toSeq.map { case (bn, ps) =>
+        (bn, ps, ps.map(_.rows).sum, ps.map(_.deleted).sum) }
+      .filter { case (bn, _, _, del) =>
+        del > oldDvs.get(bn).fold(0L)(_.cardinality) }
+    val (full, partial) = changed.partition { case (_, _, n, del) => del == n }
+    if (partial.exists { case (_, _, n, del) =>
+        del.toDouble / n > maxDeleteFraction }) return MorFallbackCow
+    // a file's committed bitmap: its one whole-file run as is, or its
+    // runs unioned with the old DV; None = over maxDvBytes
+    def bitmapOf(bn: String, ps: Seq[DvPartial]): Option[Array[Byte]] = {
+      val runs = ps.filter(_.fresh > 0)
+      if (runs.exists(_.bitmap.isEmpty)) None
+      else if (ps.length == 1) Some(runs.head.bitmap).filter(_.length <= maxDvBytes)
+      else {
+        val ser = new DeletionVectors.StreamingSerializer(
+          runOptimize = true, maxBytes = maxDvBytes)
+        var prev = -1L
+        mergeSorted((oldDvs.get(bn).map(_.bytes) ++ runs.map(_.bitmap))
+            .map(DeletionVectors.RoaringArray.deserialize(_).iterator).toSeq)
+          .foreach { r => if (r != prev) { ser.add(r); prev = r } }
+        ser.result()
+      }
+    }
+    val built = partial.map { case (bn, ps, _, del) => (bn, del, bitmapOf(bn, ps)) }
+    if (built.exists(_._3.isEmpty)) MorFallbackCow
+    else if (changed.isEmpty) MorNoChange
+    else MorDvs(full.map(_._1).toSet, built.collect { case (bn, del, Some(b)) =>
+      val padded =
+        if (b.length % 4 == 0) b
+        else java.util.Arrays.copyOf(b, ((b.length + 3) / 4) * 4)
+      bn -> InlineDv(DeletionVectors.z85Encode(padded), del, b.length)
+    }.toMap)
+  }
+
+  /** The ascending merge of ascending `sources` (duplicates kept). */
+  private def mergeSorted(sources: Seq[Iterator[Long]]): Iterator[Long] = {
+    val heads = scala.collection.mutable.PriorityQueue.empty(
+      Ordering.by[scala.collection.BufferedIterator[Long], Long](_.head)
+        .reverse)
+    sources.map(_.buffered).filter(_.hasNext).foreach(heads.enqueue(_))
+    new Iterator[Long] {
+      def hasNext: Boolean = heads.nonEmpty
+      def next(): Long = {
+        val it = heads.dequeue()
+        val r = it.next()
+        if (it.hasNext) heads.enqueue(it)
+        r
+      }
+    }
   }
 
   /** Row-level changes between two snapshot versions, derived from
@@ -1265,8 +1346,8 @@ object LakeWriter {
     * `collapse = false` the feed is file-granular, like a
     * copy-on-write log replay: a merge/delete that rewrote a file
     * emits delete+insert for that file's UNCHANGED surviving rows
-    * too. `collapse = true` cancels those pairs (exceptAll both ways
-    * over the delta rows only), leaving the exact net row changes —
+    * too. `collapse = true` cancels those pairs (one signed count per
+    * distinct row over the delta rows only), leaving the exact net row changes —
     * still bounded by delta size, never table size. */
   def changesBetween(spark: SparkSession, table: String,
                      fromVersion: Long, toVersion: Long,
@@ -1309,23 +1390,28 @@ object LakeWriter {
       case (Some(i), Some(d)) =>
         if (!collapse) i.unionByName(d, allowMissingColumns = true)
         else {
-          // cancel rewrite noise: a surviving row appears on both
-          // sides with identical values — exceptAll keeps multiplicity
-          // honest for genuine duplicates. Align both sides to the
-          // same column superset AND order first (schemas may differ
-          // across an evolving table; exceptAll matches by position).
-          val iu = i.drop("_change_type")
-            .unionByName(d.drop("_change_type").limit(0),
+          // cancel rewrite noise in ONE signed aggregate: a surviving
+          // row appears on both sides with identical values. Each row
+          // counts +1 as an insert and -1 as a delete, grouped over the
+          // column superset both sides align to (schemas may differ
+          // across an evolving table); a row whose net is n != 0 comes
+          // back |n| times, as an insert when n > 0 — the multiset of
+          // exceptAll both ways, multiplicity honest for genuine
+          // duplicates.
+          val n = "__graft_net"
+          val signed = i.drop("_change_type").withColumn(n, lit(1L))
+            .unionByName(d.drop("_change_type").withColumn(n, lit(-1L)),
               allowMissingColumns = true)
-          val du = d.drop("_change_type")
-            .unionByName(i.drop("_change_type").limit(0),
-              allowMissingColumns = true)
-          val order = iu.columns.toSeq
-          val iv = iu.select(order.map(col): _*)
-          val dv = du.select(order.map(col): _*)
-          iv.exceptAll(dv).withColumn("_change_type", tag("insert"))
-            .unionByName(
-              dv.exceptAll(iv).withColumn("_change_type", tag("delete")))
+          val order = signed.columns.toSeq.filterNot(_ == n)
+          signed.groupBy(order.map(col): _*)
+            .agg(org.apache.spark.sql.functions.sum(n).as(n))
+            .where(col(n) =!= 0)
+            .withColumn("_change_type",
+              when(col(n) > 0, tag("insert")).otherwise(tag("delete")))
+            .withColumn(n, org.apache.spark.sql.functions.explode(
+              org.apache.spark.sql.functions.array_repeat(lit(0),
+                org.apache.spark.sql.functions.abs(col(n)).cast("int"))))
+            .select((order :+ "_change_type").map(col): _*)
         }
       case (Some(i), None) => i
       case (None, Some(d)) => d
@@ -1367,7 +1453,7 @@ object LakeWriter {
     val feed0 = changesBetween(spark, table, fromVersion, toVersion)
     if (keys.isEmpty) feed0
     else {
-      // the feed subplan (two exceptAll shuffles + file scans) feeds
+      // the feed subplan (the collapse shuffle + file scans) feeds
       // the key groupBy AND four semi/anti joins — checkpoint it so
       // one materialization computes it once, not five times
       val feed = feed0.localCheckpoint()
@@ -1429,8 +1515,12 @@ object LakeWriter {
       walkFreshData(fs, dir).sorted
     }
     val updFiles = land(updates, dirOf("u"))
-    lazy val keys =
-      readFiles(spark, updFiles, schema, colmap).select(keyCols.map(col): _*)
+    // the landed footers, read once: their key ranges prune the probe
+    // and the commit records them as the new files' stats
+    val updStats = footersOf(spark, updFiles, schema, colmap)
+    lazy val keys = readFiles(spark, updFiles, schema, colmap,
+        lengths = updStats.flatMap { case (bn, (_, len)) => len.map(bn -> _) })
+      .select(keyCols.map(col): _*)
     // partition pruning is SOUND only when every partition column is a
     // merge key: then a matched row's partition values equal the
     // update row's, so files elsewhere cannot contain a match. With a
@@ -1445,13 +1535,15 @@ object LakeWriter {
           partitionOfOpt(partCols, f).forall(touchedParts))
       else (files, Seq.empty[String])
     // the updates key sliver joins UN-deduplicated (r18): the probe's
-    // result rides through the file distinct regardless of duplicate
-    // keys, and a left-anti join is duplicate-insensitive on its right
-    // side. Callers own the one-row-per-key contract (rows land
-    // verbatim), exactly like MERGE INTO.
+    // result rides through the per-task file sets regardless of
+    // duplicate keys, and a left-anti join is duplicate-insensitive on
+    // its right side. Callers own the one-row-per-key contract (rows
+    // land verbatim), exactly like MERGE INTO. Only candidates whose
+    // key ranges can hold a landed key are opened.
+    val probe = keyCandidates(prev, candidates, keyCols, updStats.values.map(_._1))
     val probed =
-      if (candidates.isEmpty) Set.empty[String]
-      else filesOf(readKeyed(spark, prev, candidates).join(keys, keyCols))
+      if (probe.isEmpty) Set.empty[String]
+      else filesOf(readKeyed(spark, prev, probe).join(keys, keyCols))
     val (rewrite, carryRest) = candidates.partition(f => probed(baseName(f)))
     val survFiles =
       if (rewrite.isEmpty) Seq.empty[String]
@@ -1473,7 +1565,7 @@ object LakeWriter {
       else org.apache.spark.sql.GraftColumnBridge.asNullable(schema)
     writeManifest(spark, fs, table, Some(prev), version, "merge", committed,
       untouched ++ carryRest ++ survFiles ++ updFiles, partCols,
-      txnOverride = txn, mergeKeys = keyCols)
+      txnOverride = txn, mergeKeys = keyCols, landed = updStats)
     version
   }
 
@@ -1527,6 +1619,24 @@ object LakeWriter {
         new org.apache.spark.sql.execution.datasources.parquet
           .ParquetToSparkSchemaConverter(spark.sessionState.conf))
     finally reader.close()
+  }
+
+  /** A plain parquet directory, read with its data schema taken from
+    * ONE footer on the driver — the file Spark's own inference would
+    * pick: the first by path of the files Spark lists — instead of
+    * Spark's schema-inference job; partition columns still come from
+    * the `k=v` paths. A directory without a data file, one with a
+    * `_metadata`/`_common_metadata` summary (which Spark reads first),
+    * or a session that merges parquet schemas reads as Spark reads it. */
+  def readParquetDir(spark: SparkSession, dir: String): DataFrame = {
+    val files = org.apache.spark.sql.GraftPlanBridge.listedFiles(spark,
+      new org.apache.hadoop.fs.Path(dir)).sorted
+    val footer =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+          files.exists(_.matches(".*/_(common_)?metadata"))) None
+      else files.headOption
+    footer.fold(spark.read)(f => spark.read.schema(footerSchema(spark, f)))
+      .parquet(dir)
   }
 
   /** Per-column stats and the byte length of one parquet file from
@@ -1636,6 +1746,23 @@ object LakeWriter {
       }.toMap
       (FileStats(Some(rowsTotal), cols), Some(input.getLength))
     } finally reader.close()
+  }
+
+  /** [[footerStats]] of `files` under `schema`'s physical names, by
+    * basename: footer reads are independent metadata fetches, run on
+    * an [[ioPool]] (on object stores each is a network call). Files
+    * store PHYSICAL names; stats stay keyed by them (stable across
+    * renames) and translate to logical at read time. An unreadable
+    * footer yields no stats. */
+  private def footersOf(spark: SparkSession, files: Seq[String],
+      schema: org.apache.spark.sql.types.StructType, colmap: ColMapping)
+      : Map[String, (FileStats, Option[Long])] = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.map(baseName).zip(parMap(spark, files) { f =>
+      try footerStats(conf, f, physSchema(schema, colmap))
+      catch { case scala.util.control.NonFatal(_) =>
+        (FileStats(None, Map.empty), None) }
+    }).toMap
   }
 
   /** stat-string ordering under a Spark type: numeric as BigDecimal,
@@ -1899,7 +2026,9 @@ object LakeWriter {
                               None,
                             mergeKeys: Seq[String] = Nil,
                             dvsOverride: Option[Map[String, InlineDv]] =
-                              None): Unit = {
+                              None,
+                            landed: Map[String, (FileStats, Option[Long])] =
+                              Map.empty): Unit = {
     // BACKSTOP for the invariant every per-file map below is keyed
     // on (DVs, stats, blooms — see [[baseName]]): a collision here
     // means a write path skipped [[walkFreshData]]'s rename pass.
@@ -1934,24 +2063,14 @@ object LakeWriter {
     // a footer read (metadata IO, never data) — commit cost stays
     // O(delta)
     val prevStats = prev.fold(Map.empty[String, FileStats])(_.stats)
-    val conf = spark.sessionState.newHadoopConf()
-    // footer reads are independent metadata fetches — run them on a
-    // bounded pool (a large commit would otherwise pay one serial
-    // round-trip per new file on the driver; on object stores each
-    // is a network call)
     // the same pass records each new file's byte LENGTH, so readers
     // plan the file without a stat; a file carried from a manifest
-    // that predates lengths stays unrecorded (readers stat it)
-    val newFiles = files.filterNot(f => prevStats.contains(baseName(f)))
-    val fresh: Map[String, (FileStats, Option[Long])] =
-      newFiles.map(baseName).zip(parMap(spark, newFiles) { f =>
-        // files store PHYSICAL names; stats stay keyed by them
-        // (stable across renames) and translate to logical at read
-        // time
-        try footerStats(conf, f, physSchema(schema, colmap))
-        catch { case scala.util.control.NonFatal(_) =>
-          (FileStats(None, Map.empty), None) }
-      }).toMap
+    // that predates lengths stays unrecorded (readers stat it). Files
+    // whose footers the caller already read (`landed`) are not read
+    // again.
+    val newFiles = files.filterNot(f =>
+      prevStats.contains(baseName(f)) || landed.contains(baseName(f)))
+    val fresh = landed ++ footersOf(spark, newFiles, schema, colmap)
     val stats = files.map(baseName).flatMap(bn =>
       prevStats.get(bn).orElse(fresh.get(bn).map(_._1)).map(bn -> _)).toMap
     val prevLengths = prev.fold(Map.empty[String, Long])(_.lengths)
@@ -2243,11 +2362,11 @@ object LakeWriter {
     *    the history between was vacuumed; a delta is impossible and a
     *    full feed would double-count everything absorbed before, so
     *    the feed refuses and the consumer must re-bootstrap.
-    * `collapse = false` serves the feed WITHOUT the exceptAll
+    * `collapse = false` serves the feed WITHOUT the
     * row-cancellation pass — for consumers whose state update is a
     * signed linear fold (sum·sign, count·sign) copy-on-write rewrite
-    * noise cancels algebraically, so the two delta-sized shuffles per
-    * version buy nothing (`Materialized.refreshAgg`). Consumers that
+    * noise cancels algebraically, so the delta-sized shuffle per
+    * version buys nothing (`Materialized.refreshAgg`). Consumers that
     * BRANCH on delete presence (refreshHll's rebuild trigger) keep
     * the collapsed default. */
   private[graft] def versionFeeds(spark: SparkSession, table: String,

@@ -106,7 +106,7 @@ object Materialized {
                  sumCols: Seq[String]): Seq[Long] = {
     seedCursorFromStamp(spark, mvTable, cursorPath, MvTxnApp)
     // uncollapsed feed: rewrite noise cancels algebraically in the
-    // signed sums — the exceptAll pass is skipped per version
+    // signed sums — the collapse pass is skipped per version
     LakeWriter.processNewVersions(spark, srcTable, cursorPath,
       collapse = false) {
       (feed, v) => applyDelta(spark, mvTable, feed, groupCols, sumCols, v)

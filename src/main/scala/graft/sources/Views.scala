@@ -39,28 +39,8 @@ object Views {
         t.getName -> (
           if (new java.io.File(t, "_manifests").isDirectory)
             LakeWriter.readSnapshot(spark, t.getPath)
-          else plainParquet(spark, t))
+          else LakeWriter.readParquetDir(spark, t.getPath))
       }
-
-  /** A plain parquet directory, read with its data schema taken from
-    * ONE footer on the driver — the file Spark's own inference would
-    * pick: the first by path of the files Spark lists — instead of
-    * Spark's schema-inference job; partition columns still come from
-    * the `k=v` paths. A directory without a data file, one with a
-    * `_metadata`/`_common_metadata` summary (which Spark reads first),
-    * or a session that merges parquet schemas reads as Spark reads it. */
-  private def plainParquet(spark: SparkSession,
-                           dir: java.io.File): DataFrame = {
-    val files = org.apache.spark.sql.GraftPlanBridge.listedFiles(spark,
-      new org.apache.hadoop.fs.Path(dir.getPath)).sorted
-    val footer =
-      if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
-          files.exists(_.matches(".*/_(common_)?metadata"))) None
-      else files.headOption
-    footer.fold(spark.read)(f =>
-      spark.read.schema(LakeWriter.footerSchema(spark, f)))
-      .parquet(dir.getPath)
-  }
 
   /** Serve one snapshot table AS OF a version (time-travel SQL). */
   def registerSnapshotAsOf(spark: SparkSession, table: String,

@@ -531,9 +531,11 @@ object Speed extends Serializable {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val latest = graft.operators.Analytics.latestPerKey(
-          batch.toDF(), keys, col(tsCol), col(tieBreak))
-        if (!latest.isEmpty) {
+        // a non-empty batch keeps at least one row per key, so testing
+        // the raw batch spares running the window twice
+        if (!batch.isEmpty) {
+          val latest = graft.operators.Analytics.latestPerKey(
+            batch.toDF(), keys, col(tsCol), col(tieBreak))
           if (morDeletes)
             graft.sources.LakeWriter.mergeSnapshotMor(latest, table,
               keys): Unit

@@ -50,6 +50,23 @@ class CoreOpsSpec extends AnyFunSuite {
       .collect().map(_._1).toSeq == Seq(99)) // replaced
   }
 
+  test("dynamicPartitionOverwrite leaves the session's overwrite mode " +
+      "static") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lw_mode").toString
+    def modeSet = spark.sessionState.conf.getAllConfs
+      .contains("spark.sql.sources.partitionOverwriteMode")
+    assert(!modeSet)
+    LakeWriter.dynamicPartitionOverwrite(
+      Seq((1, "a"), (2, "b")).toDF("id", "p"), s"$dir/dyn", Seq("p"))
+    assert(!modeSet)
+    // a later partitioned overwrite replaces the whole table
+    LakeWriter.overwrite(Seq((1, "x"), (2, "y"), (3, "x")).toDF("id", "p"),
+      s"$dir/t", Seq("p"))
+    LakeWriter.overwrite(Seq((4, "y")).toDF("id", "p"), s"$dir/t", Seq("p"))
+    assert(spark.read.parquet(s"$dir/t").as[(Int, String)].collect().toSeq ==
+      Seq((4, "y")))
+  }
+
   test("Dims.dateDim expands calendar attributes") {
     val d = Dims.dateDim(
       Seq("2024-01-06", "2024-01-06", "2024-01-08").toDF("x")

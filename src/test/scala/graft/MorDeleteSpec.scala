@@ -211,10 +211,10 @@ class MorDeleteSpec extends AnyFunSuite {
     val read = SparkJobs.rowsRead(spark) {
       LakeWriter.mergeSnapshotMor(u, t, Seq("id")): Unit
     }
-    // one pass over the 1 000 candidate rows + the touched file's 50
-    // rows once or twice more + the 3 landed keys read back by each
-    // pass; a bitmap pass over every candidate reads 1 000 rows again
-    assert(read >= 1000L && read <= 1000L + 2 * 50 + 3 * 3, read)
+    // the three keys land one per file, so the manifest key ranges
+    // leave the touched file the only candidate: one pass over its 50
+    // rows + the 3 landed keys read back for the probe
+    assert(read == 50L + 3L, read)
     assert(LakeWriter.manifest(spark, t, 2L).dvs.size == 1)
     val back = LakeWriter.readSnapshot(spark, t)
     assert(back.count() == 1001L)
