@@ -217,7 +217,7 @@ object LakehousePipeline {
             newDates.join(existing.select("date"), Seq("date"), "left_anti"))
         }
       // tiny table: stage the merged dim before overwriting its input
-      writeViaStaging(dimDate, dateDimPath)
+      LakeWriter.overwriteViaStaging(dimDate, dateDimPath)
     }
 
     val etPath = s"$outDir/curated/dim_event_type"
@@ -239,7 +239,7 @@ object LakehousePipeline {
               Seq("event_type"), "event_type_sk")
               .withColumn("event_type_sk", col("event_type_sk") + maxSk))
         }
-      writeViaStaging(dimEventType, etPath)
+      LakeWriter.overwriteViaStaging(dimEventType, etPath)
     }
     // the pre-swap lineage points at deleted files — read back fresh
     val dimEventTypeBack = LakeWriter.readParquetDir(spark, etPath)
@@ -265,7 +265,7 @@ object LakehousePipeline {
       } else if (!new java.io.File(usPath).exists()) {
         val built = Scd2.build(stg, Seq("user_id"), Seq("event_type"), "ts")
           .withColumnRenamed("event_type", "state")
-        writeViaStaging(built, usPath)
+        LakeWriter.overwriteViaStaging(built, usPath)
         LakeWriter.readParquetDir(spark, usPath)
       } else {
         val existing = LakeWriter.readParquetDir(spark, usPath)
@@ -273,7 +273,7 @@ object LakehousePipeline {
           existing.withColumnRenamed("state", "event_type"),
           stg, Seq("user_id"), Seq("event_type"), "ts")
           .withColumnRenamed("event_type", "state")
-        writeViaStaging(merged, usPath)
+        LakeWriter.overwriteViaStaging(merged, usPath)
         LakeWriter.readParquetDir(spark, usPath)
       }
     }
@@ -356,26 +356,5 @@ object LakehousePipeline {
       .map(d => runDate(spark, sfDir, outDir, d.toString,
         versionedDims = versionedDims, retries = retries, probe = probe))
       .toSeq
-  }
-
-  /** Overwrite `path` with `df` even when `df` READS from `path`:
-    * materialize to a staging dir, swap via rename-aside (the
-    * `LakeWriter.compact` pattern). Small dims only. */
-  private def writeViaStaging(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dst)) { df.write.parquet(path); return }
-    val tmp = path.stripSuffix("/") + "__staging"
-    df.write.mode("overwrite").parquet(tmp)
-    val old = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__old")
-    if (fs.exists(old)) fs.delete(old, true)
-    require(fs.rename(dst, old), s"staging swap: could not move $dst aside")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), dst),
-      s"staging swap: could not activate $tmp at $dst")
-    fs.delete(old, true)
-    // the manual rename bypasses the writer path that invalidates
-    // Spark's file-listing cache — stale listings would 404 later
-    spark.catalog.refreshByPath(path)
   }
 }

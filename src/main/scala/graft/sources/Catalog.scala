@@ -19,13 +19,13 @@ import org.json4s.jackson.JsonMethods
   *   commits/c000000000001.json   one JSON per catalog commit
   *   tags/<name>.json             immutable pointer {"commit": N}
   * }}}
-  * A commit file is the atomic unit: dot-hidden tmp + rename, exactly
-  * the manifest/_delta_log publish discipline, so a concurrent reader
-  * only ever lists whole commits and a CRASH mid-commit leaves an
-  * invisible tmp, never a partial pin set. Two writers racing to the
-  * same commit number: the loser's rename fails onto the existing
-  * destination and refuses loudly (optimistic concurrency, the
-  * DeltaMirror publish-race posture).
+  * A commit file is the atomic unit, published create-if-absent by
+  * `LakeWriter.publish` like a manifest or a Delta commit: a
+  * concurrent reader only ever lists whole commits and a CRASH
+  * mid-commit leaves an invisible dot-tmp, never a partial pin set.
+  * Two writers racing to the same commit number: the loser's rename
+  * fails onto the existing destination and refuses loudly
+  * (optimistic concurrency).
   *
   * At 100 TB this is O(tables) metadata per commit; the pinned
   * versions are ordinary graft snapshots, so reads scale exactly as
@@ -87,42 +87,6 @@ object Catalog {
       }.toMap
       case _ => sys.error(s"$what is malformed")
     }
-
-  /** The one atomic-publish implementation every catalog write uses:
-    * per-attempt UUID tmp (racers never share staging bytes) +
-    * fail-if-exists rename arbitration; the loser refuses with
-    * `raceMsg`. NOT `FileSystem.rename` — on a local filesystem that
-    * is POSIX rename(2), which silently REPLACES an existing
-    * destination (two racers would both "win" and the first pin set
-    * would be clobbered). `FileContext.rename` without
-    * Options.Rename.OVERWRITE throws on an existing destination; the
-    * JVM-wide [[LakeWriter.commitLock]] closes the local-FS
-    * check-then-rename TOCTOU for same-process racers — exactly the
-    * manifest commit discipline of LakeWriter.commitManifestBody. */
-  private def publishAtomically(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, destName: String, body: String,
-      raceMsg: => String): Unit = {
-    fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$destName." +
-      java.util.UUID.randomUUID().toString.take(8) + ".tmp")
-    val out = fs.create(tmp, true)
-    out.write(body.getBytes("UTF-8")); out.close()
-    val dest = new org.apache.hadoop.fs.Path(dir, destName)
-    try {
-      LakeWriter.commitLock.synchronized {
-        org.apache.hadoop.fs.FileContext
-          .getFileContext(dest.toUri, fs.getConf)
-          .rename(tmp, dest)
-      }
-    } catch { case e: java.io.IOException =>
-      try fs.delete(tmp, false) catch { case _: java.io.IOException => }
-      // only a rename that lost to an existing destination is the
-      // publish race; any other IO failure (disk full, permissions)
-      // rethrows as-is — calling it a conflict would claim a
-      // concurrent committer published when none did
-      if (fs.exists(dest)) sys.error(raceMsg) else throw e
-    }
-  }
 
   /** Shared commit validation: no silent re-pointing of carried
     * names, every pin resolved against the table's REAL snapshot
@@ -260,10 +224,11 @@ object Catalog {
           "path" -> JString(path),
           "version" -> JInt(BigInt(v)))): JValue)
       }.toList)))))
-    val dir = commitsDir(catalog)
-    publishAtomically(LakeWriter.fsOf(spark, dir), dir, commitName(c),
-      body,
-      s"catalog at $catalog: commit $c lost a publish race " +
+    val dest = new org.apache.hadoop.fs.Path(commitsDir(catalog),
+      commitName(c))
+    if (!LakeWriter.publish(LakeWriter.fsOf(spark, dest), dest,
+        body.getBytes("UTF-8"), replace = false))
+      sys.error(s"catalog at $catalog: commit $c lost a publish race " +
         "(concurrent committer) — retry against the new tip")
     c
   }
@@ -280,15 +245,15 @@ object Catalog {
     readCommitJson(spark, catalog, c): Unit // must exist
     val dir = tagsDir(catalog)
     val fs = LakeWriter.fsOf(spark, dir)
-    fs.mkdirs(dir)
     val dest = new org.apache.hadoop.fs.Path(dir, s"$name.json")
     require(!fs.exists(dest),
       s"catalog at $catalog: tag '$name' already exists (tags are " +
         "immutable — pick a new name)")
-    publishAtomically(fs, dir, s"$name.json",
-      JsonMethods.compact(JsonMethods.render(JObject(List(
-        "commit" -> JInt(BigInt(c)))))),
-      s"catalog at $catalog: tag '$name' lost a publish race")
+    if (!LakeWriter.publish(fs, dest,
+        JsonMethods.compact(JsonMethods.render(JObject(List(
+          "commit" -> JInt(BigInt(c)))))).getBytes("UTF-8"),
+        replace = false))
+      sys.error(s"catalog at $catalog: tag '$name' lost a publish race")
     c
   }
 
@@ -391,8 +356,9 @@ object Catalog {
         s"catalog at $catalog has no commits to branch from")))
     val pins = pinsAt(spark, catalog, base) // must exist; reuse its map
     // existence = a PUBLISHED b0, not a directory: a crash between
-    // mkdirs and the b0 rename must not brick the name forever (the
-    // retry simply re-publishes b0; the rename still arbitrates races)
+    // the directory's creation and the b0 rename must not brick the
+    // name forever (the retry simply re-publishes b0; the rename
+    // still arbitrates races)
     require(branchCommits(spark, catalog, name).isEmpty,
       s"catalog at $catalog: branch '$name' already exists")
     publishBranchCommit(spark, catalog, name, 0L, base, pins)
@@ -428,8 +394,8 @@ object Catalog {
   private def publishBranchCommit(spark: SparkSession, catalog: String,
       name: String, n: Long, base: Long,
       pins: Map[String, (String, Long)]): Unit = {
-    val dir = branchDir(catalog, name)
-    val fs = LakeWriter.fsOf(spark, dir)
+    val dest = new org.apache.hadoop.fs.Path(branchDir(catalog, name),
+      branchCommitName(n))
     val body = JsonMethods.compact(JsonMethods.render(JObject(List(
       "branch" -> JString(name),
       "seq" -> JInt(BigInt(n)),
@@ -441,8 +407,9 @@ object Catalog {
             "path" -> JString(path),
             "version" -> JInt(BigInt(v)))): JValue)
       }.toList)))))
-    publishAtomically(fs, dir, branchCommitName(n), body,
-      s"catalog at $catalog: branch '$name' commit $n lost " +
+    if (!LakeWriter.publish(LakeWriter.fsOf(spark, dest), dest,
+        body.getBytes("UTF-8"), replace = false))
+      sys.error(s"catalog at $catalog: branch '$name' commit $n lost " +
         "a publish race (concurrent committer) — retry against the " +
         "new head")
   }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{coalesce, col}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -145,17 +146,6 @@ object DeltaMirror {
       } else { out.write(c.toString.getBytes("UTF-8")); i += 1 }
     }
     new String(out.toByteArray, "UTF-8")
-  }
-
-  /** Raw (still-escaped) per-column partition path values of `file`,
-    * or None when the file predates the spec. */
-  private def partValuesOf(partitionCols: Seq[String],
-                           file: String): Option[Seq[String]] = {
-    val vals = partitionCols.flatMap { c =>
-      ("(?:^|/)" + java.util.regex.Pattern.quote(c) + "=([^/]*)/").r
-        .findFirstMatchIn(file).map(_.group(1))
-    }
-    if (vals.length == partitionCols.length) Some(vals) else None
   }
 
   // ------------------------------------------------------------------
@@ -981,26 +971,24 @@ object DeltaMirror {
           (st.getLen, st.getModificationTime)
         }).toMap
       def partValuesJson(rel: String): JObject = {
-        // rel is the ENCODED add.path; extract values from the
-        // decoded ON-DISK name (the form hive escaping lives in)
-        if (partCols.isEmpty) JObject(List.empty)
-        else partValuesOf(partCols, percentDecode(rel)) match {
-          case None => sys.error(
-            s"delta mirror of $table: $rel predates the " +
-              s"${partCols.mkString(",")} partition spec — run " +
-              "migratePartitionSpec before mirroring")
-          case Some(raw) =>
-            // hive-escaped raw path values decode to the LOGICAL
-            // value here (the authoritative partitionValues map);
-            // the matching add.path keeps the escaped on-disk form,
-            // re-encoded by encodeRelPath so readers' URL-decode
-            // lands back on the real directory name
-            JObject(partCols.zip(raw).map { case (c, v) =>
-              val dec = percentDecode(v)
-              c -> (if (dec == "__HIVE_DEFAULT_PARTITION__") JNull
-                    else JString(dec): JValue)
-            }.toList)
-        }
+        // rel is the ENCODED add.path; the values come from the
+        // decoded ON-DISK name (the form hive escaping lives in, for
+        // column names and values alike) through graft's one hive
+        // segment rule, and unescape to the LOGICAL value here (the
+        // authoritative partitionValues map); the matching add.path
+        // keeps the escaped on-disk form, re-encoded by encodeRelPath
+        // so readers' URL-decode lands back on the real directory name
+        val onDisk = percentDecode(rel)
+        JObject(partCols.map { c =>
+          val v = LakeWriter.hiveSegmentOf(c, onDisk)
+            .map(ExternalCatalogUtils.unescapePathName)
+            .getOrElse(sys.error(
+              s"delta mirror of $table: $rel predates the " +
+                s"${partCols.mkString(",")} partition spec — run " +
+                "migratePartitionSpec before mirroring"))
+          c -> (if (v == "__HIVE_DEFAULT_PARTITION__") JNull
+                else JString(v): JValue)
+        }.toList)
       }
       // the ICT contract: strictly increasing across commits, clamped
       // to the graft commit wall-clock when the clock itself moved
@@ -1191,14 +1179,12 @@ object DeltaMirror {
       prevGv = Some(gv)
     }
     planned.foreach { case (dv, body) =>
-      // atomic publish, like the manifest commit: dot-hidden tmp +
-      // rename, so a concurrent reader only ever lists whole commits
-      fs.mkdirs(dir)
-      val tmp = new org.apache.hadoop.fs.Path(dir, s".${commitName(dv)}.tmp")
-      val out = fs.create(tmp, true)
-      out.write(body.getBytes("UTF-8")); out.close()
-      val dest = new org.apache.hadoop.fs.Path(dir, commitName(dv))
-      if (!fs.rename(tmp, dest))
+      // create-if-absent publish, like the manifest commit: a
+      // concurrent reader only ever lists whole commits, and of two
+      // racing mirrors exactly one publishes each commit
+      if (!LakeWriter.publish(fs,
+          new org.apache.hadoop.fs.Path(dir, commitName(dv)),
+          body.getBytes("UTF-8"), replace = false))
         sys.error(s"delta mirror of $table: commit $dv lost a publish " +
           "race (concurrent mirror?)")
     }
@@ -1397,13 +1383,8 @@ object DeltaMirror {
       // ignore unknown _last_checkpoint fields
       st.lastIct.map(t =>
         "ict" -> (JInt(BigInt(t)): JValue)).toList)))
-    val lcTmp = new org.apache.hadoop.fs.Path(log, "._last_checkpoint.tmp")
-    val out = fs.create(lcTmp, true)
-    out.write(lcBody.getBytes("UTF-8")); out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(lcTmp.toUri,
-        spark.sessionState.newHadoopConf())
-      .rename(lcTmp, new org.apache.hadoop.fs.Path(log, "_last_checkpoint"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    LakeWriter.publish(fs, new org.apache.hadoop.fs.Path(log,
+      "_last_checkpoint"), lcBody.getBytes("UTF-8"), replace = true): Unit
     v
   }
 

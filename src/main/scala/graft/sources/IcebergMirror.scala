@@ -235,12 +235,6 @@ object IcebergMirror {
     finally in.close()
   }
 
-  private def writeFileBytes(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path, bytes: Array[Byte]): Unit = {
-    val out = fs.create(p, true)
-    out.write(bytes); out.close()
-  }
-
   /** Field of `rec` by the spec's field-id property (the resolution
     * rule Iceberg prescribes), name as fallback for id-less writers. */
   private def fieldById(rec: GenericRecord, id: Int, name: String): Any = {
@@ -1563,26 +1557,16 @@ object IcebergMirror {
           .getBytes("UTF-8"))
     }
 
-    // publish: every planned file via tmp + rename — each lands
+    // publish: every planned file REPLACE-mode — each lands
     // ATOMICALLY under its durable name (a metadata JSON is never
-    // listable half-written, which is what lets LogTail
-    // treat the metadata dir as a file stream) — then the hint LAST
-    // (overwrite-rename): a reader sees the old complete tree or the
-    // new one
-    fs.mkdirs(md)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      md.toUri, spark.sessionState.newHadoopConf())
+    // listable half-written, which is what lets LogTail treat the
+    // metadata dir as a file stream), and a rerun after a crash
+    // mid-publish rewrites the same deterministic names — then the
+    // hint LAST: a reader sees the old complete tree or the new one
     planned.foreach { case (p, bytes) =>
-      val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-      writeFileBytes(fs, tmp, bytes)
-      fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-    val hintTmp = new Path(md, ".version-hint.text.tmp")
-    writeFileBytes(fs, hintTmp, st.hintVersion.toString.getBytes("UTF-8"))
-    org.apache.hadoop.fs.FileContext.getFileContext(hintTmp.toUri,
-        spark.sessionState.newHadoopConf())
-      .rename(hintTmp, hintPath(md),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      LakeWriter.publish(fs, p, bytes, replace = true): Unit }
+    LakeWriter.publish(fs, hintPath(md),
+      st.hintVersion.toString.getBytes("UTF-8"), replace = true): Unit
     todo.size.toLong
   }
 
@@ -1713,22 +1697,13 @@ object IcebergMirror {
         })
       case other => other
     })
-    // tmp + rename: the new metadata JSON lands atomically under its
-    // durable name (the LogTail file-source contract)
-    val mjPath = metadataJsonPath(md, n + 1)
-    val mjTmp = new Path(md, s".${mjPath.getName}.tmp")
-    writeFileBytes(fs, mjTmp,
-      JsonMethods.pretty(JsonMethods.render(newJ)).getBytes("UTF-8"))
-    org.apache.hadoop.fs.FileContext.getFileContext(mjTmp.toUri,
-        spark.sessionState.newHadoopConf())
-      .rename(mjTmp, mjPath,
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    val hintTmp = new Path(md, ".version-hint.text.tmp")
-    writeFileBytes(fs, hintTmp, (n + 1).toString.getBytes("UTF-8"))
-    org.apache.hadoop.fs.FileContext.getFileContext(hintTmp.toUri,
-        spark.sessionState.newHadoopConf())
-      .rename(hintTmp, hintPath(md),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    // the new metadata JSON lands atomically under its durable name
+    // (the LogTail file-source contract), then the hint
+    LakeWriter.publish(fs, metadataJsonPath(md, n + 1),
+      JsonMethods.pretty(JsonMethods.render(newJ)).getBytes("UTF-8"),
+      replace = true): Unit
+    LakeWriter.publish(fs, hintPath(md), (n + 1).toString.getBytes("UTF-8"),
+      replace = true): Unit
     // sweep AFTER the publish: a crash here leaves orphans, never a
     // hint pointing at missing files
     (doomedLists ++ doomedManifests ++ doomedPuffins).foreach(p =>

@@ -63,29 +63,39 @@ object LakeWriter {
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               partitionCols: Seq[String]): Unit = {
     val df = spark.read.parquet(path)
-    val compacted =
+    overwriteViaStaging(
       if (partitionCols.isEmpty) df.coalesce(1)
-      else df.repartition(partitionCols.map(df.col): _*)
-    // rewrite through a staging dir: cannot overwrite the input in place
-    val tmp = path.stripSuffix("/") + "__compacting"
-    (if (partitionCols.isEmpty) compacted.write.mode("overwrite")
-     else compacted.write.mode("overwrite").partitionBy(partitionCols: _*))
-      .parquet(tmp)
-    // swap via rename-aside so a crash never leaves the table missing:
-    // live -> __old, staged -> live, delete __old. Recovery after a
-    // crash between the renames is the __old directory, still intact.
-    // The filesystem must be the TABLE's filesystem, not the default
-    // one (they differ whenever the lake lives on s3a/hdfs). Note:
-    // S3-like stores lack atomic rename — run compaction there via a
-    // catalog swap (or a format with snapshot semantics) instead.
+      else df.repartition(partitionCols.map(df.col): _*),
+      path, partitionCols)
+  }
+
+  /** Overwrite the plain parquet directory `path` with `df`, even when
+    * `df` READS from `path` (it cannot be overwritten in place):
+    * materialize `df` to `path__staging`, then swap by rename-aside —
+    * live -> `__old`, staged -> live, delete `__old` — so a crash never
+    * leaves the table missing (between the renames, `__old` is the
+    * intact recovery copy). The filesystem is the TABLE's, not the
+    * default one (they differ whenever the lake lives on s3a/hdfs).
+    * S3-like stores lack atomic rename: swap there through a catalog
+    * or a snapshot format instead. The renames bypass the writer path
+    * that invalidates Spark's file-listing cache, so the path is
+    * refreshed — stale listings would 404 later. */
+  private[graft] def overwriteViaStaging(df: DataFrame, path: String,
+      partitionCols: Seq[String] = Nil): Unit = {
+    val spark = df.sparkSession
     val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fsOf(spark, dst)
+    if (!fs.exists(dst)) return overwrite(df, path, partitionCols)
+    val staged =
+      new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__staging")
+    overwrite(df, staged.toString, partitionCols)
     val old = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + "__old")
     if (fs.exists(old)) fs.delete(old, true)
-    require(fs.rename(dst, old), s"compact: could not move $dst aside")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), dst),
-      s"compact: could not activate staged rewrite at $dst")
+    require(fs.rename(dst, old), s"staging swap: could not move $dst aside")
+    require(fs.rename(staged, dst),
+      s"staging swap: could not activate $staged at $dst")
     fs.delete(old, true)
+    spark.catalog.refreshByPath(path)
   }
 
   /** Range-clustered rewrite for DATA SKIPPING: `repartitionByRange` +
@@ -164,11 +174,9 @@ object LakeWriter {
   // Time travel = reading an older manifest. On stores without atomic
   // rename (S3), swap the rename for a conditional PUT.
 
-  /** Guards the manifest rename (see writeManifest) and every other
-    * sources-layer no-overwrite publish rename (Catalog commits/tags/
-    * branches): the local-FS fail-if-exists rename is check-then-
-    * rename, and this JVM-wide lock closes that TOCTOU for
-    * same-process racers. */
+  /** Guards [[publish]]'s create-if-absent rename: the local-FS
+    * fail-if-exists rename is check-then-rename, and this JVM-wide
+    * lock closes that TOCTOU for same-process racers. */
   private[sources] val commitLock = new Object
 
   /** One hadoop conf per session for FILESYSTEM ACCESS (r18):
@@ -222,6 +230,96 @@ object LakeWriter {
     catch { case e: java.util.concurrent.ExecutionException
         if e.getCause != null => throw e.getCause }
 
+  // ---- the two write primitives ------------------------------------
+  //
+  // Every commit makes two decisions, and each has ONE owner: where a
+  // version's data files land ([[land]]) and how a metadata file
+  // becomes visible ([[publish]]).
+
+  /** A version's data directory NAME under `data/`:
+    * `v{N}-{attempt}[-kind]`. */
+  private val DataDirName = """v(\d+)-[^/]+""".r
+
+  /** A data file's path up to and including its version directory. */
+  private val VersionDir = ("^(?:.*/)?data/" + DataDirName.regex + "/").r
+
+  /** The version a `data/` directory NAME was landed for, None for
+    * any other name. */
+  private def dataDirVersion(name: String): Option[Long] = name match {
+    case DataDirName(n) => Some(n.toLong)
+    case _ => None
+  }
+
+  private def newAttempt(): String =
+    java.util.UUID.randomUUID().toString.take(8)
+
+  /** Land `df` as data files of `version` — the one writer of the
+    * `data/v{N}-{attempt}[-kind]` layout. A directory per ATTEMPT, so
+    * a crashed or conflicted commit leaves an orphan that vacuum
+    * collects but that can never block or corrupt a later commit
+    * (hence `errorifexists`). Files store PHYSICAL column names
+    * (`colmap`) and micros timestamps, hive-partitioned by `partCols`
+    * (identity-mapped: rename and drop refuse on them). `kind` names
+    * one of several file sets a commit lands under one `attempt`.
+    * Callers shape `df` first (repartition, sort, projection).
+    * Returns the directory (a refused commit deletes it) and its
+    * files, sorted, basenames unique table-wide ([[walkFreshData]]). */
+  private[graft] def land(df: DataFrame, table: String, version: Long,
+      colmap: ColMapping, partCols: Seq[String],
+      attempt: String = newAttempt(), kind: String = "")
+      : (org.apache.hadoop.fs.Path, Seq[String]) = {
+    val spark = df.sparkSession
+    val dir = new org.apache.hadoop.fs.Path(table,
+      s"data/v$version-$attempt" + (if (kind.isEmpty) "" else s"-$kind"))
+    withMicrosTimestamps(spark) {
+      val w = toPhysical(df, colmap).write.mode("errorifexists")
+      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
+        .parquet(dir.toString) }
+    (dir, walkFreshData(fsOf(spark, dir), dir).sorted)
+  }
+
+  /** The commit point of every metadata file graft writes (manifests,
+    * catalog commits, tags and branches, Delta commits and
+    * `_last_checkpoint`, Iceberg metadata and hints, change-feed
+    * cursors): `bytes` go to a dot-hidden tmp beside `dest`, named
+    * for this attempt (racers never share staging bytes; listings
+    * skip dot files), and ONE rename makes them visible. No tmp
+    * survives the call.
+    *
+    * `replace = false` is CREATE-IF-ABSENT: false when `dest` already
+    * exists (another writer published first). Any other IO failure
+    * (disk full, permissions) rethrows — calling it a lost race would
+    * claim a concurrent writer published when none did. The local
+    * filesystem's fail-if-exists rename is check-then-rename, so the
+    * rename runs on [[commitLock]] to close that window for
+    * same-process racers; across processes atomicity is the
+    * filesystem's (real on HDFS; on object stores swap in a
+    * conditional PUT). `replace = true` swaps `dest` atomically — never
+    * a window with no `dest` at all.
+    *
+    * The rename is `FileContext`'s: `FileSystem.rename` reports every
+    * failure as a bare `false`, which cannot tell a lost race from any
+    * other failure, and has no overwrite mode. */
+  private[graft] def publish(fs: org.apache.hadoop.fs.FileSystem,
+      dest: org.apache.hadoop.fs.Path, bytes: Array[Byte],
+      replace: Boolean): Boolean = {
+    val tmp = new org.apache.hadoop.fs.Path(dest.getParent,
+      s".${dest.getName}.${newAttempt()}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(dest.toUri,
+      fs.getConf)
+    try {
+      if (replace)
+        fc.rename(tmp, dest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      else commitLock.synchronized { fc.rename(tmp, dest) }
+      true
+    } catch { case e: java.io.IOException =>
+      try fs.delete(tmp, false) catch { case _: java.io.IOException => }
+      if (!replace && fs.exists(dest)) false else throw e
+    }
+  }
+
   private[graft] def manifestDir(table: String) =
     new org.apache.hadoop.fs.Path(table, "_manifests")
 
@@ -264,8 +362,6 @@ object LakeWriter {
     partitionOfOpt(partitionCols, file).getOrElse(
       sys.error(s"snapshot file not hive-partitioned by " +
         s"${partitionCols.mkString(",")}: $file"))
-
-  private val VersionDir = "^.*/data/v\\d+-[^/]+/".r
 
   /** The part of a data file's path that holds its hive partition:
     * the segments below the version directory it was written into,
@@ -510,18 +606,7 @@ object LakeWriter {
     require(partCols.forall(df.columns.contains),
       s"append to $table must carry its partition column(s) " +
         s"${partCols.filterNot(df.columns.contains).mkString(",")}")
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir =
-      new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
-    withMicrosTimestamps(spark) {
-      val w = toPhysical(df, colmap).write.mode("errorifexists")
-      (if (partCols.nonEmpty) w.partitionBy(partCols.map(colmap.phys): _*)
-       else w).parquet(dataDir.toString) }
-    val newFiles =
-      if (partCols.isEmpty)
-        fs.listStatus(dataDir).toSeq
-          .map(_.getPath.toString).filter(_.endsWith(".parquet")).sorted
-      else walkFreshData(fs, dataDir).sorted
+    val (dataDir, newFiles) = land(df, table, version, colmap, partCols)
     val (carried, schema) = appendTo match {
       case Some(pm) =>
         // checked schema EVOLUTION: an append may add columns (old
@@ -597,32 +682,13 @@ object LakeWriter {
   def mergeSnapshot(updates: DataFrame, table: String,
                     keyCols: Seq[String],
                     txn: Option[(String, Long)] = None): Long = {
-    require(keyCols.nonEmpty, "mergeSnapshot needs at least one key column")
+    val pm = mergeBase("mergeSnapshot", updates, table, keyCols) match {
+      case Some(pm) => pm
+      case None => return commitSnapshot(updates, table, "overwrite", txn)
+    }
+    val (files, cols, partCols) =
+      (pm.files, pm.schema.fieldNames.toSeq, pm.partCols)
     val spark = updates.sparkSession
-    val prev = snapshotVersions(spark, table)
-    if (prev.isEmpty) return commitSnapshot(updates, table, "overwrite", txn)
-    val pm = manifest(spark, table, prev.last)
-    val (files, schema, partCols) = (pm.files, pm.schema, pm.partCols)
-    if (files.isEmpty) return commitSnapshot(updates, table, "overwrite", txn)
-    val cols = schema.fieldNames.toSeq
-    // silent column drops would make a MERGE lose data; demand the
-    // exact table schema (order-free) like MERGE INTO does
-    require(updates.columns.toSet == cols.toSet,
-      s"mergeSnapshot schema mismatch: table has ${cols.sorted}, " +
-        s"updates have ${updates.columns.sorted.toSeq}")
-    // ... and silent type drift would widen or corrupt the persisted
-    // schema across versions (int updates into a long column), so
-    // demand matching types too — nullability-free, like MERGE INTO's
-    // type check (catalogString omits nullability at every depth)
-    val tblType = schema.fields.map(f => f.name -> f.dataType.catalogString)
-      .toMap
-    val drift = updates.schema.fields
-      .filter(f => f.dataType.catalogString != tblType(f.name))
-    require(drift.isEmpty, "mergeSnapshot type mismatch: " + drift.map(f =>
-      s"${f.name}: table ${tblType(f.name)} vs updates " +
-        f.dataType.catalogString).mkString(", "))
-    require(keyCols.forall(cols.contains),
-      s"key columns ${keyCols.filterNot(cols.contains)} not in table")
     // a partitioned snapshot committed by a pre-`partcols` manifest
     // keeps partition values in PATHS the flat probe below cannot see —
     // refuse loudly rather than lose those columns. Columns absent
@@ -639,6 +705,41 @@ object LakeWriter {
           "predates partition metadata; re-commit via commitSnapshotDynamic")
     }
     mergeCopyOnWrite(updates, table, keyCols, pm, txn)
+  }
+
+  /** The MERGE input contract [[mergeSnapshot]] and
+    * [[mergeSnapshotMor]] share; every message names `op`. A MERGE
+    * needs at least one key column, and against a table with files:
+    *  - the exact table schema, order-free (a silent column drop would
+    *    lose data; MERGE INTO refuses too);
+    *  - the table's types, nullability-free like MERGE INTO's check
+    *    (catalogString omits nullability at every depth) — drift would
+    *    widen or corrupt the persisted schema across versions;
+    *  - key columns the table has.
+    * Returns the table's latest manifest, None when the table has no
+    * files yet (the MERGE is then a plain first commit). */
+  private def mergeBase(op: String, updates: DataFrame, table: String,
+                        keyCols: Seq[String]): Option[Manifest] = {
+    require(keyCols.nonEmpty, s"$op needs at least one key column")
+    val spark = updates.sparkSession
+    val pm = snapshotVersions(spark, table).lastOption
+      .map(manifest(spark, table, _)).filter(_.files.nonEmpty)
+    pm.foreach { pm =>
+      val cols = pm.schema.fieldNames.toSeq
+      require(updates.columns.toSet == cols.toSet,
+        s"$op schema mismatch: table has ${cols.sorted}, " +
+          s"updates have ${updates.columns.sorted.toSeq}")
+      val tblType = pm.schema.fields.map(f =>
+        f.name -> f.dataType.catalogString).toMap
+      val drift = updates.schema.fields
+        .filter(f => f.dataType.catalogString != tblType(f.name))
+      require(drift.isEmpty, s"$op type mismatch: " + drift.map(f =>
+        s"${f.name}: table ${tblType(f.name)} vs updates " +
+          f.dataType.catalogString).mkString(", "))
+      require(keyCols.forall(cols.contains),
+        s"key columns ${keyCols.filterNot(cols.contains)} not in table")
+    }
+    pm
   }
 
   /** MERGE-ON-READ MERGE (upsert by key): the matched old rows retire
@@ -675,50 +776,24 @@ object LakeWriter {
                        maxDeleteFraction: Double = 0.5,
                        maxDvBytes: Int = 1 << 20,
                        txn: Option[(String, Long)] = None): Long = {
-    require(keyCols.nonEmpty,
-      "mergeSnapshotMor needs at least one key column")
     require(maxDeleteFraction > 0 && maxDeleteFraction <= 1,
       s"maxDeleteFraction must be in (0, 1], got $maxDeleteFraction")
+    val pm = mergeBase("mergeSnapshotMor", updates, table, keyCols) match {
+      case Some(pm) => pm
+      case None => return commitSnapshot(updates, table, "overwrite", txn)
+    }
     val spark = updates.sparkSession
-    val prev = snapshotVersions(spark, table)
-    if (prev.isEmpty)
-      return commitSnapshot(updates, table, "overwrite", txn)
-    val v0 = prev.last
-    val pm = manifest(spark, table, v0)
     val (files, schema, partCols) = (pm.files, pm.schema, pm.partCols)
-    if (files.isEmpty)
-      return commitSnapshot(updates, table, "overwrite", txn)
     val cols = schema.fieldNames.toSeq
-    require(updates.columns.toSet == cols.toSet,
-      s"mergeSnapshotMor schema mismatch: table has ${cols.sorted}, " +
-        s"updates have ${updates.columns.sorted.toSeq}")
-    val tblType = schema.fields.map(f =>
-      f.name -> f.dataType.catalogString).toMap
-    val drift = updates.schema.fields
-      .filter(f => f.dataType.catalogString != tblType(f.name))
-    require(drift.isEmpty,
-      "mergeSnapshotMor type mismatch: " + drift.map(f =>
-        s"${f.name}: table ${tblType(f.name)} vs updates " +
-          f.dataType.catalogString).mkString(", "))
-    require(keyCols.forall(cols.contains),
-      s"key columns ${keyCols.filterNot(cols.contains)} not in table")
     val (colmap, oldDvs) = (pm.colmap, pm.dvs)
     val keyExprs = keyCols.map(col)
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
-    val version = v0 + 1
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir =
-      new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
+    val version = pm.version + 1
     // the update rows land FIRST (they are needed in every non-COW
     // outcome, and on a partitioned table their paths drive the
     // partition pruning below, exactly like mergeCopyOnWrite)
-    withMicrosTimestamps(spark) {
-      val w = toPhysical(updates.select(cols.map(col): _*), colmap)
-        .write.mode("errorifexists")
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-        .parquet(dataDir.toString)
-    }
-    val newFiles = walkFreshData(fs, dataDir).sorted
+    val (dataDir, newFiles) = land(updates.select(cols.map(col): _*),
+      table, version, colmap, partCols)
     // the landed footers, read once: their key ranges prune the
     // candidates and the commit records them as the new files' stats
     val newStats = footersOf(spark, newFiles, schema, colmap)
@@ -891,14 +966,7 @@ object LakeWriter {
       transform(readManifest(spark, pm, rewrite), schema)
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
     val version = prev.last + 1
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir =
-      new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
-    withMicrosTimestamps(spark) {
-      val writer = toPhysical(rewritten, colmap).write.mode("errorifexists")
-      (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer)
-        .parquet(dataDir.toString) }
-    val newFiles = walkFreshData(fs, dataDir).sorted
+    val (dataDir, newFiles) = land(rewritten, table, version, colmap, partCols)
     if (checkNewFiles)
       enforceChecks(spark, pm.checks, newFiles, schema, fs, Seq(dataDir),
         colmap)
@@ -1000,22 +1068,14 @@ object LakeWriter {
     val matched = candidates.filter(f => matchedF(baseName(f)))
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
     val version = v0 + 1
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir =
-      new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
     // the transformed images land FIRST (needed in every non-COW
     // outcome): matched rows read THROUGH the old DVs — an
     // already-deleted row neither re-lands nor re-retires
-    withMicrosTimestamps(spark) {
-      val w = toPhysical(
-        readManifest(spark, pm, matched)
-          .where(predicate)
-          .select(updateProjection(schema, predicate, set): _*),
-        colmap).write.mode("errorifexists")
-      (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-        .parquet(dataDir.toString)
-    }
-    val newFiles = walkFreshData(fs, dataDir).sorted
+    val (dataDir, newFiles) = land(
+      readManifest(spark, pm, matched)
+        .where(predicate)
+        .select(updateProjection(schema, predicate, set): _*),
+      table, version, colmap, partCols)
     def flagged(fs: Seq[String]) = morFlaggedBase(spark, pm, fs).withColumn(
       "__graft_del", col(OldDel) || coalesce(predicate, lit(false)))
     morBuildDvs(spark, matched, flagged, oldDvs,
@@ -1503,18 +1563,11 @@ object LakeWriter {
     val colmap = prev.colmap
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
     val version = prev.version + 1
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    def dirOf(kind: String) =
-      new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt-$kind")
-    def land(rows: DataFrame, dir: org.apache.hadoop.fs.Path): Seq[String] = {
-      withMicrosTimestamps(spark) {
-        val w = toPhysical(rows.select(cols.map(col): _*), colmap)
-          .write.mode("errorifexists")
-        (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-          .parquet(dir.toString) }
-      walkFreshData(fs, dir).sorted
-    }
-    val updFiles = land(updates, dirOf("u"))
+    val attempt = newAttempt()
+    def landAs(kind: String, rows: DataFrame) = land(
+      rows.select(cols.map(col): _*), table, version, colmap, partCols,
+      attempt, kind)
+    val (updDir, updFiles) = landAs("u", updates)
     // the landed footers, read once: their key ranges prune the probe
     // and the commit records them as the new files' stats
     val updStats = footersOf(spark, updFiles, schema, colmap)
@@ -1545,15 +1598,15 @@ object LakeWriter {
       if (probe.isEmpty) Set.empty[String]
       else filesOf(readKeyed(spark, prev, probe).join(keys, keyCols))
     val (rewrite, carryRest) = candidates.partition(f => probed(baseName(f)))
-    val survFiles =
-      if (rewrite.isEmpty) Seq.empty[String]
-      else land(readManifest(spark, prev, rewrite)
-        .join(keys, keyCols, "left_anti"), dirOf("s"))
+    val surv =
+      if (rewrite.isEmpty) None
+      else Some(landAs("s", readManifest(spark, prev, rewrite)
+        .join(keys, keyCols, "left_anti")))
+    val survFiles = surv.fold(Seq.empty[String])(_._2)
     // CHECK enforcement: the update rows are the only genuinely new
     // ones — survivors re-land from already-validated data
     enforceChecks(spark, prev.checks, updFiles, schema, fs,
-      Seq(dirOf("u")) ++ survFiles.headOption.map(_ => dirOf("s")),
-      colmap)
+      updDir +: surv.map(_._1).toSeq, colmap)
     // a partitioned table commits the TABLE's schema, so
     // partition-column typing is stable across versions; a flat one
     // commits the landed rows' schema (every column nullable once
@@ -2147,52 +2200,21 @@ object LakeWriter {
       schema, partCols, mergeKeys, dvs,
       checksOverride.getOrElse(prev.fold(Map.empty[String, String])(_.checks)),
       colmap, stats, lengths, bloomCfg, blooms, files)
-    commitManifestBody(spark, fs, table, version, m.render)
+    commitManifestBody(fs, table, version, m.render)
   }
 
-  /** Tmp-write + locked no-overwrite rename of a fully-assembled
-    * manifest body — the single commit point every manifest-writing
-    * path (normal commits and [[cloneSnapshot]]) shares. */
-  private def commitManifestBody(spark: SparkSession,
-                                 fs: org.apache.hadoop.fs.FileSystem,
+  /** The create-if-absent [[publish]] of a fully-assembled manifest
+    * body — the single commit point every manifest-writing path
+    * (normal commits and [[cloneSnapshot]]) shares. Losing to an
+    * existing manifest is a CONFLICT. */
+  private def commitManifestBody(fs: org.apache.hadoop.fs.FileSystem,
                                  table: String, version: Long,
-                                 body: String): Unit = {
-    val mdir = manifestDir(table)
-    fs.mkdirs(mdir)
-    // the tmp name carries its own attempt id: two writers racing to
-    // the same version must never share a tmp file, or the loser's
-    // create(overwrite) truncates the winner's in-flight manifest and
-    // a CORRUPT manifest gets committed (caught by SnapshotRaceSpec)
-    val tmp = new org.apache.hadoop.fs.Path(mdir,
-      s".v$version.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    out.write(body.getBytes("UTF-8")); out.close()
-    val fin = new org.apache.hadoop.fs.Path(mdir, s"v$version.json")
-    try {
-      // the JVM-wide lock makes SAME-PROCESS racing writers strictly
-      // first-wins: the local-FS no-overwrite rename is check-then-
-      // rename (a TOCTOU window two threads could both pass). Cross-
-      // process atomicity is the filesystem's: real on HDFS, best
-      // effort on a local FS, a conditional PUT on object stores.
-      commitLock.synchronized {
-        org.apache.hadoop.fs.FileContext.getFileContext(fin.toUri,
-            spark.sessionState.newHadoopConf())
-          .rename(tmp, fin)
-      }
-    } catch { case e: java.io.IOException =>
-      // the losing attempt's tmp manifest is dead either way
-      try fs.delete(tmp, false) catch { case _: java.io.IOException => }
-      // only a rename that lost to an existing manifest is a CONFLICT;
-      // any other IO failure (disk full, permissions) is rethrown
-      // as-is — reporting it as a conflict would claim a concurrent
-      // writer committed when none did
-      if (fs.exists(fin))
-        throw new IllegalStateException(
-          s"snapshot conflict: version $version already committed at $table " +
-            "(this attempt's data directory is an inert orphan)", e)
-      else throw e
-    }
-  }
+                                 body: String): Unit =
+    if (!publish(fs, new org.apache.hadoop.fs.Path(manifestDir(table),
+        s"v$version.json"), body.getBytes("UTF-8"), replace = false))
+      throw new IllegalStateException(
+        s"snapshot conflict: version $version already committed at $table " +
+          "(this attempt's data directory is an inert orphan)")
 
   /** The data files of one snapshot version. */
   def snapshotFiles(spark: SparkSession, table: String,
@@ -2290,7 +2312,7 @@ object LakeWriter {
       mode = "clone", ts = Some(System.currentTimeMillis()),
       txns = Map.empty)
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(target))
-    commitManifestBody(spark, fs, target, cloneV, cloned.render)
+    commitManifestBody(fs, target, cloneV, cloned.render)
     cloneV
   }
 
@@ -2396,13 +2418,8 @@ object LakeWriter {
   private[graft] def writeCursor(spark: SparkSession, cursorPath: String,
                                  version: Long): Unit = {
     val cursor = new org.apache.hadoop.fs.Path(cursorPath)
-    val tmp = new org.apache.hadoop.fs.Path(
-      cursor.getParent, s".${cursor.getName}.tmp")
-    val out = fsOf(spark, cursor).create(tmp, true)
-    out.write(version.toString.getBytes("UTF-8")); out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(cursor.toUri,
-        spark.sessionState.newHadoopConf())
-      .rename(tmp, cursor, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    publish(fsOf(spark, cursor), cursor, version.toString.getBytes("UTF-8"),
+      replace = true): Unit
   }
 
   /** Partition-aware snapshot commit — dynamic partition overwrite
@@ -2445,14 +2462,7 @@ object LakeWriter {
     require(revived.isEmpty,
       s"dynamic commit re-introduces dropped column(s) $revived; " +
         "overwrite the table instead")
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir =
-      new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
-    withMicrosTimestamps(spark) {
-      toPhysical(df, colmap).write.mode("errorifexists")
-        .partitionBy(partitionCols: _*)
-        .parquet(dataDir.toString) }
-    val newFiles = walkFreshData(fs, dataDir).sorted
+    val (dataDir, newFiles) = land(df, table, version, colmap, partitionCols)
     // touched partitions are derived from the files SPARK JUST WROTE,
     // so old and new partition strings go through the identical
     // formatter (hive path encoding). Deriving them from Row values
@@ -2632,15 +2642,8 @@ object LakeWriter {
     if (pre.isEmpty) return pm.version
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(table))
     val version = pm.version + 1
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir =
-      new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
-    withMicrosTimestamps(spark) {
-      toPhysical(readManifest(spark, pm, pre), colmap)
-        .write.mode("errorifexists")
-        .partitionBy(partCols.map(colmap.phys): _*)
-        .parquet(dataDir.toString) }
-    val newFiles = walkFreshData(fs, dataDir).sorted
+    val (_, newFiles) = land(readManifest(spark, pm, pre), table, version,
+      colmap, partCols)
     writeManifest(spark, fs, table, Some(pm), version, "migrate", schema,
       conformant ++ newFiles, partCols)
     version
@@ -2691,22 +2694,10 @@ object LakeWriter {
     val totalBytes = sized.collect { case (f, n) if rewrite(f) => n }.sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val version = pm.version + 1
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir =
-      new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
-    val newFiles =
-      if (partCols.isEmpty) {
-        withMicrosTimestamps(spark) { toPhysical(df.repartition(n), colmap)
-          .write.mode("errorifexists").parquet(dataDir.toString) }
-        fs.listStatus(dataDir).toSeq.map(_.getPath.toString)
-          .filter(_.endsWith(".parquet")).sorted
-      } else {
-        withMicrosTimestamps(spark) {
-          toPhysical(df.repartition(n, partCols.map(col): _*), colmap).write
-            .mode("errorifexists").partitionBy(partCols: _*)
-            .parquet(dataDir.toString) }
-        walkFreshData(fs, dataDir).sorted
-      }
+    val (_, newFiles) = land(
+      if (partCols.isEmpty) df.repartition(n)
+      else df.repartition(n, partCols.map(col): _*),
+      table, version, colmap, partCols)
     writeManifest(spark, fs, table, Some(pm), version, "optimize", schema,
       carry ++ newFiles, partCols)
     version
@@ -2772,17 +2763,10 @@ object LakeWriter {
       fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen)).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val version = prev.version + 1
-    val attempt = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir =
-      new org.apache.hadoop.fs.Path(table, s"data/v$version-$attempt")
-    withMicrosTimestamps(spark) {
-      toPhysical(df.withColumn("__graft_z", zcol)
+    val (_, newFiles) = land(df.withColumn("__graft_z", zcol)
         .repartitionByRange(n, col("__graft_z"))
         .sortWithinPartitions("__graft_z")
-        .drop("__graft_z"), colmap)
-        .write.mode("errorifexists").parquet(dataDir.toString) }
-    val newFiles = fs.listStatus(dataDir).toSeq.map(_.getPath.toString)
-      .filter(_.endsWith(".parquet")).sorted
+        .drop("__graft_z"), table, version, colmap, partCols)
     writeManifest(spark, fs, table, Some(prev), version, "optimize", schema,
       newFiles, partCols)
     version
@@ -2866,10 +2850,8 @@ object LakeWriter {
     // version that nothing references are superseded or lost-conflict
     // orphans, safe to drop.
     val latestKept = kept.last
-    def dirVersion(name: String): Option[Long] =
-      "^v(\\d+)-".r.findFirstMatchIn(name).map(_.group(1).toLong)
     if (fs.exists(dataRoot)) fs.listStatus(dataRoot).foreach { d =>
-      val inFlight = dirVersion(d.getPath.getName).forall(_ > latestKept)
+      val inFlight = dataDirVersion(d.getPath.getName).forall(_ > latestKept)
       if (!inFlight && !anyFileReferenced(d.getPath))
         fs.delete(d.getPath, true)
     }

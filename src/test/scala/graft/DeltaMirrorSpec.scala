@@ -842,6 +842,29 @@ class DeltaMirrorSpec extends AnyFunSuite {
       Set("1|a=b", "3|c d", "4|p+q"))
   }
 
+  test("a partition COLUMN name needing hive path escaping mirrors: " +
+      "values come from the escaped on-disk segment") {
+    // Spark escapes the column name in the directory too (`a:b` lands
+    // in `a%3Ab=…`), so a raw-name match finds no segment and would
+    // take every file for one that predates the partition spec
+    val t = freshDir("graft_delta_esccol") + "/t"
+    val df = Seq((1L, "x"), (2L, "x"), (3L, "y z"), (4L, "p=q"))
+      .toDF("id", "a:b")
+    LakeWriter.commitSnapshotDynamic(df, t, Seq("a:b"))
+    assert(new java.io.File(s"$t/data").listFiles().head.list()
+      .exists(_.startsWith("a%3Ab=")))
+    assert(DeltaMirror.mirror(spark, t) == 1L)
+    LakeWriter.deleteFromSnapshot(spark, t, $"id" === 2L)
+    assert(DeltaMirror.mirror(spark, t) == 1L)
+    LakeWriter.snapshotVersions(spark, t).zipWithIndex.foreach {
+      case (gv, dv) =>
+        assert(rows(DeltaMirror.readDelta(spark, t, Some(dv.toLong))) ==
+          rows(LakeWriter.readSnapshot(spark, t, Some(gv))), s"rows at v$gv")
+    }
+    assert(rows(DeltaMirror.readDelta(spark, t)) ==
+      Set("1|x", "3|y z", "4|p=q"))
+  }
+
   test("cleanupLog cdc reclaim is layout-safe: foreign hive-nested " +
       "cdc files delete file-by-file (a shared partition dir " +
       "survives); graft's own per-commit dirs reclaim whole") {

@@ -529,7 +529,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(seen == Seq(1L, 2L))
     // the advance is a single overwrite-rename: no tmp may survive it
     val left = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.contains("cursor.tmp"))
+      .filter(_.contains(".tmp"))
     assert(left.isEmpty, s"tmp cursor left behind: ${left.toSeq}")
     // a stale tmp from a crashed attempt must not break the next
     // advance (rename OVERWRITE replaces both cursor and tmp cleanly)
