@@ -177,7 +177,7 @@ object LakeWriter {
   /** Guards [[publish]]'s create-if-absent rename: the local-FS
     * fail-if-exists rename is check-then-rename, and this JVM-wide
     * lock closes that TOCTOU for same-process racers. */
-  private[sources] val commitLock = new Object
+  private val commitLock = new Object
 
   /** One hadoop conf per session for FILESYSTEM ACCESS (r18):
     * `sessionState.newHadoopConf()` clones the full configuration on
